@@ -216,7 +216,7 @@ def _min_opt(*vals: "float | None") -> "float | None":
 
 
 def main() -> None:
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -340,19 +340,10 @@ def main() -> None:
             # as 3x late-session spikes on unrelated multi-stage
             # queries (tx_textrank_keywords 2.9 -> 9.5 s in the r5
             # 203-query run). Safe here: each timed run rebuilds its
-            # checkpoints from scratch.
+            # checkpoints from scratch. Between queries only, so
+            # within-query best-of-N runs still share their own caches.
             try:
-                # clearCache first: unpersisting blocks while the
-                # CacheManager entry survives leaves a stale entry that a
-                # LATER query with a matching plan fragment recomputes
-                # into (slower than no cache at all — r7 scale-sweep
-                # finding, 20.9 -> 36.7 s on a .persist()-using query).
-                # Between queries only, so within-query best-of-N runs
-                # still share their own caches.
-                spark.catalog.clearCache()
-                it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-                while it.hasNext():
-                    it.next().unpersist(False)
+                release_caches(spark)
             except Exception:  # noqa: BLE001 — hygiene must never fail a bench
                 pass
 

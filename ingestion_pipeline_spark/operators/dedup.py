@@ -18,8 +18,6 @@ Python UDFs, so every stage is codegen'd and shuffle-bound only.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,82 +31,24 @@ def banded_self_join_pairs(
     id_col: str = "doc",
     band_col: str = "band",
     bucket_col: str = "bucket",
-    hot_bucket_rows: int | None = None,
-    hot_bucket_blocks: int = 16,
     join_hint: str | None = "merge",
 ) -> DataFrame:
     """All distinct ``(id_a < id_b)`` pairs sharing a (band, bucket) —
-    the LSH candidate self-join, with an optional VALUE-IDENTICAL
-    hot-bucket skew split (r13, VERDICT r12 #3; guide §2.5).
+    the LSH candidate self-join.
 
-    At 100 TB, boilerplate text lands thousands of near-identical docs
-    in a few (band, bucket) mega-buckets; the self-join puts each
-    bucket's full n² pair fan-out on ONE task, and AQE's skew splitter
-    cannot divide a single key. With ``hot_bucket_rows`` set (or
-    ``$SPARK_GRAFT_LSH_HOT_BUCKET`` in the environment), buckets larger
-    than that are split: the left side keeps a deterministic block id
-    ``xxhash64(id) % blocks``, the right side is replicated once per
-    block, and the join key gains the block column — every ordered pair
-    still meets EXACTLY once (the one right copy whose block equals the
-    left row's own block), so after the ``id_a < id_b`` filter and the
-    distinct the pair set is identical while the largest single-task
-    fan-out drops from n² to n²/blocks (the census and replication
-    touch only the skinny banded rows, never text). Pinned by
-    tests/test_dedup.py::test_banded_self_join_hot_split_value_identical.
-
-    Default ``None``: the plain single-join plan, byte-identical to the
-    pre-r13 shape — the local-bench regime has no mega-buckets, and the
-    census pass would be pure overhead (the scale-parameterised-knob
-    contract; set the env knob in production).
+    ``join_hint`` (default ``"merge"``): the banded table is
+    |docs|·n_bands rows behind a kernel/explode the planner cannot
+    size — never broadcast it. ``None`` leaves the join unhinted.
     """
-    if hot_bucket_rows is None:
-        env = os.environ.get("SPARK_GRAFT_LSH_HOT_BUCKET")
-        hot_bucket_rows = int(env) if env else None
-
-    def pairs(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
-        l = left.alias("l") if join_hint is None else left.hint(join_hint).alias("l")
-        r = right.alias("r")
-        cond = (F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        for k in keys:
-            cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
-        # merge hint (default): the banded table is |docs|·n_bands rows
-        # behind a kernel/explode the planner cannot size — never
-        # broadcast it.
-        return l.join(r, cond).select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-
-    if not hot_bucket_rows:
-        return pairs(banded, banded, [band_col, bucket_col]).distinct()
-
-    # census over the skinny banded rows; mega-buckets are by
-    # definition few, so the hot-key list broadcasts
-    hot = (
-        banded.groupBy(band_col, bucket_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > hot_bucket_rows)
-        .select(band_col, bucket_col, F.lit(1).alias("__hot"))
-    )
-    tagged = banded.join(
-        F.broadcast(hot), [band_col, bucket_col], "left"
-    ).localCheckpoint(eager=False)
-    cold = tagged.filter(F.col("__hot").isNull()).drop("__hot")
-    hot_rows = tagged.filter(F.col("__hot") == 1).drop("__hot")
-    nb = max(2, int(hot_bucket_blocks))
-    hot_left = hot_rows.withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb))
-    )
-    hot_right = hot_rows.withColumn(
-        "__blk", F.explode(F.array(*[F.lit(i) for i in range(nb)]))
-    )
-    return (
-        pairs(cold, cold, [band_col, bucket_col])
-        .unionByName(
-            pairs(hot_left, hot_right, [band_col, bucket_col, "__blk"])
-        )
-        .distinct()
-    )
+    l = banded.alias("l") if join_hint is None else banded.hint(join_hint).alias("l")
+    r = banded.alias("r")
+    cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    for k in (band_col, bucket_col):
+        cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
+    return l.join(r, cond).select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+    ).distinct()
 
 
 def normalized_text(col: Column) -> Column:
@@ -431,9 +371,7 @@ def minhash_lsh_candidates(
     # rows runs the kernel once; blocks are released by the bench /
     # driver per-query hygiene (guide §2.4/§5).
     banded = minhash_bands(hashed, n_hashes, n_bands).localCheckpoint(eager=False)
-    # r13: the self-join (merge-hinted, optional hot-bucket skew split —
-    # guide §2.5) lives in banded_self_join_pairs; plain plan unchanged
-    # when the skew knob is unset.
+    # the merge-hinted self-join is shared with registry_ext48
     return banded_self_join_pairs(banded, id_col="doc")
 
 

@@ -1,157 +1,88 @@
-"""Distributed connected components — the completion step of near-dup
-deduplication: candidate pairs (from MinHash-LSH banding or exact
-Jaccard verification, ``operators/dedup.py``) form an undirected graph;
-each connected component is one duplicate cluster, and the canonical
-representative is the minimum document id.
+"""Distributed graph iterations — the curation surface over candidate-pair
+graphs: connected components (the completion step of near-dup
+deduplication), label-propagation communities and fixed-point
+(personalized) PageRank.
 
-The reference pipeline deduplicates only by primary key (Snowflake
-MERGE-style id upsert, `processor.py:55-59`); cluster-level dedup is
-part of the beyond-reference training-data surface (brief requirement).
+Candidate pairs (from MinHash-LSH banding or exact Jaccard verification,
+``operators/dedup.py``) form an undirected graph; each connected
+component is one duplicate cluster, and the canonical representative is
+the minimum document id. The reference pipeline deduplicates only by
+primary key (Snowflake MERGE-style id upsert, `processor.py:55-59`);
+cluster-level dedup is part of the beyond-reference training-data
+surface (brief requirement).
 
-Algorithm: Pregel-style min-label propagation — the same scheme GraphX's
-``connectedComponents`` uses. Each round every node takes the minimum
-label over itself and its neighbors; convergence in O(diameter) rounds.
-Near-dup graphs are overwhelmingly tiny star/clique clusters (diameter
-≤ ~3), so the round count is small and independent of corpus size. Each
-round is one shuffle (join on node id) + one partial-aggregated min.
+Every operator is a prelude (symmetrize + checkpoint the edge list,
+build the initial vector) plus a per-round ``step`` handed to one loop
+driver, ``_fixed_point``, which owns the checkpoint cadence and the
+optional convergence witness.
 
 Scale notes:
-- Labels only ever decrease, so SUM(label) is a strictly decreasing
-  convergence witness — one cheap aggregate per round instead of a
-  change-count join.
-- ``localCheckpoint(eager=True)`` cuts the lineage each round; without
-  it the plan doubles per iteration and the driver OOMs on analysis
-  long before data size matters. On a multi-node cluster prefer
+- ``localCheckpoint(eager=True)`` cuts the lineage; without it the plan
+  doubles per iteration and the driver OOMs on analysis long before
+  data size matters. On a multi-node cluster prefer
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` for
   executor-loss resilience.
-- For adversarial graphs with long chains, swap in the
-  large-star/small-star contraction (Kiveris et al., "Connected
-  Components in MapReduce and Beyond") — O(log n) rounds; the
-  per-round join shape below is unchanged.
+- Connected components is Pregel-style min-label propagation (the
+  scheme GraphX's ``connectedComponents`` uses): O(diameter) rounds.
+  Near-dup graphs are overwhelmingly tiny star/clique clusters
+  (diameter ≤ ~3), so the round count is small and independent of
+  corpus size. Graphs dominated by long chains would want the
+  large-star/small-star contraction of Kiveris et al., "Connected
+  Components in MapReduce and Beyond" (SoCC 2014) — O(log n) rounds
+  with the same per-round join shape.
 """
 
 from __future__ import annotations
 
-import math
-import os
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SIZE_UNITS = {
-    "tb": 1024**4, "gb": 1024**3, "mb": 1024**2, "kb": 1024,
-    "t": 1024**4, "g": 1024**3, "m": 1024**2, "k": 1024, "b": 1,
-}
+PR_SCALE = 10**12  # fixed-point rank unit: 1.0 == 10^12
 
 
-def _size_bytes(raw: object, default: int) -> int:
-    """Parse a Spark size conf value ('10MB', '64m', '-1', plain bytes)."""
-    s = str(raw).strip().lower()
-    try:
-        return int(s)
-    except ValueError:
-        pass
-    for unit in ("tb", "gb", "mb", "kb", "t", "g", "m", "k", "b"):
-        if s.endswith(unit):
-            try:
-                return int(float(s[: -len(unit)]) * _SIZE_UNITS[unit])
-            except ValueError:
-                return default
-    return default
+def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected edge list as ``(s, d)`` with both orientations,
+    materialized ONCE — every round joins against it, and without this
+    cut the full upstream plan (e.g. the Jaccard shingle self-join)
+    re-executes per round."""
+    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    return fwd.union(
+        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    ).localCheckpoint(eager=True)
 
 
-# In-memory bytes per row of a loop's rank/label vector (two longs +
-# UnsafeRow overhead), deliberately generous so the layout engages only
-# when the vector is clearly past broadcasting.
-_VECTOR_ROW_BYTES = 32
-# Cached bytes per edge row (2-3 longs + cache-column overhead).
-_EDGE_ROW_BYTES = 48
-# Smallest laid partition worth a task: below this, more partitions is
-# pure scheduling overhead (the r12 §20 failure); above it, partitions
-# up to the executor parallelism keep the loop's join + partial
-# aggregation stages parallel.
-_MIN_PART_BYTES = 8 * 1024**2
+def _fixed_point(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    checkpoint_interval: int = 1,
+    witness: Callable[[DataFrame], object] | None = None,
+) -> DataFrame:
+    """Run ``state = step(state)`` for at most ``rounds`` rounds.
 
+    Without a witness the state is checkpointed every
+    ``checkpoint_interval`` rounds and after the last one: each eager
+    checkpoint is a full job, and a 2-3-round lineage is still a small
+    plan (measured 6.1 s -> ~2.5 s at sf0.1 for 10 PageRank rounds).
 
-def _layout_engaged(df: DataFrame, vector_rows: int) -> bool:
-    """True when a fixed-point loop's evolving rank/label vector can NOT
-    broadcast under the session's autoBroadcastJoinThreshold — the
-    regime where pre-laying-out the static edge side pays (r13; guide
-    §2.4). On every local-bench graph the vector broadcasts and this
-    returns False, keeping the plain-checkpoint loop byte-identical.
-    ``SPARK_GRAFT_GRAPH_LAYOUT=0`` force-disables (the A/B kill switch).
+    With a ``witness`` (a driver-side scalar of the state, evaluated on
+    the checkpointed initial state and after every round) the state is
+    checkpointed every round and the loop stops as soon as the witness
+    value repeats — the caller guarantees a repeat means a fixpoint.
     """
-    if os.environ.get("SPARK_GRAFT_GRAPH_LAYOUT", "1") == "0":
-        return False
-    thr = _size_bytes(
-        df.sparkSession.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold", "10485760"
-        ),
-        10 * 1024 * 1024,
-    )
-    return thr < 0 or vector_rows * _VECTOR_ROW_BYTES > thr
-
-
-def _layout_loop_frame(
-    frame: DataFrame, key: str, n_rows: int
-) -> tuple[DataFrame, int]:
-    """Hash-partition + sort a loop's static edge-side frame by its join
-    key and persist it MATERIALIZED, so every round's join consumes the
-    edge side exchange- and sort-free and only the (much smaller) rank/
-    label vector is shuffled per round (guide §2.4: operations keyed
-    the same way share one exchange). Returns ``(laid, n_parts)`` —
-    callers must ALSO repartition the vector side to ``n_parts`` on the
-    same key each round: when the vector arrives with its own valid
-    hash partitioning at a different count (the previous round's
-    aggregate), EnsureRequirements resolves the mismatch by
-    re-exchanging the SMALLER side — the cache — which silently
-    reinstates the per-round edge exchange (measured on Spark 4.1.2;
-    plans/r13/graph_loop_layout_round.txt is the co-partitioned shape).
-
-    Two hard-won r12 §20 facts drive the shape:
-    - persist, not localCheckpoint: a checkpoint's LogicalRDD erases
-      outputPartitioning/ordering (and Catalyst stats), so a
-      checkpointed layout is re-exchanged every round;
-    - the partition count derives from the FRAME'S OWN BYTES at the
-      session's advisory partition size, never a pinned local constant:
-      the r12 attempt cached at the core count (32) and lost 2-3x
-      because every sub-MB round paid 32-task scheduling overhead that
-      AQE could no longer coalesce away.
-
-    Caller must unpersist the returned frame once the loop's final
-    checkpoint has materialized.
-    """
-    spark = frame.sparkSession
-    adv = _size_bytes(
-        spark.conf.get(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864"
-        ),
-        64 * 1024**2,
-    )
-    # Three terms (all size-derived — never a pinned constant, the r12
-    # §20 failure):
-    # - bytes/advisory: the at-scale partition count;
-    # - min(parallelism, bytes/8MB): mid-size frames keep the loop's
-    #   join AND the partial-aggregation stage above it parallel
-    #   (everything below one advisory partition otherwise runs the
-    #   whole loop at 2-3 tasks), while sub-8MB-per-task frames never
-    #   fan out to the core count;
-    # - floor 2, not 1: repartition(1, key) compiles to Exchange
-    #   SinglePartition, whose output partitioning is not
-    #   HashPartitioning(key) — the loop joins would re-exchange the
-    #   cache every round (measured on Spark 4.1.2).
-    est_bytes = n_rows * _EDGE_ROW_BYTES
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(
-        2,
-        math.ceil(est_bytes / max(adv, 1)),
-        min(par, math.ceil(est_bytes / _MIN_PART_BYTES)),
-    )
-    laid = frame.repartition(n_parts, key).sortWithinPartitions(key).persist()
-    # An AQE-compiled cached plan reports unknown partitioning until the
-    # cache is materialized — force it before compiling loop rounds.
-    laid.count()
-    return laid, n_parts
+    prev = witness(state) if witness is not None else None
+    for i in range(rounds):
+        state = step(state)
+        if witness is not None or (i + 1) % checkpoint_interval == 0 or i == rounds - 1:
+            state = state.localCheckpoint(eager=True)
+        if witness is not None:
+            cur = witness(state)
+            if cur == prev:
+                break
+            prev = cur
+    return state
 
 
 def connected_components(
@@ -164,62 +95,39 @@ def connected_components(
     id of its component. Returns ``(node, component)`` — one row per
     distinct node appearing in the edge list (attach singletons by
     left-joining your id universe afterwards).
+
+    Each round every node takes the minimum label over itself and its
+    neighbors: one shuffle (join on node id) + one partial-aggregated
+    min. Labels only ever decrease, so SUM(label) is a strictly
+    decreasing convergence witness — one cheap aggregate per round
+    instead of a change-count join.
     """
-    fwd = edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
-    sym = fwd.union(fwd.select(F.col("m").alias("n"), F.col("n").alias("m")))
-    # Materialize the (possibly expensive) edge derivation ONCE — every
-    # round joins against sym, and without this cut the full upstream
-    # plan (e.g. the Jaccard shingle self-join) re-executes per round.
-    sym = sym.localCheckpoint(eager=True)
+    sym = _symmetrized(edges, src, dst)
     # Round 0 fused into initialization: label = min(self, neighbors)
     # straight from the edge list — one aggregate instead of a
     # distinct + a full join round. Star clusters whose center is the
     # minimum id (the common near-dup shape) converge here, so the loop
-    # below only runs its confirmation pass.
+    # only runs its confirmation pass.
     labels = (
-        sym.union(sym.select(F.col("n"), F.col("n").alias("m")))
-        .groupBy("n")
-        .agg(F.min("m").alias("label"))
+        sym.union(sym.select("s", F.col("s").alias("d")))
+        .groupBy(F.col("s").alias("n"))
+        .agg(F.min("d").alias("label"))
         .localCheckpoint(eager=True)
     )
-    # node count folded into the existing convergence-witness aggregate
-    # (no extra job): it sizes the label vector for the r13 layout
-    # decision below.
-    first = labels.agg(
-        F.sum("label").alias("s"), F.count(F.lit(1)).alias("c")
-    ).first()
-    prev_sum, n_nodes = first["s"], first["c"]
-    # r13 (guide §2.4): when the label vector cannot broadcast, lay the
-    # static edge frame out by the loop's join key once so no round
-    # re-exchanges it; broadcast regime (every local graph) keeps the
-    # plain checkpointed frame and pays nothing.
-    loop_sym, cached, n_parts = sym, None, 0
-    if _layout_engaged(sym, n_nodes):
-        loop_sym, n_parts = _layout_loop_frame(sym, "m", sym.count())
-        cached = loop_sym
 
-    for _ in range(max_iter):
-        vec = labels.select(F.col("n").alias("m"), "label")
-        if cached is not None:
-            # co-partition the vector to the laid frame (see
-            # _layout_loop_frame: a mismatched valid partitioning makes
-            # EnsureRequirements re-exchange the cache instead)
-            vec = vec.repartition(n_parts, "m")
-        nbr_labels = loop_sym.join(vec, "m").select("n", "label")
-        labels = (
-            labels.select("n", "label")
-            .union(nbr_labels)
+    def step(labels: DataFrame) -> DataFrame:
+        vec = labels.select(F.col("n").alias("d"), "label")
+        nbr_labels = sym.join(vec, "d").select(F.col("s").alias("n"), "label")
+        return (
+            labels.union(nbr_labels)
             .groupBy("n")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
         )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:  # labels are non-increasing → fixpoint
-            break
-        prev_sum = cur_sum
 
-    if cached is not None:  # labels are checkpoint-materialized above
-        cached.unpersist(False)
+    labels = _fixed_point(
+        labels, step, max_iter,
+        witness=lambda df: df.agg(F.sum("label")).first()[0],
+    )
     return labels.select("n", F.col("label").alias("component"))
 
 
@@ -244,107 +152,6 @@ def dup_clusters(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iters: int = 10,
-    symmetric: bool = False,
-    checkpoint_interval: int = 3,
-) -> DataFrame:
-    """Power-iteration PageRank over the edge list — ``(node, rank)``
-    with ranks summing to 1 across the node universe (src ∪ dst).
-
-    The per-round shape is the canonical distributed one: one join of
-    the edge list with the current ranks (shuffle on src) + one
-    partial-aggregated sum per dst — identical cost envelope to a
-    round of connected components above, with the same
-    ``localCheckpoint`` lineage discipline. Dangling mass (nodes with
-    no out-edges) is one scalar aggregate per round, redistributed
-    uniformly (the standard correction, so ranks keep summing to 1).
-
-    A fixed ``iters`` (not a convergence test) keeps the result exactly
-    reproducible across engines and runs; power iteration's error
-    decays like damping^k, so 10 rounds ≈ 2 decimal digits — plenty for
-    ranking near-dup cluster centrality or seed selection.
-    """
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if symmetric:
-        fwd = fwd.union(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    fwd = fwd.localCheckpoint(eager=True)
-
-    nodes = (
-        fwd.select(F.col("s").alias("n"))
-        .union(fwd.select(F.col("d").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_total = nodes.count()
-    out_deg = fwd.groupBy("s").agg(F.count("*").alias("deg"))
-
-    ranks = nodes.select("n", F.lit(1.0 / n_total).alias("rank"))
-    base = (1.0 - damping) / n_total
-
-    # r13 (guide §2.4): in the non-broadcast regime lay the static edge
-    # frame out by the loop key once; local graphs broadcast the rank
-    # vector and keep the plain checkpoint.
-    loop_fwd, cached, n_parts = fwd, None, 0
-    if _layout_engaged(fwd, n_total):
-        loop_fwd, n_parts = _layout_loop_frame(fwd, "s", fwd.count())
-        cached = loop_fwd
-
-    # a symmetrized graph cannot have dangling nodes (every node that
-    # appears has at least one out-edge) — skip the correction and its
-    # per-round aggregate entirely
-    has_dangling = not symmetric
-
-    for it in range(iters):
-        weighted = ranks.join(out_deg, ranks.n == out_deg.s, "left").select(
-            ranks.n,
-            "rank",
-            (F.col("rank") / F.col("deg")).alias("share"),
-            F.col("deg").isNull().alias("dangling"),
-        )
-        shares = weighted.select(F.col("n").alias("s"), "share")
-        if cached is not None:
-            # co-partition to the laid frame (see _layout_loop_frame)
-            shares = shares.repartition(n_parts, "s")
-        contribs = (
-            loop_fwd.join(shares, "s")
-            .groupBy(F.col("d").alias("n"))
-            .agg(F.sum("share").alias("contrib"))
-        )
-        new_rank = F.lit(base) + F.lit(damping) * F.coalesce(
-            F.col("contrib"), F.lit(0.0)
-        )
-        joined = nodes.join(contribs, "n", "left")
-        if has_dangling:
-            # dangling mass as a declarative 1-row broadcast, NOT a
-            # driver action per round — the whole iteration stays one
-            # job (the eager checkpoint)
-            dmass = weighted.filter("dangling").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dmass")
-            )
-            joined = joined.crossJoin(F.broadcast(dmass))
-            new_rank = new_rank + F.lit(damping) * F.col("__dmass") / F.lit(
-                float(n_total)
-            )
-        ranks = joined.select("n", new_rank.alias("rank"))
-        # checkpoint every few rounds, not every round: each eager
-        # checkpoint is a full job, and a 2-3-round lineage is still a
-        # small plan — measured 6.1 s -> ~2.5 s at sf0.1 for 10 rounds
-        if (it + 1) % checkpoint_interval == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-
-    if cached is not None:  # final ranks checkpoint is materialized
-        cached.unpersist(False)
-    return ranks.select("n", "rank")
-
-
-PR_SCALE = 10**12  # fixed-point rank unit: 1.0 == 10^12
-
-
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
@@ -367,32 +174,14 @@ def label_propagation(
     weakly-connected boundaries, so one component can hold several
     communities — the right granularity for 'which dup-family wrote
     this boilerplate' style questions. Per round: one edges⋈labels
-    shuffle + one (node, label) count + one argmax window."""
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    sym = fwd.union(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).localCheckpoint(eager=True)
+    shuffle + one (node, label) count + one argmin aggregate."""
+    sym = _symmetrized(edges, src, dst)
     nodes = (
         sym.select(F.col("s").alias("n")).distinct().localCheckpoint(eager=True)
     )
-    labels = nodes.select("n", F.col("n").alias("label"))
 
-    # r13 (guide §2.4): one ~50 ms count on the materialized node frame
-    # sizes the label vector; when it cannot broadcast, the static edge
-    # frame is laid out by the loop key once instead of being
-    # re-exchanged every round. Local graphs broadcast → plain path.
-    n_nodes = nodes.count()
-    loop_sym, cached, n_parts = sym, None, 0
-    if _layout_engaged(sym, n_nodes):
-        loop_sym, n_parts = _layout_loop_frame(sym, "s", sym.count())
-        cached = loop_sym
-
-    for _ in range(iters):
-        vec = labels.select(F.col("n").alias("s"), "label")
-        if cached is not None:
-            # co-partition to the laid frame (see _layout_loop_frame)
-            vec = vec.repartition(n_parts, "s")
-        neigh = loop_sym.join(vec, "s").select(
+    def step(labels: DataFrame) -> DataFrame:
+        neigh = sym.join(labels.select(F.col("n").alias("s"), "label"), "s").select(
             F.col("d").alias("n"), "label"
         )
         votes = (
@@ -405,7 +194,7 @@ def label_propagation(
         # smallest label" — replaces the row_number window (full sort
         # of the vote list per node + filter) with a partially
         # aggregatable min that combines map-side (guide §2.3).
-        labels = (
+        return (
             votes.groupBy("n")
             .agg(
                 F.min(
@@ -416,11 +205,9 @@ def label_propagation(
                 ).alias("top")
             )
             .select("n", F.col("top.label").alias("label"))
-            .localCheckpoint(eager=True)
         )
 
-    if cached is not None:  # labels are checkpoint-materialized per round
-        cached.unpersist(False)
+    labels = _fixed_point(nodes.select("n", F.col("n").alias("label")), step, iters)
     return labels.select("n", F.col("label").alias("community"))
 
 
@@ -435,10 +222,10 @@ def pagerank_fixed_point(
     ``(n, rank_fp)`` with ranks in 1e-12 units (``PR_SCALE``), damping
     85/100, over the SYMMETRIZED edge list.
 
-    Why integers: the float ``pagerank`` above sums ``double`` shares
-    per destination, which is accumulation-order-dependent at the
-    1e-16 scale — harmless for ranking, fatal for a cross-engine value
-    hash (the same flake class the round-2 advisor flagged on
+    Why integers: a float PageRank sums ``double`` shares per
+    destination, which is accumulation-order-dependent at the 1e-16
+    scale — harmless for ranking, fatal for a cross-engine value hash
+    (the same flake class the round-2 advisor flagged on
     g_value_trend). Every operation here — integer ``div`` for shares,
     exact BIGINT sums, ``(85*contrib) div 100`` damping — is defined
     identically in Spark and any ANSI engine, so a DuckDB oracle can
@@ -446,15 +233,12 @@ def pagerank_fixed_point(
     (``plans/pagerank_sql.py``). Rank error vs the real-valued
     fixpoint is ≤ iters·|V|/SCALE — irrelevant at 1e-12 units.
 
-    Symmetric-only: every node then has out-degree ≥ 1, so no dangling
-    mass and no per-round scalar aggregate. Per-round cost envelope is
-    identical to ``pagerank``: one edges⋈ranks shuffle + one partial-
-    aggregated sum."""
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    fwd = fwd.union(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).localCheckpoint(eager=True)
-
+    A fixed ``iters`` (not a convergence test) keeps the result exactly
+    reproducible across engines and runs. Symmetric-only: every node
+    then has out-degree ≥ 1, so no dangling mass and no per-round
+    scalar aggregate. Per round: one edges⋈ranks shuffle + one
+    partial-aggregated sum."""
+    fwd = _symmetrized(edges, src, dst)
     nodes = (
         fwd.select(F.col("s").alias("n"))
         .union(fwd.select(F.col("d").alias("n")))
@@ -470,35 +254,18 @@ def pagerank_fixed_point(
     # the per-edge share `rank_fp div deg` is value-identical to
     # joining a per-node share (deg is constant per s, div is exact).
     deg = fwd.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    # r13 (guide §2.4): when the rank vector cannot broadcast, lay the
-    # static edge+degree frame out by the loop's join key once (persist
-    # keeps the partitioning; size-derived partition count — see
-    # _layout_loop_frame) so no round re-exchanges the edge list; the
-    # broadcast regime (every local graph) keeps the checkpointed frame
-    # and its byte-identical plan.
-    cached, n_parts = None, 0
-    if _layout_engaged(fwd, n_total):
-        fwd_deg, n_parts = _layout_loop_frame(fwd.join(deg, "s"), "s", fwd.count())
-        cached = fwd_deg
-    else:
-        fwd_deg = fwd.join(deg, "s").localCheckpoint(eager=True)
+    fwd_deg = fwd.join(deg, "s").localCheckpoint(eager=True)
 
     init = PR_SCALE // n_total
     base = (15 * PR_SCALE) // (100 * n_total)
-    ranks = nodes.select("n", F.lit(init).cast("long").alias("rank_fp"))
 
-    for it in range(iters):
+    def step(ranks: DataFrame) -> DataFrame:
         # Symmetrized graph ⇒ every node has ≥1 in-edge, so the contrib
-        # aggregate already covers the full node universe — the old
-        # per-round nodes left-join (another full exchange) was
-        # redundant and is gone (r12; equality pinned by
+        # aggregate already covers the full node universe — no per-round
+        # nodes left-join (r12; equality pinned by
         # tests/test_graph_fixture_exact.py and the unrolled oracles).
-        rv = ranks.withColumnRenamed("n", "s")
-        if cached is not None:
-            # co-partition to the laid frame (see _layout_loop_frame)
-            rv = rv.repartition(n_parts, "s")
-        ranks = (
-            fwd_deg.join(rv, "s")
+        return (
+            fwd_deg.join(ranks.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("d").alias("n"))
             .agg(F.sum(F.expr("rank_fp div deg")).alias("contrib"))
             .select(
@@ -509,11 +276,11 @@ def pagerank_fixed_point(
                 ).alias("rank_fp"),
             )
         )
-        if (it + 1) % checkpoint_interval == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
 
-    if cached is not None:  # final ranks checkpoint is materialized
-        cached.unpersist(False)
+    ranks = _fixed_point(
+        nodes.select("n", F.lit(init).cast("long").alias("rank_fp")),
+        step, iters, checkpoint_interval,
+    )
     return ranks.select("n", "rank_fp")
 
 
@@ -537,10 +304,7 @@ def personalized_pagerank_fixed_point(
     Init: seeds start with ``PR_SCALE // |S|`` each, non-seeds 0.
     Per round: ``r' = [n in S] * (15*SCALE)//(100*|S|) +
     (85*contrib) div 100``."""
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    fwd = fwd.union(
-        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).localCheckpoint(eager=True)
+    fwd = _symmetrized(edges, src, dst)
     nodes = (
         fwd.select(F.col("s").alias("n"))
         .union(fwd.select(F.col("d").alias("n")))
@@ -548,11 +312,9 @@ def personalized_pagerank_fixed_point(
         .localCheckpoint(eager=True)
     )
     seed_col = seeds.columns[0]
-    # r13: flagged (n, is_seed) is the node universe both the init
-    # vector and the static edge frame read — checkpointed once, and
-    # its single materializing aggregate returns n_seeds AND n_nodes
-    # (the vector size for the layout decision below) in one job, the
-    # same job count as the old seed_nodes checkpoint + count.
+    # flagged (n, is_seed) is the node universe both the init vector
+    # and the static edge frame read — checkpointed once, and its
+    # materializing aggregate returns n_seeds.
     flagged = (
         nodes.join(
             F.broadcast(
@@ -566,10 +328,7 @@ def personalized_pagerank_fixed_point(
         .select("n", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
         .localCheckpoint(eager=True)
     )
-    counts = flagged.agg(
-        F.count(F.lit(1)).alias("nn"), F.sum("is_seed").alias("ns")
-    ).first()
-    n_nodes, n_seeds = counts["nn"], counts["ns"] or 0
+    n_seeds = flagged.agg(F.sum("is_seed")).first()[0] or 0
     if n_seeds == 0:
         return nodes.select("n", F.lit(0).cast("long").alias("rank_fp"))
     deg = fwd.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
@@ -581,30 +340,17 @@ def personalized_pagerank_fixed_point(
     # (`rank_fp div deg` per edge == per-node share joined out), and
     # the symmetrized graph guarantees the contrib aggregate covers
     # every node, so the row set is identical.
-    fwd_deg_lazy = fwd.join(deg, "s").join(
-        flagged.select(F.col("n").alias("d"), "is_seed"), "d"
+    fwd_deg = (
+        fwd.join(deg, "s")
+        .join(flagged.select(F.col("n").alias("d"), "is_seed"), "d")
+        .localCheckpoint(eager=True)
     )
-    # r13 (guide §2.4): same layout decision as pagerank_fixed_point —
-    # see _layout_engaged/_layout_loop_frame.
-    cached, n_parts = None, 0
-    if _layout_engaged(fwd, n_nodes):
-        fwd_deg, n_parts = _layout_loop_frame(fwd_deg_lazy, "s", fwd.count())
-        cached = fwd_deg
-    else:
-        fwd_deg = fwd_deg_lazy.localCheckpoint(eager=True)
     init = PR_SCALE // n_seeds
     base = (15 * PR_SCALE) // (100 * n_seeds)
-    ranks = flagged.select(
-        "n", (F.col("is_seed") * F.lit(init)).cast("long").alias("rank_fp")
-    )
 
-    for it in range(iters):
-        rv = ranks.withColumnRenamed("n", "s")
-        if cached is not None:
-            # co-partition to the laid frame (see _layout_loop_frame)
-            rv = rv.repartition(n_parts, "s")
-        ranks = (
-            fwd_deg.join(rv, "s")
+    def step(ranks: DataFrame) -> DataFrame:
+        return (
+            fwd_deg.join(ranks.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("d").alias("n"))
             .agg(
                 F.sum(F.expr("rank_fp div deg")).alias("contrib"),
@@ -618,93 +364,11 @@ def personalized_pagerank_fixed_point(
                 ).alias("rank_fp"),
             )
         )
-        if (it + 1) % checkpoint_interval == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
 
-    if cached is not None:  # final ranks checkpoint is materialized
-        cached.unpersist(False)
+    ranks = _fixed_point(
+        flagged.select(
+            "n", (F.col("is_seed") * F.lit(init)).cast("long").alias("rank_fp")
+        ),
+        step, iters, checkpoint_interval,
+    )
     return ranks.select("n", "rank_fp")
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Two-phase star contraction (Kiveris et al., "Connected Components
-    in MapReduce and Beyond", SoCC 2014) — O(log n) rounds where plain
-    min-label propagation needs O(diameter). The drop-in for
-    adversarial graphs with long chains; near-dup graphs (tiny
-    stars/cliques) don't need it, which is why ``connected_components``
-    stays the default.
-
-    Each round:
-    - **large-star**: every node attaches its LARGER neighbors to its
-      minimum neighborhood element — one groupBy(min) + one join, halves
-      long chains;
-    - **small-star**: every node attaches its smaller-or-equal
-      neighbors to the minimum — together the two phases contract any
-      component to a single star, whose center is the component minimum.
-
-    Convergence witness: the edge multiset is stable when
-    (count, sum(n), sum(m)) stops changing — two cheap aggregates, no
-    edge-set diff join. Returns (node, component) like
-    ``connected_components``.
-    """
-    fwd = edges.select(F.col(src).alias("n"), F.col(dst).alias("m"))
-    nodes = (
-        fwd.select("n").union(fwd.select(F.col("m").alias("n"))).distinct()
-        .localCheckpoint(eager=True)
-    )
-    # edge list kept as undirected pairs; self-loops dropped each round
-    e = fwd.filter(F.col("n") != F.col("m")).localCheckpoint(eager=True)
-
-    def _witness(df: DataFrame):
-        r = df.agg(
-            F.count("*").alias("c"), F.sum("n").alias("sn"), F.sum("m").alias("sm")
-        ).first()
-        return (r["c"], r["sn"], r["sm"])
-
-    prev = None
-    for _ in range(max_iter):
-        # ---- large-star ----
-        sym = e.union(e.select(F.col("m").alias("n"), F.col("n").alias("m")))
-        mins = sym.groupBy("n").agg(F.min("m").alias("mn"))
-        mins = mins.select("n", F.least("n", "mn").alias("mn"))
-        e = (
-            sym.join(mins, "n")
-            .filter(F.col("m") > F.col("n"))  # larger neighbors re-attach
-            .select(F.col("m").alias("n"), F.col("mn").alias("m"))
-            .filter(F.col("n") != F.col("m"))
-            .distinct()
-        )
-        # ---- small-star ----
-        # orient every edge large->small, group by the large end
-        ori = e.select(
-            F.greatest("n", "m").alias("n"), F.least("n", "m").alias("m")
-        )
-        mins = ori.groupBy("n").agg(F.min("m").alias("mn"))
-        e = (
-            ori.join(mins, "n")
-            .select(
-                F.col("m").alias("n"), F.col("mn").alias("m")
-            )  # smaller neighbors attach to min
-            .union(mins.select("n", F.col("mn").alias("m")))
-            .filter(F.col("n") != F.col("m"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _witness(e)
-        if cur == prev:
-            break
-        prev = cur
-
-    # converged: e is a forest of stars pointing node -> component min
-    comp = e.select(
-        F.greatest("n", "m").alias("n"), F.least("n", "m").alias("component")
-    ).distinct()
-    return (
-        nodes.join(comp, "n", "left")
-        .select("n", F.coalesce("component", F.col("n")).alias("component"))
-    )

@@ -72,20 +72,27 @@ def release_caches(spark) -> int:
 
     Several registry plans persist bounded intermediate frames INSIDE
     the query builder (``cascade_frames``'s survivor/edge frames,
-    ``d_minhash_band_tuning``'s grouped buckets, the graph loops'
-    engaged-regime edge layout) — materialization always executes
-    within the caller's action, never across runs, but the blocks
-    outlive the action by design (Spark cannot unpersist a frame the
-    returned plan still reads before that plan has run). One-shot
+    ``d_minhash_band_tuning``'s grouped buckets) and the iterative
+    operators pin ``localCheckpoint`` blocks — materialization always
+    executes within the caller's action, never across runs, but the
+    blocks outlive the action by design (Spark cannot unpersist a frame
+    the returned plan still reads before that plan has run). One-shot
     embedders must therefore call this between queries — exactly what
-    ``bench.py`` and the differential harness do — or accumulate
-    duplicate cached blocks across ``query_map()`` consumers.
+    ``bench.py``, the tools and the differential harness do — or
+    accumulate duplicate cached blocks across ``query_map()`` consumers.
+
+    Call it only once the query's results are materialized: it drops
+    EVERY persistent RDD of the session, and a dropped
+    ``localCheckpoint`` block is lost, not recomputed — a DataFrame that
+    still reads it fails on its next action.
 
     Returns the number of RDDs released.
     """
-    # clearCache first so no stale CacheManager entry can resurrect a
-    # block; then drop any persist()ed RDDs the cache manager no longer
-    # tracks (the bench-hygiene pattern, bench.py:344-357).
+    # clearCache first: unpersisting blocks while the CacheManager entry
+    # survives leaves a stale entry that a LATER query with a matching
+    # plan fragment recomputes into (slower than no cache at all — r7
+    # scale-sweep finding, 20.9 -> 36.7 s on a .persist()-using query);
+    # then drop any persist()ed RDDs the cache manager does not track.
     spark.catalog.clearCache()
     jrdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
     n = jrdds.size()

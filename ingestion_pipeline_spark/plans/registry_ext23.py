@@ -53,8 +53,8 @@ _NEARDUP_PAIRS_SQL = """
     "hash gates the math (was rows-only through round 2). Per round: "
     "one edge-ranks join + one partial-aggregated sum + "
     "localCheckpoint, the identical cost envelope as a connected-"
-    "components round. Float variant (operators/graph.py:pagerank) "
-    "stays pinned against a dense Python reference in pytest. INPUT "
+    "components round. pytest pins it within the quantization bound "
+    "of a dense float Python reference. INPUT "
     "CONTRACT at scale (VERDICT r9 #4): this diagnostic deploys "
     "against the POST-DEDUP corpus — tools/build_post_dedup.py "
     "materializes it, pipeline_dedup_survivors is its oracle-gated "

@@ -5,8 +5,8 @@ build the word co-occurrence graph (adjacent lowercase-alpha word
 pairs across the corpus, vocabulary-bounded), run PageRank over it,
 surface the top-ranked words as corpus keywords. A pure composition of
 verified pieces: the bigram machinery (``tx_topk_bigrams`` shape)
-builds the edges, the centrality comes from the SAME ``pagerank``
-operator the near-dup graph uses (oracle-adjacent: Python-reference-
+builds the edges, the centrality comes from the SAME
+``pagerank_fixed_point`` operator the near-dup graph uses (oracle-adjacent: Python-reference-
 pinned in ``test_graph_sketch.py``) — graph algorithms in this engine
 are reusable operators, not per-query specials.
 

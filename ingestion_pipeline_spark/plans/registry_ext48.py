@@ -107,10 +107,8 @@ def d_minhash_lsh_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "bucket"),
     )
-    # r13: shared banded self-join (optional hot-bucket skew split,
-    # guide §2.5 — value-identical, engaged via $SPARK_GRAFT_LSH_HOT_BUCKET;
-    # join_hint=None keeps this variant's pre-r13 unhinted plan when
-    # the knob is unset).
+    # shared banded self-join; join_hint=None keeps this variant's
+    # unhinted plan.
     from ..operators.dedup import banded_self_join_pairs
 
     return banded_self_join_pairs(bands, id_col="doc_id", join_hint=None)

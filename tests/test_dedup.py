@@ -126,25 +126,3 @@ def test_collated_grouping_matches_lowercase_dedup(spark):
         .collect()
     }
     assert collated == lowered == {(3, 1), (1, 4)}
-
-
-def test_banded_self_join_hot_split_value_identical(spark):
-    """r13 LSH hot-bucket skew guard (guide §2.5): the blocked split of
-    mega-buckets must yield the EXACT pair set of the plain self-join —
-    every unordered pair once, including pairs that exist in both a hot
-    and a cold bucket."""
-    from ingestion_pipeline_spark.operators.dedup import banded_self_join_pairs
-
-    rows = [(d, 0, 7) for d in range(20)]  # one mega-bucket (20 docs)
-    rows += [(1, 1, 3), (2, 1, 3), (5, 1, 4), (30, 2, 9), (31, 2, 9), (32, 2, 9)]
-    banded = spark.createDataFrame(rows, "doc long, band int, bucket long")
-    plain = sorted(tuple(r) for r in banded_self_join_pairs(banded).collect())
-    split = sorted(
-        tuple(r)
-        for r in banded_self_join_pairs(
-            banded, hot_bucket_rows=4, hot_bucket_blocks=3
-        ).collect()
-    )
-    assert split == plain
-    # C(20,2) mega-bucket pairs ((1,2) deduped with the cold copy) + 3
-    assert len(split) == 190 + 3

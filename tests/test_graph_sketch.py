@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ingestion_pipeline_spark.operators.graph import connected_components, dup_clusters
@@ -41,6 +40,41 @@ def test_dup_clusters_singletons_and_survivors(spark):
         for r in assigned.filter(F.col("doc_id") == F.col("component")).collect()
     }
     assert survivors == {1, 2, 4, 7}
+
+
+def _cc_jobs(spark, edges, group, **kw):
+    """Run ``connected_components`` under its own job group; return the
+    labels and the number of Spark jobs the call launched."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            r["n"]: r["component"]
+            for r in connected_components(df, **kw).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fixed_point_stops_on_repeated_witness(spark):
+    """The loop driver must stop once the convergence witness repeats.
+    Values cannot show this (CC is idempotent at its fixpoint), so the
+    test counts jobs: a star centred on its minimum id converges in
+    initialization and must stop after ONE confirmation round — as many
+    jobs as a run capped at one round — while a 6-node path needs
+    several rounds and so strictly more jobs."""
+    star = [(1, i) for i in range(2, 7)]
+    path = [(i, i + 1) for i in range(1, 6)]
+    got, star_jobs = _cc_jobs(spark, star, "fp-star")
+    assert set(got.values()) == {1}
+    _, capped_jobs = _cc_jobs(spark, star, "fp-star-capped", max_iter=1)
+    assert star_jobs == capped_jobs
+    got, path_jobs = _cc_jobs(spark, path, "fp-path")
+    assert got == {i: 1 for i in range(1, 7)}
+    assert path_jobs > star_jobs
 
 
 def test_sketch_aggregates_accuracy(spark, sf_dir):
@@ -131,35 +165,6 @@ def _pr_reference(edges, damping=0.85, iters=10):
             for i in range(n)
         ]
     return {nodes[i]: rank[i] for i in range(n)}
-
-
-def test_pagerank_matches_reference_directed(spark):
-    from ingestion_pipeline_spark.operators.graph import pagerank
-
-    # 4 has no out-edges: exercises the dangling-mass redistribution
-    edges = [(1, 2), (2, 3), (3, 1), (1, 4), (5, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["n"]: r["rank"] for r in pagerank(df, iters=10).collect()}
-    ref = _pr_reference(edges)
-    assert set(got) == set(ref)
-    for k in ref:
-        assert got[k] == pytest.approx(ref[k], rel=1e-9)
-    assert sum(got.values()) == pytest.approx(1.0, rel=1e-9)
-
-
-def test_pagerank_symmetric_star_center_highest(spark):
-    from ingestion_pipeline_spark.operators.graph import pagerank
-
-    edges = [(0, i) for i in range(1, 6)] + [(10, 11)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["n"]: r["rank"] for r in pagerank(df, symmetric=True, iters=10).collect()}
-    sym = edges + [(b, a) for a, b in edges]
-    ref = _pr_reference(sym)
-    for k in ref:
-        assert got[k] == pytest.approx(ref[k], rel=1e-9)
-    # the star center dominates every leaf; the isolated pair is symmetric
-    assert got[0] > got[1]
-    assert got[10] == pytest.approx(got[11], rel=1e-9)
 
 
 # ---- Mergeable HLL sketches ------------------------------------------

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from ingestion_pipeline_spark.plans import query_map
+from ingestion_pipeline_spark.plans import query_map, release_caches
 
 # name -> max Exchange nodes in the executed plan at sf0.001.
 # Each entry is a design claim from SCALE.md / the query docstring.
@@ -150,10 +150,7 @@ def test_no_nonscalar_output_columns(spark, sf_dir):
             if bad:
                 offenders[name] = bad
     finally:
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-        while it.hasNext():
-            it.next().unpersist(False)
+        release_caches(spark)
     assert not offenders, (
         f"non-scalar output columns reach the driver: {offenders} — "
         "flatten to scalars or comma-joined fixed-point strings"

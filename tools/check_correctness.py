@@ -83,6 +83,7 @@ def main() -> int:
     import duckdb
 
     from __spark_entry__ import oracle_sql, queries
+    from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -116,13 +117,7 @@ def main() -> int:
             # pin (bench.py documents the measured leak); results are
             # already materialized above, so nothing needs the blocks
             try:
-                # clearCache first so no stale CacheManager entry
-                # survives the block drop (see bench.py — a later query
-                # with a matching plan fragment would recompute into it)
-                spark.catalog.clearCache()
-                it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-                while it.hasNext():
-                    it.next().unpersist(False)
+                release_caches(spark)
             except Exception:  # noqa: BLE001
                 pass
         if name not in oracles:

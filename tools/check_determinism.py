@@ -95,6 +95,7 @@ def _snapshot(df) -> list[tuple]:
 
 def main() -> int:
     from __spark_entry__ import queries
+    from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -152,9 +153,7 @@ def main() -> int:
             # release localCheckpoint blocks between queries (the
             # long-session leak bench.py documents)
             try:
-                it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-                while it.hasNext():
-                    it.next().unpersist(False)
+                release_caches(spark)
             except Exception:  # noqa: BLE001
                 pass
         if a != b:

@@ -1,9 +1,9 @@
 """Dump `.explain("formatted")` for named registry queries into
-plans/r13/<query>_<tag>.txt — the before/after plan evidence the r13
+plans/<round>/<query>_<tag>.txt — the before/after plan evidence an
 optimization round commits alongside each change.
 
-    python tools/dump_r13_plans.py <tag> <query> [query ...]
-    python tools/dump_r13_plans.py --sf /root/testdata/sf0.1 after q1 ...
+    python tools/dump_round_plans.py <round> <tag> <query> [query ...]
+    python tools/dump_round_plans.py --sf /root/testdata/sf0.1 r13 after q1 ...
 """
 
 from __future__ import annotations
@@ -17,20 +17,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("round", help="plans/ subdirectory, e.g. r13")
     ap.add_argument("tag", choices=["before", "after"])
     ap.add_argument("names", nargs="+")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.session import get_spark
 
-    spark = get_spark("dump-r13-plans")
+    spark = get_spark(f"dump-{args.round}-plans")
     qs = query_map()
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r13",
+        args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in args.names:
@@ -46,15 +47,7 @@ def main() -> int:
         print(f"{name}: {n_scan} parquet scans, {n_ex} Exchange -> {path}")
         # release any localCheckpoint blocks plan construction pinned
         try:
-            spark.catalog.clearCache()
-            it = (
-                spark.sparkContext._jsc.sc()
-                .getPersistentRDDs()
-                .values()
-                .iterator()
-            )
-            while it.hasNext():
-                it.next().unpersist(False)
+            release_caches(spark)
         except Exception:  # noqa: BLE001
             pass
     return 0

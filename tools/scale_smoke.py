@@ -340,7 +340,7 @@ def build_scaled(spark, out_dir: str, k: int) -> dict[str, int]:
 
 
 def main() -> int:
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     argv = sys.argv[1:]
@@ -411,19 +411,7 @@ def main() -> int:
             # v_kmeans_clusters 7.0 -> 41.5 s, all recovered once this
             # loop landed).
             try:
-                # clearCache BEFORE the RDD loop: dropping blocks while
-                # the CacheManager entry survives leaves a STALE entry —
-                # the next query whose plan fragment matches it
-                # recomputes INTO the dead cache ("Asked to cache
-                # already cached data"), measured 20.9 -> 36.7 s on
-                # back-to-back d_minhash_band_tuning runs.
-                spark.catalog.clearCache()
-                it = (
-                    spark.sparkContext._jsc.sc()
-                    .getPersistentRDDs().values().iterator()
-                )
-                while it.hasNext():
-                    it.next().unpersist(False)
+                release_caches(spark)
             except Exception:  # noqa: BLE001 — hygiene must never fail a smoke
                 pass
 

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     min_scans = 2
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     spark = get_spark("scan-census")
@@ -45,15 +45,7 @@ def main() -> int:
                 out.append((name, tbl, n, n_exchange))
         # free per-query persisted state (localCheckpoint blocks)
         try:
-            spark.catalog.clearCache()
-            it = (
-                spark.sparkContext._jsc.sc()
-                .getPersistentRDDs()
-                .values()
-                .iterator()
-            )
-            while it.hasNext():
-                it.next().unpersist(False)
+            release_caches(spark)
         except Exception:  # noqa: BLE001
             pass
     print(f"{'query':42s} {'table':12s} scans exchanges")

@@ -30,7 +30,7 @@ def main() -> int:
     ap.add_argument("--no-warmup", action="store_true")
     args = ap.parse_args()
 
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     spark = get_spark("time-queries")
@@ -69,15 +69,7 @@ def main() -> int:
                   file=sys.stderr)
         finally:
             try:
-                spark.catalog.clearCache()
-                it = (
-                    spark.sparkContext._jsc.sc()
-                    .getPersistentRDDs()
-                    .values()
-                    .iterator()
-                )
-                while it.hasNext():
-                    it.next().unpersist(False)
+                release_caches(spark)
             except Exception:  # noqa: BLE001
                 pass
         if runs:
