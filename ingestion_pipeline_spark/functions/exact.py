@@ -16,9 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-MONEY = "decimal(18,2)"
-HI = "decimal(30,6)"
-
 
 def dec(col: Column | str, scale: int = 2) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -56,16 +53,6 @@ def one_plus(col: Column | str) -> Column:
     """(1 + rate) as exact decimal — for tax multipliers."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lit(1).cast("decimal(4,2)") + c.cast("decimal(4,2)")
-
-
-def round_dec(col: Column, scale: int = 6) -> Column:
-    """Round a double expression and cast to decimal for exact summation.
-
-    Use for per-row *derived* values (products of money columns): the
-    per-row double arithmetic is deterministic (IEEE 754, same expression
-    shape on every engine); quantizing to decimal afterwards makes the
-    subsequent SUM associative."""
-    return F.round(col, scale).cast(f"decimal(30,{scale})")
 
 
 # ---------------------------------------------------------------------------

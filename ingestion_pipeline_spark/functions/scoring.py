@@ -70,13 +70,13 @@ def rag_verdict(response: Column, context: Column) -> Column:
     reference checks FP first).
 
     r12 (guide §2.3 per-task work): the two phrase sets are bound to a
-    lambda variable via the 1-element-array transform trick (the
-    ``signature_bits`` precedent) so each evaluates ONCE per row — the
-    naive when/otherwise form inlined BOTH interpreted
-    split→transform(trim)→distinct subtrees into BOTH branches (4
-    phrase-set evaluations per row in the compiled plan; HOF transforms
-    are CodegenFallback, so no codegen CSE rescues them). Same
-    functions, same order — value-identical."""
+    lambda variable via the 1-element-array transform trick (as
+    ``operators.dedup.shingles`` binds its tokens) so each evaluates
+    ONCE per row — the naive when/otherwise form inlined BOTH
+    interpreted split→transform(trim)→distinct subtrees into BOTH
+    branches (4 phrase-set evaluations per row in the compiled plan;
+    HOF transforms are CodegenFallback, so no codegen CSE rescues
+    them). Same functions, same order — value-identical."""
     pair = F.array(
         F.struct(
             phrase_set(response).alias("r"), phrase_set(context).alias("c")

@@ -8,9 +8,19 @@ in the hot path, so they vectorize over 100 TB of documents unchanged.
 
 from __future__ import annotations
 
+import re
+import sys
+
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+from pyspark import cloudpickle
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+# Arrow kernels here, in operators/dedup.py and in the plans call
+# ``word_ngrams``; ship this module's functions to Python workers by
+# value, so a worker never has to import the package (it may not be on
+# the worker's path).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 CVE_REGEX_ALL = r"CVE-\d{4}-\d{4,7}"   # llama-chatbot/main.py:290-294 (X1)
 CVE_REGEX_FIRST = r"CVE-\d{4}-\d+"     # chatbot/main.py:121-128 (X2)
@@ -62,12 +72,6 @@ def truncate(col: Column, n: int = 200) -> Column:
 
 
 STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
-
-
-def stopword_ratio(col: Column) -> Column:
-    toks = word_tokens(F.lower(col))
-    stop = F.filter(toks, lambda t: t.isin(STOPWORDS))
-    return F.when(F.size(toks) > 0, F.size(stop) / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def punct_ratio(col: Column) -> Column:
@@ -238,18 +242,23 @@ def langid_join(
     return df.join(best, id_col, "left").withColumn(alias, F.coalesce(F.col(alias), F.lit("und")))
 
 
+def normalized_content(col: Column) -> Column:
+    """The exact-dup normalization: lowercase, trim, collapse each run of
+    whitespace to one space. The SQL oracles spell it
+    ``regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')``."""
+    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+
+
 def fingerprint(col: Column) -> Column:
-    """Document fingerprint: 64-bit hash of normalized text (lowercased,
-    whitespace-collapsed). Exact-dup key at any scale (xxhash64 is the
-    JVM-side 64-bit hash; stable across partitions/runs)."""
-    normalized = F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
-    return F.xxhash64(normalized)
+    """Document fingerprint: 64-bit hash of normalized text. Exact-dup
+    key at any scale (xxhash64 is the JVM-side 64-bit hash; stable
+    across partitions/runs)."""
+    return F.xxhash64(normalized_content(col))
 
 
 def content_md5(col: Column) -> Column:
     """Portable content hash (md5 hex) — matches any SQL oracle."""
-    normalized = F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
-    return F.md5(normalized)
+    return F.md5(normalized_content(col))
 
 
 # ---- PII redaction (training-data hygiene pass) -----------------------
@@ -276,6 +285,32 @@ def pii_counts(col: Column) -> tuple[Column, Column]:
     )
 
 
+# re.ASCII: Python's \s is Unicode-aware (U+00A0 etc.); with re.ASCII it
+# is exactly [ \t\n\r\f\v] — byte-for-byte the JAVA regex \s
+# ([ \t\n\x0B\f\r]) the Spark expression variants split on, so
+# kernel-vs-JVM parity is exact (ADVICE r8). Known residual (ADVICE r9):
+# RE2 — DuckDB's string_split_regex — defines \s as [\t\n\f\r ] WITHOUT
+# vertical tab, so a doc containing U+000B tokenizes differently
+# kernel-vs-oracle. No single class matches both engines; we keep
+# Java/Python agreement (the production pair) and note that \v never
+# appears in the ASCII fixtures — the bounds harness asserts the domain
+# premise it depends on.
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def word_ngrams(text: str, n: int, rx: re.Pattern = _WS) -> list[str]:
+    """The Python word ``n``-gram tokenizer of the Arrow kernels:
+    lowercase, split on ``rx``, drop empty tokens, join each ``n``
+    consecutive tokens with one space. Returns the grams in text order,
+    repeats included; empty when the text has fewer than ``n`` tokens.
+
+    With the default ``rx`` this matches the JVM form
+    ``filter(split(lower(text), '\\s+', -1), t -> t <> '')`` (see the
+    ``_WS`` note); ``str.lower`` matches ``lower()`` on ASCII corpora."""
+    toks = [w for w in rx.split(text.lower()) if w]
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
 def word_shingles_np(k: int, split: str = "[^a-z]+"):
     """Arrow-batched distinct k-word shingler (lowercase, then split on
     ``split`` — ``[^a-z]+`` matches the contamination oracle's
@@ -286,34 +321,19 @@ def word_shingles_np(k: int, split: str = "[^a-z]+"):
     element — and benches ~4× slower on a full-corpus shingle pass;
     per-row Python over Arrow batches wins well before 100 TB, where
     this projection touches every document."""
-    import re
-
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 
-    # re.ASCII: keep \s/\w in caller-supplied patterns ASCII-only so the
-    # kernel tokenizes exactly like the Java-regex/RE2 expressions it is
-    # value-gated against (Python's Unicode \s matches U+00A0 etc.)
+    # re.ASCII keeps \s/\w in caller-supplied patterns ASCII-only (see _WS)
     rx = re.compile(split, re.ASCII)
 
     @pandas_udf(ArrayType(StringType()))
     def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            ws = [w for w in rx.split((t or "").lower()) if w]
-            if len(ws) < k:
-                out.append([])
-            else:
-                # dict.fromkeys = order-preserving distinct (parity with
-                # array_distinct; consumers treat the array as a set)
-                out.append(
-                    list(
-                        dict.fromkeys(
-                            " ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)
-                        )
-                    )
-                )
-        return pd.Series(out)
+        # dict.fromkeys = order-preserving distinct (parity with
+        # array_distinct; consumers treat the array as a set)
+        return pd.Series(
+            [list(dict.fromkeys(word_ngrams(t or "", k, rx))) for t in texts]
+        )
 
     return sh
 

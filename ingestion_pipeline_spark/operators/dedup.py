@@ -12,8 +12,18 @@ cheapest-first:
 - n-gram Jaccard: exact verification on candidate pairs (used standalone
   at fixture scale, as the re-rank stage after LSH at 100 TB).
 
-All built from JVM-side functions (xxhash64, transform, aggregate); no
-Python UDFs, so every stage is codegen'd and shuffle-bound only.
+The hash, band and join stages are JVM-side functions (xxhash64,
+transform, aggregate). Four stages run as Arrow kernels, where per-row
+Python over a batch beats interpreted higher-order functions:
+
+- ``minhash_md5_slots``: the md5 MinHash signature, straight from text.
+- ``jaccard3_bp``: exact n-gram Jaccard of a candidate pair (verify).
+- ``minhash_bands``: the splitmix64 MinHash and the band fold, in one
+  ``mapInPandas`` pass.
+- ``functions.text.word_shingles_np``: the shingler behind
+  ``jaccard_pairs`` and ``containment_pairs``.
+
+The three text kernels tokenize with ``functions.text.word_ngrams``.
 """
 
 from __future__ import annotations
@@ -22,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import content_md5, word_tokens
+from ..functions.text import content_md5, word_ngrams, word_shingles_np, word_tokens
 from .relational import spread
 
 
@@ -49,10 +59,6 @@ def banded_self_join_pairs(
         F.col(f"l.{id_col}").alias("id_a"),
         F.col(f"r.{id_col}").alias("id_b"),
     ).distinct()
-
-
-def normalized_text(col: Column) -> Column:
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
 
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -98,56 +104,6 @@ def hashed_shingles(shingle_col: Column, seed: int = 42) -> Column:
     return F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(seed)))
 
 
-def minhash_signature(hashed_col: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature as array<bigint> over pre-hashed shingles (see
-    ``hashed_shingles``): the i-th hash function is a cheap re-hash of
-    the 64-bit value with seed i — n_hashes bigint passes instead of
-    n_hashes string passes."""
-    # NB: the lambda must be arity-1 — a two-arg lambda would make
-    # F.transform pass the ELEMENT INDEX as the second argument.
-    def rehash_with(i: int):
-        return lambda h: F.xxhash64(h, F.lit(i))
-
-    mins = [F.array_min(F.transform(hashed_col, rehash_with(i))) for i in range(n_hashes)]
-    return F.array(*mins)
-
-
-def minhash_signature_np(n_hashes: int = 32):
-    """Arrow-vectorized MinHash: per batch, one (n_hashes × n_shingles)
-    splitmix64 mix + row-min in numpy instead of n_hashes interpreted
-    HOF passes per row (HOFs are CodegenFallback). Same algebra as
-    ``minhash_signature`` — min over n independent permutations of the
-    shingle-hash set — with a different (still deterministic) hash
-    family, so banding probabilities are identical. The md5 expression
-    variant stays the oracle-verified reference implementation."""
-    import numpy as np
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-    c1, c2 = np.uint64(0xBF58476D1CE4E5B9), np.uint64(0x94D049BB133111EB)
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(shingle_hashes: pd.Series) -> pd.Series:
-        out = []
-        for arr in shingle_hashes:
-            if arr is None or len(arr) == 0:
-                # parity with the expression variant: per-seed nulls
-                # (array_min of an empty array), not a null array
-                out.append([None] * n_hashes)
-                continue
-            h = np.asarray(arr, dtype=np.int64).astype(np.uint64)
-            m = h[None, :] ^ seeds[:, None]
-            m = (m ^ (m >> np.uint64(30))) * c1
-            m = (m ^ (m >> np.uint64(27))) * c2
-            m = m ^ (m >> np.uint64(31))
-            out.append(m.min(axis=1).astype(np.int64))
-        return pd.Series(out, dtype=object)
-
-    return sig
-
-
 def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
     """Arrow batch kernel for the PORTABLE md5 MinHash family: raw TEXT
     column → array of ``n_hashes`` lexicographic-min hex digests over
@@ -174,51 +130,32 @@ def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
     have to carry the HOF's NamedLambdaVariables — Spark fails with
     "Cannot generate code for expression: sig(...)" once
     CollapseProject merges ``shingles()`` into the UDF call), so the
-    kernel tokenizes internally. Parity is exact on every fixture and
-    replica: ``re.split(r"\\s+")`` + drop-empties matches
-    ``filter(split(lower(text), '\\s+', -1), t -> t <> '')``,
-    ``str.lower`` matches ``lower()`` (ASCII corpora), the n-gram
-    join is a single space, and distinctness is a no-op under min.
-    hashlib.md5 over UTF-8 bytes matches JVM/DuckDB md5 bytes exactly;
-    hex digests are fixed-width lowercase so Python ``<`` equals the
-    engines' lexicographic string min.
+    kernel tokenizes internally with ``functions.text.word_ngrams``,
+    whose parity with the JVM tokenizer is exact on every fixture and
+    replica; distinctness is a no-op under min. hashlib.md5 over UTF-8
+    bytes matches JVM/DuckDB md5 bytes exactly; hex digests are
+    fixed-width lowercase so Python ``<`` equals the engines'
+    lexicographic string min.
 
     Null parity with the expression variant: NULL/short texts yield
     per-slot NULLs (``array_min`` of an empty array), not a NULL
     array, so ``sig[0] IS NOT NULL`` filters behave identically."""
     import hashlib
-    import re
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 
     salts = [f"{i}|".encode() for i in range(n_hashes)]
-    # re.ASCII: Python's \s is Unicode-aware (U+00A0 etc.); with
-    # re.ASCII it is exactly [ \t\n\r\f\v] — byte-for-byte the JAVA
-    # regex \s ([ \t\n\x0B\f\r]) the Spark expression variants split
-    # on, so kernel-vs-JVM parity is exact (ADVICE r8). Known residual
-    # (ADVICE r9): RE2 — DuckDB's string_split_regex — defines \s as
-    # [\t\n\f\r ] WITHOUT vertical tab, so a doc containing U+000B
-    # tokenizes differently kernel-vs-oracle. No single class matches
-    # both engines; we keep Java/Python agreement (the production
-    # pair) and note that \v never appears in the ASCII fixtures — the
-    # bounds harness asserts the domain premise it depends on.
-    ws = re.compile(r"\s+", re.ASCII)
 
     @pandas_udf(ArrayType(StringType()))
     def sig(texts: pd.Series) -> pd.Series:
         cache: dict[str, list[str]] = {}
         out = []
         for t in texts:
-            toks = (
-                [w for w in ws.split(t.lower()) if w] if t is not None else []
-            )
-            if len(toks) < n:
+            grams = set(word_ngrams(t, n)) if t is not None else set()
+            if not grams:
                 out.append([None] * n_hashes)
                 continue
-            grams = {
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            }
             mins: list[str] | None = None
             for g in grams:
                 d = cache.get(g)
@@ -258,14 +195,8 @@ def jaccard3_bp(n: int = 3):
 
     NULL/short texts yield NULL (never hit by the LSH call sites —
     banding already filtered docs with < n tokens)."""
-    import re
-
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
-
-    # re.ASCII for Java-regex \s parity; \v residual vs RE2 — see
-    # minhash_md5_slots
-    ws = re.compile(r"\s+", re.ASCII)
 
     @pandas_udf(LongType())
     def jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
@@ -274,16 +205,7 @@ def jaccard3_bp(n: int = 3):
         def grams(s):
             g = cache.get(s)
             if g is None:
-                toks = [w for w in ws.split(s.lower()) if w]
-                g = (
-                    frozenset(
-                        " ".join(toks[i : i + n])
-                        for i in range(len(toks) - n + 1)
-                    )
-                    if len(toks) >= n
-                    else frozenset()
-                )
-                cache[s] = g
+                g = cache[s] = frozenset(word_ngrams(s, n))
             return g
 
         out = []
@@ -401,44 +323,31 @@ def simhash64(col: Column, n: int = 3) -> Column:
     return F.array_join(F.transform(votes, lambda v: F.when(v >= 0, F.lit("1")).otherwise(F.lit("0"))), "")
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    block_col: str,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
+def _co_shingle_counts(
+    df: DataFrame, text_col: str, id_col: str, block_col: str, shingle_n: int
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity on co-blocked pairs (id_a < id_b):
-    J = |A∩B| / |A∪B| over word-shingle sets. ``block_col`` bounds the
-    pair space (at 100 TB the block key is the LSH bucket from
-    ``minhash_lsh_candidates``; here any low-cardinality column works).
+    """Co-blocked pairs sharing at least one word shingle, as
+    ``(id_a, id_b, na, nb, inter)`` with ``id_a < id_b``: each side's
+    distinct shingle count and the size of their intersection.
 
-    ``threshold`` must be > 0: pairs sharing zero shingles are never
-    emitted (they carry no dedup signal, and enumerating them is the
-    quadratic all-pairs join this operator exists to avoid).
-    """
-    if threshold <= 0:
-        raise ValueError("jaccard_pairs requires threshold > 0 (J=0 pairs are not enumerated)")
-    # Inverted-index design: explode shingles into postings, self-join
-    # on (block, shingle) — a pair appears once per SHARED shingle, so
-    # |A∩B| is a plain count. Candidates must share ≥1 shingle, which is
-    # implied by any threshold > 0 — exact, not approximate. The round-1
-    # all-pairs block cross-join went quadratic in block size (10× docs
-    # → 100× pairs, each paying an array_intersect); this shuffles
-    # postings on (block, shingle) instead, and only genuinely-
-    # overlapping pairs reach the aggregate. Hot-shingle skew is bounded
-    # by within-block n-gram frequency (AQE skew-join splits the rest).
-    #
-    # Each posting carries its document's TOTAL shingle count ``n``, so
-    # |A∪B| = na+nb-|A∩B| falls out of the same aggregate — no separate
-    # sizes table, no post-join enrichment: the shingler (a pandas UDF,
-    # the expensive projection here) appears exactly twice in the plan
-    # (the two join inputs), and those are byte-identical subplans that
-    # AQE collapses into one ReusedExchange — one Python pass over the
-    # corpus total, versus three (a-side, b-side, sizes) before.
-    from ..functions.text import word_shingles_np
+    Inverted-index design: explode shingles into postings, self-join on
+    (block, shingle) — a pair appears once per SHARED shingle, so |A∩B|
+    is a plain count. Candidates must share ≥1 shingle, which any
+    caller threshold > 0 implies — exact, not approximate. The round-1
+    all-pairs block cross-join went quadratic in block size (10× docs →
+    100× pairs, each paying an array_intersect); this shuffles postings
+    on (block, shingle) instead, and only genuinely-overlapping pairs
+    reach the aggregate. Hot-shingle skew is bounded by within-block
+    n-gram frequency (AQE skew-join splits the rest).
 
+    Each posting carries its document's TOTAL shingle count ``n``, so
+    the callers' |A∪B| and min(|A|, |B|) fall out of the same aggregate
+    — no separate sizes table, no post-join enrichment: the shingler (a
+    pandas UDF, the expensive projection here) appears exactly twice in
+    the plan (the two join inputs), and those are byte-identical
+    subplans that AQE collapses into one ReusedExchange — one Python
+    pass over the corpus total, versus three (a-side, b-side, sizes)
+    before."""
     # asNondeterministic: CollapseProject would otherwise inline the
     # UDF column into BOTH consumers (size() and the explode generator),
     # planning TWO ArrowEvalPython nodes per join side — the shingler
@@ -479,6 +388,30 @@ def jaccard_pairs(
             F.col("b.n").alias("nb"),
         )
         .agg(F.count("*").alias("inter"))
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_col: str,
+    threshold: float = 0.5,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity on co-blocked pairs (id_a < id_b):
+    J = |A∩B| / |A∪B| over word-shingle sets. ``block_col`` bounds the
+    pair space (at 100 TB the block key is the LSH bucket from
+    ``minhash_lsh_candidates``; here any low-cardinality column works).
+
+    ``threshold`` must be > 0: pairs sharing zero shingles are never
+    emitted (they carry no dedup signal, and enumerating them is the
+    quadratic all-pairs join this operator exists to avoid).
+    """
+    if threshold <= 0:
+        raise ValueError("jaccard_pairs requires threshold > 0 (J=0 pairs are not enumerated)")
+    return (
+        _co_shingle_counts(df, text_col, id_col, block_col, shingle_n)
         .select(
             "id_a",
             "id_b",
@@ -553,46 +486,13 @@ def containment_pairs(
     catches a SHORT document embedded in a LONG one (quotes, excerpts,
     concatenated dumps), which Jaccard structurally misses: a 50-shingle
     doc fully inside a 1000-shingle doc has J ≈ 0.05 but C = 1.0.
-    Same inverted-index posting join as ``jaccard_pairs`` (explode →
-    (block, shingle) equi-join → count; identical scale properties),
-    plus the containment DIRECTION: ``contained_id`` is the smaller
-    side, ties to the lower id."""
+    Same inverted-index posting join as ``jaccard_pairs``
+    (``_co_shingle_counts``; identical scale properties), plus the
+    containment DIRECTION: ``contained_id`` is the smaller side, ties
+    to the lower id."""
     if threshold <= 0:
         raise ValueError("containment_pairs requires threshold > 0")
-    from ..functions.text import word_shingles_np
-
-    sh_udf = word_shingles_np(shingle_n, split=r"\s+").asNondeterministic()
-    tok = (
-        spread(df)
-        .select(
-            F.col(block_col).alias("block"),
-            F.col(id_col).alias("doc"),
-            sh_udf(F.col(text_col)).alias("__sh"),
-        )
-        .select(
-            "block",
-            "doc",
-            F.size(F.col("__sh")).alias("n"),
-            F.explode(F.col("__sh")).alias("s"),
-        )
-    )
-    a, b = tok.alias("a"), tok.alias("b")
-    counted = (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("inter"))
-    )
+    counted = _co_shingle_counts(df, text_col, id_col, block_col, shingle_n)
     return counted.select(
         "id_a",
         "id_b",

@@ -10,17 +10,16 @@ corpus's index live in cluster memory.
 
 Query-time scoring is asymmetric distance computation (ADC): the probe
 precomputes an M×K table of partial dot products against every
-codeword (tiny, driver-side), broadcasts it, and each encoded vector's
-approximate score is M table lookups — a numpy gather per Arrow
-batch, no float vectors read at all. The approximate top-C candidates
-then get one exact rerank against their true vectors (same two-stage
-shape as ``v_two_stage_rerank``).
+codeword (tiny, driver-side); each vector's approximate score is M
+table lookups, numpy work per Arrow batch. The top-C candidates then
+get one exact rerank against their true vectors (the two-stage shape
+of ``v_two_stage_rerank``; callers: ``v_pq_adc_topk``, ``v_ivfadc_topk``).
 
-Training is deterministic Lloyd k-means per subspace (init = first K
-distinct training subvectors in id order, fixed iteration count, ties
-to the lowest codeword id), so codes and results are reproducible
-across runs/engines — the same determinism discipline as the LCG
-hyperplanes and fixed IVF seeds.
+Everything here is exact integer arithmetic over vectors quantized by
+``kmeans.quantized``: per-subspace Lloyd k-means (init = first K
+training rows in id order, fixed iteration count, ties to the lowest
+codeword id), so codes and results are reproducible across runs and
+engines, and the DuckDB oracle in ``plans/pq_sql.py`` replays them.
 
 Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
 Search" (TPAMI 2011) is the public reference for the method.
@@ -29,39 +28,8 @@ Search" (TPAMI 2011) is the public reference for the method.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def train_pq_codebooks(vectors, m: int = 8, k: int = 16, iters: int = 5):
-    """Deterministic per-subspace Lloyd k-means.
-
-    ``vectors``: (n, dim) array-like, dim divisible by m. Returns
-    (m, k, dim//m) ndarray. Train on a bounded sample at scale — PQ
-    codebooks converge from ~100·k vectors; the collect is O(sample),
-    never O(corpus).
-    """
-    import numpy as np
-
-    X = np.asarray(vectors, dtype=np.float64)
-    n, dim = X.shape
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    d_sub = dim // m
-    books = np.empty((m, k, d_sub))
-    for mi in range(m):
-        sub = X[:, mi * d_sub : (mi + 1) * d_sub]
-        cent = sub[:k].copy()  # deterministic init: first k training rows
-        for _ in range(iters):
-            # (n, k) squared L2 distances; argmin ties → lowest id
-            d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for ki in range(k):
-                mask = assign == ki
-                if mask.any():
-                    cent[ki] = sub[mask].mean(axis=0)
-        books[mi] = cent
-    return books
 
 
 def train_pq_codebooks_int(Q, m: int = 8, k: int = 16, iters: int = 2):
@@ -141,79 +109,3 @@ def adc_score_int(vq_col: str, probe_q, codebooks_int) -> Column:
         return pd.Series(total)
 
     return score(F.col(vq_col))
-
-
-def encode_pq(df: DataFrame, vec_col: str, codebooks) -> Column:
-    """array<int> code column (length M): nearest codeword per subspace.
-    One numpy pass per Arrow batch; write-time work, like the IVF
-    cluster assignment."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    books = np.asarray(codebooks)
-    m, k, d_sub = books.shape
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def enc(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        X = np.stack(vecs.to_numpy()).astype(np.float64)
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for mi in range(m):
-            sub = X[:, mi * d_sub : (mi + 1) * d_sub]
-            d2 = ((sub[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=2)
-            codes[:, mi] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return enc(F.col(vec_col))
-
-
-def adc_score(codes_col: str, probe, codebooks) -> Column:
-    """Approximate dot(probe, decoded vector) via the ADC lookup table —
-    M gathers per row, vectorized over the Arrow batch."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    books = np.asarray(codebooks)
-    m, k, d_sub = books.shape
-    p = np.asarray(probe, dtype=np.float64)
-    # table[mi, ki] = dot(probe_sub_mi, codeword_ki)
-    table = np.einsum("mkd,md->mk", books, p.reshape(m, d_sub))
-
-    @pandas_udf(DoubleType())
-    def score(codes: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype="float64")
-        C = np.stack(codes.to_numpy()).astype(np.int64)  # (n, m)
-        return pd.Series(table[np.arange(m)[None, :], C].sum(axis=1))
-
-    return score(F.col(codes_col))
-
-
-def pq_topk(
-    emb: DataFrame,
-    vec_col: str,
-    id_col: str,
-    probe,
-    codebooks,
-    k: int = 8,
-    candidates: int = 64,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Two-stage PQ search: ADC scan over codes → top-``candidates`` →
-    exact cosine rerank → top-``k``. Returns (id, sim) like
-    ``brute_force_topk`` so recall is directly comparable."""
-    from .similarity import brute_force_topk
-
-    coded = emb.select(id_col, vec_col, encode_pq(emb, vec_col, codebooks).alias("__codes"))
-    if exclude_id is not None:
-        coded = coded.filter(F.col(id_col) != exclude_id)
-    cand = (
-        coded.withColumn("__adc", adc_score("__codes", probe, codebooks))
-        .orderBy(F.col("__adc").desc(), id_col)
-        .limit(candidates)
-        .select(id_col, vec_col)
-    )
-    return brute_force_topk(cand, vec_col, probe, k=k, id_col=id_col)

@@ -128,43 +128,3 @@ def asof_join(
         ],
     )
     return carried.filter(F.col("__asof_tag") == 1).drop("__asof_tag")
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-mitigated equi-join: spread each hot ``on`` key of the big
-    ``left`` side over ``n_salts`` sub-keys (deterministic whole-row
-    hash — no ``rand()``, so retries/speculative tasks agree), and
-    replicate the small ``right`` side once per salt. The join becomes
-    (key, salt)-partitioned, so one pathological key occupies
-    ``n_salts`` tasks instead of one straggler.
-
-    Use when AQE's skew-join split can't help: skewed BROADCAST-ineligible
-    right sides, or downstream ops that must reuse the salted
-    partitioning. Replication multiplies the right side — keep it the
-    dimension side. AQE (on by default in session.py) handles the rest.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts)).cast("int")
-    lsalted = left.withColumn("__salt", salt)
-    rsalted = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return lsalted.join(rsalted, [on, "__salt"], how).drop("__salt")
-
-
-def running_total(
-    df: DataFrame, partition_by: str, order_by: Sequence[Column], value: Column, alias: str
-) -> DataFrame:
-    """Cumulative sum per key (streaming-style running aggregate done as a
-    batch window). The value is summed in decimal for determinism."""
-    w = (
-        Window.partitionBy(partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(alias, F.sum(value).over(w).cast("double"))

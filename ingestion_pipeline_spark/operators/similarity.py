@@ -20,12 +20,40 @@ Strategy selection for scale (SURVEY §4 item 1):
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, normalize  # noqa: F401 — re-exported (kept for API parity; the HOF cosine remains the documented reference form)
 from .relational import spread, topk, topk_per_group
+
+# The Arrow cosine kernels call ``_null_masked``: ship this module's
+# functions to Python workers by value (as functions/text.py does).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _null_masked(valid, n: int, sims) -> pd.Series:
+    """The NULL path shared by the Arrow cosine kernels (ADVICE r12): a
+    row with a NULL vector gets a NULL sim (the SQL null propagation of
+    the old HOF cosine) instead of crashing ``np.stack``. ``valid`` is
+    the batch's non-NULL row mask; ``sims(rows)`` is the kernel's own
+    float64 arithmetic over the rows that ``rows`` selects. With no
+    NULLs it runs once over the whole batch — the r12 fast path,
+    bitwise-identical output."""
+    import numpy as np
+
+    if n == 0:
+        return pd.Series([], dtype="float64")
+    if valid.all():
+        return pd.Series(sims(slice(None)))
+    res = np.zeros(n, dtype=np.float64)
+    if valid.any():
+        res[valid] = sims(valid)
+    out = pd.Series(res, dtype="Float64")
+    out[~valid] = pd.NA
+    return out
 
 
 def probe_cosine_np(probe: list[float]):
@@ -53,31 +81,15 @@ def probe_cosine_np(probe: list[float]):
 
     @pandas_udf(DoubleType())
     def cos(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="float64")
-        valid = vecs.notna().to_numpy()
-        if valid.all():  # fast path: bitwise-identical to the r12 kernel
-            mat = np.stack(vecs.to_numpy()).astype(np.float64)
+        def sims(rows):
+            mat = np.stack(vecs.to_numpy()[rows]).astype(np.float64)
             num = mat @ pv
             den = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * pn
-            return pd.Series(np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0))
-        # ADVICE r12: NULL vectors must yield NULL sims (the old HOF
-        # cosine's SQL null propagation), not crash np.stack
-        res = np.zeros(len(vecs), dtype=np.float64)
-        if valid.any():
-            mat = np.stack(vecs[valid].to_numpy()).astype(np.float64)
-            num = mat @ pv
-            den = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * pn
-            res[valid] = np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0)
-        out = pd.Series(res, dtype="Float64")
-        out[~valid] = pd.NA
-        return out
+            return np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0)
+
+        return _null_masked(vecs.notna().to_numpy(), len(vecs), sims)
 
     return cos.asNondeterministic()
-
-
-def with_cosine(df: DataFrame, vec_col: str, probe: list[float], alias: str = "sim") -> Column | DataFrame:
-    return df.withColumn(alias, F.round(probe_cosine_np(probe)(F.col(vec_col)), 6))
 
 
 def brute_force_topk(
@@ -98,7 +110,7 @@ def brute_force_topk(
     # parquet scan (PushedFilters) where it belongs.
     if exclude_id is not None:
         df = df.filter(F.col(id_col) != exclude_id)
-    out = with_cosine(df, vec_col, probe)
+    out = df.withColumn("sim", F.round(probe_cosine_np(probe)(F.col(vec_col)), 6))
     if threshold is not None:
         out = out.filter(F.col("sim") >= threshold)   # F3 — chatbot/main.py:69
     return topk(out, [F.col("sim").desc(), F.col(id_col).asc()], k)
@@ -186,31 +198,17 @@ def cosine_pairs_np():
 
     @pandas_udf(DoubleType())
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        valid = (a.notna() & b.notna()).to_numpy()
-        if valid.all():  # fast path: bitwise-identical to the r12 kernel
-            A = np.stack(a.to_numpy()).astype(np.float64)
-            B = np.stack(b.to_numpy()).astype(np.float64)
+        def sims(rows):
+            A = np.stack(a.to_numpy()[rows]).astype(np.float64)
+            B = np.stack(b.to_numpy()[rows]).astype(np.float64)
             num = np.einsum("ij,ij->i", A, B)
             den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
                 np.einsum("ij,ij->i", B, B)
             )
-            return pd.Series(np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0))
-        # ADVICE r12: NULL on either side yields a NULL sim (SQL null
-        # propagation of the old HOF form), not an np.stack crash
-        res = np.zeros(len(a), dtype=np.float64)
-        if valid.any():
-            A = np.stack(a[valid].to_numpy()).astype(np.float64)
-            B = np.stack(b[valid].to_numpy()).astype(np.float64)
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-                np.einsum("ij,ij->i", B, B)
-            )
-            res[valid] = np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0)
-        out = pd.Series(res, dtype="Float64")
-        out[~valid] = pd.NA
-        return out
+            return np.where(den > 0, num / np.where(den == 0, 1.0, den), 0.0)
+
+        # NULL on either side yields a NULL sim
+        return _null_masked((a.notna() & b.notna()).to_numpy(), len(a), sims)
 
     return cos
 
@@ -289,25 +287,6 @@ def assign_nearest_quantized(
         return pd.Series(np.argmax(scores, axis=1).astype("int32"))
 
     return nearest
-
-
-def signature_bits(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection signature as an array<int> of 0/1 bits —
-    pure column math (one dot product per plane). The input vector is
-    bound to a lambda variable (single-element-array transform trick) so
-    any cast/normalization feeding it evaluates once, not once per
-    plane."""
-
-    def build(v: Column) -> Column:
-        bits = []
-        for plane in planes:
-            pcol = F.array(*[F.lit(float(x)) for x in plane])
-            prods = F.zip_with(v, pcol, lambda x, y: x.cast("double") * y)
-            d = F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-            bits.append(F.when(d >= 0, 1).otherwise(0))
-        return F.array(*bits)
-
-    return F.element_at(F.transform(F.array(vec_col), build), 1)
 
 
 def lsh_topk_join(
@@ -444,102 +423,6 @@ def mmr_rerank(
         penalty = max((pair[i, j] for j in selected[:-1]), default=0.0)
         out.append((ids[i], rel[i], r9(lam * rel[i] - (1 - lam) * penalty)))
     return out
-
-
-def lsh_multiprobe_topk_join(
-    corpus: DataFrame,
-    probes: DataFrame,
-    dim: int,
-    corpus_vec: str = "embedding",
-    probe_vec: str = "embedding",
-    probe_id: str = "probe_id",
-    k: int = 5,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Multi-probe LSH (Lv et al., VLDB 2007): recall upgrade for the
-    banded sign-LSH join WITHOUT touching the index. The corpus keeps
-    its one key per band; each PROBE additionally emits every one-bit-
-    flip variant of its band keys — near neighbors that landed one sign
-    decision across the boundary are recovered. Candidate volume grows
-    by at most ×(per_band+1) on the probe side only (probes are the
-    small side by construction), the corpus-side index and shuffle are
-    unchanged — which is why production systems prefer multi-probe over
-    adding hash tables. Recall(multi) >= recall(single) by candidate-set
-    inclusion; measured against exact kNN in tests."""
-    planes = random_hyperplanes(dim, n_planes, seed)
-    per_band = n_planes // n_bands
-    sig_udf = signature_bits_np(planes)
-
-    def corpus_bands(df: DataFrame) -> DataFrame:
-        out = df.withColumn("__sig", sig_udf(F.col(corpus_vec)))
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        "", F.slice(F.col("__sig"), b * per_band + 1, per_band)
-                    ).alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return out.withColumn("__band", F.explode(bands)).select(
-            "vec_id",
-            F.col(corpus_vec).alias("__corpus_vec"),
-            F.col("__band.band").alias("band"),
-            F.col("__band.key").alias("bkey"),
-        )
-
-    def probe_bands_multiprobe(df: DataFrame) -> DataFrame:
-        out = df.withColumn("__sig", sig_udf(F.col(probe_vec)))
-
-        def bit(b: int, j: int):
-            return F.element_at("__sig", b * per_band + j + 1)
-
-        structs = []
-        for b in range(n_bands):
-            # exact key (flip = none) plus every one-bit flip
-            for flip in [None, *range(per_band)]:
-                parts = [
-                    (
-                        (F.lit(1) - bit(b, j)) if flip == j else bit(b, j)
-                    ).cast("string")
-                    for j in range(per_band)
-                ]
-                structs.append(
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws("", *parts).alias("key"),
-                    )
-                )
-        return out.withColumn("__band", F.explode(F.array(*structs))).select(
-            F.col(probe_id),
-            F.col(probe_vec).alias("__probe_vec"),
-            F.col("__band.band").alias("band"),
-            F.col("__band.key").alias("bkey"),
-        )
-
-    c = corpus_bands(spread(corpus, min_partitions=8))
-    p = probe_bands_multiprobe(probes)
-    cand = (
-        c.join(p, ["band", "bkey"])
-        .select("vec_id", probe_id, "__corpus_vec", "__probe_vec")
-        .dropDuplicates(["vec_id", probe_id])
-        .withColumn(
-            "sim",
-            F.round(
-                cosine_pairs_np()(F.col("__corpus_vec"), F.col("__probe_vec")), 6
-            ),
-        )
-    )
-    return topk_per_group(
-        cand.drop("__probe_vec", "__corpus_vec"),
-        [probe_id],
-        [F.col("sim").desc(), F.col("vec_id").asc()],
-        k,
-    ).drop("rank")
 
 
 def maxsim_topk(

@@ -225,7 +225,7 @@ def check_minhash_candidates(con, srows) -> list[str]:
     import re
 
     texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
-    # Java \s parity; RE2 lacks \v — see operators/dedup.py (ADVICE r9)
+    # Java \s parity; RE2 lacks \v — see functions/text.py _WS (ADVICE r9)
     ws = re.compile(r"\s+", re.ASCII)
     gcache: dict[int, frozenset] = {}
 

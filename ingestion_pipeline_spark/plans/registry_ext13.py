@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_ngrams
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .registry import register
@@ -161,9 +162,8 @@ def tx_topk_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             c: Counter = Counter()
             for lang, text in zip(pdf["lang"], pdf["text"]):
-                ws = [w for w in rx.split((text or "").lower()) if w]
-                for i in range(len(ws) - 1):
-                    c[(lang, ws[i] + " " + ws[i + 1])] += 1
+                for g in word_ngrams(text or "", 2, rx):
+                    c[(lang, g)] += 1
             if c:
                 ks = list(c.keys())
                 yield pd.DataFrame(

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_ngrams
 from ..operators.similarity import cosine_pairs_np
 from ..operators.relational import spread, topk_per_group
 from ..sources.parquet_tables import table
@@ -91,14 +92,9 @@ def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     def trigram_counts(texts: pd.Series) -> pd.DataFrame:
         ns, ds = [], []
         for t in texts:
-            ws = [w for w in rx.split((t or "").lower()) if w]
-            if len(ws) < 3:
-                ns.append(0)
-                ds.append(0)
-            else:
-                tgs = [" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)]
-                ns.append(len(tgs))
-                ds.append(len(set(tgs)))
+            tgs = word_ngrams(t or "", 3, rx)
+            ns.append(len(tgs))
+            ds.append(len(set(tgs)))
         return pd.DataFrame({"n": ns, "d": ds})
 
     docs = spread(table(spark, sf_dir, "documents"))

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import normalized_content
 from ..operators.multimodal import extract_features
 from ..operators.relational import asof_join, spread
 from ..sources.parquet_tables import table
@@ -123,7 +124,7 @@ def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tx_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"))
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
+    norm = normalized_content(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length(F.col("norm")) - 7, F.lit(1)), F.lit(4)),
         lambda i: F.md5(F.col("norm").substr(i, F.lit(8))),

@@ -481,13 +481,12 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     must call :func:`unpersist_cascade` (or ``clearCache()``) between
     calls or the duplicate cached blocks accumulate.
     """
+    from ..functions.text import content_md5
     from ..operators.dedup import jaccard3_bp, minhash_md5_slots
     from ..operators.relational import spread
 
     docs = table(spark, sf_dir, "documents")
-    norm = F.md5(
-        F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    )
+    norm = content_md5(F.col("text"))
     # exact-stage keep-min-id stays the groupBy + join-back shape ON
     # MEASUREMENT (r12, guide §1): a min()-over-window rewrite (one
     # scan, one exchange on paper) shuffles and sorts the FULL text

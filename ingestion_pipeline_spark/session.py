@@ -14,12 +14,25 @@ distributed columnar execution:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
+_DEFAULT_CPUS = 32
+
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, the local core count. A value that is not a
+    positive integer falls back to the default with a warning instead
+    of failing every ``get_spark()``."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", str(_DEFAULT_CPUS)).strip()
+    if raw.isdecimal() and int(raw) > 0:
+        return int(raw)
+    warnings.warn(
+        f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer; using {_DEFAULT_CPUS}",
+        stacklevel=2,
+    )
+    return _DEFAULT_CPUS
 
 
 def get_spark(

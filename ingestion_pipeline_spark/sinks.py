@@ -68,23 +68,35 @@ def warehouse_upsert(
     dynamic partition overwrite; table formats with native MERGE
     (Delta/Iceberg) slot in behind the same function signature.
     """
+    if _table_exists(spark, path):
+        merged = spark.read.parquet(path).select(*batch.columns).unionByName(batch)
+    else:  # first write — no table yet
+        merged = batch
+    _keep_latest(merged, key, version_col).write.mode("overwrite").parquet(path)
+
+
+def _table_exists(spark, path: str) -> bool:
+    """Probe the table path EXPLICITLY (Hadoop FS — works for local,
+    HDFS, s3a alike) instead of catching every read failure: a
+    transient IO error or schema mismatch swallowed as "first write"
+    would let the upserts' overwrite replace the table with batch-only
+    rows — silent data loss for pre-existing keys. Real read errors
+    propagate."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
+def _keep_latest(merged: DataFrame, key: str, version_col: str) -> DataFrame:
+    """The keep-latest merge rule both upserts share (see ``warehouse_upsert``)."""
     from pyspark.sql.window import Window
 
-    try:
-        existing = spark.read.parquet(path).select(*batch.columns)
-    except Exception:  # first write — no table yet
-        existing = None
-    merged = batch if existing is None else existing.unionByName(batch)
-    w = Window.partitionBy(key).orderBy(
-        F.col(version_col).desc(), F.col(key)
-    )
-    latest = (
+    w = Window.partitionBy(key).orderBy(F.col(version_col).desc(), F.col(key))
+    return (
         merged.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
         .localCheckpoint(eager=True)  # cut source files loose pre-overwrite
     )
-    latest.write.mode("overwrite").parquet(path)
 
 
 def jdbc_append(
@@ -287,22 +299,12 @@ def warehouse_upsert_partitioned(
 
     Table formats with native MERGE (Delta/Iceberg) replace this
     function one-for-one; the call-site contract is identical."""
-    from pyspark.sql.window import Window
-
     if partition_col not in batch.columns:
         batch = batch.withColumn(
             partition_col, F.date_format("date_published", "yyyy-MM")
         )
     months = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    # Probe path existence EXPLICITLY (Hadoop FS — works for local, HDFS,
-    # s3a alike) instead of catching every read failure: a transient IO
-    # error or schema mismatch swallowed as "first write" would let the
-    # dynamic-partition overwrite below replace touched months with
-    # batch-only rows — silent data loss for pre-existing keys
-    # (round-2 advisor finding). Real read errors now propagate.
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
+    if _table_exists(spark, path):
         existing = (
             spark.read.parquet(path)
             .filter(F.col(partition_col).isin(months))
@@ -311,13 +313,7 @@ def warehouse_upsert_partitioned(
         merged = existing.unionByName(batch)
     else:  # first write — no table yet
         merged = batch
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc(), F.col(key))
-    latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)  # cut source files loose pre-overwrite
-    )
+    latest = _keep_latest(merged, key, version_col)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

@@ -1,18 +1,14 @@
-"""Product quantization: reconstruction sanity, code validity,
-determinism, and recall of the two-stage ADC search vs exact top-k."""
+"""Product quantization on the shipped exact-integer path: codebook
+determinism, reconstruction sanity, ADC-vs-dot agreement, and recall of
+the two-stage ``v_pq_adc_topk`` search vs exact top-k."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from ingestion_pipeline_spark.operators.pq import (
-    adc_score,
-    encode_pq,
-    pq_topk,
-    train_pq_codebooks,
-)
+from ingestion_pipeline_spark.operators.kmeans import quantized
+from ingestion_pipeline_spark.operators.pq import adc_score_int, train_pq_codebooks_int
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,94 +21,77 @@ def emb(spark):
 
 
 @pytest.fixture(scope="module")
-def books(emb):
-    sample = [
-        r["embedding"]
-        for r in emb.filter(F.col("vec_id") < 256).orderBy("vec_id").collect()
-    ]
-    return train_pq_codebooks(sample, m=8, k=16, iters=5)
+def Q(emb):
+    """Every vector quantized by ``kmeans.quantized``, in vec_id order."""
+    rows = quantized(emb).orderBy("vec_id").collect()
+    return np.stack([np.asarray(r["v"], dtype=np.int64) for r in rows])
 
 
-def test_codebook_shape_and_determinism(emb, books):
+@pytest.fixture(scope="module")
+def books(Q):
+    # the v_pq_adc_topk training set: the first 256 vectors by id
+    return train_pq_codebooks_int(Q[:256], m=8, k=16, iters=2)
+
+
+def test_codebook_shape_and_determinism(Q, books):
     assert books.shape == (8, 16, 8)
-    sample = [
-        r["embedding"]
-        for r in emb.filter(F.col("vec_id") < 256).orderBy("vec_id").collect()
-    ]
-    again = train_pq_codebooks(sample, m=8, k=16, iters=5)
+    assert books.dtype == np.int64
+    again = train_pq_codebooks_int(Q[:256].copy(), m=8, k=16, iters=2)
     assert np.array_equal(books, again)
 
 
-def test_codes_valid_and_deterministic(emb, books):
-    coded = emb.select("vec_id", encode_pq(emb, "embedding", books).alias("codes"))
-    rows = {r["vec_id"]: r["codes"] for r in coded.collect()}
-    assert all(len(c) == 8 and all(0 <= x < 16 for x in c) for c in rows.values())
-    rows2 = {r["vec_id"]: r["codes"] for r in coded.collect()}
-    assert rows == rows2
-
-
-def test_quantization_reduces_reconstruction_error(emb, books):
+def test_quantization_reduces_reconstruction_error(Q, books):
     # PQ decode must beat the trivial all-zeros "codebook" on MSE
-    X = np.stack(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in emb.orderBy("vec_id").collect()]
-    )
     m, k, d_sub = books.shape
-    err = 0.0
+    err = 0
     for mi in range(m):
-        sub = X[:, mi * d_sub : (mi + 1) * d_sub]
+        sub = Q[:, mi * d_sub : (mi + 1) * d_sub]
         d2 = ((sub[:, None, :] - books[mi][None, :, :]) ** 2).sum(axis=2)
-        err += d2.min(axis=1).sum()
-    baseline = (X**2).sum()
+        err += int(d2.min(axis=1).sum())
+    baseline = int((Q**2).sum())
     # random 64-d fixture vectors are PQ's worst case (no manifold
-    # structure; 16 codewords per 8-d subspace): ~25-35% MSE reduction.
-    # A mean-only codebook would sit at ~1.0x for zero-mean data, so
-    # anything clearly below that proves the quantizer learns.
+    # structure; 16 codewords per 8-d subspace). A mean-only codebook
+    # would sit at ~1.0x for zero-mean data, so anything clearly below
+    # that proves the quantizer learns.
     assert err < 0.85 * baseline
 
 
-def test_adc_recall_vs_exact(spark, emb, books):
+def test_adc_score_orders_like_dot_product(emb, Q, books):
+    # ADC approximates dot(probe, x): correlation with the true dot
+    # product across the corpus should be strongly positive
+    probe_q = Q[0]
+    scored = (
+        quantized(emb)
+        .select("vec_id", adc_score_int("v", probe_q, books).alias("adc"))
+        .orderBy("vec_id")
+        .collect()
+    )
+    adc = np.array([r["adc"] for r in scored], dtype=np.float64)
+    true = (Q @ probe_q).astype(np.float64)
+    corr = np.corrcoef(adc, true)[0, 1]
+    # the two-stage rerank makes final sims exact either way
+    assert corr > 0.6
+
+
+def test_pq_adc_topk_recall_vs_exact(spark, emb):
     from ingestion_pipeline_spark.operators.similarity import brute_force_topk
+    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans.registry import _probe
 
-    probe_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    probe = [float(x) for x in probe_row["embedding"]]
-
+    probe = _probe(spark, SF)
     exact = {
         r["vec_id"]
         for r in brute_force_topk(emb, "embedding", probe, k=8, exclude_id=0).collect()
     }
-    approx_rows = pq_topk(
-        emb, "embedding", "vec_id", probe, books, k=8, candidates=64, exclude_id=0
-    ).collect()
+    approx_rows = query_map()["v_pq_adc_topk"](spark, SF).collect()
     approx = {r["vec_id"] for r in approx_rows}
     # two-stage rerank: every returned sim is EXACT; recall@8 >= 0.5 on
     # the 64-candidate shortlist (random 64-d fixture vectors are a
     # worst case for PQ — real embedding manifolds quantize far better)
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5
+    assert len(approx_rows) == 8
+    assert len(exact & approx) / len(exact) >= 0.5
     sims = [r["sim"] for r in approx_rows]
     assert sims == sorted(sims, reverse=True)
-
-
-def test_adc_score_orders_like_dot_product(spark, emb, books):
-    # ADC approximates dot(probe, x): correlation with the true dot
-    # product across the corpus should be strongly positive
-    probe_row = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    probe = np.asarray(probe_row["embedding"], dtype=np.float64)
-
-    coded = emb.select(
-        "vec_id", "embedding", encode_pq(emb, "embedding", books).alias("codes")
-    )
-    scored = coded.withColumn(
-        "adc", adc_score("codes", [float(x) for x in probe], books)
-    ).collect()
-    adc = np.array([r["adc"] for r in scored])
-    true = np.array(
-        [np.dot(probe, np.asarray(r["embedding"], dtype=np.float64)) for r in scored]
-    )
-    corr = np.corrcoef(adc, true)[0, 1]
-    # measured ~0.73 on the random fixture; real embeddings correlate
-    # far higher. The two-stage rerank makes final sims exact either way.
-    assert corr > 0.6
 
 
 def test_ivfadc_composition_recall(spark, sf_dir):

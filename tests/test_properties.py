@@ -73,12 +73,12 @@ def test_rag_verdict_provenance_cases(spark, resp, ctx):
 def test_salted_join_row_multiplicity(spark, rows):
     """Salting never changes join cardinality, for any key distribution
     (including every-row-same-key, the skew case it exists for)."""
-    from ingestion_pipeline_spark.operators.relational import salted_join
+    from ingestion_pipeline_spark.operators.skew import salted_join
 
     left = spark.createDataFrame([(k, v) for k, v in rows], "k long, v long")
     right = spark.createDataFrame([(k, k * 10) for k in range(3)], "k long, r long")
     plain = left.join(right, "k").count()
-    salted = salted_join(left, right, "k", n_salts=4).count()
+    salted = salted_join(left, right, "k", salt_from=F.col("v"), n_salts=4).count()
     assert plain == salted
 
 

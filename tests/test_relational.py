@@ -73,32 +73,6 @@ def test_asof_join_preserves_left_rowcount(spark, sf_dir):
     assert joined.count() == n
 
 
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from ingestion_pipeline_spark.sources.parquet_tables import table
-    from ingestion_pipeline_spark.operators.relational import salted_join
-
-    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    dim = (
-        ev.groupBy("user_id").count().withColumnRenamed("count", "n_user_events")
-    )
-    plain = ev.join(dim, "user_id").select("event_id", "user_id", "n_user_events")
-    salted = salted_join(ev, dim, "user_id", n_salts=4).select(
-        "event_id", "user_id", "n_user_events"
-    )
-    assert plain.count() == salted.count()
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_salted_join_left_outer_keeps_unmatched(spark):
-    from ingestion_pipeline_spark.operators.relational import salted_join
-
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, k string")
-    right = spark.createDataFrame([("a", 10)], "k string, v long")
-    out = {r["id"]: r["v"] for r in salted_join(left, right, "k", n_salts=3, how="left").collect()}
-    assert out == {1: 10, 2: None, 3: None}
-
-
 def test_dense_global_ids_stable_under_repartition(spark, sf_dir):
     """The t_global_dense_ids design claim: the decomposed numbering is
     a pure function of the data — identical ids under any physical

@@ -80,6 +80,35 @@ def test_warehouse_upsert_keeps_latest_per_key(spark, tmp_path):
     }
 
 
+def test_warehouse_upsert_unreadable_delta_raises_and_keeps_table(spark, tmp_path):
+    """A delta the existing table cannot be read against (here: one
+    extra column) must fail, not pass for a first write that overwrites
+    the table with the delta alone."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from ingestion_pipeline_spark.sinks import warehouse_upsert
+
+    path = str(tmp_path / "upsert_drift")
+    schema = "cve_id string, date_updated timestamp, date_published timestamp, data string"
+    v1 = spark.createDataFrame(
+        [
+            ("CVE-1", datetime(2024, 1, 10), datetime(2024, 1, 1), "{}"),
+            ("CVE-2", datetime(2024, 1, 11), datetime(2024, 1, 2), "{}"),
+        ],
+        schema,
+    )
+    warehouse_upsert(spark, v1, path)
+    delta = spark.createDataFrame(
+        [("CVE-3", datetime(2024, 2, 1), datetime(2024, 2, 1), "{}", "x")],
+        schema + ", extra string",
+    )
+    with pytest.raises(AnalysisException):
+        warehouse_upsert(spark, delta, path)
+    back = sorted(r["cve_id"] for r in spark.read.parquet(path).collect())
+    assert back == ["CVE-1", "CVE-2"]
+
+
 def test_jdbc_sink_roundtrip_derby(spark, tmp_path):
     """K1's "JDBC/Snowflake swap is a format string" claim, exercised for
     real: batched executor-side INSERTs into an embedded Derby database

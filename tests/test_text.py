@@ -71,3 +71,52 @@ def test_fingerprint_normalizes_whitespace_and_case(spark):
 
 def test_truncate(spark):
     assert _one(spark, tx.truncate(F.col("t"), 5), "abcdefgh") == "abcde"
+
+
+def test_word_ngrams_tokenizes_like_the_jvm_shingler(spark):
+    """``word_ngrams`` is the one Python tokenizer of the Arrow kernels;
+    on ASCII text it yields the n-grams ``dedup.shingles`` builds."""
+    from ingestion_pipeline_spark.operators.dedup import shingles
+
+    text = "  The quick\tbrown\n\nfox  jumps over the quick brown fox "
+    jvm = _one(spark, shingles(F.col("t"), 3), text)
+    assert sorted(set(tx.word_ngrams(text, 3))) == sorted(jvm)
+    assert tx.word_ngrams("two words", 3) == []
+
+
+def test_arrow_kernels_unpickle_without_the_package():
+    """The kernels call shared module-level helpers (``word_ngrams``,
+    ``similarity._null_masked``); they must still ship to a Python
+    worker that cannot import this package."""
+    import base64
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from pyspark import cloudpickle
+
+    from ingestion_pipeline_spark.operators import dedup, similarity
+
+    kernels = [
+        dedup.minhash_md5_slots(4),
+        dedup.jaccard3_bp(),
+        tx.word_shingles_np(3, split=r"\s+"),
+        similarity.probe_cosine_np([1.0, 0.0]),
+        similarity.cosine_pairs_np(),
+    ]
+    blob = base64.b64encode(cloudpickle.dumps([k.func for k in kernels])).decode()
+    probe = (
+        "import base64, importlib.util; from pyspark import cloudpickle; "
+        "assert importlib.util.find_spec('ingestion_pipeline_spark') is None; "
+        f"cloudpickle.loads(base64.b64decode('{blob}'))"
+    )
+    repo = str(Path(tx.__file__).resolve().parents[2])
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and Path(p).resolve() != Path(repo)
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe], cwd="/", env=env, capture_output=True, text=True
+    )
+    assert r.returncode == 0, r.stderr

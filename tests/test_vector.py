@@ -108,42 +108,6 @@ def test_normalize_unit_norm(spark, sf_dir):
     assert all(abs(r["n"] - 1.0) < 1e-9 for r in rows)
 
 
-def test_multiprobe_lsh_recall_dominates_single_probe(spark, sf_dir):
-    """Multi-probe LSH (one-bit flips on the probe side only) recovers
-    boundary-crossing neighbors: its candidate recall vs exact kNN is
-    >= single-probe recall per probe (candidate-set inclusion), with
-    the corpus-side index untouched."""
-    from pyspark.sql import functions as F
-
-    from ingestion_pipeline_spark.operators.similarity import (
-        lsh_multiprobe_topk_join,
-        lsh_topk_join,
-        topk_join,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    probes = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), "embedding"
-    )
-    k = 3
-    exact = {
-        (r["probe_id"], r["vec_id"])
-        for r in topk_join(emb, probes, k=k).collect()
-    }
-    single = {
-        (r["probe_id"], r["vec_id"])
-        for r in lsh_topk_join(emb, probes, dim=64, k=k).collect()
-    }
-    multi = {
-        (r["probe_id"], r["vec_id"])
-        for r in lsh_multiprobe_topk_join(emb, probes, dim=64, k=k).collect()
-    }
-    recall_single = len(single & exact) / len(exact)
-    recall_multi = len(multi & exact) / len(exact)
-    assert recall_multi >= recall_single
-    assert recall_multi > 0.5  # flips recover most boundary neighbors
-
-
 def test_cosine_kernels_null_vectors_yield_null(spark):
     """ADVICE r12: NULL vector rows must propagate to NULL sims (the old
     HOF cosine's SQL semantics), not crash np.stack."""
