@@ -15,9 +15,9 @@ never per-row Python.
 from __future__ import annotations
 
 import hashlib
-import math
 from typing import Callable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,18 +34,37 @@ def hashing_embedder(dim: int = 64, normalize: bool = True) -> Callable[[pd.Seri
     integer space compares exactly across engines)."""
 
     def embed_series(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            vec = [0.0] * dim
-            for tok in str(text or "").lower().split():
-                h = int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")  # noqa: S324
-                vec[h % dim] += 1.0 if (h >> 63) & 1 == 0 else -1.0
-            if not normalize:
-                out.append(vec)
-                continue
-            norm = math.sqrt(sum(v * v for v in vec))
-            out.append([v / norm for v in vec] if norm > 0 else vec)
-        return pd.Series(out)
+        # Vectorized over the batch: md5 once per DISTINCT token, then
+        # one weighted bincount over (row, bucket). Bucket sums are
+        # integer-valued, so the norm and the division are exact and the
+        # output equals the per-token loop bit for bit.
+        rows = [str(t or "").lower().split() for t in texts]
+        codes, uniq = pd.factorize(
+            pd.Series([tok for toks in rows for tok in toks], dtype=object)
+        )
+        hashes = [
+            int.from_bytes(hashlib.md5(tok.encode()).digest()[:8], "big")  # noqa: S324
+            for tok in uniq
+        ]
+        bucket = np.array([h % dim for h in hashes], dtype=np.int64)
+        sign = np.array([1.0 if (h >> 63) & 1 == 0 else -1.0 for h in hashes])
+        row = np.repeat(
+            np.arange(len(rows)), np.array([len(t) for t in rows], dtype=np.int64)
+        )
+        mat = (
+            np.bincount(
+                row * dim + bucket[codes],
+                weights=sign[codes],
+                minlength=len(rows) * dim,
+            )
+            .astype(np.float64)
+            .reshape(len(rows), dim)
+        )
+        if normalize:
+            norm = np.sqrt((mat * mat).sum(axis=1))
+            nz = norm > 0
+            mat[nz] /= norm[nz, None]
+        return pd.Series(mat.tolist())
 
     return embed_series
 

@@ -1,5 +1,7 @@
 """Unrolled fixed-point PageRank as ANSI SQL — the DuckDB oracle
-counterpart of ``operators/graph.py:pagerank_fixed_point``.
+counterpart of ``operators/graph.py:pagerank_fixed_point`` and of its
+local twin ``bounded_pagerank_fixed_point`` (which ranks
+tx_textrank_keywords' vocabulary-bounded graph).
 
 The operator's arithmetic is pure integer (BIGINT micro-unit ranks,
 ``div`` shares, ``(85*contrib) div 100`` damping), so a fixed iteration

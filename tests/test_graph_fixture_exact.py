@@ -16,8 +16,11 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
+
 from ingestion_pipeline_spark.operators.graph import (
     PR_SCALE,
+    bounded_pagerank_fixed_point,
     label_propagation,
     pagerank_fixed_point,
     personalized_pagerank_fixed_point,
@@ -121,3 +124,57 @@ def test_label_propagation_exact(spark):
         for r in label_propagation(df, iters=4).collect()
     }
     assert got == _ref_lpa(EDGES, iters=4)
+
+
+def _ranks(df):
+    return {r["n"]: r["rank_fp"] for r in df.collect()}
+
+
+def test_bounded_pagerank_fixed_point_exact(spark):
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    got = bounded_pagerank_fixed_point(df, "src", "dst", iters=10, max_edges=100)
+    assert got.schema.simpleString() == "struct<n:bigint,rank_fp:bigint>"
+    assert _ranks(got) == _ref_pagerank_fp(EDGES, iters=10)
+
+
+@pytest.mark.parametrize(
+    "edges, ddl",
+    [
+        # string node ids, as TextRank's word graph has
+        ([("a", "b"), ("a", "c"), ("c", "d"), ("e", "f")], "src string, dst string"),
+        # both orientations present: the symmetrized multiset counts each twice
+        ([(1, 2), (2, 1), (2, 3), (3, 4), (4, 3), (1, 4)], "src long, dst long"),
+        ([], "src long, dst long"),
+    ],
+    ids=["string_ids", "both_orientations", "empty"],
+)
+def test_bounded_pagerank_equals_distributed(spark, edges, ddl):
+    df = spark.createDataFrame(edges, ddl)
+    got = bounded_pagerank_fixed_point(df, "src", "dst", iters=10, max_edges=100)
+    assert got.schema["n"].dataType == df.schema["src"].dataType
+    assert _ranks(got) == _ranks(pagerank_fixed_point(df, iters=10))
+
+
+def test_bounded_pagerank_rejects_more_than_max_edges(spark):
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    bounded_pagerank_fixed_point(df, "src", "dst", iters=1, max_edges=len(EDGES))
+    with pytest.raises(ValueError, match="more than 11 edges"):
+        bounded_pagerank_fixed_point(df, "src", "dst", iters=1, max_edges=len(EDGES) - 1)
+
+
+def test_textrank_keywords_runs_few_jobs(spark, sf_dir):
+    """The vocabulary-bounded word graph is ranked in one local pass: the
+    whole query stays within 10 Spark jobs (the distributed loop alone
+    ran 28)."""
+    from ingestion_pipeline_spark.plans import query_map
+
+    sc = spark.sparkContext
+    group = "textrank-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        rows = query_map()["tx_textrank_keywords"](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 20
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
