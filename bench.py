@@ -215,18 +215,72 @@ def _min_opt(*vals: "float | None") -> "float | None":
     return min(present) if present else None
 
 
+WARMUP_QUERIES = ("q1_pricing_summary", "v_cosine_top8")
+
+
+def _noop_run(spark, sf_dir: str, builder) -> float:
+    """Wall seconds of one build + full execution of a registry query.
+    The noop sink executes the FULL plan (count() would let Catalyst
+    prune computed columns and under-measure)."""
+    t0 = time.perf_counter()
+    builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Session warm-up, untimed: one tiny action (JVM + parquet footer
+    caches), then real warm-up queries (VERDICT r6 #2a) that exercise
+    the expensive one-off session paths — parquet listing + scan,
+    shuffle + codegen compile, Arrow/pandas-UDF worker spin-up — so
+    whichever query sits at position 1 of the graded window stops
+    absorbing the 3-7 s session cold-start. A failing warm-up query is
+    ignored: warm-up must never fail a bench."""
+    from ingestion_pipeline_spark.plans import run_each
+
+    spark.range(1).count()
+    run_each(
+        spark, lambda _name, fn: _noop_run(spark, sf_dir, fn), WARMUP_QUERIES
+    )
+
+
+def time_query(spark, sf_dir: str, name: str, builder) -> list[float]:
+    """Adaptive best-of-N timing of one query: ``[min, median, max,
+    n_runs]``, the variance record VERDICT r4 #5 asked for.
+
+    Run 1 pays file-listing/codegen; later runs can still catch a JIT
+    compile — observed 3x spikes on subquery-heavy plans with best-of-2
+    (q21 4.3s cold vs 1.4s warm), and the r4 driver run disagreed with
+    the builder's same-code run by >2x on four multi-stage >1s queries
+    (pipeline_corpus_prep 3.34 vs 1.42s) — multi-stage scheduling noise
+    that best-of-3 cannot average out. Policy (VERDICT r6 #2b raised
+    the floor): sub-second queries stop after THREE runs (the r6 detail
+    showed 63 sub-second queries with n=2 spreads too wide to separate
+    regression from scheduling noise); >=1s queries get five. True
+    median (average the two middle values for even n): runs[n//2] on
+    an n=2 cohort is the MAX, which overstated variance in the r5
+    detail."""
+    runs: list[float] = []
+    for i in range(5):
+        runs.append(_noop_run(spark, sf_dir, builder))
+        if i >= 2 and min(runs) < 1.0:
+            break
+    runs.sort()
+    mid = len(runs) // 2
+    med = runs[mid] if len(runs) % 2 else (runs[mid - 1] + runs[mid]) / 2
+    spread = [round(runs[0], 3), round(med, 3), round(runs[-1], 3), len(runs)]
+    print(f"# {name}: {spread[0]}s (n={spread[3]}, max={spread[2]}s)",
+          file=sys.stderr)
+    return spread
+
+
 def main() -> None:
-    from ingestion_pipeline_spark.plans import query_map, release_caches
+    from ingestion_pipeline_spark.plans import run_each
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     spark = get_spark("bench")
-    qs = query_map()
-    # Bench the ENTIRE registry in its contract order (graded window
-    # first) — every queries() entry is measured, none silently capped.
-    names = list(qs)
 
     # Prior per-query map (for the vs_prior common-subset comparison) —
     # read BEFORE this run overwrites the file.
@@ -254,22 +308,8 @@ def main() -> None:
             prior_probe_io = (prior.get("env_probe_io_sec") or {}).get("min")
             break
 
-    # Session warmup: JVM + parquet footer caches, one tiny action.
-    spark.range(1).count()
-    # Real warm-up (VERDICT r6 #2a): exercise the expensive one-off
-    # session paths — parquet listing + scan, shuffle + codegen compile,
-    # Arrow/pandas-UDF worker spin-up — untimed and excluded from every
-    # total, so whichever query happens to sit at position 1 of the
-    # graded window stops absorbing the 3-7 s session cold-start.
-    for wname in ("q1_pricing_summary", "v_cosine_top8"):
-        if wname in qs:
-            try:
-                qs[wname](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001 — warm-up must never fail a bench
-                pass
-    print("# warm-up done (untimed: q1_pricing_summary, v_cosine_top8)",
+    warm_up(spark, sf_dir)
+    print(f"# warm-up done (untimed: {', '.join(WARMUP_QUERIES)})",
           file=sys.stderr)
 
     probe_start = _env_probe(spark)
@@ -277,75 +317,31 @@ def main() -> None:
     print(f"# env probe (start): cpu {probe_start}s, io {probe_io_start}s",
           file=sys.stderr)
 
+    # Bench the ENTIRE registry in its contract order (graded window
+    # first) — every queries() entry is measured, none silently capped.
+    # run_each isolates faults per query (VERDICT r1 #2: one broken
+    # query must not take down the other timings, and the final JSON
+    # line is ALWAYS emitted) and releases every persistent RDD between
+    # queries: the iterative operators pin localCheckpoint blocks that
+    # nothing unpins, and over a 200-query best-of-5 session the memory
+    # pressure showed up as 3x late-session spikes on unrelated queries
+    # (tx_textrank_keywords 2.9 -> 9.5 s in the r5 203-query run).
+    # Between queries only, so best-of-N runs share their own caches.
+    results = run_each(
+        spark, lambda name, fn: time_query(spark, sf_dir, name, fn)
+    )
     times: dict[str, float] = {}
-    # name -> [min, median, max, n_runs] — the variance record VERDICT
-    # r4 #5 asked for; side-file only, the stdout line stays compact.
+    # name -> [min, median, max, n_runs]; side-file only, the stdout
+    # line stays compact.
     spread: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
-    for name in names:
-        # Per-query fault isolation (VERDICT r1 #2): one broken query must
-        # not take down the other timings — record the error, keep going,
-        # and ALWAYS emit the final JSON line.
-        try:
-            fn = qs[name]
-            # Adaptive best-of-N (VERDICT r4 #5 raised N for the slow
-            # cohort): run 1 pays file-listing/codegen; later runs can
-            # still catch a JIT compile — observed 3x spikes on
-            # subquery-heavy plans with best-of-2 (q21 4.3s cold vs 1.4s
-            # warm), and the r4 driver run disagreed with the builder's
-            # same-code run by >2x on four multi-stage >1s queries
-            # (pipeline_corpus_prep 3.34 vs 1.42s) — multi-stage
-            # scheduling noise that best-of-3 cannot average out.
-            # Policy (VERDICT r6 #2b raised the floor): sub-second
-            # queries stop after THREE runs (the r6 detail showed 63
-            # sub-second queries with n=2 spreads too wide to separate
-            # regression from scheduling noise); >=1s queries get five.
-            # Spread stats land in bench_detail.json so a reviewer can
-            # tell a regression from residual variance.
-            runs: list[float] = []
-            for i in range(5):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                # noop sink executes the FULL plan (count() would let
-                # Catalyst prune computed columns and under-measure).
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-                if i >= 2 and min(runs) < 1.0:
-                    break
-            runs.sort()
-            times[name] = round(runs[0], 3)
-            # True median (average the two middle values for even n):
-            # runs[n//2] on the common n=2 cohort is the MAX, which
-            # overstated variance in the r5 detail.
-            mid = len(runs) // 2
-            med = runs[mid] if len(runs) % 2 else (runs[mid - 1] + runs[mid]) / 2
-            spread[name] = [
-                round(runs[0], 3),
-                round(med, 3),
-                round(runs[-1], 3),
-                len(runs),
-            ]
-            print(f"# {name}: {times[name]}s (n={len(runs)}, "
-                  f"max={spread[name][2]}s)", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+    for name, res in results.items():
+        if isinstance(res, Exception):
+            errors[name] = f"{type(res).__name__}: {res}"[:500]
             print(f"# {name}: ERROR {errors[name][:120]}", file=sys.stderr)
-        finally:
-            # Release every persistent RDD between queries. The
-            # iterative operators (PageRank/LPA/CC/k-means) pin
-            # localCheckpoint blocks that nothing unpins once the
-            # query's results are materialized; over a 200-query
-            # best-of-5 session they accumulate (~6 blocksets per
-            # invocation, measured) and the memory pressure showed up
-            # as 3x late-session spikes on unrelated multi-stage
-            # queries (tx_textrank_keywords 2.9 -> 9.5 s in the r5
-            # 203-query run). Safe here: each timed run rebuilds its
-            # checkpoints from scratch. Between queries only, so
-            # within-query best-of-N runs still share their own caches.
-            try:
-                release_caches(spark)
-            except Exception:  # noqa: BLE001 — hygiene must never fail a bench
-                pass
+        else:
+            spread[name] = res
+            times[name] = res[0]
 
     probe_end = _env_probe(spark)
     probe_io_end = _env_probe_io(spark, sf_dir)

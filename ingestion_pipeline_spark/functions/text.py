@@ -194,52 +194,24 @@ def langid(col: Column) -> Column:
 def langid_join(
     df,
     text_col: str = "text",
-    id_col: str = "doc_id",
     alias: str = "predicted_lang",
-    lexicon_join: bool = False,
 ):
-    """Language ID over a corpus frame — IDENTICAL semantics on both
-    paths (argmax marker hits, alphabetical tie-break, 'und' on zero
-    hits; all five registry consumers oracle-PASS on both paths at
-    sf0.001 and sf0.01).
+    """Language ID over a corpus frame: argmax marker hits,
+    alphabetical tie-break, 'und' on zero hits.
 
-    Default path (r12): the BOUND column fold (``langid``) — one
-    tokenize + |langs| filters per row, zero exchanges, one scan. The
-    r12 first-attempt fold was measured 2-3× SLOWER and rejected, but
-    that form re-evaluated the tokenization under every `when` branch;
-    with the subtrees bound to lambda variables the fold wins on every
-    consumer (best-of-5 sf0.1 minima: tx_langid 2.22→0.58 s,
-    dq_langid_confusion 3.16→0.94, e_annotator_agreement 2.02→1.11,
-    pipeline_corpus_prep 1.88→1.65, pipeline_corpus_stats 1.76→1.72) —
-    and at scale it removes the explode shuffle, the per-doc argmax
-    exchange AND the join-back second corpus scan the old default paid
-    (tx_langid plan: 4 scans / 8 Exchange → 1 scan / 0 Exchange).
-
-    ``lexicon_join=True`` keeps the explode → broadcast-lexicon join →
-    count → per-doc argmax shape: still the right path when the
-    lexicon grows to thousands of markers per language (the fold adds
-    an expression per language; the join adds broadcast rows)."""
-    if not lexicon_join:
-        return df.withColumn(alias, langid(F.col(text_col)))
-
-    from pyspark.sql.window import Window
-
-    spark = df.sparkSession
-    marker_rows = [(m, lang) for lang in sorted(LANG_MARKERS) for m in LANG_MARKERS[lang]]
-    lexicon = spark.createDataFrame(marker_rows, "tok string, lang string")
-    toks = df.select(id_col, F.explode(word_tokens(F.lower(F.col(text_col)))).alias("tok"))
-    hits = (
-        toks.join(F.broadcast(lexicon), "tok")
-        .groupBy(id_col, "lang")
-        .agg(F.count("*").alias("hits"))
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("hits").desc(), F.col("lang").asc())
-    best = (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, F.col("lang").alias(alias))
-    )
-    return df.join(best, id_col, "left").withColumn(alias, F.coalesce(F.col(alias), F.lit("und")))
+    The BOUND column fold (``langid``, r12) — one tokenize + |langs|
+    filters per row, zero exchanges, one scan. The r12 first-attempt
+    fold was measured 2-3× SLOWER and rejected, but that form
+    re-evaluated the tokenization under every `when` branch; with the
+    subtrees bound to lambda variables the fold wins on every consumer
+    (best-of-5 sf0.1 minima: tx_langid 2.22→0.58 s, dq_langid_confusion
+    3.16→0.94, e_annotator_agreement 2.02→1.11, pipeline_corpus_prep
+    1.88→1.65, pipeline_corpus_stats 1.76→1.72) — and at scale it
+    removes the explode shuffle, the per-doc argmax exchange AND the
+    join-back second corpus scan of the explode → lexicon-join shape it
+    replaced (tx_langid plan: 4 scans / 8 Exchange → 1 scan / 0
+    Exchange)."""
+    return df.withColumn(alias, langid(F.col(text_col)))
 
 
 def normalized_content(col: Column) -> Column:

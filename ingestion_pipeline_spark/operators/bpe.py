@@ -5,19 +5,12 @@ BPE actually scales.
 The trick that makes BPE tractable on a 100 TB corpus is Sennrich's own:
 merges are learned from the **word-frequency table**, not the corpus.
 One corpus pass aggregates ``word -> freq`` (map-side combined, shuffle
-carries one row per distinct word per task); every subsequent merge
-round runs on that compact table — tens of thousands of rows however
-large the corpus. Each round is:
-
-1. adjacent-pair counts: ``zip_with(sym, slice(sym, 2, ...))`` explode +
-   one map-side-combined ``groupBy(pair).sum(freq)``;
-2. argmax pair by ``(count DESC, pair ASC)`` — a 1-row driver scalar
-   (the same allowed pattern as the IVF centroid collect);
-3. greedy left-to-right pair merge inside each word via an
-   ``F.aggregate`` fold over the symbol array — pure Catalyst, no
-   Python row work;
-4. ``localCheckpoint`` to cut the per-round lineage (the connected-
-   components discipline, graph.py).
+carries one row per distinct word per task); the serial merge loop then
+runs on that compact table — tens of thousands of rows however large
+the corpus — in driver memory (``bpe_train_local``). Application is pure
+plan: the learned merges unroll into chained ``F.aggregate`` folds
+(``_merge_pair``) evaluated in whole-stage codegen
+(``bpe_tokenize_counts``).
 
 Determinism: counts are exact integers and ties break lexicographically,
 so the learned merge table is reproducible anywhere — pinned against a
@@ -65,49 +58,6 @@ def _merge_pair(sym: Column, a: str, b: str) -> Column:
     )
 
 
-def bpe_train(
-    spark: SparkSession, words: DataFrame, n_merges: int = 10
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merges from a (word, freq) table. Returns
-    the merge table: (merge_rank, pair_a, pair_b, merged, pair_count)."""
-    state = words.select(
-        F.split("word", "").alias("sym"), F.col("freq").cast("long").alias("freq")
-    ).localCheckpoint()
-
-    merges: list[tuple[int, str, str, str, int]] = []
-    for rank in range(n_merges):
-        pairs = state.select(
-            F.explode(
-                F.zip_with(
-                    F.col("sym"),
-                    F.slice(
-                        "sym", 2, F.greatest(F.size("sym") - 1, F.lit(0))
-                    ),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                )
-            ).alias("p"),
-            "freq",
-        ).filter(F.col("p.b").isNotNull())
-        top = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.col("n").desc(), "a", "b")
-            .first()
-        )
-        if top is None or top["n"] < 2:
-            break
-        a, b = top["a"], top["b"]
-        merges.append((rank, a, b, a + b, int(top["n"])))
-        state = state.withColumn("sym", _merge_pair(F.col("sym"), a, b))
-        # ≤ vocab rows: checkpoint is cheap and keeps the round-over-
-        # round plan flat instead of n_merges-deep
-        state = state.localCheckpoint()
-
-    return spark.createDataFrame(
-        merges, "merge_rank INT, pair_a STRING, pair_b STRING, merged STRING, pair_count BIGINT"
-    )
-
-
 def bpe_train_local(
     spark: SparkSession, words: DataFrame, n_merges: int = 10
 ) -> DataFrame:
@@ -120,13 +70,13 @@ def bpe_train_local(
     corpus pass (``word_frequencies``), collect the vocab-sized table
     (the same bounded-collect class as the IVF centroid table), run the
     10k-merge loop in-process, broadcast the learned merge table back
-    for distributed tokenization. Running each merge as a Spark job
-    (``bpe_train``) costs ~3 job launches per merge — fine for
-    demonstrating the codegen fold, absurd for 10k merges.
+    for distributed tokenization. Running each merge as Spark jobs
+    would cost ~3 job launches per merge — absurd for 10k merges.
 
-    Value-identical to ``bpe_train`` (asserted in tests): same exact
-    integer counts, same (count DESC, pair ASC) tie-break, same greedy
-    left-to-right merge."""
+    Returns the merge table (merge_rank, pair_a, pair_b, merged,
+    pair_count): exact integer counts, (count DESC, pair ASC)
+    tie-break, greedy left-to-right merge — value-identical to the
+    pure-Python reference in ``tests/test_bpe.py``."""
     freqs = {r["word"]: int(r["freq"]) for r in words.collect()}
     state = {w: list(w) for w in freqs}
     merges: list[tuple[int, str, str, str, int]] = []

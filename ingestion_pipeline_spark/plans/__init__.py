@@ -1,3 +1,7 @@
+import contextlib
+import io
+import warnings
+
 from .registry import REGISTRY, QuerySpec, oracle_sql_map, query_map  # noqa: F401
 from . import registry_ext  # noqa: F401  — registers the extended inventory
 from . import registry_ext2  # noqa: F401  — as-of join, multimodal, fingerprints
@@ -76,17 +80,18 @@ def release_caches(spark) -> int:
     operators pin ``localCheckpoint`` blocks — materialization always
     executes within the caller's action, never across runs, but the
     blocks outlive the action by design (Spark cannot unpersist a frame
-    the returned plan still reads before that plan has run). One-shot
-    embedders must therefore call this between queries — exactly what
-    ``bench.py``, the tools and the differential harness do — or
-    accumulate duplicate cached blocks across ``query_map()`` consumers.
+    the returned plan still reads before that plan has run). Registry
+    loops get this between queries from :func:`run_each`; a one-shot
+    caller that materializes such a frame calls it after its action.
 
     Call it only once the query's results are materialized: it drops
     EVERY persistent RDD of the session, and a dropped
     ``localCheckpoint`` block is lost, not recomputed — a DataFrame that
     still reads it fails on its next action.
 
-    Returns the number of RDDs released.
+    Returns the number of RDDs released: 0, with a warning, when the
+    session has no JVM SparkContext handle (Spark Connect, a stopped
+    context), where only the catalog cache can be cleared.
     """
     # clearCache first: unpersisting blocks while the CacheManager entry
     # survives leaves a stale entry that a LATER query with a matching
@@ -94,9 +99,53 @@ def release_caches(spark) -> int:
     # scale-sweep finding, 20.9 -> 36.7 s on a .persist()-using query);
     # then drop any persist()ed RDDs the cache manager does not track.
     spark.catalog.clearCache()
-    jrdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    try:
+        jrdds = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    except (AttributeError, NotImplementedError):
+        warnings.warn(
+            "release_caches: no JVM SparkContext handle; persisted RDDs "
+            "were not released",
+            stacklevel=2,
+        )
+        return 0
     n = jrdds.size()
     it = jrdds.values().iterator()
     while it.hasNext():
         it.next().unpersist(False)
     return n
+
+
+def run_each(spark, action, names=None) -> dict:
+    """The one registry loop: ``action(name, builder)`` for each query
+    of ``query_map()`` in contract order (all of them, or those in
+    ``names``), returning ``{name: result}``.
+
+    Unknown ``names`` raise ``ValueError`` before any query runs. An
+    exception from one query is recorded as that query's result, not
+    raised, and :func:`release_caches` runs after every query, so a
+    builder that pins blocks and then raises leaves nothing behind."""
+    qs = query_map()
+    if names is not None:
+        unknown = sorted(set(names) - set(qs))
+        if unknown:
+            raise ValueError(f"unknown queries: {unknown}")
+        wanted = set(names)
+        qs = {n: fn for n, fn in qs.items() if n in wanted}
+    results: dict = {}
+    for name, builder in qs.items():
+        try:
+            results[name] = action(name, builder)
+        except Exception as exc:  # noqa: BLE001 — one query must not end the loop
+            results[name] = exc
+        finally:
+            release_caches(spark)
+    return results
+
+
+def plan_text(df, mode: str = "simple") -> str:
+    """``df.explain(mode)`` as a string — the public explain API, so no
+    caller reaches into the JVM for plan text."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode=mode)
+    return buf.getvalue()

@@ -706,7 +706,7 @@ def tx_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.col("lang").alias("true_lang"), "text"
     )
-    return langid_join(docs, "text", "doc_id").select(
+    return langid_join(docs, "text").select(
         "doc_id", "true_lang", "predicted_lang"
     )
 

@@ -33,9 +33,9 @@ _BINS = 20
     "BPE tokenizer training: 10 merge rounds over the top-200 word-"
     "frequency table of the documents corpus. Deterministic — exact "
     "integer pair counts, (count DESC, pair ASC) tie-break — so the "
-    "merge table is reproducible on any engine; tests pin it against a "
-    "pure-Python BPE reference AND against the all-Spark fold-merge "
-    "variant (operators/bpe.py:bpe_train). At 100 TB the corpus is "
+    "merge table is reproducible on any engine; tests pin the trainer "
+    "(operators/bpe.py:bpe_train_local) against a pure-Python BPE "
+    "reference. At 100 TB the corpus is "
     "touched ONCE (word-freq agg); the serial merge loop runs on the "
     "collected vocabulary-sized table (Sennrich's trick — the same "
     "bounded-collect class as the IVF centroids), and the learned "

@@ -35,11 +35,10 @@ def clean_corpus_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     """The clean-corpus plan with its persisted handle EXPOSED
     (ADVICE r10): ``result`` is the query's return frame, ``cleaned``
     the persisted rebuild it fans out from. Library callers running
-    this in a long-lived session should call
-    :func:`unpersist_clean_corpus` (or ``cleaned.unpersist()``) after
-    their action instead of a global ``clearCache()``; the registry
-    path leaves release to the bench/driver per-query hygiene because
-    its DataFrame is returned lazy."""
+    this in a long-lived session call ``cleaned.unpersist()`` or
+    ``plans.release_caches`` after their action; the registry path
+    leaves release to ``plans.run_each`` because its DataFrame is
+    returned lazy."""
     docs = spread(table(spark, sf_dir, "documents"))
     # cleaned feeds THREE consumers (accounting, classifier, word
     # recount) — unpersisted, the whole chunk-dedup rebuild (token
@@ -70,17 +69,6 @@ def clean_corpus_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
         )
     )
     return {"cleaned": cleaned, "result": result}
-
-
-def unpersist_clean_corpus(frames: dict[str, DataFrame]) -> None:
-    """Release the block ``clean_corpus_frames()`` persisted (ADVICE
-    r10 — the :func:`unpersist_cascade` convention)."""
-    df = frames.get("cleaned")
-    if df is not None:
-        try:
-            df.unpersist(False)
-        except Exception:  # noqa: BLE001 — cleanup must never fail a caller
-            pass
 
 
 @register(

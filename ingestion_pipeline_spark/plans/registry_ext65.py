@@ -474,12 +474,12 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Persist contract (ADVICE r9): ``sig``/``bk``/``ranked`` (and,
     since r12, the skinny ``s1`` and ``edges`` id frames) stay cached
-    until the session drops them — registry consumers rely on the
-    bench/driver per-query ``clearCache()`` hygiene, but a caller
-    running several cascade consumers in ONE session (each call
-    re-persists its own copies, including the text-bearing ``sig``)
-    must call :func:`unpersist_cascade` (or ``clearCache()``) between
-    calls or the duplicate cached blocks accumulate.
+    until the session drops them — registry loops release them through
+    ``plans.run_each``, and any other caller running several cascade
+    consumers in ONE session (each call re-persists its own copies,
+    including the text-bearing ``sig``) must call
+    ``plans.release_caches`` between calls or the duplicate cached
+    blocks accumulate.
     """
     from ..functions.text import content_md5
     from ..operators.dedup import jaccard3_bp, minhash_md5_slots
@@ -663,25 +663,6 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         "obu": obu,
         "survivors": survivors,
     }
-
-
-def unpersist_cascade(frames: dict[str, DataFrame]) -> None:
-    """Release the blocks ``cascade_frames()`` persisted (ADVICE r9).
-
-    One-shot consumers that materialize a cascade frame eagerly
-    (``tools/build_post_dedup.py``, the verify-budget audit) call this
-    after their action; registry query paths leave it to the
-    bench/driver per-query ``clearCache()`` hygiene because their
-    DataFrames are returned lazy (unpersisting before execution would
-    forfeit the shared-scan reuse the plan is built around).
-    """
-    for key in ("sig", "bk", "ranked", "s1", "edges"):
-        df = frames.get(key)
-        if df is not None:
-            try:
-                df.unpersist(False)
-            except Exception:  # noqa: BLE001 — cleanup must never fail a caller
-                pass
 
 
 # shared oracle CTE block: exact stage + signatures + guarded banded

@@ -1,14 +1,14 @@
 """BPE merge training pinned against a pure-Python reference
 implementation (Sennrich et al. 2016 algorithm 1): same word-frequency
 input, same (count DESC, pair ASC) tie-break, greedy left-to-right
-merge — the Spark merge table must be value-identical.
+merge — the trainer's merge table must be value-identical.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-from ingestion_pipeline_spark.operators.bpe import bpe_train, word_frequencies
+from ingestion_pipeline_spark.operators.bpe import bpe_train_local, word_frequencies
 from ingestion_pipeline_spark.plans import query_map
 
 
@@ -47,7 +47,7 @@ def test_bpe_matches_python_reference(spark, sf_dir):
     freqs = {r["word"]: r["freq"] for r in words.collect()}
     assert len(freqs) > 10
 
-    got = [tuple(r) for r in bpe_train(spark, words, n_merges=8).collect()]
+    got = [tuple(r) for r in bpe_train_local(spark, words, n_merges=8).collect()]
     expect = _python_bpe(freqs, 8)
     assert got == expect
     # merges actually happened and counts are non-increasing is NOT
@@ -58,9 +58,9 @@ def test_bpe_matches_python_reference(spark, sf_dir):
 
 def test_bpe_greedy_overlap_semantics(spark):
     # 'aaa' with pair (a,a): greedy left-to-right yields ['aa','a'],
-    # never ['a','aa'] — the fold must not re-merge its own output
+    # never ['a','aa'] — the merge must not re-merge its own output
     words = spark.createDataFrame([("aaa", 5), ("aab", 3)], "word STRING, freq LONG")
-    got = [tuple(r) for r in bpe_train(spark, words, n_merges=2).collect()]
+    got = [tuple(r) for r in bpe_train_local(spark, words, n_merges=2).collect()]
     expect = _python_bpe({"aaa": 5, "aab": 3}, 2)
     assert got == expect
     assert got[0][1:4] == ("a", "a", "aa")
@@ -70,16 +70,6 @@ def test_bpe_registry_entry_runs(spark, sf_dir):
     out = query_map()["tx_bpe_merges"](spark, sf_dir).collect()
     assert 1 <= len(out) <= 10
     assert all(r["merged"] == r["pair_a"] + r["pair_b"] for r in out)
-
-
-def test_bpe_local_trainer_identical_to_distributed(spark, sf_dir):
-    from ingestion_pipeline_spark.operators.bpe import bpe_train_local
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    words = word_frequencies(docs, top_n=100)
-    dist = [tuple(r) for r in bpe_train(spark, words, n_merges=6).collect()]
-    local = [tuple(r) for r in bpe_train_local(spark, words, n_merges=6).collect()]
-    assert dist == local
 
 
 def test_bpe_tokenize_counts_match_python_apply(spark, sf_dir):

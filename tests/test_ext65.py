@@ -494,10 +494,8 @@ def test_verify_budget_tail_audit_recompute(spark, tmp_path):
     (audit_frames — the SAME code path the 100x audit runs)."""
     from pyspark.sql import functions as F
 
-    from ingestion_pipeline_spark.plans.registry_ext65 import (
-        _VERIFY_K,
-        unpersist_cascade,
-    )
+    from ingestion_pipeline_spark.plans import release_caches
+    from ingestion_pipeline_spark.plans.registry_ext65 import _VERIFY_K
     from tools.audit_verify_budget import audit_frames
 
     seed, fam, nchg = 43, 48, 30
@@ -541,7 +539,7 @@ def test_verify_budget_tail_audit_recompute(spark, tmp_path):
     assert obu_ids, "fixture must produce over-budget-undropped docs"
     assert miss, "fixture must hide a qualifying partner past the budget"
 
-    fr, obu_df, sample_df, tails, n_pop, n_sampled = audit_frames(
+    obu_df, sample_df, tails, n_pop, n_sampled = audit_frames(
         spark, sf_dir, sample=10_000
     )
     assert n_pop == len(obu_ids)
@@ -555,9 +553,7 @@ def test_verify_budget_tail_audit_recompute(spark, tmp_path):
         .collect()
     }
     assert got == miss
-    sample_df.unpersist(False)
-    obu_df.unpersist(False)
-    unpersist_cascade(fr)
+    release_caches(spark)
 
 
 def test_dup_clusters_capped_recompute(spark, tmp_path):
@@ -675,21 +671,18 @@ def test_split_leakage_capped_recompute(spark, tmp_path):
     assert got == oracle
 
 
-def test_unpersist_clean_corpus_releases_blocks(spark, sf_dir):
-    """ADVICE r10: clean_corpus_frames exposes its persisted handle so
-    library callers can release it without a global clearCache; the
-    helper drops the cached blocks and is idempotent/safe on partials."""
+def test_release_caches_releases_clean_corpus_blocks(spark, sf_dir):
+    """clean_corpus_frames exposes its persisted handle; the one release
+    path drops its cached blocks, and a second call finds nothing."""
+    from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.plans.registry_ext53 import (
         clean_corpus_frames,
-        unpersist_clean_corpus,
     )
 
     fr = clean_corpus_frames(spark, sf_dir)
     n = fr["result"].count()
     assert n > 0
     assert fr["cleaned"].storageLevel.useMemory
-    unpersist_clean_corpus(fr)
+    assert release_caches(spark) > 0
     assert not fr["cleaned"].storageLevel.useMemory
-    # idempotent, and tolerant of partial dicts
-    unpersist_clean_corpus(fr)
-    unpersist_clean_corpus({})
+    assert release_caches(spark) == 0

@@ -37,10 +37,8 @@ def test_cascade_docs_join_stays_broadcast(spark):
     r12 localCheckpoint detour demoted them to a sort-merge of the full
     text corpus (2x whole-family regression). Pin: no SortMergeJoin
     anywhere in the survivor plan at fixture scale."""
-    from ingestion_pipeline_spark.plans.registry_ext65 import (
-        cascade_frames,
-        unpersist_cascade,
-    )
+    from ingestion_pipeline_spark.plans import release_caches
+    from ingestion_pipeline_spark.plans.registry_ext65 import cascade_frames
 
     import re
 
@@ -62,8 +60,7 @@ def test_cascade_docs_join_stays_broadcast(spark):
         )
         assert not smj_docs, plan
     finally:
-        unpersist_cascade(frames)
-        spark.catalog.clearCache()
+        release_caches(spark)
 
 
 def test_minhash_lsh_kernel_runs_once(spark):

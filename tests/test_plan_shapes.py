@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from ingestion_pipeline_spark.plans import query_map, release_caches
+from ingestion_pipeline_spark.plans import plan_text, query_map, run_each
 
 # name -> max Exchange nodes in the executed plan at sf0.001.
 # Each entry is a design claim from SCALE.md / the query docstring.
@@ -72,47 +72,41 @@ def test_unpartitioned_window_detector(spark):
     silent on partitioned windows, partition-only (no order) windows,
     and partitioned WindowGroupLimit plans — the three text-format
     ambiguities the parser disambiguates."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from audit_plans import unpartitioned_windows
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    df = spark.range(100).withColumn("g", F.col("id") % 3)
+    from tools.audit_plans import unpartitioned_windows
 
-    def plan(d):
-        return d._jdf.queryExecution().executedPlan().toString()
+    df = spark.range(100).withColumn("g", F.col("id") % 3)
 
     # the retired anti-pattern: global ntile, no partitionBy
     ntile = df.withColumn("b", F.ntile(10).over(Window.orderBy("id")))
-    assert unpartitioned_windows(plan(ntile)) == 1
+    assert unpartitioned_windows(plan_text(ntile)) == 1
 
     # partitioned window: clean
     part = df.withColumn(
         "r", F.row_number().over(Window.partitionBy("g").orderBy("id"))
     )
-    assert unpartitioned_windows(plan(part)) == 0
+    assert unpartitioned_windows(plan_text(part)) == 0
 
     # partition-only window (no orderBy): prints two groups like the
     # unpartitioned form, but the last group is not an ORDER spec
     part_only = df.withColumn(
         "s", F.sum("id").over(Window.partitionBy("g"))
     )
-    assert unpartitioned_windows(plan(part_only)) == 0
+    assert unpartitioned_windows(plan_text(part_only)) == 0
 
     # partitioned rank+filter plans a WindowGroupLimit whose partition
     # group is printed inline — must not be mistaken for empty
     grplim = part.filter("r <= 2")
-    assert unpartitioned_windows(plan(grplim)) == 0
+    assert unpartitioned_windows(plan_text(grplim)) == 0
 
     # unpartitioned rank+filter: both the Window and its GroupLimit fire
     glim_global = (
         df.withColumn("r", F.row_number().over(Window.orderBy("id")))
         .filter("r <= 2")
     )
-    assert unpartitioned_windows(plan(glim_global)) >= 1
+    assert unpartitioned_windows(plan_text(glim_global)) >= 1
 
 
 @pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGETS))
@@ -136,21 +130,17 @@ def test_no_nonscalar_output_columns(spark, sf_dir):
     scalar. Only the schema is read, but BUILDING the frame is not
     free: the iterative builders (graph family, kmeans, cascade) run
     jobs and pin persisted/localCheckpoint blocks at construction time
-    — so finish with the bench-loop hygiene sweep, or the leaked
-    blocks contaminate later tests in the shared session."""
-    offenders = {}
-    try:
-        for name, fn in query_map().items():
-            df = fn(spark, sf_dir)
-            bad = [
-                f.name
-                for f in df.schema.fields
-                if f.dataType.typeName() in ("array", "map", "struct")
-            ]
-            if bad:
-                offenders[name] = bad
-    finally:
-        release_caches(spark)
+    — so run through the registry loop, which releases them after every
+    query, or the leaked blocks contaminate later tests in the shared
+    session."""
+    def nonscalar(_name, fn):
+        return [
+            f.name
+            for f in fn(spark, sf_dir).schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+
+    offenders = {n: bad for n, bad in run_each(spark, nonscalar).items() if bad}
     assert not offenders, (
         f"non-scalar output columns reach the driver: {offenders} — "
         "flatten to scalars or comma-joined fixed-point strings"

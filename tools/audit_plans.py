@@ -9,7 +9,11 @@ Checks per query:
 - parquet scans that read every column of a wide table (projection
   should prune);
 - single-shuffle sanity: counts Exchange nodes so a regression that
-  doubles shuffles is visible in review diffs.
+  doubles shuffles is visible in review diffs, and prints the parquet
+  scan count per table (``scans=lineitem:2,...``) — a table scanned
+  more than once inside ONE query is a candidate for a shared
+  materialization (the d_dsir_importance finding: five scans because
+  the pushed-down lang filter defeated ReuseExchange).
 - unpartitioned Window nodes (round-5, verdict r4 directive #3): a
   ``Window``/``WindowInPandas`` with an empty partition spec moves its
   whole input to ONE task — Spark itself warns ``WindowExec: No
@@ -24,10 +28,12 @@ Exit 1 on any unexpected flag — wired for CI use.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
+from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Queries where a nested-loop/cross join is the intended plan: the
 # broadcast side is a probe set or 1-row aggregate by construction.
@@ -205,46 +211,55 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
+def audit(name: str, df) -> list[str]:
+    """Print the query's audit line and return its flags."""
+    from ingestion_pipeline_spark.plans import plan_text
+
+    plan = plan_text(df)
+    # scans from the formatted plan, which lists each scan node once; the
+    # tree text repeats a persisted frame's whole plan at every read
+    scans = Counter(
+        re.findall(r"Location:.*?/(\w+)\.parquet", plan_text(df, "formatted"))
+    )
+    flags: list[str] = []
+    if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and name not in NLJ_ALLOWED:
+        flags.append("unexpected cross/NLJ join")
+    n_gwin = unpartitioned_windows(plan)
+    if n_gwin and name not in GLOBAL_WINDOW_ALLOWED:
+        flags.append(f"unpartitioned Window x{n_gwin} (single-task sort"
+                     " of its whole input; allowlist only bounded frames)")
+    for line in plan.splitlines():
+        if "FileScan parquet" not in line:
+            continue
+        cols = re.search(r"FileScan parquet \[([^\]]*)\]", line)
+        tbl = re.search(r"/(\w+)\.parquet", line)
+        if not cols or not tbl:
+            continue
+        name_t = tbl.group(1)
+        ncols = cols.group(1).count(",") + 1 if cols.group(1) else 0
+        if name_t in WIDE and ncols >= WIDE[name_t]:
+            flags.append(f"unpruned scan of {name_t} ({ncols} cols)")
+    status = "FLAG" if flags else "ok"
+    scan_list = ",".join(f"{t}:{n}" for t, n in sorted(scans.items()))
+    print(f"{status:4} {name}: exchanges={plan.count('Exchange')}"
+          f" scans={scan_list or '-'}"
+          + (f" — {'; '.join(flags)}" if flags else ""))
+    return flags
+
+
 def main() -> int:
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import run_each
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("audit-plans")
+    results = run_each(spark, lambda name, fn: audit(name, fn(spark, sf_dir)))
     failures: list[str] = []
-
-    for name, fn in sorted(query_map().items()):
-        try:
-            df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as e:  # noqa: BLE001
-            failures.append(f"{name}: explain failed: {e}")
-            continue
-
-        flags: list[str] = []
-        if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and name not in NLJ_ALLOWED:
-            flags.append("unexpected cross/NLJ join")
-        n_gwin = unpartitioned_windows(plan)
-        if n_gwin and name not in GLOBAL_WINDOW_ALLOWED:
-            flags.append(f"unpartitioned Window x{n_gwin} (single-task sort"
-                         " of its whole input; allowlist only bounded frames)")
-        for line in plan.splitlines():
-            if "FileScan parquet" not in line:
-                continue
-            cols = re.search(r"FileScan parquet \[([^\]]*)\]", line)
-            tbl = re.search(r"/(\w+)\.parquet", line)
-            if not cols or not tbl:
-                continue
-            ncols = cols.group(1).count(",") + 1 if cols.group(1) else 0
-            name_t = tbl.group(1)
-            if name_t in WIDE and ncols >= WIDE[name_t]:
-                flags.append(f"unpruned scan of {name_t} ({ncols} cols)")
-        n_exchanges = plan.count("Exchange")
-        status = "FLAG" if flags else "ok"
-        print(f"{status:4} {name}: exchanges={n_exchanges}"
-              + (f" — {'; '.join(flags)}" if flags else ""))
-        if flags:
-            failures.append(f"{name}: {'; '.join(flags)}")
+    for name, res in results.items():
+        if isinstance(res, Exception):
+            failures.append(f"{name}: explain failed: {res}")
+        elif res:
+            failures.append(f"{name}: {'; '.join(res)}")
 
     print(f"\n{len(failures)} flagged" + (f": {failures}" if failures else ""))
     return 1 if failures else 0

@@ -107,7 +107,7 @@ def audit_frames(spark, base: str, sample: int):
             (jac(F.col("ta"), F.col("tb")) >= _NEAR_BP).alias("qual"),
         )
     )
-    return fr, obu_ids, sample_ids, tails, n_pop, n_sampled
+    return obu_ids, sample_ids, tails, n_pop, n_sampled
 
 
 def main() -> int:
@@ -121,15 +121,13 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from ingestion_pipeline_spark.plans.registry_ext65 import (
-        _VERIFY_K,
-        unpersist_cascade,
-    )
+    from ingestion_pipeline_spark.plans import release_caches
+    from ingestion_pipeline_spark.plans.registry_ext65 import _VERIFY_K
     from ingestion_pipeline_spark.session import get_spark
 
     spark = get_spark("audit-verify-budget")
     t0 = time.perf_counter()
-    fr, obu_ids, sample_ids, tails, n_pop, n_sampled = audit_frames(
+    obu_ids, sample_ids, tails, n_pop, n_sampled = audit_frames(
         spark, os.path.abspath(args.base), args.sample
     )
     stats = tails.agg(
@@ -169,10 +167,9 @@ def main() -> int:
         "miss_first_rank_max": rank_stats["mx"] if rank_stats else None,
         "wall_sec": wall,
     }
-    miss.unpersist(False)
-    sample_ids.unpersist(False)
-    obu_ids.unpersist(False)
-    unpersist_cascade(fr)
+    # one-shot consumer: drop the cascade's persisted frames and the
+    # audit's own persists now that the figures are collected
+    release_caches(spark)
     line = json.dumps(out)
     print(line)
     try:

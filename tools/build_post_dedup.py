@@ -81,6 +81,7 @@ def main() -> int:
     args = ap.parse_args()
     base, out = os.path.abspath(args.base), os.path.abspath(args.out)
 
+    from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.session import get_spark
 
     spark = get_spark("build-post-dedup")
@@ -94,7 +95,7 @@ def main() -> int:
         os.path.join(out, "embeddings.parquet")
     ).count()
     emb_s = round(time.perf_counter() - t0, 1)
-    spark.catalog.clearCache()
+    release_caches(spark)
 
     t0 = time.perf_counter()
     doc = document_survivors(spark, base)
@@ -105,7 +106,7 @@ def main() -> int:
     doc_s = round(time.perf_counter() - t0, 1)
     # one-shot consumer: release the cascade's persisted blocks
     # (sig carries the full text column — ADVICE r9 persist contract)
-    spark.catalog.clearCache()
+    release_caches(spark)
 
     for t in TABLES:
         if t in ("documents", "embeddings"):

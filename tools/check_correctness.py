@@ -2,17 +2,21 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on
 DuckDB over the same parquet tables, comparing row count, column names,
-and an order-insensitive value hash. Usage:
+canonical dtypes and an order-insensitive value hash. Each Spark plan
+executes once (``collect()``); its dtypes come from the Arrow schema of
+the plan's own schema. Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
+from functools import partial
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(rows, cols):
@@ -79,15 +83,74 @@ def type_mismatches(s_schema, d_schema):
     return diffs
 
 
+def check(spark, sf_dir, con, oracles, name, builder) -> bool:
+    """Run one query once and compare it with its oracle; print the
+    verdict line and return whether it passed."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    t0 = time.time()
+    sdf = builder(spark, sf_dir)
+    srows = sdf.collect()
+    scols = sdf.columns
+    if name not in oracles:
+        # Bound-based gate (VERDICT r6 #3): no value hash — the
+        # output embeds engine-internal bytes/hashes — but the
+        # estimate must sit inside its analytic error band around
+        # the exact answer DuckDB/stdlib computes.
+        from ingestion_pipeline_spark.plans.bounds import BOUND_CHECKS
+
+        chk = BOUND_CHECKS.get(name)
+        if chk is None:
+            print(f"ok?  {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            return True
+        try:
+            viol = chk(con, srows)
+        except Exception as e:  # noqa: BLE001
+            print(f"FAIL {name}: bound-check error: {e}")
+            return False
+        if viol:
+            print(f"FAIL {name}: bound violations: {viol[:3]}")
+            return False
+        print(f"PASS {name} [bounds] ({len(srows)} rows, {time.time()-t0:.1f}s)")
+        return True
+    try:
+        dtab = con.execute(oracles[name]).fetch_arrow_table()
+        ddf = dtab.to_pandas()
+    except Exception as e:  # noqa: BLE001
+        print(f"FAIL {name}: duckdb error: {e}")
+        return False
+    dcols = list(ddf.columns)
+    if sorted(scols) != sorted(dcols):
+        print(f"FAIL {name}: schema {sorted(scols)} != {sorted(dcols)}")
+        return False
+    # the Arrow schema Spark's own toArrow() would produce, derived from
+    # the plan schema so the query runs once
+    tdiffs = type_mismatches(to_arrow_schema(sdf.schema), dtab.schema)
+    if tdiffs:
+        print(f"FAIL {name}: dtype mismatch: {'; '.join(tdiffs)}")
+        return False
+    if len(srows) != len(ddf):
+        print(f"FAIL {name}: rowcount {len(srows)} != {len(ddf)}")
+        return False
+    s_norm = normalize([r.asDict() for r in srows], sorted(scols))
+    d_norm = normalize(ddf.to_dict("records"), sorted(scols))
+    if s_norm != d_norm:
+        diffs = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:3]
+        print(f"FAIL {name}: value mismatch, e.g. {diffs}")
+        return False
+    print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
+    return True
+
+
 def main() -> int:
     import duckdb
 
-    from __spark_entry__ import oracle_sql, queries
-    from ingestion_pipeline_spark.plans import release_caches
+    from __spark_entry__ import oracle_sql
+    from ingestion_pipeline_spark.plans import run_each
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:] or None
 
     spark = get_spark("check-correctness")
     con = duckdb.connect()
@@ -97,81 +160,13 @@ def main() -> int:
     ]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
-    qs, oracles = queries(), oracle_sql()
+    results = run_each(spark, partial(check, spark, sf_dir, con, oracle_sql()), only)
     failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            stab = sdf.toArrow()
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
+    for name, res in results.items():
+        if isinstance(res, Exception):
+            print(f"FAIL {name}: spark error: {res}")
+        if res is not True:
             failed.append(name)
-            continue
-        finally:
-            # release localCheckpoint blocks the iterative operators
-            # pin (bench.py documents the measured leak); results are
-            # already materialized above, so nothing needs the blocks
-            try:
-                release_caches(spark)
-            except Exception:  # noqa: BLE001
-                pass
-        if name not in oracles:
-            # Bound-based gate (VERDICT r6 #3): no value hash — the
-            # output embeds engine-internal bytes/hashes — but the
-            # estimate must sit inside its analytic error band around
-            # the exact answer DuckDB/stdlib computes.
-            from ingestion_pipeline_spark.plans.bounds import BOUND_CHECKS
-
-            chk = BOUND_CHECKS.get(name)
-            if chk is None:
-                print(f"ok?  {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-                continue
-            try:
-                viol = chk(con, srows)
-            except Exception as e:  # noqa: BLE001
-                print(f"FAIL {name}: bound-check error: {e}")
-                failed.append(name)
-                continue
-            if viol:
-                print(f"FAIL {name}: bound violations: {viol[:3]}")
-                failed.append(name)
-            else:
-                print(f"PASS {name} [bounds] ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            continue
-        try:
-            dtab = con.execute(oracles[name]).fetch_arrow_table()
-            ddf = dtab.to_pandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failed.append(name)
-            continue
-        dcols = list(ddf.columns)
-        if sorted(scols) != sorted(dcols):
-            print(f"FAIL {name}: schema {sorted(scols)} != {sorted(dcols)}")
-            failed.append(name)
-            continue
-        tdiffs = type_mismatches(stab.schema, dtab.schema)
-        if tdiffs:
-            print(f"FAIL {name}: dtype mismatch: {'; '.join(tdiffs)}")
-            failed.append(name)
-            continue
-        if len(srows) != len(ddf):
-            print(f"FAIL {name}: rowcount {len(srows)} != {len(ddf)}")
-            failed.append(name)
-            continue
-        s_norm = normalize([r.asDict() for r in srows], sorted(scols))
-        d_norm = normalize(ddf.to_dict("records"), sorted(scols))
-        if s_norm != d_norm:
-            diffs = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:3]
-            print(f"FAIL {name}: value mismatch, e.g. {diffs}")
-            failed.append(name)
-            continue
-        print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
 
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0

@@ -94,8 +94,7 @@ def _snapshot(df) -> list[tuple]:
 
 
 def main() -> int:
-    from __spark_entry__ import queries
-    from ingestion_pipeline_spark.plans import release_caches
+    from ingestion_pipeline_spark.plans import run_each
     from ingestion_pipeline_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -126,42 +125,31 @@ def main() -> int:
                   f"[--sample N] or query names)", file=sys.stderr)
             return 2
         only = set(args)
-        missing = only - set(queries())
-        if missing:
-            print(f"error: unknown query name(s): {sorted(missing)}",
-                  file=sys.stderr)
-            return 2
 
     spark = get_spark("check-determinism")
-    qs = queries()
-    failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+
+    def compare(name, fn):
         t0 = time.time()
         try:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
             a = _snapshot(fn(spark, sf_dir))
             spark.conf.set("spark.sql.shuffle.partitions", "7")
             b = _snapshot(fn(spark, sf_dir))
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: error: {e}")
-            failed.append(name)
-            continue
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
-            # release localCheckpoint blocks between queries (the
-            # long-session leak bench.py documents)
-            try:
-                release_caches(spark)
-            except Exception:  # noqa: BLE001
-                pass
         if a != b:
             diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
             print(f"FAIL {name}: partition-dependent result, e.g. {diffs}")
+            return False
+        print(f"PASS {name} ({len(a)} rows, {time.time()-t0:.1f}s)")
+        return True
+
+    failed = []
+    for name, res in run_each(spark, compare, only or None).items():
+        if isinstance(res, Exception):
+            print(f"FAIL {name}: error: {res}")
+        if res is not True:
             failed.append(name)
-        else:
-            print(f"PASS {name} ({len(a)} rows, {time.time()-t0:.1f}s)")
 
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0

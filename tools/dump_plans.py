@@ -70,12 +70,18 @@ SHOWCASE = [
 
 
 def main() -> int:
-    from ingestion_pipeline_spark.plans import query_map
+    from ingestion_pipeline_spark.plans import plan_text, run_each
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("dump-plans")
-    qm = query_map()
+    plans = run_each(
+        spark, lambda _name, fn: plan_text(fn(spark, sf_dir), "formatted"), SHOWCASE
+    )
+    failed = {n: p for n, p in plans.items() if isinstance(p, Exception)}
+    if failed:
+        print(f"explain failed: {failed}", file=sys.stderr)
+        return 1
     out = [
         "# PLANS — formatted physical plans for the showcase queries",
         "",
@@ -86,11 +92,7 @@ def main() -> int:
         "",
     ]
     for name in SHOWCASE:
-        df = qm[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
+        out.append(f"## {name}\n\n```\n{plans[name].strip()}\n```\n")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")

@@ -1,6 +1,8 @@
 """Dump `.explain("formatted")` for named registry queries into
 plans/<round>/<query>_<tag>.txt — the before/after plan evidence an
-optimization round commits alongside each change.
+optimization round commits alongside each change. The queries are
+explained in registry order; one that fails is reported on stderr (exit
+1) and the others are still written.
 
     python tools/dump_round_plans.py <round> <tag> <query> [query ...]
     python tools/dump_round_plans.py --sf /root/testdata/sf0.1 r13 after q1 ...
@@ -23,34 +25,29 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     args = ap.parse_args()
 
-    from ingestion_pipeline_spark.plans import query_map, release_caches
+    from ingestion_pipeline_spark.plans import plan_text, run_each
     from ingestion_pipeline_spark.session import get_spark
 
     spark = get_spark(f"dump-{args.round}-plans")
-    qs = query_map()
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
         args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
-    for name in args.names:
-        df = qs[name](spark, args.sf)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+
+    def dump(name, fn):
+        plan = plan_text(fn(spark, args.sf), "formatted")
         path = os.path.join(out_dir, f"{name}_{args.tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
-        n_scan = plan.count("Scan parquet")
-        n_ex = plan.count("Exchange")
-        print(f"{name}: {n_scan} parquet scans, {n_ex} Exchange -> {path}")
-        # release any localCheckpoint blocks plan construction pinned
-        try:
-            release_caches(spark)
-        except Exception:  # noqa: BLE001
-            pass
-    return 0
+        print(f"{name}: {plan.count('Scan parquet')} parquet scans, "
+              f"{plan.count('Exchange')} Exchange -> {path}")
+
+    failed = {n: r for n, r in run_each(spark, dump, args.names).items() if r}
+    for name, exc in failed.items():
+        print(f"{name}: ERROR {type(exc).__name__}: {exc}"[:300], file=sys.stderr)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -340,7 +340,7 @@ def build_scaled(spark, out_dir: str, k: int) -> dict[str, int]:
 
 
 def main() -> int:
-    from ingestion_pipeline_spark.plans import query_map, release_caches
+    from ingestion_pipeline_spark.plans import run_each
     from ingestion_pipeline_spark.session import get_spark
 
     argv = sys.argv[1:]
@@ -357,9 +357,7 @@ def main() -> int:
     all_queries = "--all" in argv
     argv = [a for a in argv if a not in ("--warmup", "--all")]
     k = int(argv[0]) if argv else 10
-    names = argv[1:] or (
-        list(query_map()) if all_queries else DEFAULT_QUERIES
-    )
+    names = argv[1:] or (None if all_queries else DEFAULT_QUERIES)
     # SPARK_GRAFT_SCALE_DIR: reuse a pre-built replica (skip the
     # ~10-min 100x build and the exit-time delete) — for iterating on
     # individual queries against one kept replica.
@@ -377,7 +375,6 @@ def main() -> int:
         build_s = round(time.perf_counter() - t0, 1)
         print(f"# built {k}x replica in {build_s}s: {rows}", file=sys.stderr)
 
-    qs = query_map()
     # machine-state fingerprint at sweep start/end (VERDICT r9 #5: the
     # 100x tables in SCALE.md are probe-annotated so cross-session
     # comparisons start ambient-corrected) — same fixed probe bench.py
@@ -386,34 +383,34 @@ def main() -> int:
 
     probe_start = _env_probe(spark)
     print(f"# env probe (start): {probe_start}s", file=sys.stderr)
+
+    def timed(name, fn):
+        if warmup:
+            fn(spark, os.path.join(os.path.dirname(SRC), "sf0.001")).write.format(
+                "noop"
+            ).mode("overwrite").save()
+        t0 = time.perf_counter()
+        fn(spark, out_dir).write.format("noop").mode("overwrite").save()
+        sec = round(time.perf_counter() - t0, 2)
+        print(f"# {name}: {sec}s", file=sys.stderr)
+        return sec
+
+    # run_each releases localCheckpoint blocks between queries — the
+    # same measured leak bench.py documents (in the r7 70-query
+    # single-session sweep the accumulated pressure degraded UNRELATED
+    # late queries 4-16x: d_minhash_lsh_md5_pairs 4.0 -> 66.6 s,
+    # v_kmeans_clusters 7.0 -> 41.5 s, all recovered once the release
+    # landed).
     times: dict[str, float] = {}
     failures = 0
-    for name in names:
-        try:
-            if warmup:
-                qs[name](spark, "/root/testdata/sf0.001").write.format(
-                    "noop"
-                ).mode("overwrite").save()
-            t0 = time.perf_counter()
-            qs[name](spark, out_dir).write.format("noop").mode("overwrite").save()
-            times[name] = round(time.perf_counter() - t0, 2)
-            print(f"# {name}: {times[name]}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
+    for name, res in run_each(spark, timed, names).items():
+        if isinstance(res, Exception):
             times[name] = -1.0
             failures += 1
-            print(f"# {name}: FAILED {type(exc).__name__}: {exc}", file=sys.stderr)
-        finally:
-            # Release localCheckpoint blocks between queries — the same
-            # measured leak bench.py documents (iterative ops pin ~6
-            # blocksets per invocation; in the r7 70-query single-session
-            # sweep the accumulated pressure degraded UNRELATED late
-            # queries 4-16x: d_minhash_lsh_md5_pairs 4.0 -> 66.6 s,
-            # v_kmeans_clusters 7.0 -> 41.5 s, all recovered once this
-            # loop landed).
-            try:
-                release_caches(spark)
-            except Exception:  # noqa: BLE001 — hygiene must never fail a smoke
-                pass
+            print(f"# {name}: FAILED {type(res).__name__}: {res}",
+                  file=sys.stderr)
+        else:
+            times[name] = res
 
     probe_end = _env_probe(spark)
     print(f"# env probe (end): {probe_end}s", file=sys.stderr)
