@@ -16,7 +16,9 @@ The hash, band and join stages are JVM-side functions (xxhash64,
 transform, aggregate). Four stages run as Arrow kernels, where per-row
 Python over a batch beats interpreted higher-order functions:
 
-- ``minhash_md5_slots``: the md5 MinHash signature, straight from text.
+- ``minhash_md5_slots``: the md5 MinHash signature, straight from text
+  (``md5_signatures`` spreads it into ``mh_i`` columns, which
+  ``md5_band_rows`` and ``bucket_ranked`` band and rank).
 - ``jaccard3_bp``: exact n-gram Jaccard of a candidate pair (verify).
 - ``minhash_bands``: the splitmix64 MinHash and the band fold, in one
   ``mapInPandas`` pass.
@@ -31,6 +33,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.text import content_md5, word_ngrams, word_shingles_np, word_tokens
 from .relational import spread
@@ -173,6 +176,52 @@ def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
         return pd.Series(out, dtype=object)
 
     return sig
+
+
+def md5_signatures(df: DataFrame, n_hashes: int, carry: tuple[str, ...] = ()) -> DataFrame:
+    """``(doc_id, *carry, mh_0 … mh_{n-1})``: the md5 MinHash signature
+    of ``df.text`` as one column per slot, from ONE Arrow kernel pass
+    (``minhash_md5_slots``). ``carry`` names extra columns that ride
+    along (the verify stages keep ``text``). Short texts give NULL
+    slots; callers apply their own ``mh_0 IS NOT NULL`` filter."""
+    mh = minhash_md5_slots(n_hashes)
+    return df.select("doc_id", *carry, mh(F.col("text")).alias("__mh")).select(
+        "doc_id",
+        *carry,
+        *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(n_hashes)],
+    )
+
+
+def md5_band_rows(sig: DataFrame, n_bands: int) -> DataFrame:
+    """``(doc_id, band, bucket)``: ``n_bands`` bands of 2 rows, band
+    ``b``'s bucket key being ``mh_{2b} || mh_{2b+1}`` — the oracle's
+    ``registry_ext48._BANDS_UNION`` layout."""
+    return sig.select(
+        "doc_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band", "bucket"),
+    )
+
+
+def bucket_ranked(bands: DataFrame) -> DataFrame:
+    """Band rows plus ``drk`` (doc rank by ``doc_id`` within its
+    (band, bucket)) and ``k`` (the bucket's size): two windows over ONE
+    (band, bucket) exchange of skinny band rows — the pair stream never
+    feeds a window. Oracle twin: ``registry_ext65._BK_CTE``."""
+    wb = Window.partitionBy("band", "bucket")
+    return bands.select(
+        "doc_id",
+        "band",
+        "bucket",
+        F.row_number().over(wb.orderBy("doc_id")).alias("drk"),
+        F.count("*").over(wb).alias("k"),
+    )
 
 
 def jaccard3_bp(n: int = 3):

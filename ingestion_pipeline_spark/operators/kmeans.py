@@ -52,20 +52,6 @@ def kmeans_fixed_point(
 ) -> DataFrame:
     """Returns the final assignment ``(vec_id, cluster, dist_sq)`` after
     ``iters`` Lloyd rounds of exact integer k-means."""
-    assign, _ = kmeans_fit(emb, k, iters, vec_col, id_col)
-    return assign
-
-
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """``(assignment_df, centroids_int64_ndarray)`` — the fit form, for
-    operators that need the trained centroids too (IVF cell selection,
-    v_ivf_exact_topk)."""
     import numpy as np
     import pandas as pd
 
@@ -74,7 +60,6 @@ def kmeans_fit(
     q = quantized(emb, vec_col, id_col).localCheckpoint(eager=True)
     init_rows = q.orderBy("vec_id").limit(k).collect()
     cent = np.stack([np.asarray(r["v"], dtype=np.int64) for r in init_rows])
-    dim = cent.shape[1]
 
     out_schema = StructType(
         [
@@ -84,20 +69,24 @@ def kmeans_fit(
         ]
     )
 
+    def nearest(V: "np.ndarray", centroids: "np.ndarray"):
+        """``(d, best)``: exact int64 squared distances of each row of
+        ``V`` to each centroid, computed as an explicit difference to
+        stay overflow-safe (coords <= ~scale, diffs^2 * dim << 2^63),
+        and the nearest centroid (first minimum == lowest cid)."""
+        d = np.empty((len(V), centroids.shape[0]), dtype=np.int64)
+        for j in range(centroids.shape[0]):
+            diff = V - centroids[j][None, :]
+            d[:, j] = np.einsum("ij,ij->i", diff, diff)
+        return d, d.argmin(axis=1)
+
     def make_assigner(centroids: "np.ndarray"):
         def assign(batches):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
                 V = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-                # exact int64 squared distances: ||v||^2 - 2 v.c + ||c||^2
-                # computed as explicit difference to stay overflow-safe
-                # (coords <= ~scale, diffs^2 * dim << 2^63)
-                d = np.empty((len(V), centroids.shape[0]), dtype=np.int64)
-                for j in range(centroids.shape[0]):
-                    diff = V - centroids[j][None, :]
-                    d[:, j] = np.einsum("ij,ij->i", diff, diff)
-                best = d.argmin(axis=1)  # first minimum == lowest cid
+                d, best = nearest(V, centroids)
                 yield pd.DataFrame(
                     {
                         "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
@@ -136,11 +125,7 @@ def kmeans_fit(
                 if len(pdf) == 0:
                     continue
                 V = np.stack(pdf["v"].to_numpy()).astype(np.int64)
-                d = np.empty((len(V), k_), dtype=np.int64)
-                for j in range(k_):
-                    diff = V - centroids[j][None, :]
-                    d[:, j] = np.einsum("ij,ij->i", diff, diff)
-                best = d.argmin(axis=1)  # first minimum == lowest cid
+                _, best = nearest(V, centroids)
                 for j in range(k_):
                     mask = best == j
                     if mask.any():
@@ -172,4 +157,4 @@ def kmeans_fit(
             new_cent[r["cluster"], r["i"]] = r["c"]
         cent = new_cent
 
-    return q.mapInPandas(make_assigner(cent.copy()), out_schema), cent
+    return q.mapInPandas(make_assigner(cent.copy()), out_schema)

@@ -15,9 +15,11 @@ for uniform task sizing; never collect binaries to the driver.
 
 from __future__ import annotations
 
+import sys
 from typing import Callable, Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,6 +30,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+# The mapInPandas functions call this module's decoders and hashers:
+# ship them to Python workers by value (as functions/text.py does), so
+# a worker never has to import the package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_SCHEMA = StructType(
     [

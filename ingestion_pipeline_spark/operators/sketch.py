@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sinks import _table_exists
+
 CMS_D = 4  # hash rows
 CMS_W = 256  # buckets per row
 
@@ -75,9 +77,9 @@ def cms_streaming_writer(path: str, word_col: str = "word", d: int = CMS_D, w: i
     batch-sized aggregate + a (d x w)-row read-merge-write — state size
     is CONSTANT (~1k rows) no matter how much data has flowed.
 
-    Path existence is probed explicitly (the round-2-advisor
-    discipline: a transient read error must propagate, not silently
-    restart the sketch from zero)."""
+    Path existence is probed explicitly with ``sinks._table_exists``
+    (the round-2-advisor discipline: a transient read error must
+    propagate, not silently restart the sketch from zero)."""
 
     def write_batch(batch, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -85,9 +87,7 @@ def cms_streaming_writer(path: str, word_col: str = "word", d: int = CMS_D, w: i
             F.count(F.lit(1)).alias("cnt")
         )
         delta = cms_sketch(wc, d, w)
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
+        if _table_exists(spark, path):
             stored = spark.read.parquet(path)
             merged = (
                 stored.unionByName(delta)

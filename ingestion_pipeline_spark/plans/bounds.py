@@ -194,7 +194,7 @@ def check_minhash_candidates(con, srows) -> list[str]:
         # precision leg; its pair arithmetic assumes valid ids
         return viol
     # --- matched-banding md5 reference set (precision companion) ---
-    from .registry_ext48 import _SQL_SHINGLES
+    from .registry import _SHINGLES_SQL
 
     mh = ", ".join(
         f"list_min(list_transform(sh, s -> md5(CAST({i} AS VARCHAR)"
@@ -211,7 +211,7 @@ def check_minhash_candidates(con, srows) -> list[str]:
             tuple,
             con.execute(
                 f"""
-                WITH base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh
+                WITH base AS (SELECT doc_id, {_SHINGLES_SQL} AS sh
                               FROM documents),
                 sig AS (SELECT doc_id, {mh} FROM base),
                 bands AS ({band_union})

@@ -1050,6 +1050,15 @@ _SHINGLES_SQL = """
 """.format(toks=SQL_TOKENS.format(col="text"))
 
 
+def _mh_sql(i: int) -> str:
+    """Slot ``i`` of the md5 MinHash signature over ``_SHINGLES_SQL`` —
+    the oracle twin of ``operators.dedup.md5_signatures``."""
+    return (
+        f"list_min(list_transform({_SHINGLES_SQL}, "
+        f"s -> md5(CAST({i} AS VARCHAR) || '|' || s))) AS mh_{i}"
+    )
+
+
 @register(
     "d_jaccard_pairs",
     f"""

@@ -13,7 +13,7 @@ from ..functions.exact import cents_disc_price, money, one_minus, sum_cents
 from ..functions.extract import enhance_query
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
-from .registry import SQL_DISC, SQL_EXT, _disc_price, register
+from .registry import SQL_DISC, SQL_EXT, _SHINGLES_SQL, _disc_price, _mh_sql, register
 
 
 @register(
@@ -212,23 +212,11 @@ def p_query_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", enhance_query(F.col("q")).alias("enhanced"))
 
 
-_SQL_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
-_SQL_SHINGLES = f"""
-    list_distinct(CASE WHEN len({_SQL_TOKS}) >= 3 THEN
-        list_transform(range(0, greatest(len({_SQL_TOKS}) - 3, 0) + 1),
-                       i -> array_to_string(list_slice({_SQL_TOKS}, i + 1, i + 3), ' '))
-        ELSE [] END)
-"""
-
-
 @register(
     "d_minhash_md5_signatures",
     f"""
     SELECT doc_id,
-           {', '.join(
-               f"list_min(list_transform({_SQL_SHINGLES}, s -> md5(CAST({i} AS VARCHAR) || '|' || s))) AS mh_{i}"
-               for i in range(8)
-           )}
+           {', '.join(_mh_sql(i) for i in range(8))}
     FROM documents
     """,
     "MinHash signature core, value-verified: 8 portable hash functions "
@@ -239,17 +227,12 @@ _SQL_SHINGLES = f"""
     "cheaper hash.",
 )
 def d_minhash_md5_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_md5_slots
-
-    docs = spread(table(spark, sf_dir, "documents"))
+    from ..operators.dedup import md5_signatures
 
     # ONE Arrow kernel pass for all 8 slots straight from text
     # (value-equal to the HOF md5 form the oracle replays) — VERDICT
     # r7 #3.
-    mh8 = minhash_md5_slots(8)
-    return docs.select("doc_id", mh8(F.col("text")).alias("__mh")).select(
-        "doc_id", *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(8)]
-    )
+    return md5_signatures(spread(table(spark, sf_dir, "documents")), 8)
 
 
 @register(
@@ -317,7 +300,7 @@ def rag_answer_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SIMHASH_VALS = f"""
-    list_transform({_SQL_SHINGLES},
+    list_transform({_SHINGLES_SQL},
         s -> (instr('0123456789abcdef', md5(s)[1:1]) - 1) * 4096
            + (instr('0123456789abcdef', md5(s)[2:2]) - 1) * 256
            + (instr('0123456789abcdef', md5(s)[3:3]) - 1) * 16

@@ -20,11 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import dedup as dd
 from ..operators.graph import dup_clusters
 from ..sources.parquet_tables import table
 from .registry import register
-from .registry_ext6 import _PAIRS_SQL
+from .registry_ext6 import _PAIRS_SQL, block_pairs, components_ctes
+
 
 def split_case_sql(id_expr: str = "doc_id") -> str:
     """The deterministic md5-bucket train/val/test CASE expression
@@ -52,19 +52,7 @@ _SPLIT_SQL = f"""
     f"""
     WITH RECURSIVE
     {_PAIRS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM pairs
-        UNION
-        SELECT id_b AS u, id_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u, LEAST(u, MIN(v)) AS component FROM reach GROUP BY u
-    ),
+    {components_ctes("pairs")},
     membership AS (
         SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.u
@@ -101,12 +89,7 @@ _SPLIT_SQL = f"""
 def d_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import dataset_split
 
-    docs = table(spark, sf_dir, "documents").withColumn(
-        "block", F.concat_ws("|", F.col("source"), F.col("lang"))
-    )
-    pairs = dd.jaccard_pairs(docs, "text", "doc_id", "block", threshold=0.12).select(
-        "id_a", "id_b"
-    )
+    docs, pairs = block_pairs(spark, sf_dir)
     membership = dup_clusters(docs, pairs, "doc_id").select(
         "doc_id", F.col("component").alias("cluster_id")
     )

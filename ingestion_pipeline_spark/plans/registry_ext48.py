@@ -22,26 +22,10 @@ from pyspark.sql import functions as F
 
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
-
-_SQL_TOKS = SQL_TOKENS.format(col="text")
-_SQL_SHINGLES = f"""
-    list_distinct(CASE WHEN len({_SQL_TOKS}) >= 3 THEN
-        list_transform(range(0, greatest(len({_SQL_TOKS}) - 3, 0) + 1),
-                       i -> array_to_string(list_slice({_SQL_TOKS}, i + 1, i + 3), ' '))
-        ELSE [] END)
-"""
+from .registry import _mh_sql, register
 
 _N_HASHES = 8
 _N_BANDS = 4  # 4 bands x 2 rows
-
-
-def _mh_sql(i: int) -> str:
-    return (
-        f"list_min(list_transform({_SQL_SHINGLES}, "
-        f"s -> md5(CAST({i} AS VARCHAR) || '|' || s))) AS mh_{i}"
-    )
-
 
 _BANDS_UNION = " UNION ALL ".join(
     f"SELECT doc_id, {b} AS band, mh_{2 * b} || mh_{2 * b + 1} AS bucket "
@@ -73,7 +57,7 @@ _BANDS_UNION = " UNION ALL ".join(
     "(d_minhash_lsh_candidates), whose hash DuckDB cannot replay.",
 )
 def d_minhash_lsh_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_md5_slots
+    from ..operators.dedup import banded_self_join_pairs, md5_band_rows, md5_signatures
 
     docs = spread(table(spark, sf_dir, "documents"), min_partitions=8)
 
@@ -81,13 +65,8 @@ def d_minhash_lsh_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from text (value-equal to the interpreted-HOF md5 form the
     # oracle replays — VERDICT r7 #3 killed the
     # 8-interpreted-md5-per-shingle tax).
-    mh8 = minhash_md5_slots(_N_HASHES)
     sig = (
-        docs.select("doc_id", mh8(F.col("text")).alias("__mh"))
-        .select(
-            "doc_id",
-            *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(_N_HASHES)],
-        )
+        md5_signatures(docs, _N_HASHES)
         .filter(F.col("mh_0").isNotNull())
         # both sides of the banded self-join consume sig; without
         # materialization the compiled plan ran the md5-minhash Arrow
@@ -96,19 +75,8 @@ def d_minhash_lsh_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (doc_id + 8 hex slots); released by per-query hygiene.
         .localCheckpoint(eager=False)
     )
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
-                    for b in range(_N_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
     # shared banded self-join; join_hint=None keeps this variant's
     # unhinted plan.
-    from ..operators.dedup import banded_self_join_pairs
-
-    return banded_self_join_pairs(bands, id_col="doc_id", join_hint=None)
+    return banded_self_join_pairs(
+        md5_band_rows(sig, _N_BANDS), id_col="doc_id", join_hint=None
+    )

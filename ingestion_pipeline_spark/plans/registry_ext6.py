@@ -37,15 +37,16 @@ _PAIRS_SQL = f"""
 """
 
 
-@register(
-    "d_dup_clusters",
-    f"""
-    WITH RECURSIVE
-    {_PAIRS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM pairs
+def components_ctes(pairs: str) -> str:
+    """The oracle's connected-components rule over the ``(id_a, id_b)``
+    pair relation ``pairs``: ``edges`` (both directions), the recursive
+    transitive closure ``reach`` and ``comp`` (each node's min-id
+    label) — the twin of ``operators.graph.dup_clusters``. The caller's
+    ``WITH`` must be ``RECURSIVE``."""
+    return f"""edges AS (
+        SELECT id_a AS u, id_b AS v FROM {pairs}
         UNION
-        SELECT id_b AS u, id_a AS v FROM pairs
+        SELECT id_b AS u, id_a AS v FROM {pairs}
     ),
     reach(u, v) AS (
         SELECT u, v FROM edges
@@ -54,7 +55,28 @@ _PAIRS_SQL = f"""
     ),
     comp AS (
         SELECT u, LEAST(u, MIN(v)) AS component FROM reach GROUP BY u
+    )"""
+
+
+def block_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(docs, pairs)``: the documents with their ``source|lang`` block
+    and the ``(id_a, id_b)`` pairs whose exact 3-gram Jaccard within a
+    block reaches 0.12 — the Spark side of ``_PAIRS_SQL``."""
+    docs = table(spark, sf_dir, "documents").withColumn(
+        "block", F.concat_ws("|", F.col("source"), F.col("lang"))
     )
+    pairs = dd.jaccard_pairs(docs, "text", "doc_id", "block", threshold=0.12).select(
+        "id_a", "id_b"
+    )
+    return docs, pairs
+
+
+@register(
+    "d_dup_clusters",
+    f"""
+    WITH RECURSIVE
+    {_PAIRS_SQL},
+    {components_ctes("pairs")}
     SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.u
     """,
@@ -73,12 +95,7 @@ _PAIRS_SQL = f"""
     "pipeline_dedup_survivors corpus.",
 )
 def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").withColumn(
-        "block", F.concat_ws("|", F.col("source"), F.col("lang"))
-    )
-    pairs = dd.jaccard_pairs(docs, "text", "doc_id", "block", threshold=0.12).select(
-        "id_a", "id_b"
-    )
+    docs, pairs = block_pairs(spark, sf_dir)
     return dup_clusters(docs, pairs, "doc_id")
 
 
@@ -87,19 +104,7 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH RECURSIVE
     {_PAIRS_SQL},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM pairs
-        UNION
-        SELECT id_b AS u, id_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u, LEAST(u, MIN(v)) AS component FROM reach GROUP BY u
-    )
+    {components_ctes("pairs")}
     SELECT d.doc_id, d.source, d.lang, d.n_chars
     FROM documents d LEFT JOIN comp c ON d.doc_id = c.u
     WHERE COALESCE(c.component, d.doc_id) = d.doc_id
@@ -111,12 +116,7 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no extra shuffle.",
 )
 def d_keep_one_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").withColumn(
-        "block", F.concat_ws("|", F.col("source"), F.col("lang"))
-    )
-    pairs = dd.jaccard_pairs(docs, "text", "doc_id", "block", threshold=0.12).select(
-        "id_a", "id_b"
-    )
+    docs, pairs = block_pairs(spark, sf_dir)
     assigned = dup_clusters(docs, pairs, "doc_id")
     return (
         docs.join(assigned, "doc_id")

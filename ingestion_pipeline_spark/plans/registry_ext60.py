@@ -107,7 +107,7 @@ def _pca_oracle() -> str:
     "the direction scale to 100 (documented, same code path).",
 )
 def v_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 (guide §2.3/§4.2, the kmeans_fit precedent): each round used
+    # r12 (guide §2.3/§4.2, the kmeans_fixed_point precedent): each round used
     # to run an interpreted 64-element `aggregate` fold PER ROW for u,
     # then posexplode |corpus|×dim (dim, mu) rows through the groupBy
     # exchange. One mapInPandas per round now computes u = M@v and the

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _mh_sql, register
 
 _EG_CAP = 2000    # same loss proxy as d_eg_domain_reweight
 _EG_LEVELS = 8    # tilt exponents 0..7; acceptance denominator 2^7
@@ -141,13 +141,6 @@ def pipeline_mixture_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_accept(docs, mixture_tilts(docs))
 
 
-_SQL_TOKS = SQL_TOKENS.format(col="text")
-_SQL_SHINGLES = f"""
-    list_distinct(CASE WHEN len({_SQL_TOKS}) >= 3 THEN
-        list_transform(range(0, greatest(len({_SQL_TOKS}) - 3, 0) + 1),
-                       i -> array_to_string(list_slice({_SQL_TOKS}, i + 1, i + 3), ' '))
-        ELSE [] END)
-"""
 _N_HASHES = 8
 # every (bands x rows) factorization of the 8-hash signature
 _CONFIGS = [(8, 1), (4, 2), (2, 4), (1, 8)]
@@ -155,13 +148,6 @@ _CONFIGS = [(8, 1), (4, 2), (2, 4), (1, 8)]
 # duplicate-spans hot-cap discipline — C(k,2) of a hot bucket is the
 # quadratic bill the tuning table exists to warn about)
 _HOT_CAP = 50
-
-
-def _mh_sql(i: int) -> str:
-    return (
-        f"list_min(list_transform({_SQL_SHINGLES}, "
-        f"s -> md5(CAST({i} AS VARCHAR) || '|' || s))) AS mh_{i}"
-    )
 
 
 def _band_rows_sql() -> str:
@@ -236,7 +222,7 @@ def _band_rows_sql() -> str:
     "bucket-keyed.",
 )
 def d_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import minhash_md5_slots
+    from ..operators.dedup import md5_signatures
     from ..operators.relational import spread
 
     docs = spread(table(spark, sf_dir, "documents"), min_partitions=8)
@@ -244,15 +230,7 @@ def d_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE Arrow kernel pass for all 8 slots straight from text
     # (value-equal to the HOF md5 form the oracle replays) — VERDICT
     # r7 #3.
-    mh8 = minhash_md5_slots(_N_HASHES)
-    sig = (
-        docs.select("doc_id", mh8(F.col("text")).alias("__mh"))
-        .select(
-            "doc_id",
-            *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(_N_HASHES)],
-        )
-        .filter(F.col("mh_0").isNotNull())
-    )
+    sig = md5_signatures(docs, _N_HASHES).filter(F.col("mh_0").isNotNull())
     band_structs = []
     for nb, r in _CONFIGS:
         for b in range(nb):

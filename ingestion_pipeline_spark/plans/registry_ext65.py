@@ -68,8 +68,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.parquet_tables import table
-from .registry import register
-from .registry_ext48 import _BANDS_UNION, _N_BANDS, _N_HASHES, _mh_sql
+from .registry import _SHINGLES_SQL, _mh_sql, register
+from .registry_ext6 import components_ctes
+from .registry_ext48 import _BANDS_UNION, _N_BANDS, _N_HASHES
 
 _PCTS = (50, 99)
 
@@ -216,6 +217,15 @@ _CAL_MATCH = " + ".join(
 # itself (the window runs over |band rows| = 4n, never over pairs).
 _BUCKET_CAP = 24
 
+# the oracle twin of ``operators.dedup.bucket_ranked``
+_BK_CTE = """bk AS (
+        SELECT doc_id, band, bucket,
+               ROW_NUMBER() OVER (PARTITION BY band, bucket
+                                  ORDER BY doc_id) AS drk,
+               COUNT(*) OVER (PARTITION BY band, bucket) AS k
+        FROM bands
+    )"""
+
 
 @register(
     "d_minhash_jaccard_calibration",
@@ -223,26 +233,11 @@ _BUCKET_CAP = 24
     WITH sig AS (
         SELECT doc_id,
                {', '.join(_mh_sql(i) for i in range(_N_HASHES))},
-               list_distinct(CASE WHEN len(list_filter(
-                   string_split_regex(lower(text), '\\s+'), t -> t <> '')) >= 3
-                 THEN list_transform(
-                     range(0, greatest(len(list_filter(
-                         string_split_regex(lower(text), '\\s+'),
-                         t -> t <> '')) - 3, 0) + 1),
-                     i -> array_to_string(list_slice(list_filter(
-                         string_split_regex(lower(text), '\\s+'),
-                         t -> t <> ''), i + 1, i + 3), ' '))
-                 ELSE [] END) AS sh
+               {_SHINGLES_SQL} AS sh
         FROM documents
     ),
     bands AS ({_BANDS_UNION}),
-    bk AS (
-        SELECT doc_id, band, bucket,
-               ROW_NUMBER() OVER (PARTITION BY band, bucket
-                                  ORDER BY doc_id) AS drk,
-               COUNT(*) OVER (PARTITION BY band, bucket) AS k
-        FROM bands
-    ),
+    {_BK_CTE},
     census AS (
         SELECT CAST(COALESCE(SUM(k * (k - 1) // 2), 0) AS BIGINT)
                    AS n_bucket_slots,
@@ -293,7 +288,7 @@ _BUCKET_CAP = 24
     "verifies the bounded sample only).",
 )
 def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import jaccard3_bp, minhash_md5_slots
+    from ..operators.dedup import bucket_ranked, jaccard3_bp, md5_band_rows, md5_signatures
     from ..operators.relational import spread
 
     docs = spread(table(spark, sf_dir, "documents"), min_partitions=8)
@@ -304,39 +299,12 @@ def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     # the parquet (shingle ARRAYS are never materialized — the exact
     # Jaccard runs as a text kernel). All 8 md5 slots come from ONE
     # Arrow kernel pass straight off the text column (VERDICT r7 #3).
-    mh8 = minhash_md5_slots(_N_HASHES)
     sig = (
-        docs.select("doc_id", "text", mh8(F.col("text")).alias("__mh"))
-        .select(
-            "doc_id",
-            "text",
-            *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(_N_HASHES)],
-        )
+        md5_signatures(docs, _N_HASHES, carry=("text",))
         .filter(F.col("mh_0").isNotNull())
         .persist()
     )
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
-                    for b in range(_N_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # per-bucket doc rank + bucket size: two windows over ONE
-    # (band, bucket) exchange of |band rows| = 4n skinny rows — the
-    # pair stream never feeds a window
-    wb = Window.partitionBy("band", "bucket")
-    bk = bands.select(
-        "doc_id",
-        "band",
-        "bucket",
-        F.row_number().over(wb.orderBy("doc_id")).alias("drk"),
-        F.count("*").over(wb).alias("k"),
-    ).persist()
+    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).persist()
     census = bk.filter(F.col("drk") == 1).agg(
         F.coalesce(F.sum(F.expr("k * (k - 1) div 2")), F.lit(0))
         .cast("long")
@@ -482,7 +450,7 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     blocks accumulate.
     """
     from ..functions.text import content_md5
-    from ..operators.dedup import jaccard3_bp, minhash_md5_slots
+    from ..operators.dedup import bucket_ranked, jaccard3_bp, md5_band_rows, md5_signatures
     from ..operators.relational import spread
 
     docs = table(spark, sf_dir, "documents")
@@ -524,41 +492,19 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # signatures via ONE Arrow kernel pass off the text column
     # (VERDICT r7 #3); text rides the same persist so the verify stage
     # reads it column-pruned from the cache — no shingle arrays
-    mh8 = minhash_md5_slots(_N_HASHES)
     sig = (
-        spread(d1.select("doc_id", "text"), min_partitions=8)
-        .select("doc_id", "text", mh8(F.col("text")).alias("__mh"))
-        .select(
-            "doc_id",
-            "text",
-            *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(_N_HASHES)],
+        md5_signatures(
+            spread(d1.select("doc_id", "text"), min_partitions=8),
+            _N_HASHES,
+            carry=("text",),
         )
         .filter(F.col("mh_0").isNotNull())
         .persist()
     )
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat(F.col(f"mh_{2 * b}"), F.col(f"mh_{2 * b + 1}"))
-                    for b in range(_N_BANDS)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # per-bucket doc rank + bucket size: two windows over ONE
-    # (band, bucket) exchange of |band rows| = 4n skinny rows (the
-    # calibration's discipline) — persisted because the guarded left
-    # side, the unguarded right side and the guard census all read it
-    wb = Window.partitionBy("band", "bucket")
-    bk = bands.select(
-        "doc_id",
-        "band",
-        "bucket",
-        F.row_number().over(wb.orderBy("doc_id")).alias("drk"),
-        F.count("*").over(wb).alias("k"),
-    ).persist()
+    # per-bucket doc rank + bucket size, persisted because the guarded
+    # left side, the unguarded right side and the guard census all
+    # read it
+    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).persist()
     guarded = bk.filter(F.col("drk") == 1).agg(
         F.coalesce(
             F.sum(F.when(F.col("k") > _ENUM_CAP, 1).otherwise(0)), F.lit(0)
@@ -677,26 +623,11 @@ _CASCADE_SQL_CTES = f"""
     d1 AS (SELECT d.* FROM documents d JOIN s1 USING (doc_id)),
     sig AS (
         SELECT doc_id, {', '.join(_mh_sql(i) for i in range(_N_HASHES))},
-               list_distinct(CASE WHEN len(list_filter(
-                   string_split_regex(lower(text), '\\s+'), t -> t <> '')) >= 3
-                 THEN list_transform(
-                     range(0, greatest(len(list_filter(
-                         string_split_regex(lower(text), '\\s+'),
-                         t -> t <> '')) - 3, 0) + 1),
-                     i -> array_to_string(list_slice(list_filter(
-                         string_split_regex(lower(text), '\\s+'),
-                         t -> t <> ''), i + 1, i + 3), ' '))
-                 ELSE [] END) AS sh
+               {_SHINGLES_SQL} AS sh
         FROM d1
     ),
     bands AS ({_BANDS_UNION}),
-    bk AS (
-        SELECT doc_id, band, bucket,
-               ROW_NUMBER() OVER (PARTITION BY band, bucket
-                                  ORDER BY doc_id) AS drk,
-               COUNT(*) OVER (PARTITION BY band, bucket) AS k
-        FROM bands
-    ),
+    {_BK_CTE},
     gb AS (
         SELECT CAST(COALESCE(SUM(CASE WHEN k > {_ENUM_CAP}
                                       THEN 1 ELSE 0 END), 0) AS BIGINT)
@@ -882,19 +813,7 @@ _EXC_CTE = f"""exc AS (
 # tests/test_ext66.py::test_edge_cte_composition_stable).
 _EDGE_COMP_CTES = f"""
     {_ED_CTE},
-    edges AS (
-        SELECT id_a AS u, id_b AS v FROM ed
-        UNION
-        SELECT id_b AS u, id_a AS v FROM ed
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
-    comp AS (
-        SELECT u, LEAST(u, MIN(v)) AS component FROM reach GROUP BY u
-    ),
+    {components_ctes("ed")},
     {_EXC_CTE}
 """
 

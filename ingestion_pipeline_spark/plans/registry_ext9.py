@@ -11,7 +11,10 @@ is what gets verified, not a lucky approximation.
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -19,6 +22,11 @@ from pyspark.sql.window import Window
 from ..functions.exact import dec
 from ..sources.parquet_tables import table
 from .registry import register
+
+# applyInPandas ships ``_top3_pandas`` to Python workers: pickle this
+# module's functions by value (as functions/text.py does), so a worker
+# never has to import the package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 @register(

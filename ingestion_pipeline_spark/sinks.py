@@ -81,9 +81,22 @@ def _table_exists(spark, path: str) -> bool:
     transient IO error or schema mismatch swallowed as "first write"
     would let the upserts' overwrite replace the table with batch-only
     rows — silent data loss for pre-existing keys. Real read errors
-    propagate."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+    propagate.
+
+    The probe needs the session's JVM handles: without them (Spark
+    Connect, a stopped context) it raises ``RuntimeError`` rather than
+    report the table absent, which would let an overwrite replace it."""
+    try:
+        jvm, jsc = spark._jvm, spark._jsc
+    except (AttributeError, NotImplementedError):
+        jvm = jsc = None
+    if jvm is None or jsc is None:
+        raise RuntimeError(
+            f"cannot probe whether {path!r} exists: the session has no "
+            "JVM handle"
+        )
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(jsc.hadoopConfiguration()).exists(jpath)
 
 
 def _keep_latest(merged: DataFrame, key: str, version_col: str) -> DataFrame:

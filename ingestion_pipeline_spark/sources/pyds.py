@@ -19,14 +19,21 @@ base_severity string, cwe_id string.
 
 from __future__ import annotations
 
+import sys
 from typing import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
     SimpleDataSourceStreamReader,
 )
+
+# Spark pickles the data source class and its readers into Python
+# workers: ship this module by value (as functions/text.py does), so a
+# worker never has to import the package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def fake_nvd_records(year: int, per_year: int) -> Iterator[tuple]:

@@ -7,6 +7,5 @@ from .idle_stop import IdleStopListener, run_until_idle  # noqa: F401
 from .windows import (  # noqa: F401
     session_window_rollup,
     stateful_user_totals,
-    stateful_user_totals_tws,
     windowed_event_counts,
 )

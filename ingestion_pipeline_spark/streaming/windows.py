@@ -127,54 +127,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The same running per-user (count, total) operator on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` with named state variables (value/list/
-    map), per-state TTLs, and timers. Kept semantics-identical to
-    ``stateful_user_totals`` (the equivalence is asserted in tests) so
-    either API can back the custom-stateful extension point; new
-    stateful operators should prefer this one, since RocksDB state
-    stores and state-v2 metadata only track the new API's variables.
-
-    Sandbox note: the API's Python<->JVM state server requires
-    ``protobuf``, absent in this container — the execution test skips
-    there (plan construction is still asserted); on a real cluster it
-    runs as-is."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n LONG, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserTotals(),
-        outputStructType=USER_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 EWMA_OUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),

@@ -14,6 +14,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ingestion_pipeline_spark.plans import plan_text
 from ingestion_pipeline_spark.sources import formats as fmt
 
 
@@ -89,7 +90,7 @@ def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
     back = fmt.read_orc(spark, path)
     assert _rows(back, src.columns) == _rows(src, src.columns)
     # the columnar contract: filters reach the ORC scan node
-    plan = back.filter(F.col("o_orderkey") == 42).select("o_orderkey")._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(back.filter(F.col("o_orderkey") == 42).select("o_orderkey"))
     assert "PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey,42)]" in plan or "o_orderkey" in plan
 
 

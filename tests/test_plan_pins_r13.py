@@ -11,11 +11,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ingestion_pipeline_spark.plans import plan_text
+
 SF = "/root/testdata/sf0.001"
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_probe_cosine_single_arrow_pass_with_pushed_filters(spark):
@@ -25,7 +23,7 @@ def test_probe_cosine_single_arrow_pass_with_pushed_filters(spark):
     from ingestion_pipeline_spark.plans import query_map
 
     for name in ("v_cosine_top8", "v_threshold_search"):
-        plan = _plan(query_map()[name](spark, SF))
+        plan = plan_text(query_map()[name](spark, SF))
         assert plan.count("ArrowEvalPython") == 1, (name, plan)
         assert "PushedFilters: [" in plan, name
         spark.catalog.clearCache()
@@ -44,7 +42,7 @@ def test_cascade_docs_join_stays_broadcast(spark):
 
     frames = cascade_frames(spark, SF)
     try:
-        plan = _plan(frames["survivors"])
+        plan = plan_text(frames["survivors"])
         # the docs⋈s1 join (Inner on doc_id both sides) must be a
         # broadcast; the r12 demotion turned exactly this join into a
         # sort-merge of the full text corpus. (Other SMJs — the
@@ -71,7 +69,7 @@ def test_minhash_lsh_kernel_runs_once(spark):
     from ingestion_pipeline_spark.plans import query_map
 
     for name in ("d_minhash_lsh_candidates", "d_minhash_lsh_md5_pairs"):
-        plan = _plan(query_map()[name](spark, SF))
+        plan = plan_text(query_map()[name](spark, SF))
         for node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
             assert node not in plan, (name, node)
         assert "Scan parquet" not in plan, name
@@ -103,7 +101,7 @@ def test_multimodal_arrow_transfer_ships_only_needed_columns(media):
         "average_hash32": mm.average_hash32(media),
     }
     for name, df in cases.items():
-        plan = _plan(df)
+        plan = plan_text(df)
         mip = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
         assert mip, name
         # the Arrow transfer list is the run(...) argument list; the

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from ingestion_pipeline_spark.plans import plan_text, query_map, run_each
+from ingestion_pipeline_spark.plans import plan_text, query_map, release_caches, run_each
 
 # name -> max Exchange nodes in the executed plan at sf0.001.
 # Each entry is a design claim from SCALE.md / the query docstring.
@@ -111,9 +111,12 @@ def test_unpartitioned_window_detector(spark):
 
 @pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGETS))
 def test_exchange_budget(spark, sf_dir, name):
-    df = query_map()[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange")
+    # release this case's cached frames so they cannot enter a later
+    # case's plan
+    try:
+        n = plan_text(query_map()[name](spark, sf_dir)).count("Exchange")
+    finally:
+        release_caches(spark)
     assert n <= EXCHANGE_BUDGETS[name], (
         f"{name}: {n} Exchange nodes > budget {EXCHANGE_BUDGETS[name]} — "
         "a shuffle regression; diff .explain('formatted') against the "

@@ -10,6 +10,7 @@ from ingestion_pipeline_spark.operators.quality import (
     expectation_report,
     split_by_expectations,
 )
+from ingestion_pipeline_spark.plans import plan_text
 
 ROWS = [
     (1, 100.0, "O"),
@@ -67,7 +68,7 @@ def test_report_single_scan(df):
     # plan at most once (it may not appear at all: the checkpoint
     # truncates lineage, so the upstream scan runs exactly once at
     # materialization time)
-    plan = expectation_report(df, RULES())._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(expectation_report(df, RULES()))
     n_branches = plan.count("Scan ExistingRDD")
     n_input_scans = plan.count("Scan ") - n_branches
     assert n_input_scans <= 1, plan

@@ -8,12 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ingestion_pipeline_spark.plans import plan_text
 from ingestion_pipeline_spark.sinks import write_bucketed
 from ingestion_pipeline_spark.sources.parquet_tables import table
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
@@ -29,7 +26,7 @@ def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
-        plan = _executed_plan(joined)
+        plan = plan_text(joined)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -47,7 +44,7 @@ def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
     assert joined.count() == expected
 
     # groupBy on the bucket key also rides the existing distribution.
-    agg_plan = _executed_plan(bl.groupBy("l_orderkey").agg(F.sum("l_quantity")))
+    agg_plan = plan_text(bl.groupBy("l_orderkey").agg(F.sum("l_quantity")))
     assert "Exchange" not in agg_plan, agg_plan
 
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
@@ -57,7 +54,7 @@ def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
 def test_broadcast_join_has_no_shuffle_of_fact_side(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     supp = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    plan = _executed_plan(
+    plan = plan_text(
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
     )
     assert "BroadcastHashJoin" in plan
@@ -76,7 +73,7 @@ def test_identical_subplans_reuse_one_exchange(spark, sf_dir):
         per_cust.alias("b"), F.col("a.o_custkey") == F.col("b.o_custkey")
     )
     joined.collect()  # AQE finalizes reuse only once THIS plan has executed
-    plan = _executed_plan(joined)
+    plan = plan_text(joined)
     assert "ReusedExchange" in plan or plan.count("Exchange hashpartitioning") == 1, plan
 
 

@@ -9,6 +9,7 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from ingestion_pipeline_spark.plans import plan_text
 from ingestion_pipeline_spark.sinks import append_parquet, warehouse_append
 
 
@@ -31,7 +32,7 @@ def test_warehouse_partitioned_by_month_and_prunes(spark, tmp_path):
     assert "pub_month" in back.columns
 
     pruned = back.filter(F.col("pub_month") == "2024-03")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(pruned)
     assert "PartitionFilters" in plan
     assert "pub_month" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
     assert pruned.count() == 10
@@ -107,6 +108,33 @@ def test_warehouse_upsert_unreadable_delta_raises_and_keeps_table(spark, tmp_pat
         warehouse_upsert(spark, delta, path)
     back = sorted(r["cve_id"] for r in spark.read.parquet(path).collect())
     assert back == ["CVE-1", "CVE-2"]
+
+
+class _NoHandleSession:
+    """A session without JVM handles, as under Spark Connect."""
+
+
+class _StoppedSession:
+    """A session whose JVM handles are gone, as after ``stop()``."""
+
+    _jvm = None
+    _jsc = None
+
+
+def test_table_exists_without_jvm_handle_raises(tmp_path):
+    """The existence probe behind every overwrite (upserts, the CMS
+    streaming writer) must refuse, naming the path, when it cannot
+    reach the Hadoop FS — never answer "absent", which would let the
+    overwrite replace an existing table."""
+    import pytest
+
+    from ingestion_pipeline_spark.sinks import _table_exists
+
+    path = str(tmp_path / "existing")
+    (tmp_path / "existing").mkdir()
+    for stub in (_NoHandleSession(), _StoppedSession()):
+        with pytest.raises(RuntimeError, match="existing"):
+            _table_exists(stub, path)
 
 
 def test_jdbc_sink_roundtrip_derby(spark, tmp_path):
@@ -191,7 +219,7 @@ def test_partitioned_write_prunes_on_date_filter(spark, sf_dir, tmp_path):
     # NOT PushedFilters (row-level evaluation) — the scan never plans
     # the other months' files. (inputFiles() reflects the unpruned
     # FileIndex, so the plan string is the right witness.)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = plan_text(pruned)
     scan_line = next(ln for ln in plan.splitlines() if "FileScan" in ln)
     assert "PartitionFilters: [" in scan_line
     pf = scan_line.split("PartitionFilters: [", 1)[1]

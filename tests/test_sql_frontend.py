@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from ingestion_pipeline_spark.plans import oracle_sql_map, query_map
+from ingestion_pipeline_spark.plans import oracle_sql_map, plan_text, query_map
 from ingestion_pipeline_spark.sources.parquet_tables import register_views
 
 # Oracle strings that are pure ANSI (no DuckDB list/lambda/'//' dialect):
@@ -76,9 +76,8 @@ def test_sql_function_registry_matches_column_library(spark, sf_dir):
     assert _norm(via_sql) == _norm(via_df)
     # the SQL scalar UDFs inline: no BatchEvalPython/ArrowEvalPython for
     # the expression-backed columns alone
-    plan = (
+    plan = plan_text(
         spark.sql("SELECT redact_pii(text) r, token_count(text) n FROM documents")
-        ._jdf.queryExecution().executedPlan().toString()
     )
     assert "EvalPython" not in plan
 

@@ -155,39 +155,6 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
     assert emitted[10] == (1, 1.0)
 
 
-def test_transform_with_state_matches_applyinpandas(spark, tmp_path):
-    """The transformWithStateInPandas successor API must produce the
-    same final per-user totals as the applyInPandasWithState operator,
-    with state carried across micro-batches either way. The API's
-    Python<->JVM state server speaks protobuf, which this sandbox
-    doesn't ship — skip (not fail) there; the operator itself builds
-    against the documented API either way (see
-    test_transform_with_state_operator_builds)."""
-    pytest.importorskip("google.protobuf")
-    from ingestion_pipeline_spark.streaming import stateful_user_totals_tws
-
-    src = tmp_path / "ev_tws"
-    src.mkdir()
-    for r in ROWS:
-        rec = dict(zip(["event_id", "ts", "user_id", "event_type", "value"], r))
-        (src / f"e{r[0]}.json").write_text(json.dumps(rec))
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 2)  # force multiple micro-batches
-        .json(str(src))
-    )
-    _drain(stateful_user_totals_tws(stream), "user_totals_tws", "update")
-    final = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql(
-            "SELECT * FROM (SELECT *, row_number() OVER "
-            "(PARTITION BY user_id ORDER BY n_events DESC) rn FROM user_totals_tws) WHERE rn = 1"
-        ).collect()
-    }
-    assert final[1] == (3, 6.0)
-    assert final[2] == (2, 9.0)
-
-
 def test_watermark_sized_from_lateness_profile(spark, sf_dir, tmp_path):
     """Close the watermark loop (the w_watermark_lateness_profile
     query's whole point): the lateness profile measured in BATCH sizes
@@ -328,22 +295,3 @@ def test_watermark_sized_from_lateness_profile(spark, sf_dir, tmp_path):
     # nothing can drop — the in-order case of the same loop
     chunks = [rows[i : i + size] for i in range(0, len(rows), size)]
     assert predict_drops(max(1, math.ceil(fixture_p95_us / 1e6))) == 0
-
-
-def test_transform_with_state_operator_builds(spark, tmp_path):
-    """Sandbox-safe assertion for the transformWithState surface: the
-    operator must construct its streaming plan (API names, output
-    schema, grouping) without executing — execution needs protobuf
-    (see skip above)."""
-    src = tmp_path / "ev_tws_build"
-    src.mkdir()
-    (src / "e1.json").write_text(
-        json.dumps({"event_id": 1, "ts": "2024-03-01T10:00:00", "user_id": 1,
-                    "event_type": "click", "value": 1.0}))
-    from ingestion_pipeline_spark.streaming import stateful_user_totals_tws
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
-    df = stateful_user_totals_tws(stream)
-    assert df.isStreaming
-    assert df.columns == ["user_id", "n_events", "total_value"]
-    assert "TransformWithStateInPySpark" in df._jdf.queryExecution().logical().toString()
