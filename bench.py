@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -134,6 +135,17 @@ def _env_probe(spark, n_runs: int = 3) -> float:
         )
         best = min(best, time.perf_counter() - t0)
     return round(best, 3)
+
+
+def _sf_of(sf_dir: str) -> float:
+    """Scale factor named by the fixture dir's basename (``sf0.1`` →
+    0.1). A replica dir (``.scale/sf1x``, ``sf100x-work``) names no
+    number: -1.0, noted on stderr."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)$", os.path.basename(sf_dir.rstrip("/")))
+    if m:
+        return float(m.group(1))
+    print(f"# no scale factor in {sf_dir!r}: recording sf -1.0", file=sys.stderr)
+    return -1.0
 
 
 def _probe_normalizer(
@@ -278,7 +290,7 @@ def main() -> None:
     from ingestion_pipeline_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = _sf_of(sf_dir)
 
     spark = get_spark("bench")
 

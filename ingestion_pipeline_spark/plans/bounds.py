@@ -1,12 +1,11 @@
-"""Bound-based oracles for the rows-only queries (VERDICT r6 #3).
+"""Non-SQL oracles for the five queries DuckDB cannot value-gate
+(VERDICT r6 #3).
 
-Five registry entries have no DuckDB-expressible value oracle — their
-output embeds engine-internal bytes (HLL sketches), engine-specific
-hashes (xxhash64 signatures), or a codec DuckDB lacks (zlib).  Hash
-gating stays off for them, but "runs and returns rows" is a weak gate:
-this module gives each one a MATHEMATICAL bound the differential can
-enforce, computed from the exact answer DuckDB (or stdlib Python)
-produces on the same parquet:
+Their output embeds engine-internal bytes (HLL sketches), an engine
+hash (Spark's xxhash64), or a codec DuckDB lacks (zlib), so the
+differential cannot hash-compare them against oracle SQL. Each gets a
+check here against the answer DuckDB, stdlib or plain Python computes
+on the same parquet. Three are bound gates:
 
 - ``g_sketch_aggregates``: exact-count equality, HLL estimate within
   its analytic ±3·rsd band, approx-percentiles within the documented
@@ -15,32 +14,36 @@ produces on the same parquet:
   within ±3·(1.04/√2^lgK) of the exact distinct count per group.
 - ``tx_compression_ratio``: EXACT per-document equality against
   stdlib zlib at the same level (the oracle engine just isn't SQL).
-- ``d_minhash_lsh_candidates``: key-domain validity (pairs ⊆ doc ids,
-  id_a < id_b, no duplicates), guaranteed recall (identical-text
-  pairs MUST be candidates: identical text → identical signature →
-  every band collides), and the matched-banding precision companion
-  (VERDICT r7 #6): a 32-hash/16-band md5 reference set bounds the
-  xxhash64 set's size (≤3× + 50 each direction) and both sets must
-  agree on every pair with exact 3-gram Jaccard ≥ 0.9.
-- ``d_simhash_fingerprints``: doc_id set equality, well-formed 64-bit
-  strings, and within-identical-text signature equality (simhash is a
-  pure function of the tokenized text).
+
+Two are exact Python oracles, built from one recompute
+(``near_dup_recompute``) over a pure-Python XXH64 port (``xxh64``)
+that matches Spark's ``xxhash64`` bit for bit:
+
+- ``d_minhash_lsh_candidates``: the candidate pair set, exactly.
+- ``d_simhash_fingerprints``: every document's simhash, exactly.
 
 Each check returns a list of violation strings (empty = pass); the
 checker prints ``PASS``/``FAIL`` accordingly, marked ``bounds`` so a
-reader can tell a bound gate from a value-hash gate.
+reader can tell these gates from a value-hash gate.
 """
 
 from __future__ import annotations
 
 import math
+import re
+import struct
 import zlib
+from itertools import combinations
 
-__all__ = ["BOUND_CHECKS"]
+__all__ = ["BOUND_CHECKS", "near_dup_recompute", "xxh64"]
 
 
 def _rows_by(srows, key):
     return {r[key]: r for r in srows}
+
+
+def _texts(con) -> dict:
+    return dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
 
 
 def check_sketch_aggregates(con, srows) -> list[str]:
@@ -109,7 +112,7 @@ def check_compression_ratio(con, srows) -> list[str]:
     """Exact per-document parity with stdlib zlib level 6 (same codec
     the pandas UDF calls); flag column must equal the threshold test."""
     viol: list[str] = []
-    texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
+    texts = _texts(con)
     if set(r["doc_id"] for r in srows) != set(texts):
         return ["doc_id set mismatch vs documents"]
     for r in srows:
@@ -140,180 +143,140 @@ def check_compression_ratio(con, srows) -> list[str]:
     return viol
 
 
-def check_minhash_candidates(con, srows) -> list[str]:
-    """Domain validity + guaranteed recall on identical-text pairs
-    (identical text → identical signature → all 16 bands collide),
-    plus the matched-banding precision companion (VERDICT r7 #6): a
-    32-hash / 16-band×2 candidate set built from the PORTABLE md5
-    family — the same (bands, rows) geometry as the xxhash64
-    production query — bounds the result two ways:
+# ---- exact recompute of the two xxhash64 near-dup queries ------------
+# DuckDB cannot replay Spark's xxhash64, so the recompute is plain
+# Python: an XXH64 port, then the same shingles, splitmix64 MinHash,
+# band fold, pair rule and SimHash votes as operators/dedup.py. This
+# module imports nothing from the engine, so the check stays independent
+# of the code it gates.
 
-    - size-ratio band (each set ≤ 3× the other + 50): catches a
-      catastrophic precision failure (a banding bug emitting an
-      order of magnitude more/fewer pairs than an independent hash
-      family at identical geometry produces on the same corpus);
-    - high-J core agreement: every pair in EITHER set whose exact
-      3-gram Jaccard is ≥ 0.9 must be in BOTH (at J ≥ 0.9 the
-      per-band collision probability gives a miss chance of
-      ~(1-s²)^16 ≈ 2e-8 per family, s = J/(2-J) — deterministic for
-      bound purposes).
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+_GOLDEN = 0x9E3779B97F4A7C15
+_N_HASHES, _N_BANDS = 32, 16  # minhash_lsh_candidates' defaults
+# Java \s parity; RE2 lacks \v — see functions/text.py _WS (ADVICE r9)
+_WS = re.compile(r"\s+", re.ASCII)
 
-    A raw symmetric-difference ceiling over the FULL sets would be
-    vacuous: different hash families sample the mid/low-J collision
-    tail independently (measured at sf0.1: 268 shared of 2119 xx /
-    2515 md5 pairs — the disagreement IS the tail, the agreement is
-    the high-J core), so the bound targets the core where theory
-    guarantees agreement and the aggregate size where any real
-    defect would show."""
-    viol: list[str] = []
-    ids = {r[0] for r in con.execute("SELECT doc_id FROM documents").fetchall()}
-    pairs = set()
-    for r in srows:
-        a, b = r["id_a"], r["id_b"]
-        if not (a in ids and b in ids):
-            viol.append(f"pair ({a},{b}) outside doc_id domain")
-        if not a < b:
-            viol.append(f"pair ({a},{b}) violates id_a < id_b")
-        if (a, b) in pairs:
-            viol.append(f"duplicate pair ({a},{b})")
-        pairs.add((a, b))
-        if len(viol) >= 3:
-            return viol
-    must = con.execute(
-        "SELECT a.doc_id, b.doc_id FROM documents a JOIN documents b"
-        " ON a.text = b.text AND a.doc_id < b.doc_id"
-    ).fetchall()
-    missing = [p for p in must if tuple(p) not in pairs]
-    if missing:
-        viol.append(
-            f"{len(missing)} identical-text pairs NOT candidates "
-            f"(recall bound), e.g. {missing[:3]}"
-        )
-    if viol:
-        # domain/recall already broken — skip the (expensive)
-        # precision leg; its pair arithmetic assumes valid ids
-        return viol
-    # --- matched-banding md5 reference set (precision companion) ---
-    from .registry import _SHINGLES_SQL
 
-    mh = ", ".join(
-        f"list_min(list_transform(sh, s -> md5(CAST({i} AS VARCHAR)"
-        f" || '|' || s))) AS mh_{i}"
-        for i in range(32)
-    )
-    band_union = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, mh_{2 * b} || mh_{2 * b + 1} AS bucket"
-        " FROM sig WHERE mh_0 IS NOT NULL"
-        for b in range(16)
-    )
-    ref = set(
-        map(
-            tuple,
-            con.execute(
-                f"""
-                WITH base AS (SELECT doc_id, {_SHINGLES_SQL} AS sh
-                              FROM documents),
-                sig AS (SELECT doc_id, {mh} FROM base),
-                bands AS ({band_union})
-                SELECT DISTINCT a.doc_id, b.doc_id FROM bands a
-                JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-                            AND a.doc_id < b.doc_id
-                """
-            ).fetchall(),
-        )
-    )
-    import re
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
 
-    texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
-    # Java \s parity; RE2 lacks \v — see functions/text.py _WS (ADVICE r9)
-    ws = re.compile(r"\s+", re.ASCII)
-    gcache: dict[int, frozenset] = {}
 
-    def grams(d):
-        g = gcache.get(d)
-        if g is None:
-            toks = [w for w in ws.split((texts[d] or "").lower()) if w]
-            g = (
-                frozenset(
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                )
-                if len(toks) >= 3
-                else frozenset()
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (the public xxHash spec) as an unsigned 64-bit
+    int. Spark's ``xxhash64(c1, c2, …)`` chains it: seed 42, then each
+    column's bytes (strings as UTF-8, ints as 4 and longs as 8
+    little-endian bytes) hashed with the previous result as seed."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(a, x) for a, x in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = (struct.unpack_from("<I", data, i)[0] * _P1) & _M64
+        h = (_rotl(h ^ lane, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = (_rotl(h ^ ((b * _P5) & _M64), 11) * _P1) & _M64
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    return h ^ (h >> 32)
+
+
+def _splitmix(x: int) -> int:
+    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
+    return x ^ (x >> 31)
+
+
+def _shingle_hashes(s: str) -> tuple[int, int]:
+    """(``hashed_shingles``' hash, ``simhash64``'s hash) of one shingle.
+    ``F.xxhash64(s, F.lit(42))`` is the chained form, not a seed: it
+    hashes ``s`` with the default seed 42, then the IntegerType 42."""
+    plain = xxh64(s.encode("utf-8"), 42)
+    return xxh64(struct.pack("<i", 42), plain), plain
+
+
+def near_dup_recompute(texts: dict) -> tuple[dict, set, dict]:
+    """Exact outputs of the two xxhash64 queries from ``{doc_id: text}``:
+    ``(buckets, pairs, simhashes)``. ``buckets[(doc, band)]`` is
+    ``minhash_bands``' bucket (unsigned), ``pairs`` the
+    ``d_minhash_lsh_candidates`` set, ``simhashes[doc]`` the
+    ``d_simhash_fingerprints`` bit string (bit 0 first)."""
+    seeds = [((i + 1) * _GOLDEN) & _M64 for i in range(_N_HASHES)]
+    rows = _N_HASHES // _N_BANDS
+    hashes: dict[str, tuple[int, int]] = {}
+    buckets, sims = {}, {}
+    for doc, text in texts.items():
+        toks = [w for w in _WS.split((text or "").lower()) if w]
+        grams = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        hs = [hashes.get(s) or hashes.setdefault(s, _shingle_hashes(s)) for s in grams]
+        # a doc with no shingles gets all-zero mins (all such docs collide)
+        mins = [min((_splitmix(h ^ seed) for h, _ in hs), default=0) for seed in seeds]
+        for b in range(_N_BANDS):
+            acc = _GOLDEN
+            for m in mins[b * rows : (b + 1) * rows]:
+                acc = _splitmix(acc ^ m)
+            buckets[(doc, b)] = acc
+        ones = [0] * 64
+        for _, h in hs:
+            for b in range(64):
+                ones[b] += (h >> b) & 1
+        # vote +1 per set bit, -1 per clear bit; bit is 1 when votes >= 0
+        sims[doc] = "".join("1" if 2 * c >= len(hs) else "0" for c in ones)
+    members: dict[tuple[int, int], list] = {}
+    for (doc, b), bucket in buckets.items():
+        members.setdefault((b, bucket), []).append(doc)
+    pairs = {p for docs in members.values() for p in combinations(sorted(docs), 2)}
+    return buckets, pairs, sims
+
+
+def _exact(what: str, got: list, want: set) -> list[str]:
+    """Violations of ``got`` (the query's rows as tuples) == ``want``
+    with no duplicate rows."""
+    seen = set(got)
+    viol = []
+    if len(seen) != len(got):
+        viol.append(f"{len(got) - len(seen)} duplicate {what} rows")
+    for label, diff in (("missing", want - seen), ("unexpected", seen - want)):
+        if diff:
+            viol.append(
+                f"{len(diff)} {label} {what} rows, e.g. {sorted(diff, key=str)[:3]}"
             )
-            gcache[d] = g
-        return g
-
-    # Domain alignment (ADVICE r8, medium): the production xxhash64
-    # path gives signature-less (<3-token) docs an ALL-ZERO signature,
-    # so every pair of short docs collides in every band, while the md5
-    # reference EXCLUDES those docs (WHERE mh_0 IS NOT NULL). With k
-    # short docs the xx set carries C(k,2) pairs the reference can
-    # never contain — drop both-short pairs before the size comparison
-    # so the two sets cover the same doc domain. One-short pairs can't
-    # arise — an all-zero bucket never matches a real digest bucket —
-    # but that premise leans on the xxhash path's short-doc criterion
-    # staying the \s-ASCII 3-token rule grams() uses, so ASSERT it
-    # instead of assuming it (ADVICE r9): any one-short pair means the
-    # two criteria drifted and the domain alignment is silently wrong.
-    one_short = [
-        p for p in pairs if bool(grams(p[0])) != bool(grams(p[1]))
-    ]
-    if one_short:
-        viol.append(
-            f"{len(one_short)} one-short candidate pairs (an all-zero "
-            f"signature bucket matched a real digest bucket — the "
-            f"short-doc criteria of the xxhash path and grams() have "
-            f"drifted), e.g. {one_short[:3]}"
-        )
-    pairs_cmp = {
-        p for p in pairs if grams(p[0]) or grams(p[1])
-    }
-    nx, nm = len(pairs_cmp), len(ref)
-    if nx > 3 * nm + 50 or nm > 3 * nx + 50:
-        viol.append(
-            f"candidate-set size out of band vs matched-banding md5 "
-            f"reference: xx={nx} (short-doc pairs excluded) md5={nm} "
-            f"(ceiling 3x + 50)"
-        )
-    # high-J core: exact 3-gram Jaccard over the union of both sets
-    core_missing = []
-    for p in pairs | ref:
-        ga, gb = grams(p[0]), grams(p[1])
-        inter = len(ga & gb)
-        un = len(ga) + len(gb) - inter
-        if un and inter * 10 >= un * 9 and (p not in pairs or p not in ref):
-            core_missing.append(p)
-    if core_missing:
-        viol.append(
-            f"{len(core_missing)} J>=0.9 pairs present in only one of "
-            f"xx/md5 matched-banding sets, e.g. {core_missing[:3]}"
-        )
     return viol
+
+
+def check_minhash_candidates(con, srows) -> list[str]:
+    """The candidate pairs equal the Python recompute exactly."""
+    _, pairs, _ = near_dup_recompute(_texts(con))
+    return _exact("pair", [(r["id_a"], r["id_b"]) for r in srows], pairs)
 
 
 def check_simhash_fingerprints(con, srows) -> list[str]:
-    """doc_id set equality, 64-bit-string well-formedness, and equal
-    signatures within identical-text groups (simhash is deterministic
-    in the text)."""
-    viol: list[str] = []
-    texts = dict(con.execute("SELECT doc_id, text FROM documents").fetchall())
-    got = {r["doc_id"]: r["simhash"] for r in srows}
-    if set(got) != set(texts) or len(srows) != len(texts):
-        return ["doc_id set mismatch vs documents"]
-    by_text: dict[str, set[str]] = {}
-    for did, sh in got.items():
-        if len(sh) != 64 or set(sh) - {"0", "1"}:
-            viol.append(f"doc {did}: malformed simhash {sh[:16]}…")
-            if len(viol) >= 3:
-                return viol
-        by_text.setdefault(texts[did], set()).add(sh)
-    clashes = [t[:40] for t, shs in by_text.items() if len(shs) > 1]
-    if clashes:
-        viol.append(
-            f"{len(clashes)} identical-text groups with differing "
-            f"simhashes, e.g. {clashes[:2]}"
-        )
-    return viol
+    """Every doc's simhash equals the Python recompute exactly."""
+    _, _, sims = near_dup_recompute(_texts(con))
+    got = [(r["doc_id"], r["simhash"]) for r in srows]
+    return _exact("simhash", got, set(sims.items()))
 
 
 BOUND_CHECKS = {

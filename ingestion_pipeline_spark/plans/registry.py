@@ -1094,9 +1094,9 @@ def d_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d_minhash_lsh_candidates",
-    None,  # xxhash64 has no DuckDB equivalent — rows-only check
+    None,  # xxhash64: no DuckDB equivalent — exact Python oracle in plans/bounds.py
     "MinHash+LSH near-dup candidate pairs: shingle → 32-hash signature → "
-    "8 bands → bucket equi-join. Never materializes a cross product.",
+    "16 bands × 2 rows → bucket equi-join. Never materializes a cross product.",
 )
 def d_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_candidates(table(spark, sf_dir, "documents"), "text", "doc_id")
@@ -1104,7 +1104,7 @@ def d_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d_simhash_fingerprints",
-    None,  # xxhash64-based — rows-only check
+    None,  # xxhash64-based — exact Python oracle in plans/bounds.py
     "64-bit SimHash fingerprints per document (near-dup signature; "
     "Hamming-close docs share signatures).",
 )

@@ -33,17 +33,6 @@ def _words_col() -> F.Column:
     return F.filter(F.split(F.lower(F.col("text")), "[^a-z]+"), lambda w: w != "")
 
 
-def _shingles_col(ws: F.Column, k: int) -> F.Column:
-    """Distinct k-word shingles; empty when the doc has < k words.
-    sequence() is guarded because Spark generates DESCENDING sequences
-    when start > stop (sequence(1, 0) == [1, 0], not [])."""
-    idx = F.sequence(F.lit(1), F.size(ws) - (k - 1))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(ws, i, k), " "))
-    return F.when(F.size(ws) >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 @register(
     "tx_repetition_ratio",
     """

@@ -4,10 +4,11 @@
 (shingle → minhash signature → band → bucket equi-join → distinct
 pairs) under a full DuckDB value hash, using the portable md5 hash
 family that ``d_minhash_md5_signatures`` already gates. The production
-path (``d_minhash_lsh_candidates``) runs the identical algebra on
-xxhash64 (cheaper, engine-native, no DuckDB equivalent → rows-only +
-recall pytest); this query proves the banding/bucketing machinery
-itself value-exact, leaving only the hash function unverifiable.
+path (``d_minhash_lsh_candidates``) runs the same algebra on xxhash64
+(cheaper, engine-native, no DuckDB equivalent), at 16 bands × 2 rows;
+``plans/bounds.py`` checks it exactly against a pure-Python XXH64
+recompute. This query proves the banding/bucketing machinery
+value-exact under DuckDB itself.
 
 Reference provenance: near-dup candidate generation is beyond-reference
 surface (the reference dedups by primary key only,

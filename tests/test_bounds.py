@@ -1,9 +1,9 @@
-"""Unit tests for the bound-based oracles (plans/bounds.py, verdict r6
-#3): each check must (a) pass on data consistent with its contract and
-(b) actually FIRE on violations — a bound gate that never fails is no
-gate.  Pure DuckDB + dict rows; no Spark session needed (the real
-Spark-side integration runs in tools/check_correctness.py, green at
-sf0.01 and sf0.001)."""
+"""Unit tests for the oracles in plans/bounds.py (verdict r6 #3): each
+check must (a) pass on data consistent with its contract and (b)
+actually FIRE on violations — a gate that never fails is no gate.
+Pure DuckDB + dict rows; no Spark session needed (the real Spark-side
+integration runs in tools/check_correctness.py, green at sf0.01 and
+sf0.001)."""
 
 from __future__ import annotations
 
@@ -53,6 +53,21 @@ def test_registry_is_complete():
         "d_minhash_lsh_candidates",
         "d_simhash_fingerprints",
     }
+
+
+def test_differential_fails_a_query_without_oracle(capsys):
+    """A query with neither oracle SQL nor a BOUND_CHECKS entry fails
+    the differential instead of passing on its row count."""
+    from tools.check_correctness import check
+
+    class _Frame:
+        columns = ["x"]
+
+        def collect(self):
+            return [{"x": 1}]
+
+    assert check(None, "", None, {}, "ungated", lambda s, d: _Frame()) is False
+    assert "FAIL ungated: no oracle" in capsys.readouterr().out
 
 
 def test_sketch_aggregates_pass_and_fire(con):
@@ -137,58 +152,63 @@ def test_compression_ratio_pass_and_fire(con):
     assert check_compression_ratio(con, bad2) != []
 
 
+# Spark's output on the tiny documents table (docs 1 and 2 identical,
+# doc 4 empty: no shingles, so all votes 0 and every bit 1)
+_SIMHASH = {
+    1: "1110001111111101111101101011111111111000111010110111111110011111",
+    2: "1110001111111101111101101011111111111000111010110111111110011111",
+    3: "1111101101110111011111011011111111111110111001111111011011101110",
+    4: "1" * 64,
+}
+
+
+def _pairs(*ps):
+    return [{"id_a": a, "id_b": b} for a, b in ps]
+
+
 def test_minhash_candidates_pass_and_fire(con):
-    # docs 1 and 2 are identical text → MUST be a candidate pair
-    good = [{"id_a": 1, "id_b": 2}]
-    assert check_minhash_candidates(con, good) == []
-    # missing the identical-text pair → recall bound fires
+    # identical docs 1 and 2 share every band; the empty doc 4 has
+    # all-zero mins but no other short doc to collide with
+    assert check_minhash_candidates(con, _pairs((1, 2))) == []
+    # a dropped pair fires
+    assert any("missing" in v for v in check_minhash_candidates(con, []))
+    # an added pair fires
     assert any(
-        "recall" in v for v in check_minhash_candidates(con, [])
+        "unexpected" in v
+        for v in check_minhash_candidates(con, _pairs((1, 2), (1, 3)))
     )
     # ordering violation fires
     assert any(
-        "id_a < id_b" in v
-        for v in check_minhash_candidates(
-            con, [{"id_a": 2, "id_b": 1}, {"id_a": 1, "id_b": 2}]
-        )
+        "unexpected" in v
+        for v in check_minhash_candidates(con, _pairs((2, 1), (1, 2)))
     )
     # out-of-domain id fires
     assert any(
-        "domain" in v
-        for v in check_minhash_candidates(
-            con, [{"id_a": 1, "id_b": 99}, {"id_a": 1, "id_b": 2}]
-        )
+        "unexpected" in v
+        for v in check_minhash_candidates(con, _pairs((1, 99), (1, 2)))
     )
     # duplicate pair fires
     assert any(
         "duplicate" in v
-        for v in check_minhash_candidates(
-            con, [{"id_a": 1, "id_b": 2}, {"id_a": 1, "id_b": 2}]
-        )
+        for v in check_minhash_candidates(con, _pairs((1, 2), (1, 2)))
     )
 
 
 def test_simhash_pass_and_fire(con):
-    sig_a = "01" * 32
-    sig_b = "10" * 32
-    good = [
-        {"doc_id": 1, "simhash": sig_a},
-        {"doc_id": 2, "simhash": sig_a},   # identical text → same sig
-        {"doc_id": 3, "simhash": sig_b},
-        {"doc_id": 4, "simhash": "0" * 64},
-    ]
+    good = [{"doc_id": d, "simhash": s} for d, s in _SIMHASH.items()]
     assert check_simhash_fingerprints(con, good) == []
-    # identical-text docs with differing signatures fires
+    # one flipped bit fires
     bad = [dict(r) for r in good]
-    bad[1]["simhash"] = sig_b
-    assert any(
-        "identical-text" in v for v in check_simhash_fingerprints(con, bad)
-    )
-    # malformed signature fires
-    bad2 = [dict(r) for r in good]
-    bad2[0]["simhash"] = "2" * 64
-    assert any(
-        "malformed" in v for v in check_simhash_fingerprints(con, bad2)
-    )
+    s = bad[2]["simhash"]
+    bad[2]["simhash"] = s[:7] + ("0" if s[7] == "1" else "1") + s[8:]
+    viol = check_simhash_fingerprints(con, bad)
+    assert any("missing" in v for v in viol) and any("unexpected" in v for v in viol)
     # missing doc fires
-    assert check_simhash_fingerprints(con, good[:3]) != []
+    assert any("missing" in v for v in check_simhash_fingerprints(con, good[:3]))
+    # out-of-domain doc fires
+    extra = good + [{"doc_id": 99, "simhash": "0" * 64}]
+    assert any("unexpected" in v for v in check_simhash_fingerprints(con, extra))
+    # duplicate row fires
+    assert any(
+        "duplicate" in v for v in check_simhash_fingerprints(con, good + good[:1])
+    )

@@ -128,69 +128,64 @@ def test_collated_grouping_matches_lowercase_dedup(spark):
     assert collated == lowered == {(3, 1), (1, 4)}
 
 
-# ---- value pins for the oracle-blind pair ------------------------------
-# d_minhash_lsh_candidates and d_simhash_fingerprints hash with xxhash64,
-# which DuckDB cannot replay, so the differential checks them by row
-# count only. These tests rebuild both outputs on another path: shingles
-# from str.split(), hashes from Spark's xxhash64 over a plain frame of
-# shingle strings, and the splitmix64 MinHash, band fold, pair
-# enumeration and SimHash votes in Python ints.
-
-_M64 = (1 << 64) - 1
-_GOLDEN = 0x9E3779B97F4A7C15
+# ---- value pins for the two xxhash64 queries ---------------------------
+# DuckDB cannot replay Spark's xxhash64, so plans/bounds.py recomputes
+# d_minhash_lsh_candidates and d_simhash_fingerprints in plain Python
+# from its own XXH64 port; the differential gates both queries with the
+# same recompute. The first test pins the port to Spark's xxhash64.
 
 
-def _splitmix(x: int) -> int:
-    x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & _M64
-    x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & _M64
-    return x ^ (x >> 31)
+def test_xxh64_port_matches_spark(spark):
+    import random
+    import struct
+
+    from ingestion_pipeline_spark.plans.bounds import xxh64
+
+    m64 = (1 << 64) - 1
+    rng = random.Random(20240601)
+    alphabet = "abc xyz0129 \téßñ日本語\U0001F600"
+    # up to 80 chars of up to 4 UTF-8 bytes: covers the 32-byte stripes
+    strings = ["", "a", "x" * 32] + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(81)))
+        for _ in range(200)
+    ]
+    longs = [0, -1, -(1 << 63), (1 << 63) - 1] + [
+        rng.randrange(-(1 << 63), 1 << 63) for _ in range(100)
+    ]
+    rows = [(i, s, longs[i % len(longs)]) for i, s in enumerate(strings)]
+    got = (
+        spark.createDataFrame(rows, "i int, s string, l long")
+        .selectExpr(
+            "i",
+            "xxhash64(s) AS plain",
+            "xxhash64(s, 42) AS chained",  # s with seed 42, then the int 42
+            "xxhash64(l) AS long_hash",
+        )
+        .collect()
+    )
+    assert len(got) == len(rows)
+    for r in got:
+        _, s, v = rows[r["i"]]
+        plain = xxh64(s.encode("utf-8"), 42)
+        assert r["plain"] & m64 == plain, s
+        assert r["chained"] & m64 == xxh64(struct.pack("<i", 42), plain), s
+        assert r["long_hash"] & m64 == xxh64(struct.pack("<q", v), 42), v
 
 
 @pytest.fixture(scope="module")
-def corpus_shingles(spark, sf_dir):
-    """doc_id -> distinct word 3-gram set, and shingle -> (xxhash64(s, 42),
-    xxhash64(s)) as unsigned 64-bit ints."""
+def recomputed(spark, sf_dir):
+    from ingestion_pipeline_spark.plans.bounds import near_dup_recompute
     from ingestion_pipeline_spark.sources.parquet_tables import table
 
-    grams = {}
-    for r in table(spark, sf_dir, "documents").select("doc_id", "text").collect():
-        toks = r["text"].lower().split()
-        grams[r["doc_id"]] = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-    vocab = sorted(set().union(*grams.values()))
-    hashed = spark.createDataFrame([(s,) for s in vocab], "s string").selectExpr(
-        "s", "xxhash64(s, 42) AS seeded", "xxhash64(s) AS plain"
-    )
-    hashes = {r["s"]: (r["seeded"] & _M64, r["plain"] & _M64) for r in hashed.collect()}
-    return grams, hashes
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    return near_dup_recompute({r["doc_id"]: r["text"] for r in docs})
 
 
-def test_minhash_lsh_candidates_values(spark, sf_dir, corpus_shingles):
-    from itertools import combinations
-
+def test_minhash_lsh_candidates_values(spark, sf_dir, recomputed):
     from ingestion_pipeline_spark.plans import query_map
     from ingestion_pipeline_spark.sources.parquet_tables import table
 
-    grams, hashes = corpus_shingles
-    n_hashes, n_bands = 32, 16
-    rows_per_band = n_hashes // n_bands
-    seeds = [((i + 1) * _GOLDEN) & _M64 for i in range(n_hashes)]
-    bucket_of: dict[tuple[int, int], int] = {}
-    for doc, sh in grams.items():
-        hs = [hashes[s][0] for s in sh]
-        # a doc with no shingles gets all-zero mins (all such docs collide)
-        mins = [min((_splitmix(h ^ seed) for h in hs), default=0) for seed in seeds]
-        for b in range(n_bands):
-            acc = _GOLDEN
-            for m in mins[b * rows_per_band : (b + 1) * rows_per_band]:
-                acc = _splitmix(acc ^ m)
-            bucket_of[(doc, b)] = acc
-    members: dict[tuple[int, int], list[int]] = {}
-    for (doc, b), acc in bucket_of.items():
-        members.setdefault((b, acc), []).append(doc)
-    expected = {
-        pair for docs in members.values() for pair in combinations(sorted(docs), 2)
-    }
-
+    buckets, expected, _ = recomputed
     got = query_map()["d_minhash_lsh_candidates"](spark, sf_dir).collect()
     assert expected  # the fixture has near-dup pairs to pin
     assert len(got) == len(expected)
@@ -203,27 +198,17 @@ def test_minhash_lsh_candidates_values(spark, sf_dir, corpus_shingles):
         dd.hashed_shingles(dd.shingles(F.col("text"), 3)).alias("__hs"),
     )
     banded = {
-        (r["doc"], r["band"]): r["bucket"] & _M64
-        for r in dd.minhash_bands(hashed, n_hashes, n_bands).collect()
+        (r["doc"], r["band"]): r["bucket"] & ((1 << 64) - 1)
+        for r in dd.minhash_bands(hashed).collect()
     }
-    assert banded == bucket_of
+    assert banded == buckets
 
 
-def test_simhash_fingerprints_values(spark, sf_dir, corpus_shingles):
+def test_simhash_fingerprints_values(spark, sf_dir, recomputed):
     from ingestion_pipeline_spark.plans import query_map
-
-    grams, hashes = corpus_shingles
-    expected = {}
-    for doc, sh in grams.items():
-        votes = [0] * 64
-        for s in sh:
-            h = hashes[s][1]
-            for b in range(64):
-                votes[b] += 1 if (h >> b) & 1 else -1
-        expected[doc] = "".join("1" if v >= 0 else "0" for v in votes)
 
     got = {
         r["doc_id"]: r["simhash"]
         for r in query_map()["d_simhash_fingerprints"](spark, sf_dir).collect()
     }
-    assert got == expected
+    assert got == recomputed[2]

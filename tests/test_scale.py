@@ -106,6 +106,25 @@ def test_probe_normalizer_blend_and_fallback():
     assert _min_opt(None, None) is None
 
 
+def test_sf_of_fixture_and_replica_dirs(capsys):
+    """The bench's ``sf`` comes from the fixture dir's basename; replica
+    dirs name no number and record -1.0 instead of raising before the
+    warm-up. Pure string handling — no Spark session."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from bench import _sf_of
+
+    assert _sf_of("/data/sf0.1") == 0.1
+    assert _sf_of("/data/sf0.001/") == 0.001
+    assert _sf_of("/data/sf10") == 10.0
+    assert capsys.readouterr().err == ""
+    for replica in (".scale/sf1x", "/data/sf100x-work", "/data/sf100x-dedup", "/data/corpus"):
+        assert _sf_of(replica) == -1.0
+    assert capsys.readouterr().err.count("recording sf -1.0") == 4
+
+
 def test_mover_twin_exclusion_split():
     """VERDICT r11 #4: documented reference twins (fixed-cost by
     design, e.g. tx_bpe_tokenize_fold's compile-bound unrolled fold)

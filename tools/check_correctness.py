@@ -93,16 +93,16 @@ def check(spark, sf_dir, con, oracles, name, builder) -> bool:
     srows = sdf.collect()
     scols = sdf.columns
     if name not in oracles:
-        # Bound-based gate (VERDICT r6 #3): no value hash — the
-        # output embeds engine-internal bytes/hashes — but the
-        # estimate must sit inside its analytic error band around
-        # the exact answer DuckDB/stdlib computes.
+        # No SQL oracle (VERDICT r6 #3): the output embeds engine-internal
+        # bytes/hashes, so plans/bounds.py checks it against the exact
+        # answer DuckDB/stdlib/Python computes, or its analytic error
+        # band around it. A query with neither is ungated: it fails.
         from ingestion_pipeline_spark.plans.bounds import BOUND_CHECKS
 
         chk = BOUND_CHECKS.get(name)
         if chk is None:
-            print(f"ok?  {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            return True
+            print(f"FAIL {name}: no oracle (no SQL and no BOUND_CHECKS entry)")
+            return False
         try:
             viol = chk(con, srows)
         except Exception as e:  # noqa: BLE001
