@@ -9,7 +9,7 @@ getters — pure Column expressions, fully codegen'd, no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -107,19 +107,6 @@ def embedding_text(cve: Column) -> Column:
         cve_title(cve),
         cve_id(cve),
         cve_description(cve),
-    )
-
-
-def embed_metadata(df: DataFrame, cve: Column) -> DataFrame:
-    """P2 — the 6-field flat metadata record (consumer/consumer.py:92-104)."""
-    upd, pub = cve_dates(cve)
-    return df.select(
-        cve_id(cve).alias("cve_id"),
-        pub.alias("published_date"),
-        upd.alias("updated_date"),
-        cve_severity(cve).alias("severity"),
-        cve_score(cve).alias("score"),
-        cve_cwe_id(cve).alias("cwe_id"),
     )
 
 

@@ -1,7 +1,9 @@
 """Distributed graph iterations — the curation surface over candidate-pair
 graphs: connected components (the completion step of near-dup
-deduplication), label-propagation communities and fixed-point
-(personalized) PageRank.
+deduplication), label-propagation communities, the triangle count and
+one fixed-point PageRank, whose ``seed`` predicate selects the restart
+set: every node (the default) is uniform PageRank, a subset is
+personalized PageRank.
 
 Candidate pairs (from MinHash-LSH banding or exact Jaccard verification,
 ``operators/dedup.py``) form an undirected graph; each connected
@@ -173,6 +175,25 @@ def dup_clusters(
     )
 
 
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """The 1-row ``n_triangles`` frame of an undirected graph given as
+    ``(id_a, id_b)`` edges canonically oriented ``id_a < id_b``, each
+    edge once. Two equi-joins count every triangle a<b<c exactly once:
+    the node-iterator of Suri & Vassilvitskii, "Counting Triangles and
+    the Curse of the Last Reducer" (WWW 2011). The caller materializes
+    ``edges`` if its derivation is costly: it is read three times."""
+    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
+    return (
+        e1.join(e2, F.col("e2.id_a") == F.col("e1.id_b"))
+        .join(
+            e3,
+            (F.col("e3.id_a") == F.col("e1.id_a"))
+            & (F.col("e3.id_b") == F.col("e2.id_b")),
+        )
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     src: str = "src",
@@ -232,75 +253,100 @@ def label_propagation(
     return labels.select("n", F.col("label").alias("community"))
 
 
+def _every_node(n: Column) -> Column:
+    return F.lit(True)
+
+
 def pagerank_fixed_point(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iters: int = 10,
-    checkpoint_interval: int = 3,
+    seed: Callable[[Column], Column] = _every_node,
 ) -> DataFrame:
     """Power-iteration PageRank in FIXED-POINT integer arithmetic —
     ``(n, rank_fp)`` with ranks in 1e-12 units (``PR_SCALE``), damping
     85/100, over the SYMMETRIZED edge list.
 
+    ``seed`` maps a node-id Column to a boolean Column selecting the
+    seed set S, to which the restart mass returns (a NULL predicate is
+    "not a seed", as in SQL's ``WHERE``). The default, every node, is
+    uniform PageRank; a predicate such as ``lambda n: n % 50 == 0`` is
+    personalized PageRank — rank concentrates around the seeds, the
+    crawl-frontier / seed-expansion primitive of data curation. Uniform
+    PageRank is the seeded recurrence with S = V (Haveliwala,
+    "Topic-Sensitive PageRank", WWW 2002), term by term:
+
+        r0(n) = [n in S] * SCALE // |S|
+        r'(n) = [n in S] * (15*SCALE) // (100*|S|)
+                + (85 * sum over edges s->n of r(s) div deg(s)) div 100
+
+    With no seed every rank is 0.
+
     Why integers: a float PageRank sums ``double`` shares per
     destination, which is accumulation-order-dependent at the 1e-16
-    scale — harmless for ranking, fatal for a cross-engine value hash
-    (the same flake class the round-2 advisor flagged on
-    g_value_trend). Every operation here — integer ``div`` for shares,
-    exact BIGINT sums, ``(85*contrib) div 100`` damping — is defined
-    identically in Spark and any ANSI engine, so a DuckDB oracle can
-    replay the 10 iterations as unrolled CTEs and match bit-for-bit
-    (``plans/pagerank_sql.py``). Rank error vs the real-valued
+    scale — harmless for ranking, fatal for a cross-engine value hash.
+    Every operation here — integer ``div`` for shares, exact BIGINT
+    sums, ``(85*contrib) div 100`` damping — is defined identically in
+    Spark and any ANSI engine, so a DuckDB oracle replays the rounds
+    as unrolled CTEs and matches bit-for-bit
+    (``plans/pagerank_sql.py:pagerank_fp_ctes``, whose ``seed_pred``
+    is the same predicate in SQL). Rank error vs the real-valued
     fixpoint is ≤ iters·|V|/SCALE — irrelevant at 1e-12 units.
 
     A fixed ``iters`` (not a convergence test) keeps the result exactly
     reproducible across engines and runs. Symmetric-only: every node
-    then has out-degree ≥ 1, so no dangling mass and no per-round
-    scalar aggregate. Per round: one edges⋈ranks shuffle + one
-    partial-aggregated sum."""
+    then has out-degree ≥ 1 and in-degree ≥ 1, so no dangling mass, no
+    per-round scalar aggregate and no per-round node left-join — the
+    contrib aggregate already covers every node. Per round: one
+    edges⋈ranks shuffle + one partial-aggregated sum."""
     fwd = _symmetrized(edges, src, dst)
-    nodes = (
-        fwd.select(F.col("s").alias("n"))
-        .union(fwd.select(F.col("d").alias("n")))
-        .distinct()
+
+    def is_seed(n: str) -> Column:
+        return F.coalesce(seed(F.col(n)), F.lit(False)).cast("long")
+
+    # |S| is observed on the node checkpoint's own job (the CC witness
+    # discipline), not by a separate count job
+    nodes, n_seeds = _checkpoint_observed(
+        fwd.select(F.col("s").alias("n")).distinct()
+        .select("n", is_seed("n").alias("is_seed")),
+        F.sum("is_seed"),
+    )
+    if not n_seeds:
+        return nodes.select("n", F.lit(0).cast("long").alias("rank_fp"))
+    # Static per-edge frame built ONCE: the source's out-degree and the
+    # destination's seed flag ride every edge, so no round joins the
+    # rank vector to a degree or flag frame (`rank_fp div deg` per edge
+    # equals a per-node share joined out: deg is constant per s).
+    deg = fwd.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+    fwd_deg = (
+        fwd.join(deg, "s")
+        .select("s", "d", "deg", is_seed("d").alias("is_seed"))
         .localCheckpoint(eager=True)
     )
-    n_total = nodes.count()
-    if n_total == 0:
-        return nodes.select("n", F.lit(0).cast("long").alias("rank_fp"))
-    # Out-degree attached to every edge ONCE, before the loop (r12
-    # optimization, guide §2.4): the per-round ranks⋈deg join — one
-    # exchange of the full rank vector per iteration — disappears, and
-    # the per-edge share `rank_fp div deg` is value-identical to
-    # joining a per-node share (deg is constant per s, div is exact).
-    deg = fwd.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    fwd_deg = fwd.join(deg, "s").localCheckpoint(eager=True)
-
-    init = PR_SCALE // n_total
-    base = (15 * PR_SCALE) // (100 * n_total)
+    init = PR_SCALE // n_seeds
+    base = (15 * PR_SCALE) // (100 * n_seeds)
 
     def step(ranks: DataFrame) -> DataFrame:
-        # Symmetrized graph ⇒ every node has ≥1 in-edge, so the contrib
-        # aggregate already covers the full node universe — no per-round
-        # nodes left-join (r12; equality pinned by
-        # tests/test_graph_fixture_exact.py and the unrolled oracles).
         return (
             fwd_deg.join(ranks.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("d").alias("n"))
-            .agg(F.sum(F.expr("rank_fp div deg")).alias("contrib"))
+            .agg(
+                F.sum(F.expr("rank_fp div deg")).alias("contrib"),
+                F.max("is_seed").alias("is_seed"),
+            )
             .select(
                 "n",
                 (
-                    F.lit(base).cast("long")
+                    F.col("is_seed") * F.lit(base)
                     + F.expr("(85 * contrib) div 100")
                 ).alias("rank_fp"),
             )
         )
 
     ranks = _fixed_point(
-        nodes.select("n", F.lit(init).cast("long").alias("rank_fp")),
-        step, iters, checkpoint_interval,
+        nodes.select("n", (F.col("is_seed") * F.lit(init)).alias("rank_fp")),
+        step, iters, 3,  # checkpoint every 3 rounds and after the last
     )
     return ranks.select("n", "rank_fp")
 
@@ -347,93 +393,3 @@ def bounded_pagerank_fixed_point(
         StructField("rank_fp", LongType()),
     ])
     return edges.sparkSession.createDataFrame(list(ranks.items()), schema)
-
-
-def personalized_pagerank_fixed_point(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 10,
-    checkpoint_interval: int = 3,
-) -> DataFrame:
-    """Personalized (seeded) fixed-point PageRank: the restart mass
-    returns to the SEED SET instead of uniformly — rank concentrates
-    around the seeds, which is the crawl-frontier / seed-expansion
-    primitive of data curation ("find documents like these vetted
-    ones"). Same integer arithmetic contract as ``pagerank_fixed_point``
-    (1e-12 BIGINT units, div shares, 85/100 damping), so the DuckDB
-    oracle unrolls it identically; ``seeds`` must be a single-column
-    DataFrame of node ids (a subset of the graph's nodes).
-
-    Init: seeds start with ``PR_SCALE // |S|`` each, non-seeds 0.
-    Per round: ``r' = [n in S] * (15*SCALE)//(100*|S|) +
-    (85*contrib) div 100``."""
-    fwd = _symmetrized(edges, src, dst)
-    nodes = (
-        fwd.select(F.col("s").alias("n"))
-        .union(fwd.select(F.col("d").alias("n")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    seed_col = seeds.columns[0]
-    # flagged (n, is_seed) is the node universe both the init vector
-    # and the static edge frame read — checkpointed once, and its
-    # materializing aggregate returns n_seeds.
-    flagged = (
-        nodes.join(
-            F.broadcast(
-                seeds.select(
-                    F.col(seed_col).alias("n"), F.lit(1).alias("is_seed")
-                )
-            ),
-            "n",
-            "left",
-        )
-        .select("n", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-        .localCheckpoint(eager=True)
-    )
-    n_seeds = flagged.agg(F.sum("is_seed")).first()[0] or 0
-    if n_seeds == 0:
-        return nodes.select("n", F.lit(0).cast("long").alias("rank_fp"))
-    deg = fwd.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
-    # Static per-edge frame built ONCE (r12 optimization, guide §2.4):
-    # out-degree of the source AND seed flag of the destination ride
-    # every edge, so the loop needs neither the per-round ranks⋈deg
-    # join nor the per-round flagged left-join — two full rank-vector
-    # exchanges per iteration removed. Share arithmetic is unchanged
-    # (`rank_fp div deg` per edge == per-node share joined out), and
-    # the symmetrized graph guarantees the contrib aggregate covers
-    # every node, so the row set is identical.
-    fwd_deg = (
-        fwd.join(deg, "s")
-        .join(flagged.select(F.col("n").alias("d"), "is_seed"), "d")
-        .localCheckpoint(eager=True)
-    )
-    init = PR_SCALE // n_seeds
-    base = (15 * PR_SCALE) // (100 * n_seeds)
-
-    def step(ranks: DataFrame) -> DataFrame:
-        return (
-            fwd_deg.join(ranks.withColumnRenamed("n", "s"), "s")
-            .groupBy(F.col("d").alias("n"))
-            .agg(
-                F.sum(F.expr("rank_fp div deg")).alias("contrib"),
-                F.max("is_seed").alias("is_seed"),
-            )
-            .select(
-                "n",
-                (
-                    (F.col("is_seed") * F.lit(base)).cast("long")
-                    + F.expr("(85 * contrib) div 100")
-                ).alias("rank_fp"),
-            )
-        )
-
-    ranks = _fixed_point(
-        flagged.select(
-            "n", (F.col("is_seed") * F.lit(init)).cast("long").alias("rank_fp")
-        ),
-        step, iters, checkpoint_interval,
-    )
-    return ranks.select("n", "rank_fp")

@@ -4,8 +4,8 @@ sketch columns.
 - ``d_pagerank_neardup``: PageRank over the embedding near-dup graph —
   centrality picks the canonical/most-connected member of each dup
   family (and, at corpus scale, seed documents for crawling/curation).
-  Iterative float fixpoint → rows-only gate; the math is pinned by
-  ``tests/test_graph_sketch.py`` against a dense Python reference.
+  Fixed-point integer PageRank with every node a seed, value-gated by
+  the unrolled ``pagerank_fp_ctes`` oracle.
 - ``g_hll_partitioned_merge``: the 100 TB distinct-counting pattern —
   build an HLL sketch PER PARTITION SLICE (here per day), store/ship
   the sketch bytes, and merge at query time (``hll_union_agg``).

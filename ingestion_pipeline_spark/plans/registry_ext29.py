@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import triangle_count
 from ..sources.parquet_tables import table
 from .registry import register
 
@@ -322,16 +323,7 @@ def g_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .localCheckpoint(eager=False)
     )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.id_a") == F.col("e1.id_b"))
-        .join(
-            e3,
-            (F.col("e3.id_a") == F.col("e1.id_a"))
-            & (F.col("e3.id_b") == F.col("e2.id_b")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
+    tri = triangle_count(edges)
     n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     n_nodes = (
         edges.select(F.col("id_a").alias("id"))

@@ -46,6 +46,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import (
+    PR_SCALE,
+    label_propagation,
+    pagerank_fixed_point,
+    triangle_count,
+)
+from .pagerank_sql import pagerank_fp_ctes
 from .registry import register
 from .registry_ext65 import (
     _CASCADE_SQL_CTES,
@@ -134,16 +141,7 @@ def g_triangle_census_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow-kernel Jaccard over ranked candidates) feeds FOUR legs
     # below — without the cut each leg re-runs the verify stage
     edges = fr["edges"].localCheckpoint(eager=True)
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e2.id_a") == F.col("e1.id_b"))
-        .join(
-            e3,
-            (F.col("e3.id_a") == F.col("e1.id_a"))
-            & (F.col("e3.id_b") == F.col("e2.id_b")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
+    tri = triangle_count(edges)
     deg = (
         edges.select(F.col("id_a").alias("id"))
         .unionAll(edges.select(F.col("id_b").alias("id")))
@@ -187,11 +185,6 @@ def g_triangle_census_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ppr_capped_sql() -> str:
-    # late imports keep tranche modules import-order independent (the
-    # registry_ext65 convention for cross-tranche SQL constants)
-    from ..operators.graph import PR_SCALE
-    from .pagerank_sql import personalized_pagerank_fp_ctes
-
     # MATERIALIZED pins the cascade to ONE evaluation: without it the
     # 10 unrolled rounds re-inline the full cascade chain through
     # pr_edges and the oracle runs 204 s at sf0.01 (2.6 s with) —
@@ -201,7 +194,7 @@ def _ppr_capped_sql() -> str:
     {_ED_CTE},
     {_EXC_CTE},
     pairs AS MATERIALIZED (SELECT id_a, id_b FROM ed),
-    {personalized_pagerank_fp_ctes("n % 50 = 0", 10)}
+    {pagerank_fp_ctes(10, seed_pred="n % 50 = 0")}
     SELECT pr.n AS doc_id, pr.r AS rank_fp,
            ROUND(CAST(pr.r AS DOUBLE) / {PR_SCALE}, 9) AS rank,
            e.excluded_pairs, g.n_guarded AS guarded_buckets
@@ -222,9 +215,10 @@ def _ppr_capped_sql() -> str:
     "d_personalized_pagerank's cosine-threshold graph over raw "
     "embeddings (281.8 s raw at 100x in the r11 sweep; its docstring "
     "declares the post-dedup input contract, this query IS that "
-    "contract shipped). Same integer-arithmetic contract as the raw "
-    "query (1e-12 BIGINT rank units, div shares, 85/100 damping, 10 "
-    "fixed rounds), so the oracle unrolls the rounds over the SAME "
+    "contract shipped). The same PageRank operator and oracle CTE "
+    "chain as the raw query, with the seed predicate n % 50 = 0 "
+    "(1e-12 BIGINT rank units, div shares, 85/100 damping, 10 fixed "
+    "rounds), so the oracle unrolls the rounds over the SAME "
     "shared edge rule (_ED_CTE — the constant the triangle census, "
     "capped clusters and leakage gate also ride; zero drift) and the "
     "full value hash gates the result; zero-rank nodes (unreachable "
@@ -239,18 +233,9 @@ def _ppr_capped_sql() -> str:
 def d_personalized_pagerank_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.graph import PR_SCALE, personalized_pagerank_fixed_point
-
     fr = cascade_frames(spark, sf_dir)
-    edges = fr["edges"].localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("id_a").alias("n"))
-        .union(edges.select(F.col("id_b").alias("n")))
-        .distinct()
-    )
-    seeds = nodes.filter(F.col("n") % 50 == 0)
-    ranks = personalized_pagerank_fixed_point(
-        edges, seeds, "id_a", "id_b", iters=10
+    ranks = pagerank_fixed_point(
+        fr["edges"], "id_a", "id_b", iters=10, seed=lambda n: n % 50 == 0
     )
     return (
         ranks.filter(F.col("rank_fp") > 0)
@@ -291,13 +276,11 @@ def _lpa_capped_sql() -> str:
 
 
 def _lpa_capped_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import label_propagation
     from .registry_ext52 import _ITERS
 
     fr = cascade_frames(spark, sf_dir)
-    edges = fr["edges"].localCheckpoint(eager=True)
     return (
-        label_propagation(edges, "id_a", "id_b", iters=_ITERS)
+        label_propagation(fr["edges"], "id_a", "id_b", iters=_ITERS)
         .crossJoin(F.broadcast(fr["excluded"]))
         .crossJoin(
             F.broadcast(

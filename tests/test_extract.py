@@ -12,6 +12,7 @@ import pytest
 
 from ingestion_pipeline_spark.functions import extract as ex
 from ingestion_pipeline_spark.schemas import CVE_CORE_SCHEMA, NVD_CVE_SCHEMA
+from ingestion_pipeline_spark.streaming.pipeline import extract_embedding_rows
 
 FULL = {
     "cveMetadata": {
@@ -97,9 +98,10 @@ def test_embedding_text_template(parsed):
 
 
 def test_embed_metadata_shape(parsed):
-    """P2 — the 6-field flat record (consumer/consumer.py:92-104)."""
-    df = ex.embed_metadata(parsed, F.col("cve"))
-    assert df.columns == ["cve_id", "published_date", "updated_date", "severity", "score", "cwe_id"]
+    """P2 — the 6-field flat record (consumer/consumer.py:92-104), as the
+    ingest path projects it next to the P3 embedding text."""
+    df = extract_embedding_rows(parsed)
+    assert df.columns == ["cve_id", "published_date", "updated_date", "severity", "score", "cwe_id", "text"]
     first = df.first()
     assert first["published_date"] == "2024-01-02T00:00:00"
     assert first["score"] == 8.1

@@ -1,12 +1,13 @@
 """Exact-value pins for the r12 graph-iteration refactor.
 
-Round 12 rewrote the per-round join shape of ``pagerank_fixed_point``,
-``personalized_pagerank_fixed_point`` and ``label_propagation`` (degree
-attached to the static edge frame once; the redundant per-round node
-left-join dropped on symmetrized graphs; LPA's window argmax replaced
-by an aggregate argmin of ``(-count, label)``). The arithmetic contract
-must be BIT-IDENTICAL — these queries are value-hash-gated against
-unrolled DuckDB CTEs — so this module replays the exact integer
+Round 12 rewrote the per-round join shape of the uniform and seeded
+fixed-point PageRank and of ``label_propagation`` (degree attached to
+the static edge frame once; the redundant per-round node left-join
+dropped on symmetrized graphs; LPA's window argmax replaced by an
+aggregate argmin of ``(-count, label)``); both PageRank forms are now
+one ``pagerank_fixed_point`` with a ``seed`` predicate. The arithmetic
+contract must be BIT-IDENTICAL — these queries are value-hash-gated
+against unrolled DuckDB CTEs — so this module replays the exact integer
 recurrences in pure Python on a fixture graph with every interesting
 shape (star, clique, chain, bridge, isolated pair) and asserts
 equality, not proximity.
@@ -23,7 +24,6 @@ from ingestion_pipeline_spark.operators.graph import (
     bounded_pagerank_fixed_point,
     label_propagation,
     pagerank_fixed_point,
-    personalized_pagerank_fixed_point,
 )
 
 # star(0;1-4) + clique(10,11,12) + chain 20-21-22-23 + bridge 4-10 +
@@ -107,14 +107,49 @@ def test_pagerank_fixed_point_exact(spark):
 
 def test_personalized_pagerank_fixed_point_exact(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
-    seeds = spark.createDataFrame([(0,), (20,)], "n long")
     got = {
         r["n"]: r["rank_fp"]
-        for r in personalized_pagerank_fixed_point(
-            df, seeds, iters=10
+        for r in pagerank_fixed_point(
+            df, iters=10, seed=lambda n: n.isin(0, 20)
         ).collect()
     }
     assert got == _ref_ppr_fp(EDGES, [0, 20], iters=10)
+
+
+def _jobs(spark, group, action):
+    """``action()``'s result and the Spark jobs it ran, counted in its
+    own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_seeded_pagerank_runs_as_many_jobs_as_uniform(spark):
+    """A seed predicate costs no job over uniform PageRank: both run the
+    same prelude (symmetrize, node flags with the seed count observed on
+    their checkpoint, static edge frame) and the same rounds. Counted
+    with AQE off: adaptive re-planning adds or drops a job per 3-round
+    segment from run to run (41-43 jobs on this graph with it on), which
+    hides the operator's own job structure."""
+    df = spark.createDataFrame(EDGES, "src long, dst long")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, seeded = _jobs(spark, "ppr-seeded", lambda: pagerank_fixed_point(
+            df, iters=10, seed=lambda n: n.isin(0, 20)
+        ).collect())
+        _, uniform = _jobs(
+            spark, "ppr-uniform",
+            lambda: pagerank_fixed_point(df, iters=10).collect(),
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert seeded == uniform
 
 
 def test_label_propagation_exact(spark):
@@ -168,13 +203,9 @@ def test_textrank_keywords_runs_few_jobs(spark, sf_dir):
     ran 28)."""
     from ingestion_pipeline_spark.plans import query_map
 
-    sc = spark.sparkContext
-    group = "textrank-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        rows = query_map()["tx_textrank_keywords"](spark, sf_dir).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    rows, jobs = _jobs(
+        spark, "textrank-jobs",
+        lambda: query_map()["tx_textrank_keywords"](spark, sf_dir).collect(),
+    )
     assert len(rows) == 20
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+    assert jobs <= 10

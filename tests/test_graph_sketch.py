@@ -272,16 +272,15 @@ def test_personalized_pagerank_concentrates_on_seeds(spark):
     """PPR rank mass must stay in the seed's neighbourhood: on two
     disjoint triangles with a seed in only one, the other triangle
     gets rank 0; within the seeded triangle the seed ranks highest."""
-    from ingestion_pipeline_spark.operators.graph import (
-        personalized_pagerank_fixed_point,
-    )
+    from ingestion_pipeline_spark.operators.graph import pagerank_fixed_point
 
     edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    seeds = spark.createDataFrame([(1,)], "n long")
     got = {
         r["n"]: r["rank_fp"]
-        for r in personalized_pagerank_fixed_point(df, seeds, iters=10).collect()
+        for r in pagerank_fixed_point(
+            df, iters=10, seed=lambda n: n == 1
+        ).collect()
     }
     assert got[10] == got[11] == got[12] == 0  # unreachable from seed
     assert got[1] > got[2] > 0 and got[2] == got[3]  # seed dominates

@@ -8,12 +8,13 @@ Checks per query:
   (intended only where a probe/1-row side is broadcast by design);
 - parquet scans that read every column of a wide table (projection
   should prune);
-- single-shuffle sanity: counts Exchange nodes so a regression that
-  doubles shuffles is visible in review diffs, and prints the parquet
-  scan count per table (``scans=lineitem:2,...``) — a table scanned
-  more than once inside ONE query is a candidate for a shared
-  materialization (the d_dsir_importance finding: five scans because
-  the pushed-down lang filter defeated ReuseExchange).
+- single-shuffle sanity: counts distinct Exchange operators (shuffle
+  and broadcast, each once however often a cached frame is read) so a
+  regression that doubles shuffles is visible in review diffs, and
+  prints the parquet scan count per table (``scans=lineitem:2,...``) —
+  a table scanned more than once inside ONE query is a candidate for a
+  shared materialization (the d_dsir_importance finding: five scans
+  because the pushed-down lang filter defeated ReuseExchange).
 - unpartitioned Window nodes (round-5, verdict r4 directive #3): a
   ``Window``/``WindowInPandas`` with an empty partition spec moves its
   whole input to ONE task — Spark itself warns ``WindowExec: No
@@ -216,11 +217,12 @@ def audit(name: str, df) -> list[str]:
     from ingestion_pipeline_spark.plans import plan_text
 
     plan = plan_text(df)
-    # scans from the formatted plan, which lists each scan node once; the
-    # tree text repeats a persisted frame's whole plan at every read
-    scans = Counter(
-        re.findall(r"Location:.*?/(\w+)\.parquet", plan_text(df, "formatted"))
-    )
+    # scans and exchanges from the formatted plan, which describes each
+    # operator once under its "(id) Name" line; the tree text repeats a
+    # persisted frame's whole plan at every read
+    formatted = plan_text(df, "formatted")
+    scans = Counter(re.findall(r"Location:.*?/(\w+)\.parquet", formatted))
+    exchanges = len(set(re.findall(r"^\((\d+)\) \w*Exchange\b", formatted, re.M)))
     flags: list[str] = []
     if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and name not in NLJ_ALLOWED:
         flags.append("unexpected cross/NLJ join")
@@ -241,7 +243,7 @@ def audit(name: str, df) -> list[str]:
             flags.append(f"unpruned scan of {name_t} ({ncols} cols)")
     status = "FLAG" if flags else "ok"
     scan_list = ",".join(f"{t}:{n}" for t, n in sorted(scans.items()))
-    print(f"{status:4} {name}: exchanges={plan.count('Exchange')}"
+    print(f"{status:4} {name}: exchanges={exchanges}"
           f" scans={scan_list or '-'}"
           + (f" — {'; '.join(flags)}" if flags else ""))
     return flags
