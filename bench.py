@@ -9,7 +9,9 @@ Each query is executed best-of-N (N=3 once a sub-second time is seen,
 N=5 for the >=1 s cohort) and the best time kept (early runs pay
 one-off file-listing / codegen / JIT costs that a warm cluster
 amortizes); per-query [min, median, max, n] spread goes to
-bench_detail.json.
+bench_detail.json, with the number of classes Janino compiled over
+each query's timed runs (``janino_compiles``; null without a JVM
+handle).
 
 Session hygiene (VERDICT r6 #2): real warm-up queries run untimed
 before the loop (position-1 queries used to pay the 3-7 s session
@@ -255,6 +257,17 @@ def warm_up(spark, sf_dir: str) -> None:
     )
 
 
+def janino_compiles(spark) -> "int | None":
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics``), or None where the session has no JVM handle
+    (Spark Connect, a stopped context)."""
+    try:
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(codegen.METRIC_COMPILATION_TIME().getCount())
+    except (AttributeError, NotImplementedError):
+        return None
+
+
 def time_query(spark, sf_dir: str, name: str, builder) -> list[float]:
     """Adaptive best-of-N timing of one query: ``[min, median, max,
     n_runs]``, the variance record VERDICT r4 #5 asked for.
@@ -339,9 +352,16 @@ def main() -> None:
     # pressure showed up as 3x late-session spikes on unrelated queries
     # (tx_textrank_keywords 2.9 -> 9.5 s in the r5 203-query run).
     # Between queries only, so best-of-N runs share their own caches.
-    results = run_each(
-        spark, lambda name, fn: time_query(spark, sf_dir, name, fn)
-    )
+    compiles: dict[str, "int | None"] = {}
+
+    def timed(name, fn):
+        before = janino_compiles(spark)
+        runs = time_query(spark, sf_dir, name, fn)
+        after = janino_compiles(spark)
+        compiles[name] = None if None in (before, after) else after - before
+        return runs
+
+    results = run_each(spark, timed)
     times: dict[str, float] = {}
     # name -> [min, median, max, n_runs]; side-file only, the stdout
     # line stays compact.
@@ -380,6 +400,7 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "spread": spread,
+        "janino_compiles": compiles,
         "sf": sf,
         # machine-state fingerprint (VERDICT r9 #3): fixed probe timed
         # at suite start and end; min is the least-contended estimate

@@ -142,7 +142,11 @@ def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
 
     Null parity with the expression variant: NULL/short texts yield
     per-slot NULLs (``array_min`` of an empty array), not a NULL
-    array, so ``sig[0] IS NOT NULL`` filters behave identically."""
+    array, so ``sig[0] IS NOT NULL`` filters behave identically.
+
+    Marked non-deterministic so such a filter on a slot is never
+    pushed below the projection that calls the kernel, which would
+    evaluate it a second time (SCALE.md, "UDF-fed joins")."""
     import hashlib
 
     from pyspark.sql.functions import pandas_udf
@@ -175,21 +179,32 @@ def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
             out.append(mins)
         return pd.Series(out, dtype=object)
 
-    return sig
+    return sig.asNondeterministic()
 
 
-def md5_signatures(df: DataFrame, n_hashes: int, carry: tuple[str, ...] = ()) -> DataFrame:
+def md5_signatures(
+    df: DataFrame,
+    n_hashes: int,
+    carry: tuple[str, ...] = (),
+    drop_short: bool = True,
+) -> DataFrame:
     """``(doc_id, *carry, mh_0 … mh_{n-1})``: the md5 MinHash signature
     of ``df.text`` as one column per slot, from ONE Arrow kernel pass
     (``minhash_md5_slots``). ``carry`` names extra columns that ride
-    along (the verify stages keep ``text``). Short texts give NULL
-    slots; callers apply their own ``mh_0 IS NOT NULL`` filter."""
+    along (the verify stages keep ``text``).
+
+    Texts with fewer than 3 tokens have no shingles and give NULL
+    slots; ``drop_short`` (the default) drops them with
+    ``mh_0 IS NOT NULL``. The kernel is non-deterministic to the
+    optimizer, so that filter stays above it: pushed down, it would
+    call the kernel once in the filter and again in the projection."""
     mh = minhash_md5_slots(n_hashes)
-    return df.select("doc_id", *carry, mh(F.col("text")).alias("__mh")).select(
+    sig = df.select("doc_id", *carry, mh(F.col("text")).alias("__mh")).select(
         "doc_id",
         *carry,
         *[F.col("__mh").getItem(i).alias(f"mh_{i}") for i in range(n_hashes)],
     )
+    return sig.filter(F.col("mh_0").isNotNull()) if drop_short else sig
 
 
 def md5_band_rows(sig: DataFrame, n_bands: int) -> DataFrame:

@@ -218,7 +218,9 @@ def assign_nearest_np(centroids: list[list[float]]):
     dim × n_centroids) per batch. Centroids should be pre-normalized so
     dot ≡ cosine up to positive scale. Same rationale as
     ``signature_bits_np``: one BLAS call replaces n_centroids
-    interpreted fold expressions per row."""
+    interpreted fold expressions per row. Non-deterministic to the
+    optimizer, like ``probe_cosine_np``: a filter on the cluster column
+    is never pushed below the projection into a second Arrow pass."""
     import numpy as np
 
     from pyspark.sql.functions import pandas_udf
@@ -233,7 +235,7 @@ def assign_nearest_np(centroids: list[list[float]]):
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         return pd.Series(np.argmax(mat @ cent_mat, axis=1).astype("int32"))
 
-    return nearest
+    return nearest.asNondeterministic()
 
 
 def assign_nearest_quantized(

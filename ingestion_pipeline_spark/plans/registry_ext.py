@@ -651,11 +651,16 @@ def v_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sum(x * y for x, y in zip(l2norm(a), l2norm(b)))
 
     keep = sorted(range(16), key=lambda i: -cos_py(probe, centroids[i]))[:4]
-    assigned = emb.withColumn("cluster", nearest(F.col("embedding")))
+    # the probe exclusion goes BEFORE the kernel column: the kernel is
+    # non-deterministic to the optimizer, so no filter passes below it,
+    # and this one belongs at the scan
+    assigned = emb.filter(F.col("vec_id") != 0).withColumn(
+        "cluster", nearest(F.col("embedding"))
+    )
     # r12 (guide §4.2): Arrow probe-cosine kernel replaces the
     # interpreted HOF folds; float64 + JVM 6-dp rounding — value-identical.
     return (
-        assigned.filter(F.col("cluster").isin(keep) & (F.col("vec_id") != 0))
+        assigned.filter(F.col("cluster").isin(keep))
         .withColumn(
             "sim", F.round(sim.probe_cosine_np(probe)(F.col("embedding")), 6)
         )

@@ -19,7 +19,6 @@ Leskovec-Rajaraman-Ullman ch.3.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
@@ -68,7 +67,6 @@ def d_minhash_lsh_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8-interpreted-md5-per-shingle tax).
     sig = (
         md5_signatures(docs, _N_HASHES)
-        .filter(F.col("mh_0").isNotNull())
         # both sides of the banded self-join consume sig; without
         # materialization the compiled plan ran the md5-minhash Arrow
         # kernel per side (8 ArrowEvalPython nodes, 4 scans — r12 scan

@@ -299,11 +299,7 @@ def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     # the parquet (shingle ARRAYS are never materialized — the exact
     # Jaccard runs as a text kernel). All 8 md5 slots come from ONE
     # Arrow kernel pass straight off the text column (VERDICT r7 #3).
-    sig = (
-        md5_signatures(docs, _N_HASHES, carry=("text",))
-        .filter(F.col("mh_0").isNotNull())
-        .persist()
-    )
+    sig = md5_signatures(docs, _N_HASHES, carry=("text",)).persist()
     bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).persist()
     census = bk.filter(F.col("drk") == 1).agg(
         F.coalesce(F.sum(F.expr("k * (k - 1) div 2")), F.lit(0))
@@ -498,7 +494,6 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             _N_HASHES,
             carry=("text",),
         )
-        .filter(F.col("mh_0").isNotNull())
         .persist()
     )
     # per-bucket doc rank + bucket size, persisted because the guarded

@@ -8,12 +8,23 @@ Spark upgrade (or a refactor) silently regresses the plan shape.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from ingestion_pipeline_spark.plans import plan_text
 
 SF = "/root/testdata/sf0.001"
+
+
+def _eval_nodes_per_kernel(df) -> Counter:
+    """How many Python-eval nodes of ``df``'s plan call each UDF, by
+    UDF name (``tools/audit_plans.py``'s count)."""
+    from tools.audit_plans import udf_eval_nodes
+
+    nodes = udf_eval_nodes(plan_text(df, "formatted"))
+    return Counter({call.split("(")[0]: n for call, n in nodes.items()})
 
 
 def test_probe_cosine_single_arrow_pass_with_pushed_filters(spark):
@@ -27,6 +38,52 @@ def test_probe_cosine_single_arrow_pass_with_pushed_filters(spark):
         assert plan.count("ArrowEvalPython") == 1, (name, plan)
         assert "PushedFilters: [" in plan, name
         spark.catalog.clearCache()
+
+
+def test_md5_signature_kernel_runs_once_per_frame(spark, monkeypatch):
+    """The md5 MinHash kernel is non-deterministic to the optimizer, so
+    the signature frames' ``mh_0 IS NOT NULL`` filter is not pushed
+    below the projection into a second ArrowEvalPython (the cascade's
+    used to run the kernel on the 1-task documents scan as well as
+    after ``spread``). The two builders' frames are caught where
+    ``md5_signatures`` returns them: ``d_minhash_lsh_md5_pairs``
+    checkpoints its frame, which hides the lineage from the query plan
+    and from ``tools/audit_plans.py``."""
+    from ingestion_pipeline_spark.operators import dedup
+    from ingestion_pipeline_spark.plans import query_map, release_caches
+    from ingestion_pipeline_spark.plans.registry_ext65 import cascade_frames
+
+    try:
+        assert _eval_nodes_per_kernel(cascade_frames(spark, SF)["sig"]) == {"sig": 1}
+    finally:
+        release_caches(spark)
+
+    built, real = [], dedup.md5_signatures
+
+    def caught(*args, **kwargs):
+        built.append(real(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(dedup, "md5_signatures", caught)
+    for name in ("d_minhash_lsh_md5_pairs", "d_minhash_band_tuning"):
+        built.clear()
+        try:
+            query_map()[name](spark, SF)
+            assert len(built) == 1, name
+            assert _eval_nodes_per_kernel(built[0]) == {"sig": 1}, name
+        finally:
+            release_caches(spark)
+
+
+def test_ivf_assignment_runs_once_with_probe_filter_at_scan(spark):
+    """v_ivf_topk: one eval node per kernel (the cluster filter used to
+    copy the assignment kernel below the ``spread`` exchange), and the
+    probe exclusion still reaches the scan."""
+    from ingestion_pipeline_spark.plans import query_map
+
+    df = query_map()["v_ivf_topk"](spark, SF)
+    assert _eval_nodes_per_kernel(df) == {"nearest": 1, "cos": 1}
+    assert "Not(EqualTo(vec_id,0))" in plan_text(df, "formatted")
 
 
 def test_cascade_docs_join_stays_broadcast(spark):

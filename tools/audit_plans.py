@@ -23,6 +23,17 @@ Checks per query:
   scale-killer over the corpus (the retired ntile form of
   d_difficulty_buckets).  Every allowlisted query documents WHY its
   frame is bounded; anything else is flagged.
+- Python UDFs evaluated twice: one UDF call planned in more than one
+  ``ArrowEvalPython``/``BatchEvalPython`` node runs its kernel once per
+  node (the optimizer copies a deterministic UDF into a pushed-down
+  filter or into both consumers of a collapsed projection; the kernels
+  are marked non-deterministic against that, SCALE.md "UDF-fed
+  joins"). Counted on the formatted plan, so a persisted frame's plan
+  counts once however often it is read. A ``localCheckpoint``ed frame
+  shows as ``Scan ExistingRDD`` with its lineage cut off, so a
+  duplicate inside a checkpointed frame is invisible here;
+  ``tests/test_plan_pins_r13.py`` pins the signature frames that the
+  near-dup queries checkpoint.
 
 Exit 1 on any unexpected flag — wired for CI use.
 """
@@ -212,6 +223,48 @@ def unpartitioned_windows(plan: str) -> int:
     return n
 
 
+def udf_eval_nodes(formatted: str) -> Counter:
+    """``{udf call: eval nodes}``: how many ``ArrowEvalPython``/
+    ``BatchEvalPython`` nodes of a formatted plan evaluate each Python
+    UDF call.
+
+    A call is keyed by its text with its result id
+    (``sig(text#1)#54``), which the optimizer keeps when it copies the
+    expression. An executed adaptive plan prints a ``Final Plan``
+    beside its ``Initial Plan``, the same nodes under new ids, so only
+    nodes of the initial plans count."""
+    # node ids of the operator trees: the plan's and each subquery's,
+    # each running up to its first "(id) Name" detail block
+    tree_ids: set[str] = set()
+    in_tree, final_col = False, None
+    for line in formatted.splitlines():
+        if line.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree = True
+        elif re.match(r"\(\d+\) ", line):
+            in_tree = False
+        elif not in_tree:
+            continue
+        elif final_col is not None:
+            if line.find("== Initial Plan ==") == final_col:
+                final_col = None
+        elif "== Final Plan ==" in line:
+            final_col = line.find("== Final Plan ==")
+        else:
+            tree_ids.update(re.findall(r"\((\d+)\)", line))
+    calls: dict[str, set[str]] = {}
+    # the call list may span lines: literals keep their newlines
+    evals = re.finditer(
+        r"^\((\d+)\) (?:Arrow|Batch)EvalPython\n.*?^Arguments: \[(.*?)\], \[pythonUDF\d",
+        formatted,
+        re.M | re.S,
+    )
+    for node in evals:
+        if node.group(1) in tree_ids:
+            for call in re.findall(r"\w+\(.*?\)#\d+", node.group(2), re.S):
+                calls.setdefault(call, set()).add(node.group(1))
+    return Counter({call: len(ids) for call, ids in calls.items()})
+
+
 def audit(name: str, df) -> list[str]:
     """Print the query's audit line and return its flags."""
     from ingestion_pipeline_spark.plans import plan_text
@@ -230,6 +283,9 @@ def audit(name: str, df) -> list[str]:
     if n_gwin and name not in GLOBAL_WINDOW_ALLOWED:
         flags.append(f"unpartitioned Window x{n_gwin} (single-task sort"
                      " of its whole input; allowlist only bounded frames)")
+    for call, n in sorted(udf_eval_nodes(formatted).items()):
+        if n > 1:
+            flags.append(f"Python UDF {call} evaluated in {n} nodes")
     for line in plan.splitlines():
         if "FileScan parquet" not in line:
             continue
