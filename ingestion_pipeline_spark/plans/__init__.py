@@ -89,9 +89,13 @@ def release_caches(spark) -> int:
     ``localCheckpoint`` block is lost, not recomputed — a DataFrame that
     still reads it fails on its next action.
 
-    Returns the number of RDDs released: 0, with a warning, when the
-    session has no JVM SparkContext handle (Spark Connect, a stopped
-    context), where only the catalog cache can be cleared.
+    Returns the number of persisted RDDs released that the cache
+    manager does not track (``localCheckpoint`` and RDD-level
+    ``persist`` blocks): ``clearCache`` runs first and already drops
+    every ``DataFrame.persist``/``cache`` entry, so those are not
+    counted. 0, with a warning, when the session has no JVM
+    SparkContext handle (Spark Connect, a stopped context), where only
+    the catalog cache can be cleared.
     """
     # clearCache first: unpersisting blocks while the CacheManager entry
     # survives leaves a stale entry that a LATER query with a matching

@@ -5,17 +5,23 @@ each — ``processor.py:55-62``; one vector upsert per text —
 ``consumer/consumer.py:117-120``). Here every sink is a set-oriented
 append of a whole DataFrame/micro-batch:
 
-- warehouse append  → partitioned parquet (K1; JDBC/Snowflake would be
+- warehouse append  → flat parquet (K1; JDBC/Snowflake would be
   ``.format("jdbc")`` with the same frame).
+- warehouse upsert  → the same flat table, keep-latest by whole-table
+  rewrite (K1+).
 - vector table      → parquet with array<float> column (K2; the "index"
   is just a table — SURVEY §2.2).
 - quarantine        → dead-letter parquet with reason + timestamp (W7).
 - bootstrap         → create-if-absent semantics via mergeSchema-free
   append to a fixed path (K3).
 
-At 100 TB: warehouse appends are partitioned by publication month so
-date-range queries (F6) prune; appends are idempotent per micro-batch
-via deterministic file naming under streaming checkpoints.
+The warehouse has one layout, flat, because a re-delivery may move a
+record's publication month: the perfbench ``ingest`` delta changes it
+for 1,733, 1,746 and 1,719 of 1,920 re-deliveries (seeds 1-3). A
+month-partitioned upsert that reads only the batch's months never finds
+the old row and keeps both. An upsert that rewrites only what it
+touches needs a partition derived from the key (a bucket of
+``cve_id``'s hash), not from a field an update can change.
 """
 
 from __future__ import annotations
@@ -23,20 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("append")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+# the upsert's merge key and the version column whose maximum wins
+_KEY = "cve_id"
+_VERSION = "date_updated"
 
 
-def warehouse_append(df: DataFrame, path: str) -> None:
-    """K1 — the CVE_PERSISTENT shape (cve_id, date_updated,
-    date_published, data), partitioned by publication month for partition
-    pruning on F6 date-range filters."""
-    out = df.withColumn("pub_month", F.date_format("date_published", "yyyy-MM"))
-    append_parquet(out, path, partition_by=["pub_month"])
+def append_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("append").parquet(path)
 
 
 def quarantine_append(df: DataFrame, path: str, reason: str) -> None:
@@ -46,42 +45,56 @@ def quarantine_append(df: DataFrame, path: str, reason: str) -> None:
     append_parquet(out, path)
 
 
-def warehouse_upsert(
-    spark,
-    batch: DataFrame,
-    path: str,
-    key: str = "cve_id",
-    version_col: str = "date_updated",
-) -> None:
+def warehouse_upsert(spark, batch: DataFrame, path: str) -> None:
     """K1 upgraded from blind append to MERGE semantics: latest record
-    per key wins (the reference re-INSERTs every delta record —
+    per ``cve_id`` wins (the reference re-INSERTs every delta record —
     `processor.py:55-62` — and leaves duplicate cve_ids for readers to
     sort out; delta dumps re-deliver updated CVEs, so keep-latest by
     date_updated is the intended semantics).
 
-    Implementation: union existing + batch, keep the max-``version_col``
-    row per key (deterministic tie-break on the key itself), rewrite.
-    The read side is materialized eagerly before the overwrite so the
-    job never reads the files it is deleting. At warehouse scale this
-    rewrite touches only the partitions present in the batch when the
-    table is month-partitioned (warehouse_append's layout) — pair with
-    dynamic partition overwrite; table formats with native MERGE
-    (Delta/Iceberg) slot in behind the same function signature.
+    Implementation: union the stored table with the batch, keep the
+    max-``date_updated`` row per key, rewrite the whole table flat (the
+    layout ``append_parquet`` writes). On equal ``date_updated`` the
+    batch row beats the stored one; two batch rows tied on both stay an
+    arbitrary pick. The merged rows are checkpointed eagerly before the
+    overwrite so the job never reads the files it is deleting.
+
+    Raises ``ValueError``, leaving the table as it was, when the stored
+    table's columns differ from the batch's: merging would drop the
+    extra columns (a legacy ``partitionBy`` directory among them) and
+    flatten the table. Table formats with native MERGE (Delta/Iceberg)
+    slot in behind the same function signature.
     """
+    from pyspark.sql.window import Window
+
+    merged = batch.withColumn("_from_batch", F.lit(1))
     if _table_exists(spark, path):
-        merged = spark.read.parquet(path).select(*batch.columns).unionByName(batch)
-    else:  # first write — no table yet
-        merged = batch
-    _keep_latest(merged, key, version_col).write.mode("overwrite").parquet(path)
+        stored = spark.read.parquet(path)
+        if set(stored.columns) != set(batch.columns):
+            raise ValueError(
+                f"cannot upsert into {path!r}: its columns {sorted(stored.columns)} "
+                f"differ from the batch's {sorted(batch.columns)}"
+            )
+        old = stored.select(*batch.columns).withColumn("_from_batch", F.lit(0))
+        merged = old.unionByName(merged)
+    w = Window.partitionBy(_KEY).orderBy(F.col(_VERSION).desc(), F.col("_from_batch").desc())
+    (
+        merged.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_from_batch")
+        .localCheckpoint(eager=True)  # cut source files loose pre-overwrite
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _table_exists(spark, path: str) -> bool:
     """Probe the table path EXPLICITLY (Hadoop FS — works for local,
     HDFS, s3a alike) instead of catching every read failure: a
     transient IO error or schema mismatch swallowed as "first write"
-    would let the upserts' overwrite replace the table with batch-only
-    rows — silent data loss for pre-existing keys. Real read errors
-    propagate.
+    would let an overwrite (the upsert, the CMS streaming writer)
+    replace the table with batch-only rows — silent data loss for
+    pre-existing keys. Real read errors propagate.
 
     The probe needs the session's JVM handles: without them (Spark
     Connect, a stopped context) it raises ``RuntimeError`` rather than
@@ -97,19 +110,6 @@ def _table_exists(spark, path: str) -> bool:
         )
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(jsc.hadoopConfiguration()).exists(jpath)
-
-
-def _keep_latest(merged: DataFrame, key: str, version_col: str) -> DataFrame:
-    """The keep-latest merge rule both upserts share (see ``warehouse_upsert``)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(key).orderBy(F.col(version_col).desc(), F.col(key))
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)  # cut source files loose pre-overwrite
-    )
 
 
 def jdbc_append(
@@ -178,63 +178,40 @@ def write_bucketed(
     w.saveAsTable(name)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    partition_by: list[str] | None = None,
-) -> int:
+def compact_parquet(spark, path: str, target_file_bytes: int = 256 * 1024 * 1024) -> int:
     """Small-file compaction — the maintenance pass every streaming
     parquet sink eventually needs: micro-batch appends accumulate files
     far below row-group size, and at 100 TB an unfixed table turns every
     scan into a metadata storm (one task + one footer read per tiny
     file).
 
-    Rewrites ``path`` so each output file targets ``target_file_bytes``
-    (sized from the CURRENT on-disk bytes, so compression ratio is
-    carried over rather than guessed), preserving an optional partition
-    layout. Returns the number of files after compaction.
+    Rewrites the flat table at ``path`` so each output file targets
+    ``target_file_bytes`` (sized from the CURRENT on-disk bytes, so
+    compression ratio is carried over rather than guessed). Returns the
+    number of files after compaction.
 
     Scale notes: the rewrite is one ``coalesce`` (no shuffle — file
-    merging does not need key placement) unless a partition layout is
-    (re)applied, which costs the same single shuffle any partitioned
-    write pays. Run it per-partition in production (compact only
-    partitions whose file count exceeds a threshold) — the API takes
-    the partition directory as ``path`` for exactly that.
+    merging does not need key placement).
     """
     import glob
     import os
     import shutil
     import tempfile
 
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))  # ceil div
-    df = spark.read.parquet(path)
+    def parquet_files() -> list[str]:
+        found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        return [f for f in found if os.path.isfile(f)]
 
+    total = sum(os.path.getsize(f) for f in parquet_files())
+    n_out = max(1, -(-total // target_file_bytes))  # ceil div
     tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path.rstrip("/")))
     try:
-        w = df.coalesce(int(n_out)).write.mode("overwrite")
-        if partition_by:
-            w = df.repartition(int(n_out), *[F.col(c) for c in partition_by]).write.mode(
-                "overwrite"
-            ).partitionBy(*partition_by)
-        w.parquet(tmp)
+        spark.read.parquet(path).coalesce(int(n_out)).write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path)
         os.rename(tmp, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return len(
-        [
-            f
-            for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            if os.path.isfile(f)
-        ]
-    )
+    return len(parquet_files())
 
 
 def jdbc_idempotent_batch_writer(
@@ -292,45 +269,3 @@ def jdbc_idempotent_batch_writer(
         jdbc_append(tagged, url, table, driver=driver, num_partitions=num_partitions)
 
     return write_batch
-
-
-def warehouse_upsert_partitioned(
-    spark,
-    batch: DataFrame,
-    path: str,
-    key: str = "cve_id",
-    version_col: str = "date_updated",
-    partition_col: str = "pub_month",
-) -> list[str]:
-    """The O(delta) form of ``warehouse_upsert`` for month-partitioned
-    tables: only the partitions PRESENT IN THE BATCH are read, merged
-    (keep-latest per key, same semantics as ``warehouse_upsert``) and
-    rewritten under ``partitionOverwriteMode=dynamic`` — untouched
-    months' files are never read or replaced. A daily CVE delta
-    touching 2 of 120 months costs 2 partition rewrites, not a table
-    scan. Returns the list of partitions rewritten.
-
-    Table formats with native MERGE (Delta/Iceberg) replace this
-    function one-for-one; the call-site contract is identical."""
-    if partition_col not in batch.columns:
-        batch = batch.withColumn(
-            partition_col, F.date_format("date_published", "yyyy-MM")
-        )
-    months = [r[0] for r in batch.select(partition_col).distinct().collect()]
-    if _table_exists(spark, path):
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(partition_col).isin(months))
-            .select(*batch.columns)
-        )
-        merged = existing.unionByName(batch)
-    else:  # first write — no table yet
-        merged = batch
-    latest = _keep_latest(merged, key, version_col)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        latest.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return sorted(months)

@@ -1,6 +1,6 @@
 """The switch-from-the-reference capstone: the WHOLE reference DAG in
 one test, engine API only — zip download → extract → directory scan →
-core projection → warehouse append (month-partitioned parquet) + embed
+core projection → warehouse append (flat parquet) + embed
 → vector table → retrieval (cosine top-k) → context assembly → LLM
 answer (deterministic stub) → confidence verdict. Every stage is the
 same operator the piecewise tests verify; this asserts they COMPOSE.
@@ -44,7 +44,7 @@ def test_reference_dag_end_to_end(spark, tmp_path):
     )
     from ingestion_pipeline_spark.functions.scoring import base_confidence
     from ingestion_pipeline_spark.operators.similarity import brute_force_topk
-    from ingestion_pipeline_spark.sinks import warehouse_append
+    from ingestion_pipeline_spark.sinks import append_parquet
     from ingestion_pipeline_spark.sources import files
     from ingestion_pipeline_spark.streaming.pipeline import (
         extract_embedding_rows,
@@ -73,11 +73,11 @@ def test_reference_dag_end_to_end(spark, tmp_path):
     parsed = files.read_cve_json_dir(spark, extracted)
     assert parsed.count() == 3
 
-    # --- K1: month-partitioned warehouse ------------------------------
+    # --- K1: flat warehouse, the stream's append ----------------------
     wh = str(tmp_path / "warehouse")
-    warehouse_append(extract_warehouse_rows(parsed), wh)
+    append_parquet(extract_warehouse_rows(parsed), wh)
     stored = spark.read.parquet(wh)
-    assert stored.count() == 3 and "pub_month" in stored.columns
+    assert stored.count() == 3
 
     # --- K2/V1: embed + vector table ----------------------------------
     embed = lambda df, c: df.withColumn(  # noqa: E731

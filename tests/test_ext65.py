@@ -673,16 +673,24 @@ def test_split_leakage_capped_recompute(spark, tmp_path):
 
 def test_release_caches_releases_clean_corpus_blocks(spark, sf_dir):
     """clean_corpus_frames exposes its persisted handle; the one release
-    path drops its cached blocks, and a second call finds nothing."""
+    path drops its cached blocks, and a second call finds nothing.
+
+    The release is checked on the frame and on the context's persistent
+    RDDs, not on ``release_caches``' count: ``clearCache`` already drops
+    ``cleaned``, so the count covers only RDDs the cache manager does not
+    track and depends on what earlier tests left behind."""
     from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.plans.registry_ext53 import (
         clean_corpus_frames,
     )
 
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
     fr = clean_corpus_frames(spark, sf_dir)
     n = fr["result"].count()
     assert n > 0
     assert fr["cleaned"].storageLevel.useMemory
-    assert release_caches(spark) > 0
+    assert not persistent().isEmpty()
+    release_caches(spark)
     assert not fr["cleaned"].storageLevel.useMemory
+    assert persistent().isEmpty()
     assert release_caches(spark) == 0
