@@ -16,25 +16,28 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# decimal places of the fixture money columns
+SCALE = 2
 
-def dec(col: Column | str, scale: int = 2) -> Column:
+
+def dec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal(18,{scale})")
+    return c.cast(f"decimal(18,{SCALE})")
 
 
-def exact_sum(col: Column | str, alias: str, scale: int = 2) -> Column:
+def exact_sum(col: Column | str, alias: str) -> Column:
     """SUM as decimal, returned as double: associative → deterministic."""
-    return F.sum(dec(col, scale)).cast("double").alias(alias)
+    return F.sum(dec(col)).cast("double").alias(alias)
 
 
-def exact_avg(col: Column | str, alias: str, scale: int = 2) -> Column:
+def exact_avg(col: Column | str, alias: str) -> Column:
     """AVG = exact decimal sum / count, divided in double precision.
 
     Division happens once, on two deterministic operands, so the double
     result is identical regardless of partitioning or engine.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c, scale)).cast("double") / F.count(c)).alias(alias)
+    return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)
 
 
 def money(col: Column | str) -> Column:
@@ -85,12 +88,12 @@ def one_plus(col: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def cents(col: Column | str, scale: int = 2) -> Column:
-    """A non-negative ``scale``-decimal double as an exact integer in
-    units of 10^-scale (2 → cents). floor(x*10^s + 0.5): primitive
-    codegen math, no Decimal/BigDecimal anywhere."""
+def cents(col: Column | str) -> Column:
+    """A non-negative ``SCALE``-decimal double as an exact integer in
+    units of 10^-SCALE (cents). floor(x*10^s + 0.5): primitive codegen
+    math, no Decimal/BigDecimal anywhere."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.floor(c * (10 ** scale) + F.lit(0.5)).cast("long")
+    return F.floor(c * (10 ** SCALE) + F.lit(0.5)).cast("long")
 
 
 def cents_disc_price() -> Column:

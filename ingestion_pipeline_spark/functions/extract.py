@@ -13,25 +13,26 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def nz_str(col: Column, default: str = "") -> Column:
+def nz_str(col: Column) -> Column:
     """String path with reference default '' (consumer/consumer.py:80-82)."""
-    return F.coalesce(col, F.lit(default))
+    return F.coalesce(col, F.lit(""))
 
 
-def nz_num(col: Column, default: float = 0.0) -> Column:
+def nz_num(col: Column) -> Column:
     """Numeric path with reference default 0 (consumer/consumer.py:99-100)."""
-    return F.coalesce(col.cast("double"), F.lit(float(default)))
+    return F.coalesce(col.cast("double"), F.lit(0.0))
 
 
-def jget_str(json_col: Column | str, path: str, default: str = "") -> Column:
-    """``get_json_object`` with default-on-missing — P1 over raw JSON."""
+def jget_str(json_col: Column | str, path: str) -> Column:
+    """``get_json_object`` with default-on-missing — P1 over raw JSON; a
+    missing path reads as ``"0"`` (the numeric field as text)."""
     c = F.col(json_col) if isinstance(json_col, str) else json_col
-    return F.coalesce(F.get_json_object(c, path), F.lit(default))
+    return F.coalesce(F.get_json_object(c, path), F.lit("0"))
 
 
-def jget_num(json_col: Column | str, path: str, default: float = 0.0) -> Column:
+def jget_num(json_col: Column | str, path: str) -> Column:
     c = F.col(json_col) if isinstance(json_col, str) else json_col
-    return F.coalesce(F.get_json_object(c, path).cast("double"), F.lit(float(default)))
+    return F.coalesce(F.get_json_object(c, path).cast("double"), F.lit(0.0))
 
 
 def first_elem(arr: Column) -> Column:
@@ -131,8 +132,8 @@ def nvd_cvss(nvd: Column) -> tuple[Column, Column, Column]:
     is a UI string a typed double column cannot hold)."""
     data = first_elem(nvd.getField("cve").getField("metrics").getField("cvssMetricV31")).getField("cvssData")
     return (
-        nz_str(data.getField("attackVector"), ""),
-        nz_str(data.getField("baseSeverity"), ""),
+        nz_str(data.getField("attackVector")),
+        nz_str(data.getField("baseSeverity")),
         nz_num(data.getField("baseScore")),
     )
 
@@ -154,5 +155,5 @@ ENHANCE_SUFFIX = (
 )
 
 
-def enhance_query(q: Column, suffix: str = ENHANCE_SUFFIX) -> Column:
-    return F.when(q.contains("CVE-"), F.concat(q, F.lit(suffix))).otherwise(q)
+def enhance_query(q: Column) -> Column:
+    return F.when(q.contains("CVE-"), F.concat(q, F.lit(ENHANCE_SUFFIX))).otherwise(q)

@@ -19,33 +19,34 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# hex digits of the md5 bucket: resolution 1/16^4 = 1/65536
+_HEX = 4
+_SAMPLE_SALT = "s0"
+# dataset_split's train and val fractions (test gets the remainder)
+_SPLIT_SALT, _TRAIN, _VAL = "split0", 0.8, 0.1
 
-def _bucket(key: Column, salt: str, k: int = 4) -> Column:
-    """First k hex chars of md5(salt || key) as an integer in
-    [0, 16^k) — the row's stable sampling bucket."""
+
+def _bucket(key: Column, salt: str) -> Column:
+    """First ``_HEX`` hex chars of md5(salt || key) as an integer in
+    [0, 16^_HEX) — the row's stable sampling bucket."""
     digest = F.md5(F.concat(F.lit(salt), key.cast("string")))
-    return F.conv(F.substring(digest, 1, k), 16, 10).cast("long")
+    return F.conv(F.substring(digest, 1, _HEX), 16, 10).cast("long")
 
 
-def deterministic_sample(key: Column, fraction: float, salt: str = "s0") -> Column:
+def deterministic_sample(key: Column, fraction: float) -> Column:
     """Boolean keep-predicate selecting ~``fraction`` of rows, exactly
     reproducible from the key alone. Resolution is 1/65536."""
-    threshold = int(round(fraction * 16**4))
-    return _bucket(key, salt) < threshold
+    threshold = int(round(fraction * 16**_HEX))
+    return _bucket(key, _SAMPLE_SALT) < threshold
 
 
-def dataset_split(
-    key: Column,
-    train: float = 0.8,
-    val: float = 0.1,
-    salt: str = "split0",
-) -> Column:
+def dataset_split(key: Column) -> Column:
     """'train' | 'val' | 'test' assignment from contiguous bucket
     ranges (test gets the remainder). Same key → same split, on any
     engine, forever — the property dataset lineage requires."""
-    b = _bucket(key, salt)
-    t_hi = int(round(train * 16**4))
-    v_hi = t_hi + int(round(val * 16**4))
+    b = _bucket(key, _SPLIT_SALT)
+    t_hi = int(round(_TRAIN * 16**_HEX))
+    v_hi = t_hi + int(round(_VAL * 16**_HEX))
     return (
         F.when(b < t_hi, F.lit("train"))
         .when(b < v_hi, F.lit("val"))

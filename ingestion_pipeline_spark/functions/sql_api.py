@@ -55,5 +55,5 @@ def register_all(spark: SparkSession) -> None:
         xxhash64(regexp_replace(trim(lower(x)), '\\\\s+', ' '))"""
     )
     # -- Python-backed functions: Arrow-batched pandas UDFs -------------
-    spark.udf.register("unicode_nfc", unicode_normalize_udf("NFC"))
-    spark.udf.register("zlib_ratio", compression_ratio_udf(6))
+    spark.udf.register("unicode_nfc", unicode_normalize_udf())
+    spark.udf.register("zlib_ratio", compression_ratio_udf())

@@ -191,12 +191,8 @@ def langid(col: Column) -> Column:
     )
 
 
-def langid_join(
-    df,
-    text_col: str = "text",
-    alias: str = "predicted_lang",
-):
-    """Language ID over a corpus frame: argmax marker hits,
+def langid_join(df):
+    """Language ID of a corpus frame's ``text`` as ``predicted_lang``: argmax marker hits,
     alphabetical tie-break, 'und' on zero hits.
 
     The BOUND column fold (``langid``, r12) — one tokenize + |langs|
@@ -211,7 +207,7 @@ def langid_join(
     join-back second corpus scan of the explode → lexicon-join shape it
     replaced (tx_langid plan: 4 scans / 8 Exchange → 1 scan / 0
     Exchange)."""
-    return df.withColumn(alias, langid(F.col(text_col)))
+    return df.withColumn("predicted_lang", langid(F.col("text")))
 
 
 def normalized_content(col: Column) -> Column:
@@ -310,8 +306,8 @@ def word_shingles_np(k: int, split: str = "[^a-z]+"):
     return sh
 
 
-def unicode_normalize_udf(form: str = "NFC", strip_accent_marks: bool = False):
-    """Unicode normalization as an Arrow-batched pandas UDF — no Spark
+def unicode_normalize_udf(strip_accent_marks: bool = False):
+    """NFC Unicode normalization as an Arrow-batched pandas UDF — no Spark
     builtin covers NFC/NFKC (reference corpora arrive in mixed
     composed/decomposed encodings; normalization must precede hashing
     or exact dedup silently splits identical texts).
@@ -336,7 +332,7 @@ def unicode_normalize_udf(form: str = "NFC", strip_accent_marks: bool = False):
                 t = "".join(
                     c for c in decomposed if unicodedata.category(c) != "Mn"
                 )
-            return unicodedata.normalize(form, t)
+            return unicodedata.normalize("NFC", t)
 
         return texts.map(one)
 
@@ -357,11 +353,14 @@ def strip_markup(col: Column) -> Column:
     return F.trim(F.regexp_replace(c, "\\s+", " "))
 
 
-def c4_sentence_filter(col: Column, min_words: int = 4) -> Column:
+_C4_MIN_WORDS = 4
+
+
+def c4_sentence_filter(col: Column) -> Column:
     """C4-style segment-level cleaning (Raffel et al. 2020 §2.2, the
     'three-sentence / five-word line' family of rules, applied at
     sentence granularity): split on sentence boundaries, keep segments
-    with >= ``min_words`` words, rejoin. The boundary is the literal
+    with >= ``_C4_MIN_WORDS`` words, rejoin. The boundary is the literal
     '. ' (not a lookbehind — DuckDB's RE2 oracle engine has none), so
     the same split is expressible everywhere. Higher-order array
     functions only — single-arg lambdas throughout (multi-arg lambdas
@@ -372,18 +371,22 @@ def c4_sentence_filter(col: Column, min_words: int = 4) -> Column:
         lambda s: F.size(
             F.filter(F.split(s, " "), lambda w: w != F.lit(""))
         )
-        >= F.lit(min_words),
+        >= F.lit(_C4_MIN_WORDS),
     )
     return F.array_join(kept, ". ")
 
 
-def compression_ratio_udf(level: int = 6):
+# plans/bounds.py recomputes the ratio at its own copy of this level
+ZLIB_LEVEL = 6
+
+
+def compression_ratio_udf():
     """zlib compression ratio (compressed/raw bytes) as a quality
     signal: highly repetitive or templated text compresses far below
     natural prose, and near-random noise refuses to compress —
     both tails get gated in pretraining pipelines (the Gopher/RedPajama
     family of heuristics alongside the repetition ratio). Deterministic
-    for a fixed zlib level, so results are reproducible; Arrow-batched,
+    for the fixed ``ZLIB_LEVEL``, so results are reproducible; Arrow-batched,
     shuffle-free. Empty/NULL text → NULL."""
     import zlib
 
@@ -396,7 +399,7 @@ def compression_ratio_udf(level: int = 6):
             if not t:
                 return None
             raw = t.encode("utf-8")
-            return len(zlib.compress(raw, level)) / len(raw)
+            return len(zlib.compress(raw, ZLIB_LEVEL)) / len(raw)
 
         return texts.map(one)
 

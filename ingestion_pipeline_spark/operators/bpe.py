@@ -22,16 +22,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the registry's merge count and vocabulary bound; plans/bpe_sql.py
+# reads both
+BPE_MERGES, BPE_TOP_N = 10, 200
 
-def word_frequencies(
-    docs: DataFrame, text_col: str = "text", top_n: int = 200
-) -> DataFrame:
+
+def word_frequencies(docs: DataFrame, top_n: int) -> DataFrame:
     """One corpus pass: lowercase alpha word -> total frequency, top-N
     by (freq DESC, word ASC). ``top_n`` bounds the training table; at
     scale raise it (the table stays vocabulary-sized, not corpus-sized)."""
     words = (
         docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word")
+            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
         )
         .filter(F.col("word").rlike("^[a-z]+$"))
         .groupBy("word")
@@ -58,9 +60,7 @@ def _merge_pair(sym: Column, a: str, b: str) -> Column:
     )
 
 
-def bpe_train_local(
-    spark: SparkSession, words: DataFrame, n_merges: int = 10
-) -> DataFrame:
+def bpe_train_local(spark: SparkSession, words: DataFrame, n_merges: int) -> DataFrame:
     """The production-shaped trainer: distributed word-frequency
     aggregation, then the merge loop in driver memory.
 
@@ -110,7 +110,6 @@ def bpe_train_local(
 def bpe_tokenize_counts(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
 ) -> DataFrame:
     """Apply a learned merge list to tokenize documents — the inverse of
     training, as PURE PLAN: for each document, lowercase-alpha words →
@@ -127,7 +126,7 @@ def bpe_tokenize_counts(
     the standard BPE apply semantics, pinned against a Python reference
     in tests."""
     words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z]+"),
+        F.split(F.lower(F.col("text")), "[^a-z]+"),
         lambda w: w != F.lit(""),
     )
 
@@ -152,8 +151,6 @@ def bpe_tokenize_counts(
 def bpe_tokenize_counts_arrow(
     docs: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The PRODUCTION BPE apply: the merge list broadcasts (closure
@@ -169,17 +166,17 @@ def bpe_tokenize_counts_arrow(
     are a dict lookup per occurrence.
 
     Same greedy left-to-right, training-order application semantics;
-    same output schema (id, n_words, n_bpe_tokens). ``carry_cols``
-    pass extra input columns through untouched (id, *carries,
+    same output schema (doc_id, n_words, n_bpe_tokens). ``carry_cols``
+    pass extra input columns through untouched (doc_id, *carries,
     n_words, n_bpe_tokens) so downstream rollups (per-lang fertility)
     need no corpus-keyed join back to the source frame."""
     import re
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    id_field = docs.schema[id_col]
+    id_field = docs.schema["doc_id"]
     out_schema = StructType(
-        [StructField(id_col, id_field.dataType, id_field.nullable)]
+        [StructField("doc_id", id_field.dataType, id_field.nullable)]
         + [
             StructField(c, docs.schema[c].dataType, docs.schema[c].nullable)
             for c in carry_cols
@@ -217,20 +214,20 @@ def bpe_tokenize_counts_arrow(
 
         for pdf in batches:
             n_words, n_tokens = [], []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 ws = word_re.findall((text or "").lower())
                 n_words.append(len(ws))
                 n_tokens.append(sum(n_tok(w) for w in ws))
             # positional alignment by construction (advice r6): the
             # computed counts are plain lists, so carried Series must
             # drop any non-RangeIndex an upstream batch might carry
-            out = {id_col: pdf[id_col].reset_index(drop=True)}
+            out = {"doc_id": pdf["doc_id"].reset_index(drop=True)}
             for c in carry_cols:
                 out[c] = pdf[c].reset_index(drop=True)
             out["n_words"] = n_words
             out["n_bpe_tokens"] = n_tokens
             yield pd.DataFrame(out)
 
-    return docs.select(id_col, *carry_cols, text_col).mapInPandas(
+    return docs.select("doc_id", *carry_cols, "text").mapInPandas(
         run, out_schema
     )

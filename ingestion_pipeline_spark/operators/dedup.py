@@ -38,12 +38,21 @@ from pyspark.sql.window import Window
 from ..functions.text import content_md5, word_ngrams, word_shingles_np, word_tokens
 from .relational import spread
 
+# word n-gram length of every shingle set
+SHINGLE_N = 3
+# xxhash64 seed of hashed_shingles
+HASH_SEED = 42
+# minhash_lsh_candidates' splitmix64 signature: 16 bands of 2 rows.
+# plans/bounds.py keeps its own copies of N_HASHES, N_BANDS and
+# HASH_SEED (it imports no Spark); tests/test_bounds.py pins them equal.
+N_HASHES, N_BANDS = 32, 16
+# incremental_novel's near-duplicate Jaccard threshold
+_NOVEL_JACCARD = 0.12
+
 
 def banded_self_join_pairs(
     banded: DataFrame,
     id_col: str = "doc",
-    band_col: str = "band",
-    bucket_col: str = "bucket",
     join_hint: str | None = "merge",
 ) -> DataFrame:
     """All distinct ``(id_a < id_b)`` pairs sharing a (band, bucket) —
@@ -56,7 +65,7 @@ def banded_self_join_pairs(
     l = banded.alias("l") if join_hint is None else banded.hint(join_hint).alias("l")
     r = banded.alias("r")
     cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    for k in (band_col, bucket_col):
+    for k in ("band", "bucket"):
         cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
     return l.join(r, cond).select(
         F.col(f"l.{id_col}").alias("id_a"),
@@ -78,8 +87,8 @@ def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingle set (distinct). Column-only: sliding window via
+def shingles(col: Column) -> Column:
+    """Word ``SHINGLE_N``-gram shingle set (distinct). Column-only: sliding window via
     transform over token indices.
 
     The token array is bound to a lambda variable by wrapping it in a
@@ -87,6 +96,7 @@ def shingles(col: Column, n: int = 3) -> Column:
     tokenization is evaluated once per row, not once per reference;
     per-gram assembly uses element_at (no array copies like slice)."""
     toks = word_tokens(F.lower(col))
+    n = SHINGLE_N
 
     def build(t: Column) -> Column:
         count = F.size(t)
@@ -100,17 +110,17 @@ def shingles(col: Column, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(toks), build), 1)
 
 
-def hashed_shingles(shingle_col: Column, seed: int = 42) -> Column:
+def hashed_shingles(shingle_col: Column) -> Column:
     """One expensive string-hash pass: shingle strings → array<bigint>.
     Materialize this as a column BEFORE computing signatures so it is
     evaluated once, not once per hash function."""
-    return F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(seed)))
+    return F.transform(shingle_col, lambda s: F.xxhash64(s, F.lit(HASH_SEED)))
 
 
-def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
+def minhash_md5_slots(n_hashes: int = 8):
     """Arrow batch kernel for the PORTABLE md5 MinHash family: raw TEXT
     column → array of ``n_hashes`` lexicographic-min hex digests over
-    the distinct word ``n``-gram shingles, value-identical to the
+    the distinct word ``SHINGLE_N``-gram shingles, value-identical to the
     interpreted-HOF form
     ``array_min(transform(shingles(text), s -> md5('{i}|' || s)))``
     and therefore to the DuckDB oracle's ``list_min(list_transform(
@@ -159,7 +169,7 @@ def minhash_md5_slots(n_hashes: int = 8, n: int = 3):
         cache: dict[str, list[str]] = {}
         out = []
         for t in texts:
-            grams = set(word_ngrams(t, n)) if t is not None else set()
+            grams = set(word_ngrams(t, SHINGLE_N)) if t is not None else set()
             if not grams:
                 out.append([None] * n_hashes)
                 continue
@@ -239,8 +249,8 @@ def bucket_ranked(bands: DataFrame) -> DataFrame:
     )
 
 
-def jaccard3_bp(n: int = 3):
-    """Scalar Arrow kernel: exact word ``n``-gram Jaccard of two TEXT
+def jaccard3_bp():
+    """Scalar Arrow kernel: exact word ``SHINGLE_N``-gram Jaccard of two TEXT
     columns in basis points (``|A∩B| * 10000 div |A∪B|``, trunc
     division) — the verify stage of the LSH dedup/calibration
     pipelines, value-identical to the DuckDB oracle's
@@ -258,7 +268,7 @@ def jaccard3_bp(n: int = 3):
     at the 100× replica: 1.1M pair verifies ≈ 2-3 s of kernel time.
 
     NULL/short texts yield NULL (never hit by the LSH call sites —
-    banding already filtered docs with < n tokens)."""
+    banding already filtered docs with < SHINGLE_N tokens)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -269,7 +279,7 @@ def jaccard3_bp(n: int = 3):
         def grams(s):
             g = cache.get(s)
             if g is None:
-                g = cache[s] = frozenset(word_ngrams(s, n))
+                g = cache[s] = frozenset(word_ngrams(s, SHINGLE_N))
             return g
 
         out = []
@@ -286,16 +296,17 @@ def jaccard3_bp(n: int = 3):
     return jac
 
 
-def minhash_bands(df: DataFrame, n_hashes: int = 32, n_bands: int = 16):
+def minhash_bands(df: DataFrame):
     """(doc, hashed-shingles) → (doc, band, bucket) rows via ONE
-    mapInPandas crossing: the minhash mins AND the band fan-out happen
-    in numpy — no Generate node, so no Python-UDF-inside-generator
-    restriction, and the n_bands-way row expansion costs one Arrow
+    mapInPandas crossing: the ``N_HASHES`` minhash mins AND the band
+    fan-out happen in numpy — no Generate node, so no Python-UDF-inside-generator
+    restriction, and the ``N_BANDS``-way row expansion costs one Arrow
     batch instead of an explode over a UDF column. Expects columns
     ``doc`` and ``__hs`` (array<bigint>)."""
     import numpy as np
     from typing import Iterator
 
+    n_hashes, n_bands = N_HASHES, N_BANDS
     seeds = np.arange(1, n_hashes + 1, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
     c1, c2 = np.uint64(0xBF58476D1CE4E5B9), np.uint64(0x94D049BB133111EB)
     rows_per_band = n_hashes // n_bands
@@ -327,16 +338,9 @@ def minhash_bands(df: DataFrame, n_hashes: int = 32, n_bands: int = 16):
     return df.mapInPandas(run, "doc long, band int, bucket long")
 
 
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n_hashes: int = 32,
-    n_bands: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
+def minhash_lsh_candidates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Near-dup candidate pairs (id_a < id_b) whose minhash signatures
-    collide in ≥1 band (default 16 bands × 2 rows: P(collision) ≈
+    collide in ≥1 band (``N_BANDS`` = 16 bands × 2 rows: P(collision) ≈
     1-(1-J²)¹⁶ — >0.99 at J≥0.55; false positives are cheap because the
     Jaccard re-rank stage filters them). Plan: project signature → explode bands →
     self-equi-join on (band, bucket-hash) → distinct pairs. The join key
@@ -347,7 +351,7 @@ def minhash_lsh_candidates(
         # partition pins a Python worker (see similarity.lsh_topk_join);
         # no-op on properly-partitioned inputs at scale.
         spread(df, min_partitions=8)
-        .select(F.col(id_col).alias("doc"), shingles(F.col(text_col), shingle_n).alias("__sh"))
+        .select(F.col(id_col).alias("doc"), shingles(F.col(text_col)).alias("__sh"))
         .select("doc", hashed_shingles(F.col("__sh")).alias("__hs"))
     )
     # the banded frame is consumed by BOTH sides of the self-join;
@@ -356,19 +360,19 @@ def minhash_lsh_candidates(
     # r12 scan census). Checkpointing the skinny (doc, band, bucket)
     # rows runs the kernel once; blocks are released by the bench /
     # driver per-query hygiene (guide §2.4/§5).
-    banded = minhash_bands(hashed, n_hashes, n_bands).localCheckpoint(eager=False)
+    banded = minhash_bands(hashed).localCheckpoint(eager=False)
     # the merge-hinted self-join is shared with registry_ext48
     return banded_self_join_pairs(banded, id_col="doc")
 
 
-def simhash64(col: Column, n: int = 3) -> Column:
-    """64-bit SimHash over word n-gram shingles, returned as a 64-char
+def simhash64(col: Column) -> Column:
+    """64-bit SimHash over word ``SHINGLE_N``-gram shingles, returned as a 64-char
     bit-string: one pass over the shingle hashes with an array-of-votes
     accumulator (zip_with inside aggregate — still pure column math),
     then sign of each vote becomes the bit. Hamming distance between two
     signatures = differing chars; near-dups share long prefixes, so a
     sort/groupBy on (rotated) signatures finds them without pair joins."""
-    sh = shingles(col, n)
+    sh = shingles(col)
     hashes = F.transform(sh, lambda s: F.xxhash64(s))
     votes = F.aggregate(
         hashes,
@@ -387,9 +391,7 @@ def simhash64(col: Column, n: int = 3) -> Column:
     return F.array_join(F.transform(votes, lambda v: F.when(v >= 0, F.lit("1")).otherwise(F.lit("0"))), "")
 
 
-def _co_shingle_counts(
-    df: DataFrame, text_col: str, id_col: str, block_col: str, shingle_n: int
-) -> DataFrame:
+def _co_shingle_counts(df: DataFrame, text_col: str, id_col: str, block_col: str) -> DataFrame:
     """Co-blocked pairs sharing at least one word shingle, as
     ``(id_a, id_b, na, nb, inter)`` with ``id_a < id_b``: each side's
     distinct shingle count and the size of their intersection.
@@ -417,7 +419,7 @@ def _co_shingle_counts(
     # planning TWO ArrowEvalPython nodes per join side — the shingler
     # ran 4× per query. Non-deterministic expressions are never
     # duplicated, so each side evaluates it exactly once.
-    sh_udf = word_shingles_np(shingle_n, split=r"\s+").asNondeterministic()
+    sh_udf = word_shingles_np(SHINGLE_N, split=r"\s+").asNondeterministic()
     tok = (
         spread(df)
         .select(
@@ -461,7 +463,6 @@ def jaccard_pairs(
     id_col: str,
     block_col: str,
     threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity on co-blocked pairs (id_a < id_b):
     J = |A∩B| / |A∪B| over word-shingle sets. ``block_col`` bounds the
@@ -475,7 +476,7 @@ def jaccard_pairs(
     if threshold <= 0:
         raise ValueError("jaccard_pairs requires threshold > 0 (J=0 pairs are not enumerated)")
     return (
-        _co_shingle_counts(df, text_col, id_col, block_col, shingle_n)
+        _co_shingle_counts(df, text_col, id_col, block_col)
         .select(
             "id_a",
             "id_b",
@@ -495,15 +496,14 @@ def incremental_novel(
     text_col: str,
     id_col: str,
     block_col: str,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Incremental ingestion dedup: rows of ``batch`` with no exact and
     no near duplicate in ``corpus``. Exact = anti-join on normalized
     content md5 (uniform digest key, broadcastable when the batch's
     hash set is small). Near = blocked Jaccard join batch x corpus —
     cost O(batch x block-bucket), independent of archive size; at scale
-    ``block_col`` is the MinHash-LSH bucket. Returns the surviving
+    ``block_col`` is the MinHash-LSH bucket; near means Jaccard >=
+    ``_NOVEL_JACCARD``. Returns the surviving
     batch rows with their original columns."""
     b = batch.withColumn("_chash", content_md5(F.col(text_col)))
     c_hashes = corpus.select(content_md5(F.col(text_col)).alias("_chash")).distinct()
@@ -520,17 +520,17 @@ def incremental_novel(
     b_sh = exact_novel.select(
         F.col(id_col).alias("_bid"),
         F.col(block_col).alias("_bblock"),
-        shingles(F.col(text_col), shingle_n).alias("_bsh"),
+        shingles(F.col(text_col)).alias("_bsh"),
     )
     c_sh = corpus.select(
         F.col(block_col).alias("_cblock"),
-        shingles(F.col(text_col), shingle_n).alias("_csh"),
+        shingles(F.col(text_col)).alias("_csh"),
     )
     inter = F.size(F.array_intersect(F.col("_bsh"), F.col("_csh")))
     union = F.size(F.col("_bsh")) + F.size(F.col("_csh")) - inter
     near_ids = (
         b_sh.join(c_sh, F.col("_bblock") == F.col("_cblock"))
-        .filter(inter.cast("double") / union >= threshold)
+        .filter(inter.cast("double") / union >= _NOVEL_JACCARD)
         .select(F.col("_bid").alias(id_col))
         .distinct()
     )
@@ -543,7 +543,6 @@ def containment_pairs(
     id_col: str,
     block_col: str,
     threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Asymmetric near-dup detection: containment
     C = |A∩B| / min(|A|, |B|) over word-shingle sets — the measure that
@@ -556,7 +555,7 @@ def containment_pairs(
     to the lower id."""
     if threshold <= 0:
         raise ValueError("containment_pairs requires threshold > 0")
-    counted = _co_shingle_counts(df, text_col, id_col, block_col, shingle_n)
+    counted = _co_shingle_counts(df, text_col, id_col, block_col)
     return counted.select(
         "id_a",
         "id_b",

@@ -50,7 +50,6 @@ def fuzzy_self_join(
     key_col: str,
     str_col: str,
     max_dist: int = 1,
-    out_prefix: tuple[str, str] = ("a", "b"),
 ) -> DataFrame:
     """All pairs (a, b) with ``levenshtein(a.str, b.str) <= max_dist``
     and ``a.key < b.key`` — without the O(n²) cross product.
@@ -59,11 +58,11 @@ def fuzzy_self_join(
     level); higher distances chain deletions (FastSS generalizes, at
     (len choose d) postings per row).
 
-    Output columns: ``{a}_key, {a}_str, {b}_key, {b}_str, dist``.
+    Output columns: ``a_key, a_str, b_key, b_str, dist``.
     """
     if max_dist != 1:
         raise NotImplementedError("deletion-neighborhood join implemented for max_dist=1")
-    a, b = out_prefix
+    a, b = "a", "b"
     # rows feeds SIX plan branches (both posting sides via strs, both
     # key-expansion sides, both dup-pair sides); unmaterialized, the
     # compiled plan re-ran the source scan per branch (r12 scan census:

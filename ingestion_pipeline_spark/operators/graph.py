@@ -55,6 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 PR_SCALE = 10**12  # fixed-point rank unit: 1.0 == 10^12
+PR_ITERS = 10  # pagerank_fixed_point's power iterations
+LPA_ITERS = 4  # label_propagation's synchronous rounds
 
 
 def _symmetrized(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -158,15 +160,13 @@ def dup_clusters(
     ids: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    pair_a: str = "id_a",
-    pair_b: str = "id_b",
 ) -> DataFrame:
     """Assign every id in ``ids`` to its duplicate cluster: the connected
-    component of the candidate-pair graph, with untouched documents as
+    component of the ``(id_a, id_b)`` candidate-pair graph, with untouched documents as
     singleton clusters (component = own id). Keep-one-per-cluster is
     then ``filter(col(id_col) == col("component"))``.
     """
-    comp = connected_components(pairs, pair_a, pair_b)
+    comp = connected_components(pairs, "id_a", "id_b")
     return ids.select(F.col(id_col)).join(
         comp, ids[id_col] == comp["n"], "left_outer"
     ).select(
@@ -198,7 +198,6 @@ def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    iters: int = 4,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007) over the symmetrized edge list — ``(n, community)``.
@@ -208,7 +207,7 @@ def label_propagation(
     majority label among its neighbours PLUS its own current label
     (the self-vote damps the 2-cycle oscillation synchronous LPA is
     prone to), ties broken by the SMALLEST label. All-integer algebra —
-    counts and labels — so a fixed ``iters`` unrolls into oracle CTEs
+    counts and labels — so a fixed ``LPA_ITERS`` unrolls into oracle CTEs
     exactly like the fixed-point PageRank.
 
     Differs from ``connected_components`` (which floods the MINIMUM
@@ -249,7 +248,7 @@ def label_propagation(
             .select("n", F.col("top.label").alias("label"))
         )
 
-    labels = _fixed_point(nodes.select("n", F.col("n").alias("label")), step, iters)
+    labels = _fixed_point(nodes.select("n", F.col("n").alias("label")), step, LPA_ITERS)
     return labels.select("n", F.col("label").alias("community"))
 
 
@@ -261,12 +260,11 @@ def pagerank_fixed_point(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    iters: int = 10,
     seed: Callable[[Column], Column] = _every_node,
 ) -> DataFrame:
     """Power-iteration PageRank in FIXED-POINT integer arithmetic —
     ``(n, rank_fp)`` with ranks in 1e-12 units (``PR_SCALE``), damping
-    85/100, over the SYMMETRIZED edge list.
+    85/100, ``PR_ITERS`` rounds, over the SYMMETRIZED edge list.
 
     ``seed`` maps a node-id Column to a boolean Column selecting the
     seed set S, to which the restart mass returns (a NULL predicate is
@@ -294,7 +292,7 @@ def pagerank_fixed_point(
     is the same predicate in SQL). Rank error vs the real-valued
     fixpoint is ≤ iters·|V|/SCALE — irrelevant at 1e-12 units.
 
-    A fixed ``iters`` (not a convergence test) keeps the result exactly
+    A fixed ``PR_ITERS`` (not a convergence test) keeps the result exactly
     reproducible across engines and runs. Symmetric-only: every node
     then has out-degree ≥ 1 and in-degree ≥ 1, so no dangling mass, no
     per-round scalar aggregate and no per-round node left-join — the
@@ -346,7 +344,7 @@ def pagerank_fixed_point(
 
     ranks = _fixed_point(
         nodes.select("n", (F.col("is_seed") * F.lit(init)).alias("rank_fp")),
-        step, iters, 3,  # checkpoint every 3 rounds and after the last
+        step, PR_ITERS, 3,  # checkpoint every 3 rounds and after the last
     )
     return ranks.select("n", "rank_fp")
 

@@ -31,13 +31,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 KM_SCALE = 1000  # milli-unit quantization of embedding coordinates
+# v_kmeans_clusters' cluster count (its oracle, plans/kmeans_sql.py,
+# reads it too) and the Lloyd rounds of every caller
+KM_K, KM_ITERS = 16, 3
 
 
-def quantized(emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def quantized(emb: DataFrame) -> DataFrame:
+    """``(vec_id, v)``: each ``embedding`` coordinate as int64 units of
+    1/``KM_SCALE``."""
     return emb.select(
-        F.col(id_col).alias("vec_id"),
+        F.col("vec_id"),
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x: F.round(x.cast("double") * KM_SCALE).cast("long"),
         ).alias("v"),
     )
@@ -45,19 +50,16 @@ def quantized(emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 
 def kmeans_fixed_point(
     emb: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    k: int,
 ) -> DataFrame:
     """Returns the final assignment ``(vec_id, cluster, dist_sq)`` after
-    ``iters`` Lloyd rounds of exact integer k-means."""
+    ``KM_ITERS`` Lloyd rounds of exact integer k-means."""
     import numpy as np
     import pandas as pd
 
     from pyspark.sql.types import LongType, StructField, StructType
 
-    q = quantized(emb, vec_col, id_col).localCheckpoint(eager=True)
+    q = quantized(emb).localCheckpoint(eager=True)
     init_rows = q.orderBy("vec_id").limit(k).collect()
     cent = np.stack([np.asarray(r["v"], dtype=np.int64) for r in init_rows])
 
@@ -144,7 +146,7 @@ def kmeans_fixed_point(
 
         return update
 
-    for _ in range(iters):
+    for _ in range(KM_ITERS):
         sums = (
             q.mapInPandas(make_updater(cent.copy()), upd_schema)
             .groupBy("cluster", "i")

@@ -21,12 +21,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# low bits of each coordinate that the Z key interleaves
+_BITS = 16
 
-def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
-    """Interleave the low ``bits`` bits of two non-negative ints:
+
+def zorder_key(x: Column, y: Column) -> Column:
+    """Interleave the low ``_BITS`` bits of two non-negative ints:
     bit i of x lands at position 2i, bit i of y at 2i+1."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_BITS):
         z = z.bitwiseOR(
             F.shiftleft(x.cast("long").bitwiseAND(F.lit(1 << i)), i)
         ).bitwiseOR(
@@ -35,10 +38,10 @@ def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
     return z
 
 
-def zorder_sql(x: str, y: str, bits: int = 16) -> str:
+def zorder_sql(x: str, y: str) -> str:
     """The identical interleave as ANSI SQL (DuckDB oracle parity)."""
     terms = []
-    for i in range(bits):
+    for i in range(_BITS):
         terms.append(f"(({x} & {1 << i}) << {i})")
         terms.append(f"(({y} & {1 << i}) << {i + 1})")
     return " | ".join(terms)

@@ -234,9 +234,9 @@ AHASH_SCHEMA = StructType(
 )
 
 
-def average_hash32(media: DataFrame, content_col: str = "content") -> DataFrame:
+def average_hash32(media: DataFrame) -> DataFrame:
     """Perceptual-hash plumbing for media dedup: a 32-bit average hash
-    (aHash) over the first 32 payload bytes — bit i set iff byte_i is
+    (aHash) over the first 32 ``content`` bytes — bit i set iff byte_i is
     above the window mean (compared in exact integer space:
     ``byte*32 > total``, no float threshold). On real pixels this is the
     classic aHash of a 32-px thumbnail row; here it runs directly on
@@ -252,7 +252,7 @@ def average_hash32(media: DataFrame, content_col: str = "content") -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            contents = [bytes(c or b"") for c in pdf[content_col]]
+            contents = [bytes(c or b"") for c in pdf["content"]]
             ok = np.array([len(c) >= 32 for c in contents])
             hashes = pd.array([None] * len(contents), dtype="Int64")
             if ok.any():
@@ -266,4 +266,4 @@ def average_hash32(media: DataFrame, content_col: str = "content") -> DataFrame:
             yield pd.DataFrame({"path": pdf["path"].to_numpy(), "ahash32": hashes})
 
     # r12 (guide §4.1): only path + the payload column cross the boundary
-    return media.select("path", content_col).mapInPandas(run, AHASH_SCHEMA)
+    return media.select("path", "content").mapInPandas(run, AHASH_SCHEMA)

@@ -31,8 +31,11 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+# M subspaces, K codewords each, Lloyd rounds; plans/pq_sql.py reads them
+PQ_M, PQ_K, PQ_ITERS = 8, 16, 2
 
-def train_pq_codebooks_int(Q, m: int = 8, k: int = 16, iters: int = 2):
+
+def train_pq_codebooks_int(Q):
     """Exact-integer per-subspace Lloyd k-means — the ``operators/
     kmeans.py`` determinism discipline applied to PQ training so the
     DuckDB oracle (``plans/pq_sql.py``) can replay every round
@@ -42,7 +45,8 @@ def train_pq_codebooks_int(Q, m: int = 8, k: int = 16, iters: int = 2):
 
     ``Q``: (n, dim) int64 — vectors already quantized by
     ``kmeans.quantized`` (ROUND(x*KM_SCALE), identical on both
-    engines). Per subspace: init = first k training rows, exact int64
+    engines). ``PQ_M`` subspaces, ``PQ_ITERS`` rounds. Per subspace:
+    init = first ``PQ_K`` training rows, exact int64
     squared distances, argmin ties to the lowest codeword id, update =
     per-dim SUM/COUNT with truncation toward zero (Spark ``div`` ==
     DuckDB ``//``, both verified trunc), empty clusters keep their
@@ -50,13 +54,14 @@ def train_pq_codebooks_int(Q, m: int = 8, k: int = 16, iters: int = 2):
     no overflow anywhere.
 
     PARITY PRECONDITION: codewords here are keyed by array POSITION
-    (init ``sub[:k]``, argmin ties to the lowest index) while the
+    (init ``sub[:PQ_K]``, argmin ties to the lowest index) while the
     ``plans/pq_sql.py`` oracle keys them by ``vec_id`` (``WHERE vec_id
-    < k``, ties to the lowest cid). The two coincide only when the
+    < PQ_K``, ties to the lowest cid). The two coincide only when the
     training rows are ordered by contiguous ids 0..n-1 — call sites
     assert this after the ordered collect."""
     import numpy as np
 
+    m, k = PQ_M, PQ_K
     Q = np.asarray(Q, dtype=np.int64)
     n, dim = Q.shape
     if dim % m:
@@ -66,7 +71,7 @@ def train_pq_codebooks_int(Q, m: int = 8, k: int = 16, iters: int = 2):
     for mi in range(m):
         sub = Q[:, mi * d_sub : (mi + 1) * d_sub]
         cent = sub[:k].copy()
-        for _ in range(iters):
+        for _ in range(PQ_ITERS):
             d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)  # first min == lowest codeword id
             new = cent.copy()  # empty clusters keep previous codeword

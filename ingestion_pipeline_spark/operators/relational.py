@@ -32,11 +32,11 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
-def broadcast_enrich(fact: DataFrame, dim: DataFrame, on: Column | str | list[str], how: str = "inner") -> DataFrame:
-    """Equi-join a fact table to a small dimension with an explicit
+def broadcast_enrich(fact: DataFrame, dim: DataFrame, on: Column | str | list[str]) -> DataFrame:
+    """Inner equi-join a fact table to a small dimension with an explicit
     broadcast hint (J1-J4 are all small-side joins — SURVEY §2.5). At
     100 TB the fact side streams; no shuffle of the big side occurs."""
-    return fact.join(F.broadcast(dim), on, how)
+    return fact.join(F.broadcast(dim), on, "inner")
 
 
 def topk(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:

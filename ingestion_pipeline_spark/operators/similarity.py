@@ -33,6 +33,22 @@ from .relational import spread, topk, topk_per_group
 # functions to Python workers by value (as functions/text.py does).
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
+# banded sign-LSH: LSH_PLANES hyperplanes from the LCG stream seeded with
+# LSH_SEED, in LSH_BANDS bands of LSH_PLANES // LSH_BANDS signs each; the
+# v_lsh_knn_join oracle (plans/registry.py) derives its planes and band
+# slices from the same three
+LSH_PLANES, LSH_BANDS, LSH_SEED = 16, 4, 42
+# assign_nearest_quantized's coordinate quantization: floor(x * _QSCALE)
+_QSCALE = 100000.0
+# mmr_rerank's relevance weight
+_MMR_LAMBDA = 0.7
+# maxsim_topk: hashing-embedder width and the sentence-token caps
+_MAXSIM_DIM, _MAX_DOC_TOKENS, _MAX_QUERY_TOKENS = 16, 8, 4
+# the IVF seed centroids are the vectors with vec_id < _IVF_SEEDS
+_IVF_SEEDS = 16
+# rows per matmul in cosine_blocks
+_SWEEP_BLOCK = 512
+
 
 def _null_masked(valid, n: int, sims) -> pd.Series:
     """The NULL path shared by the Arrow cosine kernels (ADVICE r12): a
@@ -97,59 +113,50 @@ def brute_force_topk(
     vec_col: str,
     probe: list[float],
     k: int,
-    id_col: str = "vec_id",
     threshold: float | None = None,
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k against one probe vector (V3/V4 with T1-T3 k and
     V5 threshold semantics). Sim rounded to 6dp for cross-engine
-    determinism; ties broken by id."""
+    determinism; ties broken by ``vec_id``."""
     # id exclusion BEFORE the sim column: the Arrow kernel is marked
     # non-deterministic (see probe_cosine_np), which blocks filter
     # pushdown THROUGH it — filtering first keeps the predicate at the
     # parquet scan (PushedFilters) where it belongs.
     if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
+        df = df.filter(F.col("vec_id") != exclude_id)
     out = df.withColumn("sim", F.round(probe_cosine_np(probe)(F.col(vec_col)), 6))
     if threshold is not None:
         out = out.filter(F.col("sim") >= threshold)   # F3 — chatbot/main.py:69
-    return topk(out, [F.col("sim").desc(), F.col(id_col).asc()], k)
+    return topk(out, [F.col("sim").desc(), F.col("vec_id").asc()], k)
 
 
-def topk_join(
-    corpus: DataFrame,
-    probes: DataFrame,
-    corpus_vec: str = "embedding",
-    probe_vec: str = "embedding",
-    probe_id: str = "probe_id",
-    k: int = 5,
-    threshold: float | None = None,
-) -> DataFrame:
+def topk_join(corpus: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k per probe: broadcast-cross-join the (small) probe set
-    against the corpus, window top-k per probe. The corpus never
-    shuffles; the only shuffle is the per-probe window, keyed by
-    probe_id (cardinality = |probes|, so salting is unnecessary)."""
+    ``(probe_id, embedding)`` against the corpus ``(vec_id, embedding)``,
+    window top-k per probe. The corpus never shuffles; the only shuffle
+    is the per-probe window, keyed by probe_id (cardinality = |probes|,
+    so salting is unnecessary)."""
     p = probes.select(
-        F.col(probe_id), F.col(probe_vec).alias("__probe_vec")
+        F.col("probe_id"), F.col("embedding").alias("__probe_vec")
     )
     # r12 (guide §4.2): Arrow einsum kernel instead of the interpreted
     # zip_with/aggregate folds — per pair the HOF form evaluated ~5
     # 64-element interpreted folds; same float64 math + JVM rounding.
     joined = corpus.crossJoin(F.broadcast(p)).withColumn(
         "sim",
-        F.round(cosine_pairs_np()(F.col(corpus_vec), F.col("__probe_vec")), 6),
+        F.round(cosine_pairs_np()(F.col("embedding"), F.col("__probe_vec")), 6),
     )
-    if threshold is not None:
-        joined = joined.filter(F.col("sim") >= threshold)
     return topk_per_group(
-        joined.drop("__probe_vec"), [probe_id], [F.col("sim").desc(), F.col("vec_id").asc()], k
+        joined.drop("__probe_vec"), ["probe_id"], [F.col("sim").desc(), F.col("vec_id").asc()], k
     ).drop("rank")
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+def random_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes for sign-LSH (driver-side,
-    tiny). Uses a simple LCG so no numpy/random state is involved."""
-    state = seed & 0x7FFFFFFF
+    tiny). Uses a simple LCG seeded with ``LSH_SEED`` so no numpy/random
+    state is involved."""
+    state = LSH_SEED & 0x7FFFFFFF
     planes: list[list[float]] = []
     for _ in range(n_planes):
         plane = []
@@ -238,16 +245,63 @@ def assign_nearest_np(centroids: list[list[float]]):
     return nearest.asNondeterministic()
 
 
-def assign_nearest_quantized(
-    centroids_q, scale: float = 100000.0, pre_quantized: bool = False
-):
+def l2norm(v: list[float]) -> list[float]:
+    """``v`` scaled to unit length; a zero vector is returned as is."""
+    import math
+
+    n = math.sqrt(sum(x * x for x in v))
+    return [x / n for x in v] if n > 0 else v
+
+
+def seed_centroids(emb: DataFrame) -> tuple[list[float], list[list[float]]]:
+    """``(probe, centroids)`` for the IVF queries: the embeddings of
+    ``vec_id < _IVF_SEEDS`` in id order, fetched by ONE bounded collect
+    and L2-normalized driver-side, so an argmax over plain dot products
+    (``assign_nearest_np``) is an argmax over cosine. ``probe`` is the
+    raw vector of vec_id 0, a member of the seed set, so it needs no
+    job of its own."""
+    rows = (
+        emb.filter(F.col("vec_id") < _IVF_SEEDS)
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .collect()
+    )
+    if not rows or rows[0]["vec_id"] != 0:
+        raise ValueError("seed_centroids: no vector with vec_id 0")
+    vecs = [[float(x) for x in r["embedding"]] for r in rows]
+    return vecs[0], [l2norm(v) for v in vecs]
+
+
+def cosine_blocks(X):
+    """The blocked cosine sweep of a vector group sorted by id: yields
+    ``(a0, S)`` for consecutive row blocks starting at row 1, ``S``
+    being the cosines of rows ``a0 .. a0 + len(S)`` against every row,
+    rounded HALF_UP to 6 dp. Row 0 has no lower-id neighbour, so no
+    block starts there. The num/den form and the rounding are those of
+    ``cosine_pairs_np`` and the SQL ``ROUND(list_cosine_similarity)``,
+    so a threshold on ``S`` picks the oracle's pairs; the |group|²
+    cosines stay inside one BLAS matmul per block."""
+    import numpy as np
+
+    X = np.asarray(X, dtype=np.float64)
+    n = len(X)
+    norms = np.sqrt(np.einsum("ij,ij->i", X, X))
+    for a0 in range(1, n, _SWEEP_BLOCK):
+        b0 = min(a0 + _SWEEP_BLOCK, n)
+        D = X[a0:b0] @ X.T  # (b0-a0, n) raw dots
+        den = np.outer(norms[a0:b0], norms)
+        S = np.where(den > 0, D / np.where(den == 0, 1.0, den), 0.0)
+        yield a0, np.floor(np.abs(S) * 1e6 + 0.5) / 1e6 * np.sign(S)  # HALF_UP 6dp
+
+
+def assign_nearest_quantized(centroids_q, pre_quantized: bool = False):
     """Exact-integer IVF cluster assignment (the ``dq_label_outliers``
     quantization discipline applied to argmax-dot).
 
     ``centroids_q`` is an (n_centroids × dim) integer-valued matrix —
-    each component already ``floor(x * scale)``.  Incoming vectors are
+    each component already ``floor(x * _QSCALE)``.  Incoming vectors are
     quantized the same way per batch, so every dot product is a sum of
-    integer products; with |q| ≤ scale and dim ≤ 64 every partial sum
+    integer products; with |q| ≤ _QSCALE and dim ≤ 64 every partial sum
     stays far below 2^53, making the float64 matmul EXACT regardless of
     BLAS accumulation order / FMA.  The score ``dot / sqrt(Σc²)``
     (cosine up to the constant vector-norm factor) is then one IEEE
@@ -267,9 +321,9 @@ def assign_nearest_quantized(
 
     cent = np.asarray(centroids_q, dtype=np.float64)  # (n, dim), int-valued
     # exactness preconditions (advice r6): an all-zero centroid would
-    # make dot/norm NaN (ill-defined argmax), and |c| > scale breaks the
+    # make dot/norm NaN (ill-defined argmax), and |c| > _QSCALE breaks the
     # "every partial sum ≪ 2^53" argument the bit-parity claim rests on
-    if np.abs(cent).max(initial=0.0) > scale:
+    if np.abs(cent).max(initial=0.0) > _QSCALE:
         raise ValueError("assign_nearest_quantized: |centroid| > scale")
     inv_norm_scores = np.sqrt((cent * cent).sum(axis=1))  # exact ints → sqrt
     if (inv_norm_scores == 0).any():
@@ -281,8 +335,8 @@ def assign_nearest_quantized(
             return pd.Series([], dtype="int32")
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
         if not pre_quantized:
-            mat = np.floor(mat * scale)
-        if mat.size and np.abs(mat).max() > scale:
+            mat = np.floor(mat * _QSCALE)
+        if mat.size and np.abs(mat).max() > _QSCALE:
             raise ValueError("assign_nearest_quantized: |x_q| > scale")
         dots = mat @ cent.T  # exact integer values in float64
         scores = dots / inv_norm_scores[None, :]  # single IEEE div each
@@ -295,21 +349,17 @@ def lsh_topk_join(
     corpus: DataFrame,
     probes: DataFrame,
     dim: int,
-    corpus_vec: str = "embedding",
-    probe_vec: str = "embedding",
-    probe_id: str = "probe_id",
     k: int = 5,
-    n_planes: int = 16,
-    n_bands: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
-    """Approximate top-k per probe via banded sign-LSH: corpus and probes
-    get ``n_bands`` band-keys (each hashing ``n_planes//n_bands`` signs);
-    candidate pairs share at least one band-key; exact cosine re-ranks
-    candidates. The cross product becomes an equi-join on (band, key) —
-    shuffle-partitioned, scalable to arbitrary corpus size."""
-    planes = random_hyperplanes(dim, n_planes, seed)
-    per_band = n_planes // n_bands
+    """Approximate top-k per probe via banded sign-LSH: corpus
+    ``(vec_id, embedding)`` and probes ``(probe_id, embedding)`` get
+    ``LSH_BANDS`` band-keys (each hashing ``LSH_PLANES // LSH_BANDS``
+    signs); candidate pairs share at least one band-key; exact cosine
+    re-ranks candidates. The cross product becomes an equi-join on
+    (band, key) — shuffle-partitioned, scalable to arbitrary corpus
+    size."""
+    planes = random_hyperplanes(dim, LSH_PLANES)
+    per_band = LSH_PLANES // LSH_BANDS
 
     sig_udf = signature_bits_np(planes)
 
@@ -321,7 +371,7 @@ def lsh_topk_join(
                     F.lit(b).alias("band"),
                     F.concat_ws("", F.slice(F.col("__sig"), b * per_band + 1, per_band)).alias("key"),
                 )
-                for b in range(n_bands)
+                for b in range(LSH_BANDS)
             ]
         )
         return out.withColumn("__band", F.explode(bands)).select(
@@ -336,8 +386,8 @@ def lsh_topk_join(
     # 32 workers for a few hundred rows is pure startup overhead. On a
     # real corpus the input already has >8 partitions and spread() is a
     # no-op, so this caps nothing at scale.
-    c = with_bands(spread(corpus, min_partitions=8), corpus_vec, "vec_id", "__corpus_vec")
-    p = with_bands(probes, probe_vec, probe_id, "__probe_vec")
+    c = with_bands(spread(corpus, min_partitions=8), "embedding", "vec_id", "__corpus_vec")
+    p = with_bands(probes, "embedding", "probe_id", "__probe_vec")
     # r12 (guide §2.3/§2.4/§3.1): the probe band table is tiny by
     # construction (queries are small — the module contract), so
     # BROADCAST it: the corpus bands are never shuffled by (band, bkey)
@@ -358,24 +408,20 @@ def lsh_topk_join(
                 cosine_pairs_np()(F.col("__corpus_vec"), F.col("__probe_vec")), 6
             ),
         )
-        .select("vec_id", probe_id, "sim")
-        .dropDuplicates(["vec_id", probe_id])
+        .select("vec_id", "probe_id", "sim")
+        .dropDuplicates(["vec_id", "probe_id"])
     )
     return topk_per_group(
-        cand, [probe_id], [F.col("sim").desc(), F.col("vec_id").asc()], k
+        cand, ["probe_id"], [F.col("sim").desc(), F.col("vec_id").asc()], k
     ).drop("rank")
 
 
-def mmr_rerank(
-    candidates: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 5,
-    lam: float = 0.7,
-) -> list[tuple[int, float, float]]:
+def mmr_rerank(candidates: DataFrame, k: int = 5) -> list[tuple[int, float, float]]:
     """Maximal-marginal-relevance diversification (Carbonell & Goldstein
-    1998) over a RETRIEVED candidate set: greedily pick the item
-    maximizing ``lam*relevance - (1-lam)*max_sim_to_already_selected``.
+    1998) over a RETRIEVED ``(vec_id, sim, embedding)`` candidate set:
+    greedily pick the item maximizing
+    ``lam*relevance - (1-lam)*max_sim_to_already_selected``, lam =
+    ``_MMR_LAMBDA``.
 
     The selection is inherently serial over a candidate set that is
     top-N-bounded by construction (the preceding retrieval stage), so
@@ -392,12 +438,13 @@ def mmr_rerank(
     ``[(id, relevance, mmr_score), ...]`` in selection order."""
     import numpy as np
 
-    rows = candidates.select(id_col, "sim", vec_col).collect()
+    lam = _MMR_LAMBDA
+    rows = candidates.select("vec_id", "sim", "embedding").collect()
     if not rows:
         return []
-    ids = [r[id_col] for r in rows]
+    ids = [r["vec_id"] for r in rows]
     rel = [float(r["sim"]) for r in rows]
-    X = np.stack([np.asarray(r[vec_col], dtype=np.float64) for r in rows])
+    X = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
     norms = np.sqrt(np.einsum("ij,ij->i", X, X))
     den = np.outer(norms, norms)
     S = np.where(den > 0, (X @ X.T) / np.where(den == 0, 1.0, den), 0.0)
@@ -427,27 +474,18 @@ def mmr_rerank(
     return out
 
 
-def maxsim_topk(
-    docs: DataFrame,
-    query_doc: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 10,
-    dim: int = 16,
-    max_doc_tokens: int = 8,
-    max_query_tokens: int = 4,
-) -> DataFrame:
-    """ColBERT-style late-interaction retrieval (Khattab & Zaharia 2020),
-    integer-exact: score(doc) = sum over query token-vectors q of
-    max over doc token-vectors t of <q, t>.
+def maxsim_topk(docs: DataFrame, query_doc: DataFrame, k: int = 10) -> DataFrame:
+    """ColBERT-style late-interaction retrieval (Khattab & Zaharia 2020)
+    over ``(doc_id, text)`` frames, integer-exact: score(doc) = sum over
+    query token-vectors q of max over doc token-vectors t of <q, t>.
 
-    "Tokens" here are SENTENCES ('.'-split, first ``max_doc_tokens``),
+    "Tokens" here are SENTENCES ('.'-split, first ``_MAX_DOC_TOKENS``),
     each embedded by the un-normalized hashing embedder — all bucket
     counts are integers, so every dot product, max and sum is exact
     BIGINT arithmetic and the whole operator is value-hash verifiable.
 
     Scale shape: sentence explode is linear in corpus bytes; the query
-    side is a <= ``max_query_tokens``-row broadcast; the interaction is
+    side is a <= ``_MAX_QUERY_TOKENS``-row broadcast; the interaction is
     a broadcast nested-loop against that tiny frame followed by two
     doc-keyed aggregations (max per (doc, q), sum per doc) and a
     TakeOrdered top-k — no all-pairs, no corpus-sized shuffle wider
@@ -456,6 +494,7 @@ def maxsim_topk(
     """
     from ..functions.embed import embedding_udf, hashing_embedder
 
+    id_col, dim = "doc_id", _MAXSIM_DIM
     udf = embedding_udf(hashing_embedder(dim=dim, normalize=False), dim=dim)
 
     def sentences(col: Column) -> Column:
@@ -463,12 +502,12 @@ def maxsim_topk(
             F.transform(F.split(col, r"\."), lambda s: F.trim(s)),
             lambda s: s != F.lit(""),
         )
-        return F.slice(sents, 1, max_doc_tokens)
+        return F.slice(sents, 1, _MAX_DOC_TOKENS)
 
     def token_vecs(frame: DataFrame, n: int, out_id: str) -> DataFrame:
         exploded = frame.select(
             F.col(id_col),
-            F.posexplode(F.slice(sentences(F.col(text_col)), 1, n)).alias(
+            F.posexplode(F.slice(sentences(F.col("text")), 1, n)).alias(
                 "sid", "__sent"
             ),
         )
@@ -477,8 +516,8 @@ def maxsim_topk(
             F.col(id_col).alias(out_id), "sid", vec_int.alias("__vec")
         )
 
-    doc_toks = token_vecs(spread(docs, min_partitions=8), max_doc_tokens, id_col)
-    q_toks = token_vecs(query_doc, max_query_tokens, "__qdoc").select(
+    doc_toks = token_vecs(spread(docs, min_partitions=8), _MAX_DOC_TOKENS, id_col)
+    q_toks = token_vecs(query_doc, _MAX_QUERY_TOKENS, "__qdoc").select(
         F.col("sid").alias("qid"), F.col("__vec").alias("__qvec")
     )
 

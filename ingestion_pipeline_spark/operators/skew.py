@@ -62,9 +62,8 @@ def salted_collect_list(
     value_col: str,
     salt_from: Column,
     n_salts: int = 8,
-    out_col: str = "values",
 ) -> DataFrame:
-    """``groupBy(group).agg(collect_list(value))`` with bounded reducer
+    """``groupBy(group).agg(collect_list(value) AS values)`` with bounded reducer
     state: stage 1 collects per (group, salt) — each task holds at most
     |group|/n_salts values — stage 2 flattens the ``n_salts`` partial
     arrays per group. Output is sorted for determinism (collect order
@@ -77,5 +76,5 @@ def salted_collect_list(
     )
     return (
         partial.groupBy(*group_cols)
-        .agg(F.sort_array(F.flatten(F.collect_list("__part"))).alias(out_col))
+        .agg(F.sort_array(F.flatten(F.collect_list("__part"))).alias("values"))
     )

@@ -28,16 +28,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# smoothing factors: 0.5 makes every coefficient an exact binary double
+ALPHA = BETA = 0.5
+
 
 def ewma_per_entity(
     df: DataFrame,
     entity_col: str,
     order_cols: list[str],
     value_col: str,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-entity EWMA (pandas ``ewm(alpha, adjust=False)`` semantics:
-    y_1 = x_1; y_t = alpha*x_t + (1-alpha)*y_{t-1}).
+    y_1 = x_1; y_t = alpha*x_t + (1-alpha)*y_{t-1}, alpha = ``ALPHA``).
 
     Returns (entity, *order_cols, ewma) one row per input row.
     """
@@ -54,7 +56,7 @@ def ewma_per_entity(
         y = None
         for x in xs:
             # same operand order as the oracle's recursive CTE
-            y = x if y is None else alpha * x + (1.0 - alpha) * y
+            y = x if y is None else ALPHA * x + (1.0 - ALPHA) * y
             ys.append(y)
         out = pdf[[entity_col, *order_cols]].copy()
         out["ewma"] = ys
@@ -68,10 +70,9 @@ def holt_per_entity(
     entity_col: str,
     order_cols: list[str],
     value_col: str,
-    alpha: float = 0.5,
-    beta: float = 0.5,
 ) -> DataFrame:
-    """Per-entity Holt linear-trend (double exponential) smoothing:
+    """Per-entity Holt linear-trend (double exponential) smoothing, with
+    alpha = ``ALPHA`` and beta = ``BETA``:
 
         l_1 = x_1,  b_1 = 0
         l_t = alpha*x_t + (1-alpha)*(l_{t-1} + b_{t-1})
@@ -105,8 +106,8 @@ def holt_per_entity(
             else:
                 prev = level
                 # operand order mirrors the recursive-CTE oracle exactly
-                level = alpha * x + (1.0 - alpha) * (prev + trend)
-                trend = beta * (level - prev) + (1.0 - beta) * trend
+                level = ALPHA * x + (1.0 - ALPHA) * (prev + trend)
+                trend = BETA * (level - prev) + (1.0 - BETA) * trend
             ls.append(level)
             bs.append(trend)
         out = pdf[[entity_col, *order_cols]].copy()

@@ -121,7 +121,7 @@ def check_compression_ratio(con, srows) -> list[str]:
             want = None
         else:
             raw = t.encode("utf-8")
-            want = len(zlib.compress(raw, 6)) / len(raw)
+            want = len(zlib.compress(raw, _ZLIB_LEVEL)) / len(raw)
         got = r["zlib_ratio"]
         if (want is None) != (got is None) or (
             want is not None and f"{got:.10g}" != f"{want:.10g}"
@@ -159,7 +159,11 @@ _P1, _P2, _P3, _P4, _P5 = (
     0x27D4EB2F165667C5,
 )
 _GOLDEN = 0x9E3779B97F4A7C15
-_N_HASHES, _N_BANDS = 32, 16  # minhash_lsh_candidates' defaults
+# copies of operators/dedup.py's N_HASHES, N_BANDS and HASH_SEED and of
+# functions/text.py's ZLIB_LEVEL (this module imports no Spark);
+# tests/test_bounds.py pins each copy equal to its original
+_N_HASHES, _N_BANDS, _HASH_SEED = 32, 16, 42
+_ZLIB_LEVEL = 6
 # Java \s parity; RE2 lacks \v — see functions/text.py _WS (ADVICE r9)
 _WS = re.compile(r"\s+", re.ASCII)
 
@@ -211,10 +215,11 @@ def _splitmix(x: int) -> int:
 
 def _shingle_hashes(s: str) -> tuple[int, int]:
     """(``hashed_shingles``' hash, ``simhash64``'s hash) of one shingle.
-    ``F.xxhash64(s, F.lit(42))`` is the chained form, not a seed: it
-    hashes ``s`` with the default seed 42, then the IntegerType 42."""
+    ``F.xxhash64(s, F.lit(_HASH_SEED))`` is the chained form, not a
+    seed: it hashes ``s`` with Spark's default seed 42, then the
+    IntegerType ``_HASH_SEED``."""
     plain = xxh64(s.encode("utf-8"), 42)
-    return xxh64(struct.pack("<i", 42), plain), plain
+    return xxh64(struct.pack("<i", _HASH_SEED), plain), plain
 
 
 def near_dup_recompute(texts: dict) -> tuple[dict, set, dict]:

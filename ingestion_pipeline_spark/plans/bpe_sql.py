@@ -22,6 +22,8 @@ merge and apply a no-op REPLACE (chr(1) sentinel pattern).
 
 from __future__ import annotations
 
+from ..operators.bpe import BPE_MERGES, BPE_TOP_N
+
 # word_frequencies: whitespace split, keep only pure-alpha tokens
 _WF_TOKS = (
     "list_filter(string_split_regex(lower(text), '\\s+'), "
@@ -60,8 +62,8 @@ def _rep(k: int) -> str:
     return f"COALESCE((SELECT '|' || a || b || '|' FROM p{k}), chr(1))"
 
 
-def bpe_train_ctes(n_merges: int = 10, top_n: int = 200) -> str:
-    """CTE chain learning ``n_merges`` BPE merges from the top-``top_n``
+def bpe_train_ctes() -> str:
+    """CTE chain learning ``BPE_MERGES`` BPE merges from the top-``BPE_TOP_N``
     word-frequency table of ``documents``. Exposes ``p1..p{n}`` (one
     row each: a, b, n — or empty) and ``s0..s{n}`` (word states)."""
     parts = [
@@ -71,12 +73,12 @@ def bpe_train_ctes(n_merges: int = 10, top_n: int = 200) -> str:
             FROM (SELECT {_WF_TOKS} AS w FROM documents) d,
                  UNNEST(w) AS t(word)
             GROUP BY t.word
-        ) ORDER BY freq DESC, word LIMIT {top_n}
+        ) ORDER BY freq DESC, word LIMIT {BPE_TOP_N}
     )""",
         "s0 AS MATERIALIZED (SELECT word, freq, '|' || array_to_string("
         "string_split(word, ''), '||') || '|' AS s FROM wf)",
     ]
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         parts.append(_pair_cte(k))
         parts.append(
             f"s{k} AS MATERIALIZED (SELECT word, freq, "
@@ -85,31 +87,31 @@ def bpe_train_ctes(n_merges: int = 10, top_n: int = 200) -> str:
     return ",\n    ".join(parts)
 
 
-def bpe_merges_sql(n_merges: int = 10, top_n: int = 200) -> str:
+def bpe_merges_sql() -> str:
     """Full oracle for ``tx_bpe_merges``: the learned merge table."""
     rows = " UNION ALL ".join(
         f"SELECT CAST({k - 1} AS INTEGER) AS merge_rank, a AS pair_a, "
         f"b AS pair_b, a || b AS merged, n AS pair_count FROM p{k}"
-        for k in range(1, n_merges + 1)
+        for k in range(1, BPE_MERGES + 1)
     )
     return f"""
-    WITH {bpe_train_ctes(n_merges, top_n)}
+    WITH {bpe_train_ctes()}
     SELECT merge_rank, pair_a, pair_b, merged, pair_count
     FROM ({rows})
     """
 
 
-def bpe_tokenize_sql(n_merges: int = 10, top_n: int = 200) -> str:
+def bpe_tokenize_sql() -> str:
     """Full oracle for ``tx_bpe_tokenize``(+``_fold``): re-learns the
     merge table, then applies the merges in training order to every
     word of every document via the chained-REPLACE identity and emits
     per-doc (n_words, n_bpe_tokens). Docs with no alpha words emit
     (0, 0) — the LEFT JOIN back to documents keeps them."""
     applied = "'|' || array_to_string(string_split(word, ''), '||') || '|'"
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         applied = f"replace({applied}, {_pat(k)}, {_rep(k)})"
     return f"""
-    WITH {bpe_train_ctes(n_merges, top_n)},
+    WITH {bpe_train_ctes()},
     doc_words AS MATERIALIZED (
         SELECT doc_id, t.word AS word
         FROM (SELECT doc_id, {_TOK_TOKS} AS w FROM documents) d,
@@ -132,17 +134,17 @@ def bpe_tokenize_sql(n_merges: int = 10, top_n: int = 200) -> str:
     """
 
 
-def bpe_fertility_sql(n_merges: int = 10, top_n: int = 200) -> str:
+def bpe_fertility_sql() -> str:
     """Oracle for ``tx_tokenizer_fertility``: the ``bpe_tokenize_sql``
     per-doc counts rolled up per language — n_docs / word / BPE-token
     sums are exact BIGINTs, fertility (BPE tokens per word) is ONE
     division of exact operands (0.0 for languages the alpha tokenizer
     can't segment, e.g. zh: zero [a-z]+ words)."""
     applied = "'|' || array_to_string(string_split(word, ''), '||') || '|'"
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         applied = f"replace({applied}, {_pat(k)}, {_rep(k)})"
     return f"""
-    WITH {bpe_train_ctes(n_merges, top_n)},
+    WITH {bpe_train_ctes()},
     doc_words AS MATERIALIZED (
         SELECT doc_id, t.word AS word
         FROM (SELECT doc_id, {_TOK_TOKS} AS w FROM documents) d,

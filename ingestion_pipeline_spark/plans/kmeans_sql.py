@@ -12,13 +12,16 @@ bit-for-bit.
 
 from __future__ import annotations
 
-from ..operators.kmeans import KM_SCALE
+from ..operators.kmeans import KM_ITERS, KM_K, KM_SCALE
+
+# the embeddings' vector length
+DIM = 64
 
 
-def _assign_cte(t: int, k: int, dim: int) -> str:
+def _assign_cte(t: int) -> str:
     """a{t}: assignment of every vector under centroids c{t-1}."""
     dist = (
-        f"CAST(list_sum(list_transform(range(0, {dim}), "
+        f"CAST(list_sum(list_transform(range(0, {DIM}), "
         "i -> (q.v[i+1] - c.cv[i+1]) * (q.v[i+1] - c.cv[i+1]))) AS BIGINT)"
     )
     return f"""a{t} AS MATERIALIZED (
@@ -34,7 +37,7 @@ def _assign_cte(t: int, k: int, dim: int) -> str:
     )"""
 
 
-def _update_cte(t: int, dim: int) -> str:
+def _update_cte(t: int) -> str:
     """c{t}: integer-mean centroids from assignment a{t}; empty
     clusters keep the previous centroid."""
     return f"""c{t} AS MATERIALIZED (
@@ -45,33 +48,33 @@ def _update_cte(t: int, dim: int) -> str:
                        CAST(SUM(q.v[ui.i + 1]) AS BIGINT)
                            // CAST(COUNT(*) AS BIGINT) AS c
                 FROM a{t} a JOIN q USING (vec_id),
-                     UNNEST(range(0, {dim})) AS ui(i)
+                     UNNEST(range(0, {DIM})) AS ui(i)
                 GROUP BY a.cluster, ui.i
             ) GROUP BY cid
         ) u ON p.cid = u.cid
     )"""
 
 
-def kmeans_ctes(k: int = 16, iters: int = 3, dim: int = 64) -> str:
+def kmeans_ctes() -> str:
     """The CTE chain alone — exposes ``q`` (quantized vectors),
-    ``c{iters}`` (final centroids) and ``a{iters + 1}`` (final
+    ``c{KM_ITERS}`` (final centroids) and ``a{KM_ITERS + 1}`` (final
     assignment) for composition (v_ivf_exact_topk)."""
     parts = [
         "q AS MATERIALIZED (SELECT vec_id, list_transform(embedding, "
         f"x -> CAST(ROUND(CAST(x AS DOUBLE) * {KM_SCALE}) AS BIGINT)) AS v "
         "FROM embeddings)",
         f"c0 AS MATERIALIZED (SELECT vec_id AS cid, v AS cv FROM q "
-        f"ORDER BY vec_id LIMIT {k})",
+        f"ORDER BY vec_id LIMIT {KM_K})",
     ]
-    for t in range(1, iters + 1):
-        parts.append(_assign_cte(t, k, dim))
-        parts.append(_update_cte(t, dim))
-    parts.append(_assign_cte(iters + 1, k, dim))
+    for t in range(1, KM_ITERS + 1):
+        parts.append(_assign_cte(t))
+        parts.append(_update_cte(t))
+    parts.append(_assign_cte(KM_ITERS + 1))
     return ",\n    ".join(parts)
 
 
-def kmeans_sql(k: int = 16, iters: int = 3, dim: int = 64) -> str:
+def kmeans_sql() -> str:
     return f"""
-    WITH {kmeans_ctes(k, iters, dim)}
-    SELECT vec_id, cluster, dist AS dist_sq FROM a{iters + 1}
+    WITH {kmeans_ctes()}
+    SELECT vec_id, cluster, dist AS dist_sq FROM a{KM_ITERS + 1}
     """

@@ -21,17 +21,20 @@ red-flagged two queries in round 2.
 
 from __future__ import annotations
 
-SCALE = 10**12  # keep in lockstep with operators/graph.py:PR_SCALE
+from ..operators.graph import PR_ITERS, PR_SCALE
+
+# the CTE that holds the final ranks
+PR_RANKS = f"pr_r{PR_ITERS}"
 
 
-def pagerank_fp_ctes(iters: int = 10, seed_pred: str = "TRUE") -> str:
+def pagerank_fp_ctes(seed_pred: str = "TRUE") -> str:
     """CTE chain computing fixed-point PageRank over an undirected pair
     CTE named ``pairs(id_a, id_b)`` that the caller must define earlier
     in the WITH list. ``seed_pred`` is a SQL predicate over column ``n``
     (e.g. ``n % 50 = 0``) selecting the seeds the restart mass returns
     to; a NULL predicate is not a seed. The default ``TRUE`` is uniform
-    PageRank. Exposes ``pr_r{iters}(n, r)`` as the final ranks (1e-12
-    units). The CASEs around ``SCALE // ns`` and the restart term keep a
+    PageRank. Exposes ``PR_RANKS(n, r)`` as the ranks after ``PR_ITERS``
+    rounds (1e-12 units). The CASEs around ``PR_SCALE // ns`` and the restart term keep a
     graph with no seeds from dividing by zero: every rank is 0."""
     parts = [
         "pr_edges AS (SELECT id_a AS s, id_b AS d FROM pairs "
@@ -43,17 +46,17 @@ def pagerank_fp_ctes(iters: int = 10, seed_pred: str = "TRUE") -> str:
         f"""pr_r0 AS (
       SELECT n,
              CAST(CASE WHEN is_seed = 1
-                       THEN {SCALE} // (SELECT ns FROM pr_meta)
+                       THEN {PR_SCALE} // (SELECT ns FROM pr_meta)
                        ELSE 0 END AS BIGINT) AS r
       FROM pr_nodes
     )""",
     ]
-    for k in range(1, iters + 1):
+    for k in range(1, PR_ITERS + 1):
         parts.append(
             f"""pr_r{k} AS (
       SELECT pn.n,
              CAST(CASE WHEN pn.is_seed = 1
-                       THEN (15 * {SCALE}) // (100 * (SELECT ns FROM pr_meta))
+                       THEN (15 * {PR_SCALE}) // (100 * (SELECT ns FROM pr_meta))
                        ELSE 0 END
                   + (85 * COALESCE(c.contrib, 0)) // 100 AS BIGINT) AS r
       FROM pr_nodes pn LEFT JOIN (

@@ -17,6 +17,17 @@ graded ``v_cosine_top8`` already pins.
 from __future__ import annotations
 
 from ..operators.kmeans import KM_SCALE
+from ..operators.pq import PQ_ITERS, PQ_K, PQ_M
+from .kmeans_sql import DIM
+
+# the codebook training rows (vec_id < PQ_TRAIN_N), the probe's vec_id
+# and the reranked top-k of both PQ queries
+PQ_TRAIN_N, PQ_PROBE, PQ_TOPK = 256, 0, 8
+# ADC candidates reranked: v_pq_adc_topk cuts from every code,
+# v_ivfadc_topk from the members of the probe's IVF_NPROBE nearest
+# of IVF_CELLS cells
+ADC_CANDIDATES, IVFADC_CANDIDATES = 64, 32
+IVF_CELLS, IVF_NPROBE = 16, 4
 
 
 def _d2(s: str, c: str, d_sub: int) -> str:
@@ -27,19 +38,13 @@ def _d2(s: str, c: str, d_sub: int) -> str:
     )
 
 
-def pq_ctes(
-    m: int = 8,
-    k: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    train_n: int = 256,
-    probe_id: int = 0,
-) -> str:
+def pq_ctes() -> str:
     """CTE chain exposing ``q`` (quantized vectors), ``subs`` (per-
-    subspace view of the corpus), ``pb{iters}`` (trained codebooks),
+    subspace view of the corpus), ``pb{PQ_ITERS}`` (trained codebooks),
     ``adctab`` (probe ADC table) and ``adc`` (per-vector exact-int ADC
     score) for composition."""
-    d_sub = dim // m
+    m, k, iters, probe_id = PQ_M, PQ_K, PQ_ITERS, PQ_PROBE
+    d_sub = DIM // m
     parts = [
         # same quantization expression as kmeans_sql.q — half-away
         # ROUND parity between Spark and DuckDB is verified there
@@ -49,7 +54,7 @@ def pq_ctes(
         f"subs AS MATERIALIZED (SELECT vec_id, mm.mi AS mi, "
         f"list_transform(range(0, {d_sub}), j -> v[mm.mi * {d_sub} + j + 1]) AS sv "
         f"FROM q, UNNEST(range(0, {m})) AS mm(mi))",
-        f"ts AS MATERIALIZED (SELECT * FROM subs WHERE vec_id < {train_n})",
+        f"ts AS MATERIALIZED (SELECT * FROM subs WHERE vec_id < {PQ_TRAIN_N})",
         # init: codeword cid of subspace mi = training row cid's subvector
         f"pb0 AS MATERIALIZED (SELECT mi, vec_id AS cid, sv AS cv FROM ts "
         f"WHERE vec_id < {k})",
@@ -105,7 +110,7 @@ def pq_ctes(
     return ",\n    ".join(parts)
 
 
-def _rerank_select(candidates_cte: str, topk: int, probe_id: int) -> str:
+def _rerank_select(candidates_cte: str) -> str:
     return f"""
     SELECT e.vec_id,
            ROUND(CAST(list_cosine_similarity(
@@ -114,63 +119,43 @@ def _rerank_select(candidates_cte: str, topk: int, probe_id: int) -> str:
     FROM embeddings e
     JOIN {candidates_cte} USING (vec_id)
     CROSS JOIN (SELECT embedding FROM embeddings
-                WHERE vec_id = {probe_id}) p
+                WHERE vec_id = {PQ_PROBE}) p
     ORDER BY sim DESC, vec_id
-    LIMIT {topk}
+    LIMIT {PQ_TOPK}
     """
 
 
-def pq_adc_sql(
-    m: int = 8,
-    k: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    train_n: int = 256,
-    candidates: int = 64,
-    topk: int = 8,
-    probe_id: int = 0,
-) -> str:
+def pq_adc_sql() -> str:
     """Full v_pq_adc_topk oracle: train → encode → ADC cut → exact
     rerank."""
     return f"""
-    WITH {pq_ctes(m, k, iters, dim, train_n, probe_id)},
+    WITH {pq_ctes()},
     cand AS (
-        SELECT vec_id FROM adc WHERE vec_id <> {probe_id}
-        ORDER BY adc DESC, vec_id LIMIT {candidates}
+        SELECT vec_id FROM adc WHERE vec_id <> {PQ_PROBE}
+        ORDER BY adc DESC, vec_id LIMIT {ADC_CANDIDATES}
     )
-    {_rerank_select('cand', topk, probe_id)}
+    {_rerank_select('cand')}
     """
 
 
-def ivfadc_sql(
-    m: int = 8,
-    k: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    train_n: int = 256,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    candidates: int = 32,
-    topk: int = 8,
-    probe_id: int = 0,
-) -> str:
+def ivfadc_sql() -> str:
     """v_ivfadc_topk oracle: integer IVF pruning (argmax of exact-int
     dot / correctly-rounded sqrt of the centroid's exact int norm² —
     the v_ivf_cell_balance score discipline at KM_SCALE) composed with
     the PQ/ADC cut and exact rerank."""
     dot = (
-        f"CAST(list_sum(list_transform(range(0, {dim}), "
+        f"CAST(list_sum(list_transform(range(0, {DIM}), "
         f"i -> e.v[i+1] * c.cv[i+1])) AS BIGINT)"
     )
     c_norm2 = (
-        f"CAST(list_sum(list_transform(range(0, {dim}), "
+        f"CAST(list_sum(list_transform(range(0, {DIM}), "
         f"i -> cv[i+1] * cv[i+1])) AS BIGINT)"
     )
     return f"""
-    WITH {pq_ctes(m, k, iters, dim, train_n, probe_id)},
+    WITH {pq_ctes()},
     cent AS MATERIALIZED (
         SELECT vec_id AS cid, v AS cv, sqrt(CAST({c_norm2} AS DOUBLE)) AS nrm
-        FROM q WHERE vec_id < {n_cells}
+        FROM q WHERE vec_id < {IVF_CELLS}
     ),
     keep AS (
         SELECT cid FROM (
@@ -179,8 +164,8 @@ def ivfadc_sql(
                        ORDER BY CAST({dot.replace('e.v', 'p.v')} AS DOUBLE)
                                 / c.nrm DESC, c.cid) AS rk
             FROM cent c CROSS JOIN (SELECT v FROM q
-                                    WHERE vec_id = {probe_id}) p
-        ) WHERE rk <= {nprobe}
+                                    WHERE vec_id = {PQ_PROBE}) p
+        ) WHERE rk <= {IVF_NPROBE}
     ),
     members AS MATERIALIZED (
         SELECT vec_id FROM (
@@ -193,8 +178,8 @@ def ivfadc_sql(
     ),
     cand AS (
         SELECT vec_id FROM adc JOIN members USING (vec_id)
-        WHERE vec_id <> {probe_id}
-        ORDER BY adc DESC, vec_id LIMIT {candidates}
+        WHERE vec_id <> {PQ_PROBE}
+        ORDER BY adc DESC, vec_id LIMIT {IVFADC_CANDIDATES}
     )
-    {_rerank_select('cand', topk, probe_id)}
+    {_rerank_select('cand')}
     """

@@ -780,7 +780,7 @@ def p_props_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan is 1 partition, so spread the parse across cores (no-op on
     # split layouts — the spread() contract)
     ev = spread(table(spark, sf_dir, "events"))
-    k = jget_num("props", "$.k", 0.0)
+    k = jget_num("props", "$.k")
     missing = F.get_json_object(F.col("props"), "$.missing")
     return ev.groupBy("event_type").agg(
         (F.sum(k.cast("decimal(12,2)")).cast("double") / F.count("*")).alias("avg_k"),
@@ -961,13 +961,13 @@ def v_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.topk_join(emb, probes, k=3).select("probe_id", "vec_id", "sim")
 
 
-# The LSH hyperplanes are a deterministic LCG stream (seed 42), so the
-# "approximate" query is exactly reproducible: inline the plane
+# The LSH hyperplanes are a deterministic LCG stream (``sim.LSH_SEED``),
+# so the "approximate" query is exactly reproducible: inline the plane
 # constants into the oracle as DOUBLE[] literals and re-derive the
 # banded-signature join in SQL. 17-sig-digit literals round-trip to the
 # identical float64 the pandas-UDF matmul uses; sign decisions agree
 # unless a dot product sits within ~1e-15 of zero (never on this data).
-_LSH_PLANES = sim.random_hyperplanes(dim=64, n_planes=16, seed=42)
+_LSH_PLANES = sim.random_hyperplanes(dim=64, n_planes=sim.LSH_PLANES)
 _LSH_PLANE_SQL = [
     "CAST([" + ", ".join(f"{x:.17g}" for x in plane) + "] AS DOUBLE[])"
     for plane in _LSH_PLANES
@@ -976,6 +976,7 @@ _LSH_BITS_SQL = ",\n           ".join(
     f"CASE WHEN list_dot_product(v, {p}) >= 0 THEN '1' ELSE '0' END"
     for p in _LSH_PLANE_SQL
 )
+_LSH_PER_BAND = sim.LSH_PLANES // sim.LSH_BANDS
 
 
 @register(
@@ -989,8 +990,8 @@ _LSH_BITS_SQL = ",\n           ".join(
     ),
     banded AS (
         SELECT vec_id, band,
-               array_to_string(list_slice(bits, band * 4 + 1, band * 4 + 4), '') AS bkey
-        FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b
+               array_to_string(list_slice(bits, band * {_LSH_PER_BAND} + 1, band * {_LSH_PER_BAND} + {_LSH_PER_BAND}), '') AS bkey
+        FROM sig CROSS JOIN (SELECT unnest({list(range(sim.LSH_BANDS))}) AS band) b
     ),
     cand AS (
         SELECT DISTINCT c.vec_id, p.vec_id AS probe_id

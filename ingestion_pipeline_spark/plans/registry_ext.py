@@ -12,7 +12,7 @@ from ..functions.exact import cents_disc_price, exact_sum, money, one_minus, sum
 from ..operators import similarity as sim
 from ..operators.relational import spread, topk_per_group
 from ..sources.parquet_tables import table
-from .registry import SQL_DISC, SQL_EXT, _disc_price, register
+from .registry import SQL_DISC, SQL_EXT, SQL_TOKENS, _disc_price, register
 
 # =======================================================================
 # q* — more TPC-H shapes
@@ -444,7 +444,7 @@ def p_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.extract import jget_str
 
     ev = table(spark, sf_dir, "events").filter(F.col("event_type") == "click")
-    k = jget_str("props", "$.k", "0").cast("long")
+    k = jget_str("props", "$.k").cast("long")
     return ev.select(
         "event_id",
         F.to_json(F.struct(k.alias("k"))).alias("rebuilt"),
@@ -536,21 +536,15 @@ def d_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    # bound here so the worker receives the function, not the module
+    cosine_blocks = sim.cosine_blocks
+
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         ids = pdf["vec_id"].to_numpy()
-        n = len(pdf)
-        norms = np.sqrt(np.einsum("ij,ij->i", X, X))
         out_a, out_b, out_s = [], [], []
-        block = 512
-        for a0 in range(1, n, block):
-            b0 = min(a0 + block, n)
-            D = X[a0:b0] @ X.T
-            den = np.outer(norms[a0:b0], norms)
-            S = np.where(den > 0, D / np.where(den == 0, 1.0, den), 0.0)
-            S = np.floor(np.abs(S) * 1e6 + 0.5) / 1e6 * np.sign(S)  # HALF_UP 6dp
-            for r in range(b0 - a0):
+        for a0, S in cosine_blocks(np.stack(pdf["embedding"].to_numpy())):
+            for r in range(len(S)):
                 g = a0 + r
                 js = np.nonzero(S[r, :g] >= 0.3)[0]
                 if len(js):
@@ -618,37 +612,17 @@ def d_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     "|corpus|·n_probe/n_clusters rows.",
 )
 def v_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     emb = spread(table(spark, sf_dir, "embeddings"), min_partitions=8)
-    # ONE driver-side job fetches centroids AND probe: the probe
-    # (vec_id 0) is a member of the seed-centroid set (vec_id < 16), so
-    # a separate .first() job was pure fixed-cost overhead (~0.2 s of
-    # the r5 bench minimum; verdict r5 directive #2). Collected from
-    # the un-repartitioned scan — 16 rows never need a shuffle.
-    centroid_rows = (
-        table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-
-    def l2norm(v: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else v
-
-    # centroids pre-normalized driver-side: argmax over plain dot
-    # products ≡ argmax over cosine (positive scaling). Assignment is an
-    # Arrow-vectorized argmax (one BLAS matmul per batch) — 16 per-row
-    # interpreted fold expressions would be the slow path.
-    centroids = [l2norm([float(x) for x in r["embedding"]]) for r in centroid_rows]
+    # ONE driver-side job fetches centroids AND probe (verdict r5
+    # directive #2), from the un-repartitioned scan — 16 rows never
+    # need a shuffle. Assignment is an Arrow-vectorized argmax (one
+    # BLAS matmul per batch) — 16 per-row interpreted fold expressions
+    # would be the slow path.
+    probe, centroids = sim.seed_centroids(table(spark, sf_dir, "embeddings"))
     nearest = sim.assign_nearest_np(centroids)
-    assert centroid_rows[0]["vec_id"] == 0
-    probe = [float(x) for x in centroid_rows[0]["embedding"]]
 
     def cos_py(a: list[float], b: list[float]) -> float:
-        return sum(x * y for x, y in zip(l2norm(a), l2norm(b)))
+        return sum(x * y for x, y in zip(sim.l2norm(a), sim.l2norm(b)))
 
     keep = sorted(range(16), key=lambda i: -cos_py(probe, centroids[i]))[:4]
     # the probe exclusion goes BEFORE the kernel column: the kernel is
@@ -674,7 +648,7 @@ def v_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tx* — text-analysis family as oracle-checked queries
 # =======================================================================
 
-_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
+_TOKS = SQL_TOKENS.format(col="text")
 _LANG_HITS = {
     lang: f"len(list_filter({_TOKS}, t -> list_contains({markers!r}, t)))"
     for lang, markers in sorted(
@@ -711,7 +685,7 @@ def tx_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.col("lang").alias("true_lang"), "text"
     )
-    return langid_join(docs, "text").select(
+    return langid_join(docs).select(
         "doc_id", "true_lang", "predicted_lang"
     )
 

@@ -103,7 +103,7 @@ def _survivors_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") == F.col("__canon"))
         .select("doc_id", "source", "text")
     )
-    scored = tx.langid_join(survivors, "text").withColumn(
+    scored = tx.langid_join(survivors).withColumn(
         "quality", F.round(tx.quality_score(F.col("text")), 6)
     )
     return scored.filter(

@@ -64,7 +64,7 @@ def d_incremental_novel_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.filter(F.col("doc_id") < _BATCH_SPLIT)
     batch = docs.filter(F.col("doc_id") >= _BATCH_SPLIT)
-    novel = dd.incremental_novel(batch, corpus, "text", "doc_id", "block", threshold=0.12)
+    novel = dd.incremental_novel(batch, corpus, "text", "doc_id", "block")
     return novel.select("doc_id", "source", "lang")
 
 

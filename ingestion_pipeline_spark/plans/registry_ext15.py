@@ -206,21 +206,8 @@ def d_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the per-pair cosine is one batched einsum per Arrow batch.",
 )
 def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     emb = spread(table(spark, sf_dir, "embeddings"), min_partitions=8)
-    centroid_rows = (
-        emb.filter(F.col("vec_id") < 16)
-        .select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .collect()
-    )
-
-    def l2norm(v: list[float]) -> list[float]:
-        n = math.sqrt(sum(x * x for x in v))
-        return [x / n for x in v] if n > 0 else v
-
-    centroids = [l2norm([float(x) for x in r["embedding"]]) for r in centroid_rows]
+    _, centroids = sim.seed_centroids(emb)
     nearest = sim.assign_nearest_np(centroids)
     assigned = emb.select(
         "vec_id", "embedding", nearest(F.col("embedding")).alias("cluster")
@@ -238,23 +225,17 @@ def d_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    # bound here so the worker receives the function, not the module
+    cosine_blocks = sim.cosine_blocks
+
     def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        n = len(pdf)
-        norms = np.sqrt(np.einsum("ij,ij->i", X, X))
-        keep = np.ones(n, dtype=bool)
-        block = 512
-        for a0 in range(1, n, block):
-            b0 = min(a0 + block, n)
-            D = X[a0:b0] @ X.T  # (b0-a0, n) raw dots
-            den = np.outer(norms[a0:b0], norms)
-            S = np.where(den > 0, D / np.where(den == 0, 1.0, den), 0.0)
-            S = np.floor(np.abs(S) * 1e6 + 0.5) / 1e6 * np.sign(S)  # HALF_UP 6dp
+        keep = np.ones(len(pdf), dtype=bool)
+        for a0, S in cosine_blocks(np.stack(pdf["embedding"].to_numpy())):
             close = S >= 0.35
             has = close.any(axis=1)
             first = close.argmax(axis=1)  # first close column (0 if none)
-            g_idx = np.arange(a0, b0)
+            g_idx = np.arange(a0, a0 + len(S))
             # dropped iff some close j strictly before g (self-sim at
             # column g is 1.0, correctly ignored by first < g)
             keep[g_idx[has & (first < g_idx)]] = False

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import PR_SCALE, pagerank_fixed_point
 from ..sources.parquet_tables import table
-from .pagerank_sql import pagerank_fp_ctes
+from .pagerank_sql import PR_RANKS, pagerank_fp_ctes
 from .registry import register
 
 _NEARDUP_PAIRS_SQL = """
@@ -39,10 +39,10 @@ _NEARDUP_PAIRS_SQL = """
     "d_pagerank_neardup",
     f"""
     WITH {_NEARDUP_PAIRS_SQL},
-    {pagerank_fp_ctes(10)}
+    {pagerank_fp_ctes()}
     SELECT n AS vec_id, r AS rank_fp,
            ROUND(CAST(r AS DOUBLE) / {PR_SCALE}, 9) AS rank
-    FROM pr_r10
+    FROM {PR_RANKS}
     """,
     "PageRank (damping 85/100, 10 fixed power iterations) over the "
     "symmetric embedding near-dup graph (label-blocked cosine >= 0.3 — "
@@ -69,7 +69,7 @@ def d_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = REGISTRY["d_embedding_near_dups"].spark(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    ranks = pagerank_fixed_point(pairs, "id_a", "id_b", iters=10)
+    ranks = pagerank_fixed_point(pairs, "id_a", "id_b")
     return ranks.select(
         F.col("n").alias("vec_id"),
         "rank_fp",

@@ -21,14 +21,13 @@ from ..operators.kmeans import quantized
 from ..operators.pq import adc_score_int, train_pq_codebooks_int
 from ..operators.similarity import brute_force_topk
 from ..sources.parquet_tables import table
-from .pq_sql import pq_adc_sql
+from .pq_sql import ADC_CANDIDATES, PQ_PROBE, PQ_TOPK, PQ_TRAIN_N, pq_adc_sql
 from .registry import register
 
 
 @register(
     "v_pq_adc_topk",
-    pq_adc_sql(m=8, k=16, iters=2, dim=64, train_n=256, candidates=64,
-               topk=8, probe_id=0),
+    pq_adc_sql(),
     "Product-quantization ANN: 64-d vectors → M=8 sub-codes from "
     "K=16-entry per-subspace codebooks (256 B -> 8 B, 32×; the margin "
     "that fits a 100 TB corpus's index in memory), probe scored via "
@@ -49,25 +48,25 @@ def v_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quantized(emb)
     # bounded training sample: first 256 vectors by id (deterministic);
     # collected ALREADY-quantized so no float touches Python
-    rows = q.filter(F.col("vec_id") < 256).orderBy("vec_id").collect()
+    rows = q.filter(F.col("vec_id") < PQ_TRAIN_N).orderBy("vec_id").collect()
     # parity precondition (advice r6): train_pq_codebooks_int keys
     # codewords by array POSITION while pq_sql keys them by vec_id —
     # identical only when ids are contiguous 0..n-1
     ids = [r["vec_id"] for r in rows]
     assert ids == list(range(len(ids))), f"non-contiguous train ids: {ids[:8]}…"
     train = np.stack([np.asarray(r["v"], dtype=np.int64) for r in rows])
-    books = train_pq_codebooks_int(train, m=8, k=16, iters=2)
+    books = train_pq_codebooks_int(train)
     cand = (
-        q.withColumn("adc", adc_score_int("v", train[0], books))
-        .filter(F.col("vec_id") != 0)
+        q.withColumn("adc", adc_score_int("v", train[PQ_PROBE], books))
+        .filter(F.col("vec_id") != PQ_PROBE)
         .orderBy(F.desc("adc"), "vec_id")
-        .limit(64)
+        .limit(ADC_CANDIDATES)
         .select(F.col("vec_id").alias("cand_id"))
     )
     shortlist = emb.join(
         F.broadcast(cand), emb["vec_id"] == F.col("cand_id")
     ).select("vec_id", "embedding")
     probe = _probe(spark, sf_dir)
-    return brute_force_topk(shortlist, "embedding", probe, k=8).select(
+    return brute_force_topk(shortlist, "embedding", probe, k=PQ_TOPK).select(
         "vec_id", "sim"
     )

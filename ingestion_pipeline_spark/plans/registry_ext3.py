@@ -347,7 +347,7 @@ def d_simhash16_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.lit("0"))
 
     return (
-        docs.select("doc_id", shingles(F.col("text"), 3).alias("__sh"))
+        docs.select("doc_id", shingles(F.col("text")).alias("__sh"))
         .select("doc_id", vals.alias("__vals"))
         .select("doc_id", F.concat(*[bit(i) for i in range(16)]).alias("simhash16"))
     )

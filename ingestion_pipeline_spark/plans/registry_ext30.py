@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.bpe import bpe_train_local, word_frequencies
+from ..operators.bpe import BPE_MERGES, BPE_TOP_N, bpe_train_local, word_frequencies
 from ..sources.parquet_tables import table
 from .bpe_sql import bpe_merges_sql, bpe_tokenize_sql
 from .registry import register
@@ -28,7 +28,7 @@ _BINS = 20
 
 @register(
     "tx_bpe_merges",
-    bpe_merges_sql(10, 200),  # argmax rounds unrolled via the
+    bpe_merges_sql(),  # argmax rounds unrolled via the
     # chained-REPLACE greedy-merge identity (plans/bpe_sql.py)
     "BPE tokenizer training: 10 merge rounds over the top-200 word-"
     "frequency table of the documents corpus. Deterministic — exact "
@@ -43,7 +43,7 @@ _BINS = 20
 )
 def tx_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    return bpe_train_local(spark, word_frequencies(docs, top_n=200), n_merges=10)
+    return bpe_train_local(spark, word_frequencies(docs, top_n=BPE_TOP_N), n_merges=BPE_MERGES)
 
 
 @register(
@@ -99,14 +99,14 @@ def g_histogram_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _learned_merges(spark: SparkSession, docs: DataFrame) -> list[tuple[str, str]]:
     learned = bpe_train_local(
-        spark, word_frequencies(docs, top_n=200), n_merges=10
+        spark, word_frequencies(docs, top_n=BPE_TOP_N), n_merges=BPE_MERGES
     ).collect()
     return [(r["pair_a"], r["pair_b"]) for r in learned]
 
 
 @register(
     "tx_bpe_tokenize",
-    bpe_tokenize_sql(10, 200),  # oracle re-learns the merges AND
+    bpe_tokenize_sql(),  # oracle re-learns the merges AND
     # re-applies them via chained REPLACEs (plans/bpe_sql.py)
     "BPE tokenizer APPLICATION, production path: the learned merge "
     "list (tx_bpe_merges) broadcasts into a batched Arrow mapInPandas "
@@ -128,7 +128,7 @@ def tx_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx_bpe_tokenize_fold",
-    bpe_tokenize_sql(10, 200),  # same oracle as the Arrow path — the
+    bpe_tokenize_sql(),  # same oracle as the Arrow path — the
     # two implementations must agree with it AND each other
     "BPE tokenizer application as PURE PLAN: the merge list unrolls "
     "into chained fold expressions — one interpreted higher-order fold "

@@ -44,7 +44,7 @@ from .registry import register
     "strip_accents; non-ASCII semantics pinned in pytest.",
 )
 def tx_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    norm = unicode_normalize_udf("NFC", strip_accent_marks=True)
+    norm = unicode_normalize_udf(strip_accent_marks=True)
     docs = table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -117,7 +117,7 @@ def tx_c4_sentence_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tx_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import compression_ratio_udf
 
-    ratio = compression_ratio_udf(6)
+    ratio = compression_ratio_udf()
     docs = table(spark, sf_dir, "documents")
     r = ratio(F.col("text"))
     return docs.select(

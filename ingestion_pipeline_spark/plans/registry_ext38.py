@@ -100,7 +100,7 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "sim")
         .join(emb.select("vec_id", "embedding"), "vec_id")
     )
-    picked = mmr_rerank(cands, k=5, lam=0.7)
+    picked = mmr_rerank(cands, k=5)
     return spark.createDataFrame(
         [(rank, vid, rel, score) for rank, (vid, rel, score) in enumerate(picked)],
         "mmr_rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE",

@@ -24,10 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import PR_SCALE, bounded_pagerank_fixed_point
+from ..operators.graph import PR_ITERS, PR_SCALE, bounded_pagerank_fixed_point
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
-from .pagerank_sql import pagerank_fp_ctes
+from .pagerank_sql import PR_RANKS, pagerank_fp_ctes
 from .registry import register
 
 _TOP_VOCAB = 150
@@ -64,10 +64,10 @@ _EDGES_SQL = f"""
     "tx_textrank_keywords",
     f"""
     WITH {_EDGES_SQL},
-    {pagerank_fp_ctes(10)}
+    {pagerank_fp_ctes()}
     SELECT n AS keyword, r AS rank_fp,
            ROUND(CAST(r AS DOUBLE) / {PR_SCALE}, 8) AS rank
-    FROM pr_r10
+    FROM {PR_RANKS}
     ORDER BY r DESC, n LIMIT {_TOP_K}
     """,
     "TextRank corpus keywords: adjacent-word co-occurrence edges over "
@@ -116,7 +116,7 @@ def tx_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ranks = bounded_pagerank_fixed_point(
-        edges, "src", "dst", iters=10, max_edges=_MAX_EDGES
+        edges, "src", "dst", iters=PR_ITERS, max_edges=_MAX_EDGES
     )
     return (
         ranks.orderBy(F.col("rank_fp").desc(), F.col("n"))

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.kmeans import kmeans_fixed_point
+from ..operators.kmeans import KM_K, kmeans_fixed_point
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .kmeans_sql import kmeans_sql
@@ -23,7 +23,7 @@ from .registry import register
 
 @register(
     "v_kmeans_clusters",
-    kmeans_sql(k=16, iters=3, dim=64),
+    kmeans_sql(),
     "Distributed fixed-point k-means (k=16, 3 Lloyd rounds) over the "
     "embeddings corpus: coordinates quantize once to int64 milli-units "
     "(half-away round — engine-identical), assignment is an exact-"
@@ -39,4 +39,4 @@ from .registry import register
 )
 def v_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(table(spark, sf_dir, "embeddings"), min_partitions=8)
-    return kmeans_fixed_point(emb, k=16, iters=3)
+    return kmeans_fixed_point(emb, k=KM_K)

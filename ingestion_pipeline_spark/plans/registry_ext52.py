@@ -14,11 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import label_propagation
+from ..operators.graph import LPA_ITERS, label_propagation
 from .registry import register
 from .registry_ext23 import _NEARDUP_PAIRS_SQL
-
-_ITERS = 4
 
 
 def _lpa_ctes(iters: int) -> str:
@@ -53,10 +51,10 @@ def _lpa_ctes(iters: int) -> str:
     "d_lpa_communities",
     f"""
     WITH {_NEARDUP_PAIRS_SQL},
-    {_lpa_ctes(_ITERS)}
-    SELECT n AS vec_id, label AS community FROM lb{_ITERS}
+    {_lpa_ctes(LPA_ITERS)}
+    SELECT n AS vec_id, label AS community FROM lb{LPA_ITERS}
     """,
-    f"Label-propagation communities ({_ITERS} synchronous rounds, "
+    f"Label-propagation communities ({LPA_ITERS} synchronous rounds, "
     "majority vote over neighbours + self, ties to the smallest "
     "label) on the near-dup graph — density-boundary communities "
     "where connected components see only connectivity. All-integer "
@@ -75,23 +73,23 @@ def d_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = REGISTRY["d_embedding_near_dups"].spark(spark, sf_dir).select(
         "id_a", "id_b"
     )
-    return label_propagation(pairs, "id_a", "id_b", iters=_ITERS).select(
+    return label_propagation(pairs, "id_a", "id_b").select(
         F.col("n").alias("vec_id"), "community"
     )
 
 
 from ..operators.graph import PR_SCALE, pagerank_fixed_point  # noqa: E402
-from .pagerank_sql import pagerank_fp_ctes  # noqa: E402
+from .pagerank_sql import PR_RANKS, pagerank_fp_ctes  # noqa: E402
 
 
 @register(
     "d_personalized_pagerank",
     f"""
     WITH {_NEARDUP_PAIRS_SQL},
-    {pagerank_fp_ctes(10, seed_pred="n % 50 = 0")}
+    {pagerank_fp_ctes(seed_pred="n % 50 = 0")}
     SELECT n AS vec_id, r AS rank_fp,
            ROUND(CAST(r AS DOUBLE) / {PR_SCALE}, 9) AS rank
-    FROM pr_r10 WHERE r > 0
+    FROM {PR_RANKS} WHERE r > 0
     """,
     "Personalized (seeded) PageRank over the near-dup graph: restart "
     "mass returns to the seed set (every 50th vec_id — a stand-in for "
@@ -113,7 +111,7 @@ def d_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     )
     ranks = pagerank_fixed_point(
-        pairs, "id_a", "id_b", iters=10, seed=lambda n: n % 50 == 0
+        pairs, "id_a", "id_b", seed=lambda n: n % 50 == 0
     )
     return (
         ranks.filter(F.col("rank_fp") > 0)

@@ -69,7 +69,7 @@ def w_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return ewma_per_entity(
-        ev, "user_id", ["ts_us", "event_id"], "value", alpha=0.5
+        ev, "user_id", ["ts_us", "event_id"], "value"
     )
 
 
@@ -147,10 +147,7 @@ def v_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") != 0)
     query_doc = docs.filter(F.col("doc_id") == 0)
-    return maxsim_topk(
-        corpus, query_doc, "text", "doc_id",
-        k=10, dim=16, max_doc_tokens=8, max_query_tokens=4,
-    )
+    return maxsim_topk(corpus, query_doc, k=10)
 
 
 @register(
@@ -203,5 +200,5 @@ def w_holt_trend_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return holt_per_entity(
-        ev, "user_id", ["ts_us", "event_id"], "value", alpha=0.5, beta=0.5
+        ev, "user_id", ["ts_us", "event_id"], "value"
     )

@@ -162,7 +162,7 @@ def dq_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges (3.16 → 0.94 s at the sf0.1 bench vs the explode →
     # lexicon-join shape it replaced)
     conf = (
-        langid_join(docs, "text")
+        langid_join(docs)
         .select(F.col("lang").alias("true_lang"), "predicted_lang")
         .groupBy("true_lang", "predicted_lang")
         .agg(F.count("*").alias("n"))

@@ -86,7 +86,7 @@ def e_annotator_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exchanges in the compiled plan). Checkpoint the bounded matrix
     # once; the corpus is touched the two inherent times (guide §2.4).
     conf = (
-        langid_join(docs, "text")
+        langid_join(docs)
         .select(F.col("lang").alias("t"), F.col("predicted_lang").alias("p"))
         .groupBy("t", "p")
         .agg(F.count("*").alias("c"))

@@ -43,7 +43,7 @@ _TOKS = SQL_TOKENS.format(col="text")
 
 @register(
     "tx_tokenizer_fertility",
-    bpe_fertility_sql(10, 200),  # re-learns the merges, re-applies via
+    bpe_fertility_sql(),  # re-learns the merges, re-applies via
     # chained REPLACEs, rolls up per lang (plans/bpe_sql.py)
     "Per-language BPE fertility: the tx_bpe_merges vocabulary applied "
     "by the production Arrow tokenizer (per-batch distinct-word "
@@ -58,6 +58,8 @@ _TOKS = SQL_TOKENS.format(col="text")
 )
 def tx_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bpe import (
+        BPE_MERGES,
+        BPE_TOP_N,
         bpe_tokenize_counts_arrow,
         bpe_train_local,
         word_frequencies,
@@ -66,7 +68,7 @@ def tx_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(table(spark, sf_dir, "documents"))
     learned = bpe_train_local(
-        spark, word_frequencies(docs, top_n=200), n_merges=10
+        spark, word_frequencies(docs, top_n=BPE_TOP_N), n_merges=BPE_MERGES
     ).collect()
     merges = [(r["pair_a"], r["pair_b"]) for r in learned]
     counts = bpe_tokenize_counts_arrow(docs, merges, carry_cols=("lang",))

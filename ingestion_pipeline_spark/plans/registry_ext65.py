@@ -343,7 +343,7 @@ def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
         F.when(F.col(f"amh_{i}") == F.col(f"bmh_{i}"), 1).otherwise(0)
         for i in range(_N_HASHES)
     )
-    jac = jaccard3_bp(3)
+    jac = jaccard3_bp()
     return (
         samp.join(a, "id_a")
         .join(b, "id_b")
@@ -409,9 +409,8 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     persisted because they feed multiple consumers):
 
     - ``docs``      full documents rows
-    - ``s1``        exact-stage survivor ids (keep-min-id per
-                    normalized-content md5)
-    - ``d1_ids``    exact-stage survivor doc_ids as a 1-column frame —
+    - ``s1``        exact-stage survivor doc_ids as a 1-column frame
+                    (keep-min-id per normalized-content md5) — also
                     the node set the capped cluster/leakage queries
                     component over
     - ``ranked``    near-stage candidate pairs (id_a, id_b, nb, rk)
@@ -465,7 +464,7 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # signature stage AND ``survivors`` (one expression, no drift).
     # r12: s1 is the skinny survivor-id frame (consumers use only the
     # ids / their count — the __h group key never leaves this function)
-    # and it feeds sig, survivors AND the returned s1/d1_ids keys;
+    # and it feeds sig, survivors AND the returned s1 key;
     # unpersisted, every consumer re-ran the full-text norm-md5
     # aggregate (scan census: 5+ documents scans per capped query).
     # persist(), NOT localCheckpoint: a checkpoint truncates lineage
@@ -473,10 +472,10 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # from broadcast to a sort-merge shuffle of the FULL text corpus —
     # A/B-measured 2x slower across the whole family; persist dedupes
     # runtime execution identically while keeping stats (guide §5).
-    # d1_ids below IS s1: min(doc_id) per group is an existing doc_id
-    # and docs is unique by doc_id, so docs⋈s1 selects exactly s1's
-    # ids — the former docs join was a full extra scan for an
-    # identical id set.
+    # the node set of the capped cluster queries IS s1: min(doc_id)
+    # per group is an existing doc_id and docs is unique by doc_id, so
+    # docs⋈s1 selects exactly s1's ids — a former docs join was a full
+    # extra scan for an identical id set.
     s1 = (
         docs.groupBy(norm.alias("__h"))
         .agg(F.min("doc_id").alias("doc_id"))
@@ -547,7 +546,7 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     excluded = ranked.filter(F.col("rk") > _VERIFY_K).agg(
         F.count("*").cast("long").alias("excluded_pairs")
     )
-    jac = jaccard3_bp(3)
+    jac = jaccard3_bp()
     # verified near-dup EDGES: in-budget candidates whose exact Jaccard
     # qualifies — the drop rule AND the capped cluster graph both read
     # this one definition
@@ -592,7 +591,6 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {
         "docs": docs,
         "s1": s1,
-        "d1_ids": s1,
         "sig": sig,
         "bk": bk,
         "ranked": ranked,
@@ -853,7 +851,7 @@ def d_dup_clusters_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import dup_clusters
 
     fr = cascade_frames(spark, sf_dir)
-    assigned = dup_clusters(fr["d1_ids"], fr["edges"], "doc_id")
+    assigned = dup_clusters(fr["s1"], fr["edges"], "doc_id")
     return (
         assigned.crossJoin(F.broadcast(fr["excluded"]))
         .crossJoin(
@@ -943,7 +941,7 @@ def d_split_leakage_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~44) — the wall gain is modest on a warm-page-cache local box,
     # but the plan drops one full-corpus TEXT scan + one exchange,
     # which is the certain win at 100 TB
-    msp = dup_clusters(fr["d1_ids"], fr["edges"], "doc_id").select(
+    msp = dup_clusters(fr["s1"], fr["edges"], "doc_id").select(
         F.col("component").alias("cluster_id"),
         dataset_split(F.col("doc_id")).alias("split"),
     )

@@ -47,12 +47,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.graph import (
+    LPA_ITERS,
     PR_SCALE,
     label_propagation,
     pagerank_fixed_point,
     triangle_count,
 )
-from .pagerank_sql import pagerank_fp_ctes
+from .pagerank_sql import PR_RANKS, pagerank_fp_ctes
 from .registry import register
 from .registry_ext65 import (
     _CASCADE_SQL_CTES,
@@ -194,11 +195,11 @@ def _ppr_capped_sql() -> str:
     {_ED_CTE},
     {_EXC_CTE},
     pairs AS MATERIALIZED (SELECT id_a, id_b FROM ed),
-    {pagerank_fp_ctes(10, seed_pred="n % 50 = 0")}
+    {pagerank_fp_ctes(seed_pred="n % 50 = 0")}
     SELECT pr.n AS doc_id, pr.r AS rank_fp,
            ROUND(CAST(pr.r AS DOUBLE) / {PR_SCALE}, 9) AS rank,
            e.excluded_pairs, g.n_guarded AS guarded_buckets
-    FROM pr_r10 pr
+    FROM {PR_RANKS} pr
     CROSS JOIN exc e CROSS JOIN gb g
     WHERE pr.r > 0
     """
@@ -235,7 +236,7 @@ def d_personalized_pagerank_capped(
 ) -> DataFrame:
     fr = cascade_frames(spark, sf_dir)
     ranks = pagerank_fixed_point(
-        fr["edges"], "id_a", "id_b", iters=10, seed=lambda n: n % 50 == 0
+        fr["edges"], "id_a", "id_b", seed=lambda n: n % 50 == 0
     )
     return (
         ranks.filter(F.col("rank_fp") > 0)
@@ -260,27 +261,25 @@ def d_personalized_pagerank_capped(
 
 
 def _lpa_capped_sql() -> str:
-    from .registry_ext52 import _ITERS, _lpa_ctes
+    from .registry_ext52 import _lpa_ctes
 
     return f"""
     WITH {_CASCADE_SQL_CTES},
     {_ED_CTE},
     {_EXC_CTE},
     pairs AS (SELECT id_a, id_b FROM ed),
-    {_lpa_ctes(_ITERS)}
+    {_lpa_ctes(LPA_ITERS)}
     SELECT lb.n AS doc_id, lb.label AS community,
            e.excluded_pairs, g.n_guarded AS guarded_buckets
-    FROM lb{_ITERS} lb
+    FROM lb{LPA_ITERS} lb
     CROSS JOIN exc e CROSS JOIN gb g
     """
 
 
 def _lpa_capped_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .registry_ext52 import _ITERS
-
     fr = cascade_frames(spark, sf_dir)
     return (
-        label_propagation(fr["edges"], "id_a", "id_b", iters=_ITERS)
+        label_propagation(fr["edges"], "id_a", "id_b")
         .crossJoin(F.broadcast(fr["excluded"]))
         .crossJoin(
             F.broadcast(

@@ -14,21 +14,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# interval_join's bound: a right row within 30 minutes after its left row
+_LOWER, _UPPER = "INTERVAL 0 SECONDS", "INTERVAL 30 MINUTES"
+_WATERMARK = "30 minutes"
+
 
 def interval_join(
     left: DataFrame,
     right: DataFrame,
     left_key: str,
     right_key: str,
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    lower: str = "INTERVAL 0 SECONDS",
-    upper: str = "INTERVAL 30 MINUTES",
-    watermark: str = "30 minutes",
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-key join constrained to ``left_ts - lower <= right_ts <=
-    left_ts + upper`` — the event-correlation join (click→purchase,
+    """Inner equi-key join constrained to ``l_ts - _LOWER <= r_ts <=
+    l_ts + _UPPER`` — the event-correlation join (click→purchase,
     request→response). Streaming: both sides MUST carry watermarks and
     the time bound makes state evictable; Spark buffers each side only
     within [watermark, interval] — state is O(rate × interval), not
@@ -36,24 +34,20 @@ def interval_join(
     disjoint across the two sides (rename before calling).
     """
     if left.isStreaming:
-        left = left.withWatermark(left_ts, watermark)
+        left = left.withWatermark("l_ts", _WATERMARK)
     if right.isStreaming:
-        right = right.withWatermark(right_ts, watermark)
+        right = right.withWatermark("r_ts", _WATERMARK)
     cond = (
         (F.col(left_key) == F.col(right_key))
-        & (F.col(right_ts) >= F.expr(f"{left_ts} - {lower}"))
-        & (F.col(right_ts) <= F.expr(f"{left_ts} + {upper}"))
+        & (F.col("r_ts") >= F.expr(f"l_ts - {_LOWER}"))
+        & (F.col("r_ts") <= F.expr(f"l_ts + {_UPPER}"))
     )
-    return left.join(right, cond, how)
+    return left.join(right, cond, "inner")
 
 
-def clicks_to_purchases(
-    events: DataFrame,
-    max_gap: str = "INTERVAL 30 MINUTES",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def clicks_to_purchases(events: DataFrame) -> DataFrame:
     """Attribute every purchase to the clicks of the same user in the
-    preceding ``max_gap`` — the canonical funnel/attribution join, built
+    preceding 30 minutes (``_UPPER``) — the canonical funnel/attribution join, built
     from one events source split into two streams. Output: one row per
     (click, purchase) correlation with the gap in seconds.
     """
@@ -68,15 +62,7 @@ def clicks_to_purchases(
         F.col("event_id").alias("purchase_id"),
         F.col("value").alias("purchase_value"),
     )
-    joined = interval_join(
-        clicks,
-        purchases,
-        "user_id",
-        "r_user_id",
-        lower="INTERVAL 0 SECONDS",
-        upper=max_gap,
-        watermark=watermark,
-    )
+    joined = interval_join(clicks, purchases, "user_id", "r_user_id")
     return joined.select(
         "user_id",
         "click_id",

@@ -55,6 +55,22 @@ def test_registry_is_complete():
     }
 
 
+def test_spark_free_copies_match_the_operators():
+    """bounds.py imports no Spark, so it keeps its own copies of the
+    MinHash layout, the shingle hash seed and the zlib level; each must
+    equal the constant the Spark side computes with."""
+    from ingestion_pipeline_spark.functions import text
+    from ingestion_pipeline_spark.operators import dedup
+    from ingestion_pipeline_spark.plans import bounds
+
+    assert (bounds._N_HASHES, bounds._N_BANDS, bounds._HASH_SEED) == (
+        dedup.N_HASHES,
+        dedup.N_BANDS,
+        dedup.HASH_SEED,
+    )
+    assert bounds._ZLIB_LEVEL == text.ZLIB_LEVEL
+
+
 def test_differential_fails_a_query_without_oracle(capsys):
     """A query with neither oracle SQL nor a BOUND_CHECKS entry fails
     the differential instead of passing on its row count."""

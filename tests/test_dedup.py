@@ -195,7 +195,7 @@ def test_minhash_lsh_candidates_values(spark, sf_dir, recomputed):
     # values too, so a change to the band fold cannot hide behind it
     hashed = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("doc"),
-        dd.hashed_shingles(dd.shingles(F.col("text"), 3)).alias("__hs"),
+        dd.hashed_shingles(dd.shingles(F.col("text"))).alias("__hs"),
     )
     banded = {
         (r["doc"], r["band"]): r["bucket"] & ((1 << 64) - 1)

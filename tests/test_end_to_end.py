@@ -96,7 +96,6 @@ def test_reference_dag_end_to_end(spark, tmp_path):
     )[0]]
     hits = brute_force_topk(
         vt.withColumnRenamed("cve_id", "vec_id"), "embedding", qvec, k=2,
-        id_col="vec_id",
     )
     top = hits.join(
         vt.select(F.col("cve_id").alias("vec_id"), "text", "severity", "score"),

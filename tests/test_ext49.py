@@ -142,7 +142,7 @@ def test_kmeans_empty_cluster_keeps_centroid(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         r["vec_id"]: r["cluster"]
-        for r in kmeans_fixed_point(df, k=3, iters=3).collect()
+        for r in kmeans_fixed_point(df, k=3).collect()
     }
     # round 1: ties go to the LOWER cid, so cluster 1 empties and HOLDS
     # [0,0]; cluster 0's mean then shifts to [1,0] milli-units, after

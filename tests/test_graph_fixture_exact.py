@@ -100,7 +100,7 @@ def test_pagerank_fixed_point_exact(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
     got = {
         r["n"]: r["rank_fp"]
-        for r in pagerank_fixed_point(df, iters=10).collect()
+        for r in pagerank_fixed_point(df).collect()
     }
     assert got == _ref_pagerank_fp(EDGES, iters=10)
 
@@ -110,7 +110,7 @@ def test_personalized_pagerank_fixed_point_exact(spark):
     got = {
         r["n"]: r["rank_fp"]
         for r in pagerank_fixed_point(
-            df, iters=10, seed=lambda n: n.isin(0, 20)
+            df, seed=lambda n: n.isin(0, 20)
         ).collect()
     }
     assert got == _ref_ppr_fp(EDGES, [0, 20], iters=10)
@@ -141,11 +141,11 @@ def test_seeded_pagerank_runs_as_many_jobs_as_uniform(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         _, seeded = _jobs(spark, "ppr-seeded", lambda: pagerank_fixed_point(
-            df, iters=10, seed=lambda n: n.isin(0, 20)
+            df, seed=lambda n: n.isin(0, 20)
         ).collect())
         _, uniform = _jobs(
             spark, "ppr-uniform",
-            lambda: pagerank_fixed_point(df, iters=10).collect(),
+            lambda: pagerank_fixed_point(df).collect(),
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
@@ -156,7 +156,7 @@ def test_label_propagation_exact(spark):
     df = spark.createDataFrame(EDGES, "src long, dst long")
     got = {
         r["n"]: r["community"]
-        for r in label_propagation(df, iters=4).collect()
+        for r in label_propagation(df).collect()
     }
     assert got == _ref_lpa(EDGES, iters=4)
 
@@ -187,7 +187,7 @@ def test_bounded_pagerank_equals_distributed(spark, edges, ddl):
     df = spark.createDataFrame(edges, ddl)
     got = bounded_pagerank_fixed_point(df, "src", "dst", iters=10, max_edges=100)
     assert got.schema["n"].dataType == df.schema["src"].dataType
-    assert _ranks(got) == _ranks(pagerank_fixed_point(df, iters=10))
+    assert _ranks(got) == _ranks(pagerank_fixed_point(df))
 
 
 def test_bounded_pagerank_rejects_more_than_max_edges(spark):

@@ -231,7 +231,7 @@ def test_pagerank_fixed_point_tracks_float_reference(spark):
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["n"]: r["rank_fp"]
-        for r in pagerank_fixed_point(df, iters=10).collect()
+        for r in pagerank_fixed_point(df).collect()
     }
     sym = edges + [(b, a) for a, b in edges]
     ref = _pr_reference(sym)
@@ -260,7 +260,7 @@ def test_label_propagation_semantics(spark):
         (3, 10),                       # weak bridge
     ]
     df = spark.createDataFrame(edges, "src long, dst long")
-    lpa = {r["n"]: r["community"] for r in label_propagation(df, iters=4).collect()}
+    lpa = {r["n"]: r["community"] for r in label_propagation(df).collect()}
     cc = {r["n"]: r["component"] for r in connected_components(df).collect()}
     assert len(set(cc.values())) == 1       # one component (bridged)
     assert lpa[1] == lpa[2] == lpa[3]       # triangle A is one community
@@ -279,7 +279,7 @@ def test_personalized_pagerank_concentrates_on_seeds(spark):
     got = {
         r["n"]: r["rank_fp"]
         for r in pagerank_fixed_point(
-            df, iters=10, seed=lambda n: n == 1
+            df, seed=lambda n: n == 1
         ).collect()
     }
     assert got[10] == got[11] == got[12] == 0  # unreachable from seed

@@ -49,7 +49,7 @@ def test_mmr_matches_reference_and_diversifies(spark):
         (5, 0.55, [0.0, 0.0, 1.0, 0.0]),
     ]
     df = spark.createDataFrame(rows, "vec_id LONG, sim DOUBLE, embedding ARRAY<DOUBLE>")
-    got = mmr_rerank(df, k=3, lam=0.7)
+    got = mmr_rerank(df, k=3)
     ids = [g[0] for g in got]
     assert ids == _python_mmr(
         [r[0] for r in rows], [r[1] for r in rows], [r[2] for r in rows], 3, 0.7

@@ -30,13 +30,13 @@ def Q(emb):
 @pytest.fixture(scope="module")
 def books(Q):
     # the v_pq_adc_topk training set: the first 256 vectors by id
-    return train_pq_codebooks_int(Q[:256], m=8, k=16, iters=2)
+    return train_pq_codebooks_int(Q[:256])
 
 
 def test_codebook_shape_and_determinism(Q, books):
     assert books.shape == (8, 16, 8)
     assert books.dtype == np.int64
-    again = train_pq_codebooks_int(Q[:256].copy(), m=8, k=16, iters=2)
+    again = train_pq_codebooks_int(Q[:256].copy())
     assert np.array_equal(books, again)
 
 

@@ -57,7 +57,7 @@ def test_minhash_md5_kernel_matches_expression_variant(spark, texts):
     Duplicated texts exercise the per-batch digest cache; whitespace-only
     and short texts exercise the [None]*n_hashes parity branch."""
     n_hashes = 4
-    kern = minhash_md5_slots(n_hashes=n_hashes, n=3)
+    kern = minhash_md5_slots(n_hashes=n_hashes)
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts + texts)], "id long, t string")
 
     # single-arg lambda via factory: a default-arg closure (lambda s, i=i)
@@ -68,7 +68,7 @@ def test_minhash_md5_kernel_matches_expression_variant(spark, texts):
 
     expr = F.array(
         *[
-            F.array_min(F.transform(shingles(F.col("t"), 3), salted(i)))
+            F.array_min(F.transform(shingles(F.col("t")), salted(i)))
             for i in range(n_hashes)
         ]
     )
@@ -85,7 +85,7 @@ def test_jaccard3_kernel_matches_python_set_oracle(spark, pairs):
     """jaccard3_bp == |A∩B|*10000 // |A∪B| over distinct 3-gram sets,
     computed independently in Python; NULL exactly when the union is
     empty (both sides < 3 tokens) — one short side scores 0, not NULL."""
-    jac = jaccard3_bp(3)
+    jac = jaccard3_bp()
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(pairs + pairs)], "id long, a string, b string"
     )
@@ -103,7 +103,7 @@ def test_jaccard3_kernel_matches_python_set_oracle(spark, pairs):
 def test_minhash_md5_kernel_null_and_short_text_contract(spark):
     """NULL / empty / sub-n-token texts → per-slot NULLs, never a NULL
     array (so sig[0] IS NOT NULL filters behave like the HOF form)."""
-    kern = minhash_md5_slots(n_hashes=3, n=3)
+    kern = minhash_md5_slots(n_hashes=3)
     df = spark.createDataFrame(
         [(0, None), (1, ""), (2, "one two"), (3, " \t\n ")], "id long, t string"
     )
@@ -115,7 +115,7 @@ def test_minhash_md5_kernel_matches_hashlib_directly(spark):
     """One deterministic end-to-end pin independent of Spark expressions:
     kernel slots == min over salted hashlib digests of the 3-gram set."""
     text = "the quick brown fox jumps over the lazy dog the quick brown"
-    kern = minhash_md5_slots(n_hashes=4, n=3)
+    kern = minhash_md5_slots(n_hashes=4)
     got = (
         spark.createDataFrame([(text,)], "t string")
         .select(kern(F.col("t")).alias("k"))

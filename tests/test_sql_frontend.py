@@ -70,8 +70,8 @@ def test_sql_function_registry_matches_column_library(spark, sf_dir):
         tx.token_count(F.col("text")).alias("n"),
         tx.content_md5(F.col("text")).alias("h"),
         tx.fingerprint(F.col("text")).alias("fp"),
-        tx.unicode_normalize_udf("NFC")(F.col("text")).alias("nfc"),
-        tx.compression_ratio_udf(6)(F.col("text")).alias("zr"),
+        tx.unicode_normalize_udf()(F.col("text")).alias("nfc"),
+        tx.compression_ratio_udf()(F.col("text")).alias("zr"),
     )
     assert _norm(via_sql) == _norm(via_df)
     # the SQL scalar UDFs inline: no BatchEvalPython/ArrowEvalPython for

@@ -79,7 +79,7 @@ def test_word_ngrams_tokenizes_like_the_jvm_shingler(spark):
     from ingestion_pipeline_spark.operators.dedup import shingles
 
     text = "  The quick\tbrown\n\nfox  jumps over the quick brown fox "
-    jvm = _one(spark, shingles(F.col("t"), 3), text)
+    jvm = _one(spark, shingles(F.col("t")), text)
     assert sorted(set(tx.word_ngrams(text, 3))) == sorted(jvm)
     assert tx.word_ngrams("two words", 3) == []
 

@@ -26,13 +26,13 @@ def _apply(spark, col_fn, texts):
 def test_unicode_normalize_collapses_encodings(spark):
     composed = "école"  # U+00E9
     decomposed = "école"  # e + combining acute
-    norm = unicode_normalize_udf("NFC", strip_accent_marks=False)
+    norm = unicode_normalize_udf(strip_accent_marks=False)
     got = _apply(spark, norm, [composed, decomposed, None])
     # NFC makes the two encodings bit-identical (dedup prerequisite)
     assert got[0] == got[1] == unicodedata.normalize("NFC", composed)
     assert got[2] is None
 
-    stripper = unicode_normalize_udf("NFC", strip_accent_marks=True)
+    stripper = unicode_normalize_udf(strip_accent_marks=True)
     got2 = _apply(spark, stripper, [composed, decomposed, "naïve — café"])
     assert got2[0] == got2[1] == "ecole"
     assert got2[2] == "naive — café".replace("é", "e")  # dash/space survive

@@ -18,7 +18,7 @@ def test_ewma_matches_pandas_ewm(spark):
     df = spark.createDataFrame(rows, "user_id long, event_id long, ts_us long, value double")
     got = {
         (r["user_id"], r["event_id"]): r["ewma"]
-        for r in ewma_per_entity(df, "user_id", ["ts_us", "event_id"], "value", 0.5).collect()
+        for r in ewma_per_entity(df, "user_id", ["ts_us", "event_id"], "value").collect()
     }
     for uid in (1, 2):
         ser = pd.Series([v for u, _, _, v in rows if u == uid])
@@ -34,7 +34,7 @@ def test_ewma_out_of_order_input(spark):
     df = spark.createDataFrame(rows, "user_id long, event_id long, ts_us long, value double")
     got = {
         r["event_id"]: r["ewma"]
-        for r in ewma_per_entity(df, "user_id", ["ts_us", "event_id"], "value", 0.5).collect()
+        for r in ewma_per_entity(df, "user_id", ["ts_us", "event_id"], "value").collect()
     }
     assert got == {0: 4.0, 1: 2.0, 2: 5.0}
 
@@ -104,7 +104,7 @@ def test_streaming_ewma_equals_batch(spark, tmp_path):
     )
     want = {
         r["event_id"]: r["ewma"]
-        for r in ewma_per_entity(batch, "user_id", ["ts_us", "event_id"], "value", 0.5).collect()
+        for r in ewma_per_entity(batch, "user_id", ["ts_us", "event_id"], "value").collect()
     }
     assert got == want and len(got) == len(rows)
 

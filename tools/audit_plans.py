@@ -265,6 +265,15 @@ def udf_eval_nodes(formatted: str) -> Counter:
     return Counter({call: len(ids) for call, ids in calls.items()})
 
 
+def exchange_count(formatted: str) -> int:
+    """Distinct exchange operators (shuffle, broadcast and reused) of a
+    formatted plan. The formatted plan describes each operator once
+    under its ``(id) Name`` line, so an exchange inside a persisted
+    frame counts once however often the frame is read; the tree text
+    repeats that frame's whole plan at every read."""
+    return len(set(re.findall(r"^\((\d+)\) \w*Exchange\b", formatted, re.M)))
+
+
 def audit(name: str, df) -> list[str]:
     """Print the query's audit line and return its flags."""
     from ingestion_pipeline_spark.plans import plan_text
@@ -275,7 +284,7 @@ def audit(name: str, df) -> list[str]:
     # persisted frame's whole plan at every read
     formatted = plan_text(df, "formatted")
     scans = Counter(re.findall(r"Location:.*?/(\w+)\.parquet", formatted))
-    exchanges = len(set(re.findall(r"^\((\d+)\) \w*Exchange\b", formatted, re.M)))
+    exchanges = exchange_count(formatted)
     flags: list[str] = []
     if ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan) and name not in NLJ_ALLOWED:
         flags.append("unexpected cross/NLJ join")

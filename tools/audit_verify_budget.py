@@ -84,7 +84,7 @@ def audit_frames(spark, base: str, sample: int):
     # FULL untested tails of the sampled docs: every candidate past the
     # budget, with its rank. Bounded by |sample| x per-doc tail length —
     # exactly the bill the budget avoided, paid once, on a sample.
-    jac = jaccard3_bp(3)
+    jac = jaccard3_bp()
     tails = (
         fr["ranked"]
         .filter(F.col("rk") > _VERIFY_K)

@@ -1,17 +1,27 @@
-"""Write PLANS.md: the `.explain("formatted")` digest for a
-representative slice of headline queries, so plan quality (pushed
-filters, pruned schemas, broadcast choices, exchange counts) is
-reviewable without running anything. Usage:
+"""Dump `.explain("formatted")` plans of registry queries.
 
-    python tools/dump_plans.py [sf_dir]
+With no ``--round``, write PLANS.md: the digest for a representative
+slice of headline queries, so plan quality (pushed filters, pruned
+schemas, broadcast choices, exchange counts) is reviewable without
+running anything. With ``--round R --tag before|after NAME...``, write
+each named query's plan to ``plans/<R>/<NAME>_<tag>.txt`` — the
+before/after plan evidence an optimization round commits alongside its
+change (the r12/r13 files were dumped at ``--sf`` sf0.1). Queries are
+explained in registry order; one that fails is reported on stderr
+(exit 1) and the others are still written.
+
+    python tools/dump_plans.py [--sf SF_DIR]
+    python tools/dump_plans.py [--sf SF_DIR] --round r13 --tag after q1_pricing_summary ...
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOWCASE = [
     # one per family: the plan each SCALE.md claim is about
@@ -69,12 +79,47 @@ SHOWCASE = [
 ]
 
 
+def dump_round(spark, sf_dir: str, round_dir: str, tag: str, names: list[str]) -> int:
+    """Write ``plans/<round_dir>/<name>_<tag>.txt`` for each query."""
+    from ingestion_pipeline_spark.plans import plan_text, run_each
+    from tools.audit_plans import exchange_count
+
+    out_dir = os.path.join(ROOT, "plans", round_dir)
+    os.makedirs(out_dir, exist_ok=True)
+
+    def dump(name, fn):
+        plan = plan_text(fn(spark, sf_dir), "formatted")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"{name}: {plan.count('Scan parquet')} parquet scans, "
+              f"{exchange_count(plan)} exchanges -> {path}")
+
+    failed = {n: r for n, r in run_each(spark, dump, names).items() if r}
+    for name, exc in failed.items():
+        print(f"{name}: ERROR {type(exc).__name__}: {exc}"[:300], file=sys.stderr)
+    return 1 if failed else 0
+
+
 def main() -> int:
+    from __spark_entry__ import SF_SMOKE
+
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--sf", default=SF_SMOKE, help="fixture directory (default: the sf0.001 smoke fixture)")
+    ap.add_argument("--round", help="plans/ subdirectory, e.g. r13")
+    ap.add_argument("--tag", choices=["before", "after"])
+    ap.add_argument("names", nargs="*", help="queries to dump (with --round)")
+    args = ap.parse_args()
+    if bool(args.round) != bool(args.tag) or bool(args.round) != bool(args.names):
+        ap.error("--round, --tag and query names go together")
+
     from ingestion_pipeline_spark.plans import plan_text, run_each
     from ingestion_pipeline_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    sf_dir = args.sf
     spark = get_spark("dump-plans")
+    if args.round:
+        return dump_round(spark, sf_dir, args.round, args.tag, args.names)
     plans = run_each(
         spark, lambda _name, fn: plan_text(fn(spark, sf_dir), "formatted"), SHOWCASE
     )
@@ -93,7 +138,7 @@ def main() -> int:
     ]
     for name in SHOWCASE:
         out.append(f"## {name}\n\n```\n{plans[name].strip()}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
     return 0
