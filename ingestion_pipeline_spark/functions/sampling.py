@@ -24,6 +24,9 @@ _HEX = 4
 _SAMPLE_SALT = "s0"
 # dataset_split's train and val fractions (test gets the remainder)
 _SPLIT_SALT, _TRAIN, _VAL = "split0", 0.8, 0.1
+# their bucket bounds: train is [0, _TRAIN_HI), val [_TRAIN_HI, _VAL_HI)
+_TRAIN_HI = int(round(_TRAIN * 16**_HEX))
+_VAL_HI = _TRAIN_HI + int(round(_VAL * 16**_HEX))
 
 
 def _bucket(key: Column, salt: str) -> Column:
@@ -45,10 +48,8 @@ def dataset_split(key: Column) -> Column:
     ranges (test gets the remainder). Same key → same split, on any
     engine, forever — the property dataset lineage requires."""
     b = _bucket(key, _SPLIT_SALT)
-    t_hi = int(round(_TRAIN * 16**_HEX))
-    v_hi = t_hi + int(round(_VAL * 16**_HEX))
     return (
-        F.when(b < t_hi, F.lit("train"))
-        .when(b < v_hi, F.lit("val"))
+        F.when(b < _TRAIN_HI, F.lit("train"))
+        .when(b < _VAL_HI, F.lit("val"))
         .otherwise(F.lit("test"))
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from .text import EMAIL_REGEX, PHONE_REGEX, compression_ratio_udf, unicode_normalize_udf
+from .text import EMAIL_REGEX, PHONE_REGEX, WS, compression_ratio_udf, unicode_normalize_udf
 
 
 def _sql_str(regex: str) -> str:
@@ -39,20 +39,21 @@ def register_all(spark: SparkSession) -> None:
         regexp_replace(regexp_replace(x, '{_sql_str(EMAIL_REGEX)}', '<EMAIL>'),
                        '{_sql_str(PHONE_REGEX)}', '<PHONE>')"""
     )
+    ws = _sql_str(WS)  # text.token_count, content_md5, fingerprint in SQL
     spark.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION token_count(x STRING)
+        f"""CREATE OR REPLACE TEMPORARY FUNCTION token_count(x STRING)
         RETURNS INT RETURN
-        size(filter(split(x, '\\\\s+'), t -> t <> ''))"""
+        size(array_remove(split(x, '{ws}'), ''))"""
     )
     spark.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION content_md5(x STRING)
+        f"""CREATE OR REPLACE TEMPORARY FUNCTION content_md5(x STRING)
         RETURNS STRING RETURN
-        md5(regexp_replace(trim(lower(x)), '\\\\s+', ' '))"""
+        md5(regexp_replace(trim(lower(x)), '{ws}', ' '))"""
     )
     spark.sql(
-        """CREATE OR REPLACE TEMPORARY FUNCTION fingerprint64(x STRING)
+        f"""CREATE OR REPLACE TEMPORARY FUNCTION fingerprint64(x STRING)
         RETURNS BIGINT RETURN
-        xxhash64(regexp_replace(trim(lower(x)), '\\\\s+', ' '))"""
+        xxhash64(regexp_replace(trim(lower(x)), '{ws}', ' '))"""
     )
     # -- Python-backed functions: Arrow-batched pandas UDFs -------------
     spark.udf.register("unicode_nfc", unicode_normalize_udf())

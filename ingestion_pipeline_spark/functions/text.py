@@ -49,9 +49,60 @@ def phrase_set(col: Column) -> Column:
     return F.array_distinct(F.transform(F.split(F.lower(col), r"\."), lambda p: F.trim(p)))
 
 
+# ---- The three text rules: whitespace word tokens, alpha words and
+# whitespace collapse. Each has one Spark Column function, one DuckDB SQL
+# builder and (the tokenizers) one Python form for the Arrow kernels;
+# ``sql_api`` spells its SQL functions with the same class. None
+# lower-cases: callers that fold case lower the input first.
+# WS is exactly Java's and Python's re.ASCII \s; RE2 (DuckDB) reads it
+# the same way, where its own \s leaves out \x0B. Python's str.split()
+# also splits on NBSP, U+0085 and U+2028, so it is not this rule.
+WS = r"[ \t\n\x0B\f\r]+"
+# separator of alpha words: on lower-cased text, a word is a run of a-z
+NON_ALPHA = r"[^a-z]+"
+_WS_RX = re.compile(WS)
+_NON_ALPHA_RX = re.compile(NON_ALPHA)
+
+
 def word_tokens(col: Column) -> Column:
-    """Whitespace tokenization; drops empty tokens like str.split()."""
-    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
+    """Split on ``WS``, drop empty tokens (``array_remove``: a ``filter``
+    lambda runs interpreted)."""
+    return F.array_remove(F.split(col, WS), "")
+
+
+def word_tokens_sql(expr: str) -> str:
+    """DuckDB form of ``word_tokens`` over the SQL expression ``expr``."""
+    return f"list_filter(string_split_regex({expr}, '{WS}'), t -> t <> '')"
+
+
+def split_words(text: str) -> list[str]:
+    """Python form of ``word_tokens``, for the Arrow kernels."""
+    return [w for w in _WS_RX.split(text) if w]
+
+
+def alpha_words(col: Column) -> Column:
+    """Alpha words: split on ``NON_ALPHA``, drop empty tokens."""
+    return F.array_remove(F.split(col, NON_ALPHA), "")
+
+
+def alpha_words_sql(expr: str) -> str:
+    """DuckDB form of ``alpha_words`` over the SQL expression ``expr``."""
+    return f"list_filter(string_split_regex({expr}, '{NON_ALPHA}'), t -> t <> '')"
+
+
+def split_alpha(text: str) -> list[str]:
+    """Python form of ``alpha_words``, for the Arrow kernels."""
+    return [w for w in _NON_ALPHA_RX.split(text) if w]
+
+
+def collapse_ws(col: Column) -> Column:
+    """Whitespace collapse: each run of ``WS`` becomes one space."""
+    return F.regexp_replace(col, WS, " ")
+
+
+def collapse_ws_sql(expr: str) -> str:
+    """DuckDB form of ``collapse_ws`` over the SQL expression ``expr``."""
+    return f"regexp_replace({expr}, '{WS}', ' ', 'g')"
 
 
 def token_count(col: Column) -> Column:
@@ -211,10 +262,9 @@ def langid_join(df):
 
 
 def normalized_content(col: Column) -> Column:
-    """The exact-dup normalization: lowercase, trim, collapse each run of
-    whitespace to one space. The SQL oracles spell it
-    ``regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')``."""
-    return F.regexp_replace(F.trim(F.lower(col)), r"\s+", " ")
+    """The exact-dup normalization: lowercase, trim, collapse whitespace.
+    The SQL oracles spell it ``collapse_ws_sql("trim(lower(text))")``."""
+    return collapse_ws(F.trim(F.lower(col)))
 
 
 def fingerprint(col: Column) -> Column:
@@ -253,54 +303,31 @@ def pii_counts(col: Column) -> tuple[Column, Column]:
     )
 
 
-# re.ASCII: Python's \s is Unicode-aware (U+00A0 etc.); with re.ASCII it
-# is exactly [ \t\n\r\f\v] — byte-for-byte the JAVA regex \s
-# ([ \t\n\x0B\f\r]) the Spark expression variants split on, so
-# kernel-vs-JVM parity is exact (ADVICE r8). Known residual (ADVICE r9):
-# RE2 — DuckDB's string_split_regex — defines \s as [\t\n\f\r ] WITHOUT
-# vertical tab, so a doc containing U+000B tokenizes differently
-# kernel-vs-oracle. No single class matches both engines; we keep
-# Java/Python agreement (the production pair) and note that \v never
-# appears in the ASCII fixtures — the bounds harness asserts the domain
-# premise it depends on.
-_WS = re.compile(r"\s+", re.ASCII)
-
-
-def word_ngrams(text: str, n: int, rx: re.Pattern = _WS) -> list[str]:
-    """The Python word ``n``-gram tokenizer of the Arrow kernels:
-    lowercase, split on ``rx``, drop empty tokens, join each ``n``
-    consecutive tokens with one space. Returns the grams in text order,
-    repeats included; empty when the text has fewer than ``n`` tokens.
-
-    With the default ``rx`` this matches the JVM form
-    ``filter(split(lower(text), '\\s+', -1), t -> t <> '')`` (see the
-    ``_WS`` note); ``str.lower`` matches ``lower()`` on ASCII corpora."""
-    toks = [w for w in rx.split(text.lower()) if w]
+def word_ngrams(text: str, n: int, split=split_words) -> list[str]:
+    """The word ``n``-grams of the Arrow kernels: lowercase, tokenize with
+    ``split`` (``split_words`` or ``split_alpha``), join each ``n``
+    consecutive tokens with one space; in text order, repeats included
+    (``str.lower`` matches ``lower()`` on ASCII corpora)."""
+    toks = split(text.lower())
     return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
 
 
-def word_shingles_np(k: int, split: str = "[^a-z]+"):
-    """Arrow-batched distinct k-word shingler (lowercase, then split on
-    ``split`` — ``[^a-z]+`` matches the contamination oracle's
-    tokenizer, ``\\s+`` matches ``shingles()``/the Jaccard oracles;
-    fixture text is ASCII so Python/JVM/DuckDB lowercasing and both
-    regex dialects agree). The Catalyst HOF version (sequence→transform
-    →concat_ws→array_distinct) is CodegenFallback — interpreted per
-    element — and benches ~4× slower on a full-corpus shingle pass;
-    per-row Python over Arrow batches wins well before 100 TB, where
-    this projection touches every document."""
+def word_shingles_np(k: int, split):
+    """Arrow-batched distinct ``word_ngrams(text, k, split)``. The
+    Catalyst HOF version (sequence→transform→concat_ws→array_distinct)
+    is CodegenFallback — interpreted per element — and benches ~4×
+    slower on a full-corpus shingle pass; per-row Python over Arrow
+    batches wins well before 100 TB, where this projection touches
+    every document."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
-
-    # re.ASCII keeps \s/\w in caller-supplied patterns ASCII-only (see _WS)
-    rx = re.compile(split, re.ASCII)
 
     @pandas_udf(ArrayType(StringType()))
     def sh(texts: pd.Series) -> pd.Series:
         # dict.fromkeys = order-preserving distinct (parity with
         # array_distinct; consumers treat the array as a set)
         return pd.Series(
-            [list(dict.fromkeys(word_ngrams(t or "", k, rx))) for t in texts]
+            [list(dict.fromkeys(word_ngrams(t or "", k, split))) for t in texts]
         )
 
     return sh
@@ -350,7 +377,7 @@ def strip_markup(col: Column) -> Column:
     c = F.replace(c, F.lit("&gt;"), F.lit(">"))
     c = F.replace(c, F.lit("&quot;"), F.lit('"'))
     c = F.replace(c, F.lit("&amp;"), F.lit("&"))
-    return F.trim(F.regexp_replace(c, "\\s+", " "))
+    return F.trim(collapse_ws(c))
 
 
 _C4_MIN_WORDS = 4

@@ -22,20 +22,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import NON_ALPHA, alpha_words, split_alpha, word_tokens
+
 # the registry's merge count and vocabulary bound; plans/bpe_sql.py
 # reads both
 BPE_MERGES, BPE_TOP_N = 10, 200
 
 
 def word_frequencies(docs: DataFrame, top_n: int) -> DataFrame:
-    """One corpus pass: lowercase alpha word -> total frequency, top-N
-    by (freq DESC, word ASC). ``top_n`` bounds the training table; at
-    scale raise it (the table stays vocabulary-sized, not corpus-sized)."""
+    """One corpus pass: lowercase whitespace word made only of alpha
+    characters -> total frequency, top-N by (freq DESC, word ASC).
+    ``top_n`` bounds the training table; at scale raise it (the table
+    stays vocabulary-sized, not corpus-sized)."""
     words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
-        )
-        .filter(F.col("word").rlike("^[a-z]+$"))
+        docs.select(F.explode(word_tokens(F.lower(F.col("text")))).alias("word"))
+        .filter(~F.col("word").rlike(NON_ALPHA))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -125,10 +126,7 @@ def bpe_tokenize_counts(
     flow. Greedy left-to-right application per merge in training order —
     the standard BPE apply semantics, pinned against a Python reference
     in tests."""
-    words = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z]+"),
-        lambda w: w != F.lit(""),
-    )
+    words = alpha_words(F.lower(F.col("text")))
 
     def tokenize_word(w):
         sym = F.split(w, "")
@@ -170,8 +168,6 @@ def bpe_tokenize_counts_arrow(
     pass extra input columns through untouched (doc_id, *carries,
     n_words, n_bpe_tokens) so downstream rollups (per-lang fertility)
     need no corpus-keyed join back to the source frame."""
-    import re
-
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     id_field = docs.schema["doc_id"]
@@ -186,7 +182,6 @@ def bpe_tokenize_counts_arrow(
             StructField("n_bpe_tokens", IntegerType()),
         ]
     )
-    word_re = re.compile("[a-z]+")
     mseq = list(merges)
 
     def run(batches):
@@ -215,7 +210,7 @@ def bpe_tokenize_counts_arrow(
         for pdf in batches:
             n_words, n_tokens = [], []
             for text in pdf["text"]:
-                ws = word_re.findall((text or "").lower())
+                ws = split_alpha((text or "").lower())
                 n_words.append(len(ws))
                 n_tokens.append(sum(n_tok(w) for w in ws))
             # positional alignment by construction (advice r6): the

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import content_md5, word_ngrams, word_shingles_np, word_tokens
+from ..functions.text import content_md5, split_words, word_ngrams, word_shingles_np, word_tokens
 from .relational import spread
 
 # word n-gram length of every shingle set
@@ -419,7 +419,7 @@ def _co_shingle_counts(df: DataFrame, text_col: str, id_col: str, block_col: str
     # planning TWO ArrowEvalPython nodes per join side — the shingler
     # ran 4× per query. Non-deterministic expressions are never
     # duplicated, so each side evaluates it exactly once.
-    sh_udf = word_shingles_np(SHINGLE_N, split=r"\s+").asNondeterministic()
+    sh_udf = word_shingles_np(SHINGLE_N, split_words).asNondeterministic()
     tok = (
         spread(df)
         .select(

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import split_words
+
 K1 = 1.2
 B = 0.75
 
@@ -59,7 +61,7 @@ def bm25_scores(
     def term_counts(texts: pd.Series) -> pd.DataFrame:
         rows = []
         for t in texts:
-            ws = (t or "").lower().split()
+            ws = split_words((t or "").lower())
             rows.append([len(ws)] + [ws.count(w) for w in terms])
         return pd.DataFrame(rows, columns=[f.name for f in fields])
 

@@ -164,8 +164,9 @@ _GOLDEN = 0x9E3779B97F4A7C15
 # tests/test_bounds.py pins each copy equal to its original
 _N_HASHES, _N_BANDS, _HASH_SEED = 32, 16, 42
 _ZLIB_LEVEL = 6
-# Java \s parity; RE2 lacks \v — see functions/text.py _WS (ADVICE r9)
-_WS = re.compile(r"\s+", re.ASCII)
+# a copy of functions/text.py's WS class, the whitespace every engine
+# splits on; tests/test_bounds.py pins the pattern equal to it
+_WS = re.compile(r"[ \t\n\x0B\f\r]+")
 
 
 def _rotl(x: int, r: int) -> int:

@@ -22,17 +22,8 @@ merge and apply a no-op REPLACE (chr(1) sentinel pattern).
 
 from __future__ import annotations
 
+from ..functions.text import NON_ALPHA, alpha_words_sql, word_tokens_sql
 from ..operators.bpe import BPE_MERGES, BPE_TOP_N
-
-# word_frequencies: whitespace split, keep only pure-alpha tokens
-_WF_TOKS = (
-    "list_filter(string_split_regex(lower(text), '\\s+'), "
-    "w -> regexp_matches(w, '^[a-z]+$'))"
-)
-# bpe_tokenize_counts: [^a-z]+ split, drop empties
-_TOK_TOKS = (
-    "list_filter(string_split_regex(lower(text), '[^a-z]+'), w -> w <> '')"
-)
 
 _SYMS = "string_split(trim(s, '|'), '||')"
 
@@ -70,8 +61,9 @@ def bpe_train_ctes() -> str:
         f"""wf AS MATERIALIZED (
         SELECT word, freq FROM (
             SELECT t.word AS word, CAST(COUNT(*) AS BIGINT) AS freq
-            FROM (SELECT {_WF_TOKS} AS w FROM documents) d,
+            FROM (SELECT {word_tokens_sql("lower(text)")} AS w FROM documents) d,
                  UNNEST(w) AS t(word)
+            WHERE NOT regexp_matches(t.word, '{NON_ALPHA}')
             GROUP BY t.word
         ) ORDER BY freq DESC, word LIMIT {BPE_TOP_N}
     )""",
@@ -114,7 +106,7 @@ def bpe_tokenize_sql() -> str:
     WITH {bpe_train_ctes()},
     doc_words AS MATERIALIZED (
         SELECT doc_id, t.word AS word
-        FROM (SELECT doc_id, {_TOK_TOKS} AS w FROM documents) d,
+        FROM (SELECT doc_id, {alpha_words_sql("lower(text)")} AS w FROM documents) d,
              UNNEST(w) AS t(word)
     ),
     per_word AS MATERIALIZED (
@@ -139,7 +131,7 @@ def bpe_fertility_sql() -> str:
     per-doc counts rolled up per language — n_docs / word / BPE-token
     sums are exact BIGINTs, fertility (BPE tokens per word) is ONE
     division of exact operands (0.0 for languages the alpha tokenizer
-    can't segment, e.g. zh: zero [a-z]+ words)."""
+    can't segment, e.g. zh: zero alpha words)."""
     applied = "'|' || array_to_string(string_split(word, ''), '||') || '|'"
     for k in range(1, BPE_MERGES + 1):
         applied = f"replace({applied}, {_pat(k)}, {_rep(k)})"
@@ -147,7 +139,7 @@ def bpe_fertility_sql() -> str:
     WITH {bpe_train_ctes()},
     doc_words AS MATERIALIZED (
         SELECT doc_id, t.word AS word
-        FROM (SELECT doc_id, {_TOK_TOKS} AS w FROM documents) d,
+        FROM (SELECT doc_id, {alpha_words_sql("lower(text)")} AS w FROM documents) d,
              UNNEST(w) AS t(word)
     ),
     per_word AS MATERIALIZED (

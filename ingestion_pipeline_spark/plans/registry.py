@@ -56,7 +56,6 @@ from ..sources.parquet_tables import table
 SQL_EXT = "CAST(l_extendedprice AS DECIMAL(12,2))"
 SQL_DISC = "(CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"
 SQL_TAX = "(CAST(1 AS DECIMAL(4,2)) + CAST(l_tax AS DECIMAL(4,2)))"
-SQL_TOKENS = "list_filter(string_split_regex(lower({col}), '\\s+'), t -> t <> '')"
 
 
 def _disc_price() -> F.Column:
@@ -821,12 +820,16 @@ def x_cve_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# the oracles' whitespace word tokens of lower(text)
+_TOKS = tx.word_tokens_sql("lower(text)")
+
+
 @register(
     "x_text_stats",
     f"""
     SELECT doc_id,
-           len({SQL_TOKENS.format(col='text')}) AS n_tokens,
-           len(list_filter({SQL_TOKENS.format(col='text')},
+           len({_TOKS}) AS n_tokens,
+           len(list_filter({_TOKS},
                            t -> list_contains({tx.STOPWORDS!r}, t))) AS n_stopwords,
            substring(text, 1, 40) AS head
     FROM documents
@@ -1029,8 +1032,8 @@ def v_lsh_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d_exact_dup_groups",
-    """
-    SELECT md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS content_hash,
+    f"""
+    SELECT md5({tx.collapse_ws_sql("trim(lower(text))")}) AS content_hash,
            MIN(doc_id) AS canonical_id,
            COUNT(*) AS n_copies
     FROM documents
@@ -1048,7 +1051,7 @@ _SHINGLES_SQL = """
         list_transform(range(0, greatest(len({toks}) - 3, 0) + 1),
                        i -> array_to_string(list_slice({toks}, i + 1, i + 3), ' '))
         ELSE [] END)
-""".format(toks=SQL_TOKENS.format(col="text"))
+""".format(toks=_TOKS)
 
 
 def _mh_sql(i: int) -> str:
@@ -1120,7 +1123,7 @@ def d_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s_confidence_scores",
-    """
+    f"""
     WITH joined AS (
         SELECT d.doc_id, d.text,
                (e.vec_id IS NOT NULL) AS has_vector,
@@ -1141,11 +1144,9 @@ def d_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
                               ELSE CAST(0.0 AS DOUBLE) END
                        + CAST(0.25 AS DOUBLE) * CAST(completeness AS DOUBLE)))
                  AS base_conf,
-               CAST(COALESCE(len(list_filter(
-                        string_split_regex(vector_text, '\\s+'), t -> t <> '')), 0)
+               CAST(COALESCE(len({tx.word_tokens_sql("vector_text")}), 0)
                     AS DOUBLE) / CAST(100.0 AS DOUBLE) AS vector_score,
-               CAST(COALESCE(len(list_filter(
-                        string_split_regex(nvd_text, '\\s+'), t -> t <> '')), 0)
+               CAST(COALESCE(len({tx.word_tokens_sql("nvd_text")}), 0)
                     AS DOUBLE) / CAST(100.0 AS DOUBLE) AS nvd_score
         FROM joined
     ), pre AS (

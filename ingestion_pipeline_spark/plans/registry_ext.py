@@ -9,10 +9,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.exact import cents_disc_price, exact_sum, money, one_minus, sum_cents
+from ..functions.text import word_tokens_sql
 from ..operators import similarity as sim
 from ..operators.relational import spread, topk_per_group
 from ..sources.parquet_tables import table
-from .registry import SQL_DISC, SQL_EXT, SQL_TOKENS, _disc_price, register
+from .registry import SQL_DISC, SQL_EXT, _TOKS, _disc_price, register
 
 # =======================================================================
 # q* — more TPC-H shapes
@@ -648,7 +649,6 @@ def v_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tx* — text-analysis family as oracle-checked queries
 # =======================================================================
 
-_TOKS = SQL_TOKENS.format(col="text")
 _LANG_HITS = {
     lang: f"len(list_filter({_TOKS}, t -> list_contains({markers!r}, t)))"
     for lang, markers in sorted(
@@ -733,9 +733,9 @@ def tx_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx_token_counts",
-    r"""
+    rf"""
     SELECT doc_id,
-           len(list_filter(string_split_regex(text, '\s+'), t -> t <> '')) AS n_words,
+           len({word_tokens_sql("text")}) AS n_words,
            len(regexp_extract_all(text, '\w+|[^\w\s]')) AS n_bpe_ish,
            length(text) AS n_chars_actual
     FROM documents

@@ -54,7 +54,7 @@ _QUALITY_EXPR = f"""
 _SURVIVORS_SQL = f"""
     hashed AS (
         SELECT doc_id, source, text,
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS content_hash
+               md5({tx.collapse_ws_sql("trim(lower(text))")}) AS content_hash
         FROM documents
     ),
     canon AS (

@@ -29,7 +29,7 @@ _BATCH_SPLIT = 400  # doc_id >= 400 plays "today's batch", < 400 the corpus
     f"""
     WITH hashed AS (
         SELECT doc_id, source, lang, text,
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS content_hash,
+               md5({tx.collapse_ws_sql("trim(lower(text))")}) AS content_hash,
                source || '|' || lang AS block,
                {_SHINGLES_SQL} AS s
         FROM documents

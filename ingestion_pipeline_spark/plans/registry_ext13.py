@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import word_ngrams
+from ..functions.text import alpha_words_sql, split_alpha, word_ngrams
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .registry import register
@@ -98,11 +98,10 @@ def w_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx_topk_bigrams",
-    r"""
+    rf"""
     WITH w AS (
         SELECT lang,
-               list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                           x -> x <> '') AS ws
+               {alpha_words_sql("lower(text)")} AS ws
         FROM documents
     ),
     b AS (
@@ -138,7 +137,6 @@ def tx_topk_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # combine: only distinct (lang, bigram) partials leave the scan
     # stage (measured 3.8 s → sub-second at sf0.1; the win scales with
     # occurrence/distinct ratio, i.e. with corpus size).
-    import re
     from collections import Counter
 
     import pandas as pd
@@ -149,7 +147,6 @@ def tx_topk_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    rx = re.compile("[^a-z]+")
     out_schema = StructType(
         [
             StructField("lang", StringType()),
@@ -162,7 +159,7 @@ def tx_topk_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             c: Counter = Counter()
             for lang, text in zip(pdf["lang"], pdf["text"]):
-                for g in word_ngrams(text or "", 2, rx):
+                for g in word_ngrams(text or "", 2, split_alpha):
                     c[(lang, g)] += 1
             if c:
                 ks = list(c.keys())

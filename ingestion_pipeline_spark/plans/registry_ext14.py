@@ -18,19 +18,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import word_ngrams
+from ..functions.text import (
+    alpha_words,
+    alpha_words_sql,
+    split_alpha,
+    word_ngrams,
+    word_shingles_np,
+)
 from ..operators.similarity import cosine_pairs_np
 from ..operators.relational import spread, topk_per_group
 from ..sources.parquet_tables import table
 from .registry import register
 
-_WORDS_SQL = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
-
 _STOPWORDS = ("the", "and", "of", "to", "in", "a", "is", "for")
-
-
-def _words_col() -> F.Column:
-    return F.filter(F.split(F.lower(F.col("text")), "[^a-z]+"), lambda w: w != "")
 
 
 @register(
@@ -46,7 +46,7 @@ def _words_col() -> F.Column:
             SELECT doc_id,
                    list_transform(range(1, len(ws) - 1),
                                   i -> array_to_string(ws[i:i+2], ' ')) AS tg
-            FROM (SELECT doc_id, """ + _WORDS_SQL + """ AS ws FROM documents)
+            FROM (SELECT doc_id, """ + alpha_words_sql("lower(text)") + """ AS ws FROM documents)
         )
     )
     """,
@@ -61,14 +61,10 @@ def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sequence→transform→slice→array_join→array_distinct) is
     # CodegenFallback — interpreted per ELEMENT — and measured 81 s at
     # the 10× smoke vs ~3 s for this per-row Python pass over Arrow
-    # batches (same lesson as word_shingles_np, text.py:191).
+    # batches (same lesson as word_shingles_np).
     import pandas as pd
-    import re
-
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import IntegerType, StructField, StructType
-
-    rx = re.compile("[^a-z]+")
 
     @pandas_udf(
         StructType(
@@ -81,7 +77,7 @@ def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     def trigram_counts(texts: pd.Series) -> pd.DataFrame:
         ns, ds = [], []
         for t in texts:
-            tgs = word_ngrams(t or "", 3, rx)
+            tgs = word_ngrams(t or "", 3, split_alpha)
             ns.append(len(tgs))
             ds.append(len(set(tgs)))
         return pd.DataFrame({"n": ns, "d": ds})
@@ -119,10 +115,9 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
                              x -> list_contains({_STOP_SQL}, x))) AS DOUBLE) / len(ws)
                END AS stop_ratio,
                CASE WHEN len(text) = 0 THEN 0.0
-                    ELSE CAST(len(regexp_replace(lower(text), '[^a-z]', '', 'g'))
-                              AS DOUBLE) / len(text)
+                    ELSE CAST(len(array_to_string(ws, '')) AS DOUBLE) / len(text)
                END AS alpha_ratio
-        FROM (SELECT doc_id, text, {_WORDS_SQL} AS ws FROM documents)
+        FROM (SELECT doc_id, text, {alpha_words_sql("lower(text)")} AS ws FROM documents)
     )
     """,
     "Gopher-style quality rules (Rae et al. A1.1): word count bounds, "
@@ -134,14 +129,13 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in _STOPWORDS) + "]"
 )
 def tx_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    ws = _words_col()
+    ws = alpha_words(F.lower(F.col("text")))
     base = docs.select(
         "doc_id",
         "text",
         F.size(ws).alias("n_words"),
         F.length(F.concat_ws("", ws)).alias("word_chars"),
         F.size(F.filter(ws, lambda w: w.isin(*_STOPWORDS))).alias("n_stop"),
-        F.length(F.regexp_replace(F.lower(F.col("text")), "[^a-z]", "")).alias("alpha_chars"),
     )
     nz = F.col("n_words") > 0
     out = base.select(
@@ -154,7 +148,7 @@ def tx_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("stop_ratio"),
         F.when(F.length("text") == 0, F.lit(0.0))
-        .otherwise(F.col("alpha_chars").cast("double") / F.length("text"))
+        .otherwise(F.col("word_chars").cast("double") / F.length("text"))
         .alias("alpha_ratio"),
     )
     return out.withColumn(
@@ -169,7 +163,7 @@ def tx_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d_contamination_5gram",
     f"""
     WITH w AS (
-        SELECT doc_id, {_WORDS_SQL} AS ws FROM documents
+        SELECT doc_id, {alpha_words_sql("lower(text)")} AS ws FROM documents
     ),
     sh AS (
         SELECT doc_id,
@@ -209,11 +203,9 @@ def d_contamination_5gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Round 1 ran the explode three times; referencing the shingle
     # array from two expressions in one projection is no better —
     # CollapseProject inlines the array expression into each use.)
-    from ..functions.text import word_shingles_np
-
     docs = table(spark, sf_dir, "documents")
     sh = docs.select(
-        "doc_id", F.explode(word_shingles_np(5)(F.col("text"))).alias("s")
+        "doc_id", F.explode(word_shingles_np(5, split_alpha)(F.col("text"))).alias("s")
     )
     bench = (
         sh.filter(F.col("doc_id") % 50 == 0)

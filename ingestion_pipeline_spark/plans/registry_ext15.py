@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens_sql
 from ..operators import similarity as sim
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
@@ -41,7 +42,7 @@ _SEQ_LEN = 512
     rf"""
     WITH t AS (
         SELECT doc_id, source,
-               len(list_filter(string_split_regex(text, '\s+'), x -> x <> '')) AS n_tokens
+               len({word_tokens_sql("text")}) AS n_tokens
         FROM documents
     ),
     c AS (

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import collapse_ws_sql
 from ..operators.dedup import content_md5
 from ..sources.parquet_tables import table
 from .registry import register
@@ -56,7 +57,7 @@ def _positions(col):
     f"""
     WITH hashed AS (
         SELECT doc_id, source,
-               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS content_hash
+               md5({collapse_ws_sql("trim(lower(text))")}) AS content_hash
         FROM documents
     ),
     corpus AS (SELECT * FROM hashed WHERE doc_id < {_BATCH_SPLIT}),

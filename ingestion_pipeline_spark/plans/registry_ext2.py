@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import normalized_content
+from ..functions.text import collapse_ws_sql, normalized_content
 from ..operators.multimodal import extract_features
 from ..operators.relational import asof_join, spread
 from ..sources.parquet_tables import table
@@ -103,10 +103,10 @@ def mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tx_fingerprints",
-    r"""
+    rf"""
     WITH n AS (
         SELECT doc_id,
-               regexp_replace(trim(lower(text)), '\s+', ' ', 'g') AS norm
+               {collapse_ws_sql("trim(lower(text))")} AS norm
         FROM documents
     )
     SELECT doc_id,

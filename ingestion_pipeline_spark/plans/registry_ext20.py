@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.search import B, K1, bm25_topk
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
 TERMS = ["spark", "table", "hash"]
 _K = 10
@@ -41,7 +41,7 @@ _MATCH = " OR ".join(f"tf{i} > 0" for i in range(len(TERMS)))
     "t_bm25_keyword_topk",
     f"""
     WITH toks AS (
-        SELECT doc_id, {SQL_TOKENS.format(col='text')} AS tk FROM documents
+        SELECT doc_id, {_TOKS} AS tk FROM documents
     ),
     per_doc AS (
         SELECT doc_id, len(tk) AS dl,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
 _VOCAB_N = 500
 _N_NEG = 4
@@ -30,7 +30,7 @@ _N_ANCHORS = 20
     "tx_vocab_build",
     f"""
     WITH toks AS (
-        SELECT unnest({SQL_TOKENS.format(col='text')}) AS token FROM documents
+        SELECT unnest({_TOKS}) AS token FROM documents
     ),
     counts AS (
         SELECT token, COUNT(*) AS n_occurrences FROM toks GROUP BY token

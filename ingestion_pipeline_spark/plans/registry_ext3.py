@@ -13,7 +13,7 @@ from ..functions.exact import cents_disc_price, money, one_minus, sum_cents
 from ..functions.extract import enhance_query
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
-from .registry import SQL_DISC, SQL_EXT, _SHINGLES_SQL, _disc_price, _mh_sql, register
+from .registry import SQL_DISC, SQL_EXT, _SHINGLES_SQL, _TOKS, _disc_price, _mh_sql, register
 
 
 @register(
@@ -355,10 +355,10 @@ def d_simhash16_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "v_embed_hashing_check",
-    r"""
+    rf"""
     WITH toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')) AS tok
+               unnest({_TOKS}) AS tok
         FROM documents
     ), hashed AS (
         SELECT doc_id,

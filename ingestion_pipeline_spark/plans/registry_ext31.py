@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import (
     c4_sentence_filter,
+    collapse_ws_sql,
     strip_markup,
     unicode_normalize_udf,
 )
@@ -53,15 +54,17 @@ def tx_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# strip_markup's tag removal and entity unescape, before the collapse
+_UNMARKED = """replace(replace(replace(replace(
+                   regexp_replace(text, '<[^>]*>', '', 'g'),
+                   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&amp;', '&')"""
+
+
 @register(
     "tx_strip_markup",
-    r"""
+    f"""
     SELECT doc_id,
-           trim(regexp_replace(
-               replace(replace(replace(replace(
-                   regexp_replace(text, '<[^>]*>', '', 'g'),
-                   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&amp;', '&'),
-               '\s+', ' ', 'g')) AS text_clean
+           trim({collapse_ws_sql(_UNMARKED)}) AS text_clean
     FROM documents
     """,
     "Markup stripping: drop tags, unescape the core entities "

@@ -20,19 +20,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+from ..functions.text import alpha_words, alpha_words_sql
 from ..sources.parquet_tables import table
 from .registry import register
 
 
 @register(
     "t_inverted_index",
-    """
+    f"""
     WITH terms AS (
         SELECT doc_id, t.term
         FROM documents,
-             LATERAL UNNEST(list_filter(
-                 string_split_regex(lower(text), '[^a-z]+'),
-                 w -> w <> '')) AS t(term)
+             LATERAL UNNEST({alpha_words_sql("lower(text)")}) AS t(term)
     ),
     per_doc AS (
         SELECT term, doc_id, COUNT(*) AS tf FROM terms GROUP BY term, doc_id
@@ -59,11 +58,9 @@ from .registry import register
 )
 def t_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    alpha_tokens = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z]+"),
-        lambda t: t != F.lit(""),
+    terms = docs.select(
+        "doc_id", F.explode(alpha_words(F.lower(F.col("text")))).alias("term")
     )
-    terms = docs.select("doc_id", F.explode(alpha_tokens).alias("term"))
     per_doc = terms.groupBy("term", "doc_id").agg(
         F.count(F.lit(1)).alias("tf")
     )

@@ -18,19 +18,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.similarity import brute_force_topk, mmr_rerank
+from ..operators.similarity import _MMR_LAMBDA, brute_force_topk, mmr_rerank
 from ..sources.parquet_tables import table
 from .registry import register
 
+# MMR picks _MMR_K of the top _MMR_CANDIDATES by relevance
+_MMR_K, _MMR_CANDIDATES = 5, 30
 
-def _mmr_sql(k: int = 5, n_cand: int = 30, lam: str = "CAST(0.7 AS DOUBLE)") -> str:
+
+def _mmr_sql() -> str:
     """Unrolled greedy MMR as chained CTEs (the pagerank_sql/bpe_sql
     discipline): round r picks argmax of
     ``lam*rel - (1-lam)*max(pair_sim to selected)`` over the remaining
     candidates, with the operator's exact rounding (6dp half-away pair
     cosines via DuckDB ROUND, 9dp half-away scores) and (score DESC,
-    vec_id) tie-break. ``1 - 0.7`` is computed in DOUBLE on both sides
+    vec_id) tie-break. ``1 - lam`` is computed in DOUBLE on both sides
     so the multiplier is the identical IEEE value."""
+    lam = f"CAST({_MMR_LAMBDA} AS DOUBLE)"
     one_m = f"(CAST(1 AS DOUBLE) - {lam})"
     parts = [
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
@@ -40,14 +44,14 @@ def _mmr_sql(k: int = 5, n_cand: int = 30, lam: str = "CAST(0.7 AS DOUBLE)") -> 
                e.v
         FROM e, (SELECT v FROM e WHERE vec_id = 0) p
         WHERE e.vec_id <> 0
-        ORDER BY rel DESC, e.vec_id LIMIT {n_cand}
+        ORDER BY rel DESC, e.vec_id LIMIT {_MMR_CANDIDATES}
     )""",
         f"""m1 AS MATERIALIZED (
         SELECT 0 AS mmr_rank, vec_id, rel, ROUND({lam} * rel, 9) AS score, v
         FROM cand ORDER BY score DESC, vec_id LIMIT 1
     )""",
     ]
-    for r in range(2, k + 1):
+    for r in range(2, _MMR_K + 1):
         sel = " UNION ALL ".join(
             f"SELECT vec_id, v FROM m{j}" for j in range(1, r)
         )
@@ -64,7 +68,7 @@ def _mmr_sql(k: int = 5, n_cand: int = 30, lam: str = "CAST(0.7 AS DOUBLE)") -> 
     )"""
         )
     union = " UNION ALL ".join(
-        f"SELECT mmr_rank, vec_id, rel, score FROM m{r}" for r in range(1, k + 1)
+        f"SELECT mmr_rank, vec_id, rel, score FROM m{r}" for r in range(1, _MMR_K + 1)
     )
     return f"""
     WITH {','.join(parts)}
@@ -76,7 +80,7 @@ def _mmr_sql(k: int = 5, n_cand: int = 30, lam: str = "CAST(0.7 AS DOUBLE)") -> 
 
 @register(
     "v_mmr_rerank",
-    _mmr_sql(5, 30),
+    _mmr_sql(),
     "MMR-diversified retrieval (Carbonell & Goldstein 1998): oracle-"
     "gated exact cosine top-30, then the greedy "
     "λ·relevance − (1−λ)·max-sim-to-selected sweep picks 5 — on a "
@@ -95,12 +99,12 @@ def v_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     cands = (
         brute_force_topk(
-            emb, "embedding", _probe(spark, sf_dir), k=30, exclude_id=0
+            emb, "embedding", _probe(spark, sf_dir), k=_MMR_CANDIDATES, exclude_id=0
         )
         .select("vec_id", "sim")
         .join(emb.select("vec_id", "embedding"), "vec_id")
     )
-    picked = mmr_rerank(cands, k=5)
+    picked = mmr_rerank(cands, k=_MMR_K)
     return spark.createDataFrame(
         [(rank, vid, rel, score) for rank, (vid, rel, score) in enumerate(picked)],
         "mmr_rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE",

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens_sql
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .registry import register
@@ -31,7 +32,7 @@ from .registry import register
 
 @register(
     "v_chunk_sum_pool",
-    r"""
+    rf"""
     WITH chunks AS (
         SELECT doc_id, substr(text, off + 1, 200) AS ctext
         FROM (
@@ -43,8 +44,7 @@ from .registry import register
     nch AS (SELECT doc_id, COUNT(*) AS n_chunks FROM chunks GROUP BY doc_id),
     toks AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(ctext), '\s+'),
-                                  t -> t <> '')) AS tok
+               unnest({word_tokens_sql("lower(ctext)")}) AS tok
         FROM chunks
     ),
     hashed AS (

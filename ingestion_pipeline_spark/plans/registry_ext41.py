@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
 from ..sources.parquet_tables import table
-from .registry import _COS_SQL, _LSH_BITS_SQL, register
+from .registry import _COS_SQL, _LSH_BITS_SQL, _LSH_PER_BAND, register
 
 _K = 3
 
@@ -35,8 +35,8 @@ _K = 3
     ),
     banded AS (
         SELECT vec_id, band,
-               array_to_string(list_slice(bits, band * 4 + 1, band * 4 + 4), '') AS bkey
-        FROM sig CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) b
+               array_to_string(list_slice(bits, band * {_LSH_PER_BAND} + 1, band * {_LSH_PER_BAND} + {_LSH_PER_BAND}), '') AS bkey
+        FROM sig CROSS JOIN (SELECT unnest({list(range(sim.LSH_BANDS))}) AS band) b
     ),
     cand AS (
         SELECT DISTINCT c.vec_id, p.vec_id AS probe_id

@@ -20,24 +20,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.sampling import _HEX, _SPLIT_SALT, _TRAIN_HI, _VAL_HI
 from ..operators.graph import dup_clusters
 from ..sources.parquet_tables import table
 from .registry import register
 from .registry_ext6 import _PAIRS_SQL, block_pairs, components_ctes
 
 
-def split_case_sql(id_expr: str = "doc_id") -> str:
-    """The deterministic md5-bucket train/val/test CASE expression
-    (oracle twin of ``functions.sampling.dataset_split``), exposed so
-    the capped production leakage audit (``d_split_leakage_capped``,
-    ext65) shares ONE split definition with this exact audit."""
+def split_case_sql() -> str:
+    """The deterministic md5-bucket train/val/test CASE expression of
+    ``doc_id`` (oracle twin of ``functions.sampling.dataset_split``,
+    built from its constants), exposed so the capped production
+    leakage audit (``d_split_leakage_capped``, ext65) shares ONE split
+    definition with this exact audit."""
     h = (
-        "CAST(('0x' || substr(md5('split0' || "
-        f"CAST({id_expr} AS VARCHAR)), 1, 4)) AS BIGINT)"
+        f"CAST(('0x' || substr(md5('{_SPLIT_SALT}' || "
+        f"CAST(doc_id AS VARCHAR)), 1, {_HEX})) AS BIGINT)"
     )
     return (
-        f"CASE WHEN {h} < 52429 THEN 'train' "
-        f"WHEN {h} < 58983 THEN 'val' ELSE 'test' END"
+        f"CASE WHEN {h} < {_TRAIN_HI} THEN 'train' "
+        f"WHEN {h} < {_VAL_HI} THEN 'val' ELSE 'test' END"
     )
 
 

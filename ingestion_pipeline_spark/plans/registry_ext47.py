@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import alpha_words, alpha_words_sql
 from ..operators.graph import PR_ITERS, PR_SCALE, bounded_pagerank_fixed_point
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
@@ -38,8 +39,7 @@ _MAX_EDGES = _TOP_VOCAB * (_TOP_VOCAB - 1)
 
 _EDGES_SQL = f"""
     toks AS (
-        SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                           w -> w <> '') AS w
+        SELECT {alpha_words_sql("lower(text)")} AS w
         FROM documents
     ),
     vocab AS (
@@ -82,11 +82,9 @@ _EDGES_SQL = f"""
 )
 def tx_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"))
-    # array_remove / arrays_zip rather than the filter / zip_with
-    # higher-order functions: those run interpreted (CodegenFallback).
-    words = docs.select(
-        F.array_remove(F.split(F.lower(F.col("text")), "[^a-z]+"), "").alias("w")
-    )
+    # arrays_zip rather than the zip_with higher-order function: that
+    # runs interpreted (CodegenFallback).
+    words = docs.select(alpha_words(F.lower(F.col("text"))).alias("w"))
     # vocabulary bound: only top-N words may be graph nodes
     vocab = (
         words.select(F.explode("w").alias("word"))

@@ -28,16 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..operators.similarity import cosine_pairs_np
 from ..operators.relational import spread, topk
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
 _CMS_D = 4  # hash rows
 _CMS_W = 256  # buckets per row
 _HH_FRACTION = 200  # heavy hitter = est >= total_tokens / 200
 
-_TOKS = SQL_TOKENS.format(col="text")
 
 
 def _bucket_sql(r: int) -> str:
@@ -94,12 +94,7 @@ def g_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"))
     words = (
         docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("text")), r"\s+"),
-                    lambda t: t != F.lit(""),
-                )
-            ).alias("word")
+            F.explode(word_tokens(F.lower(F.col("text")))).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -162,9 +157,7 @@ _TFIDF_MATCH = " OR ".join(f"tf{i} > 0" for i in range(len(_TFIDF_TERMS)))
 )
 def t_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    tk = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != F.lit("")
-    )
+    tk = word_tokens(F.lower(F.col("text")))
 
     # a default-arg closure (lambda t, w=w: ...) has arity 2, so F.filter
     # would bind the ARRAY INDEX to the second parameter and silently

@@ -27,12 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import word_tokens, word_tokens_sql
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
 _CHUNK = 10  # words per chunk
-_TOKS = SQL_TOKENS.format(col="text")
 
 
 # Shared CTE chain (also composed by pipeline_clean_corpus, ext53):
@@ -92,9 +92,7 @@ def tx_dedup_chunks_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
 def chunk_dedup_rebuild(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, text_dedup, n_chunks, n_dropped) — reusable core; also
     the first stage of pipeline_clean_corpus (ext53)."""
-    tk = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
-    )
+    tk = word_tokens(F.lower(F.col(text_col)))
     with_tk = docs.select("doc_id", tk.alias("tk"))
     n_chunks = F.ceil(F.size("tk") / F.lit(float(_CHUNK))).cast("long")
     # guard: Spark sequence(0, -1) DESCENDS — a token-less doc must
@@ -167,7 +165,7 @@ def classifier_ctes(src: str, text_expr: str) -> str:
     """CTE chain (tok -> weighted -> logits) scoring ``text_expr`` of
     table/CTE ``src`` — exposed so pipeline_clean_corpus (ext53) can
     apply the classifier to the chunk-dedup REBUILT text."""
-    toks = SQL_TOKENS.format(col=text_expr)
+    toks = word_tokens_sql(f"lower({text_expr})")
     return f"""tok AS (
         SELECT doc_id, t.word AS word
         FROM (SELECT doc_id, {toks} AS tk FROM {src}) d,
@@ -228,9 +226,7 @@ def s_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def classifier_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, logit_milli, quality_score, keep) — reusable core; also
     the scoring stage of pipeline_clean_corpus (ext53)."""
-    tk = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
-    )
+    tk = word_tokens(F.lower(F.col(text_col)))
     tok = docs.select("doc_id", F.explode(tk).alias("word"))
     bucket = (
         F.conv(F.substring(F.md5(F.concat(F.lit("f|"), F.col("word"))), 1, 8), 16, 10)

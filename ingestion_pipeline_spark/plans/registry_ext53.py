@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .registry import register
@@ -50,9 +51,7 @@ def clean_corpus_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     )
     # n_words_clean == the classifier's token count over the SAME text;
     # recompute identically so both sides agree on tokenization
-    tk = F.filter(
-        F.split(F.lower(F.col("text_dedup")), r"\s+"), lambda t: t != F.lit("")
-    )
+    tk = word_tokens(F.lower(F.col("text_dedup")))
     words = cleaned.select("doc_id", F.size(tk).cast("long").alias("n_words_clean"))
     result = (
         cleaned.select("doc_id", "n_chunks", "n_dropped")

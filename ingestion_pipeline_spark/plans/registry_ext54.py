@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.similarity import maxsim_topk
+from ..functions.text import word_tokens_sql
+from ..operators.similarity import _MAX_DOC_TOKENS, _MAX_QUERY_TOKENS, maxsim_topk
 from ..operators.timeseries import ewma_per_entity
 from ..sources.parquet_tables import table
 from .registry import register
@@ -75,7 +76,7 @@ def w_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SENTS_SQL = (
     "list_slice(list_filter(list_transform(string_split(text, '.'), "
-    "s -> trim(s)), s -> s <> ''), 1, 8)"
+    f"s -> trim(s)), s -> s <> ''), 1, {_MAX_DOC_TOKENS})"
 )
 
 
@@ -97,9 +98,7 @@ def _tokvec_ctes(src: str, prefix: str, n_tokens: int) -> str:
                    ('0x' || substring(md5(tok), 1, 16))::UBIGINT AS h
             FROM (
                 SELECT doc_id, sid,
-                       unnest(list_filter(
-                           string_split_regex(lower(sent), '\\s+'),
-                           x -> x <> '')) AS tok
+                       unnest({word_tokens_sql("lower(sent)")}) AS tok
                 FROM {prefix}sent
             )
         ) GROUP BY doc_id, sid, b
@@ -109,8 +108,8 @@ def _tokvec_ctes(src: str, prefix: str, n_tokens: int) -> str:
 @register(
     "v_maxsim_late_interaction",
     f"""
-    WITH {_tokvec_ctes("(SELECT doc_id, text FROM documents WHERE doc_id <> 0)", "d", 8)},
-    {_tokvec_ctes("(SELECT doc_id, text FROM documents WHERE doc_id = 0)", "q", 4)},
+    WITH {_tokvec_ctes("(SELECT doc_id, text FROM documents WHERE doc_id <> 0)", "d", _MAX_DOC_TOKENS)},
+    {_tokvec_ctes("(SELECT doc_id, text FROM documents WHERE doc_id = 0)", "q", _MAX_QUERY_TOKENS)},
     dots AS (
         SELECT d.doc_id, d.sid, q.sid AS qid,
                CAST(SUM(d.v * q.v) AS BIGINT) AS dot

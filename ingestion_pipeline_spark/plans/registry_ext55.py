@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import word_tokens, word_tokens_sql
 from ..operators.relational import spread
 from ..sources.parquet_tables import table
 from .registry import register
@@ -56,8 +57,7 @@ from .registry_ext50 import (
     ),
     toks AS (
         SELECT doc_id, source, n_dropped,
-               len(list_filter(string_split_regex(text_dedup, '\s+'),
-                               x -> x <> '')) AS n_tokens
+               len({word_tokens_sql("text_dedup")}) AS n_tokens
         FROM kept
     ),
     packed AS (
@@ -100,9 +100,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = classifier_scores(
         cleaned.select("doc_id", "text_dedup"), text_col="text_dedup"
     )
-    tk = F.filter(
-        F.split(F.lower(F.col("text_dedup")), r"\s+"), lambda t: t != F.lit("")
-    )
+    tk = word_tokens(F.lower(F.col("text_dedup")))
     kept = (
         cleaned.join(scored.select("doc_id", "keep"), "doc_id")
         .filter(F.col("keep"))

@@ -32,13 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
 _SEG = 5        # tokens per boilerplate segment ("line" stand-in: the
                 # fixture corpus carries no newlines, so segmentation is
                 # fixed-width over the shared tokenizer)
 _MIN_DOCS = 3   # segment present in >= this many distinct docs = boilerplate
-_TOKS = SQL_TOKENS.format(col="text")
 
 
 @register(

@@ -34,9 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
-
-_TOKS = SQL_TOKENS.format(col="text")
+from .registry import _TOKS, register
 
 
 # =======================================================================

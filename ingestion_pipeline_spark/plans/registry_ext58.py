@@ -34,9 +34,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import LANG_MARKERS
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
-_TOKS = SQL_TOKENS.format(col="text")
 _VOCAB_K = 256
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import _QSCALE
 from ..sources.parquet_tables import table
 from .registry import register
 from .registry_ext58 import _GREATEST, _LANG_HITS
@@ -125,7 +126,7 @@ _N_CELLS = 16
     WITH e AS (
         SELECT vec_id,
                list_transform(embedding,
-                              x -> floor(CAST(x AS DOUBLE) * 100000.0)) AS q
+                              x -> floor(CAST(x AS DOUBLE) * {_QSCALE})) AS q
         FROM embeddings
     ),
     cent AS (
@@ -192,7 +193,7 @@ def v_ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             [[float(x) for x in r["embedding"]] for r in centroid_rows],
             dtype=np.float64,
         )
-        * 100000.0
+        * _QSCALE
     )
     nearest = sim.assign_nearest_quantized(centroids_q)
     cells = (

@@ -32,10 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import _QSCALE
 from ..sources.parquet_tables import table
-from .registry import SQL_TOKENS, register
+from .registry import _TOKS, register
 
-_TOKS = SQL_TOKENS.format(col="text")
 _B = 256          # DSIR hashed-feature buckets
 _TOP_DSIR = 100   # selected docs
 
@@ -365,7 +365,7 @@ _N_CELLS = 16
     WITH e AS (
         SELECT vec_id,
                list_transform(embedding,
-                              x -> floor(CAST(x AS DOUBLE) * 100000.0)) AS q
+                              x -> floor(CAST(x AS DOUBLE) * {_QSCALE})) AS q
         FROM embeddings
     ),
     old_c AS (
@@ -435,7 +435,7 @@ def v_ivf_reassignment_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
             [[float(x) for x in r["embedding"]] for r in seed_rows],
             dtype=np.float64,
         )
-        * 100000.0
+        * _QSCALE
     )
     assign_old = sim.assign_nearest_quantized(qmat[:_N_CELLS])
     assign_new = sim.assign_nearest_quantized(qmat[_N_CELLS:])

@@ -36,9 +36,7 @@ from pyspark.sql import functions as F
 
 from ..sources.parquet_tables import table
 from .bpe_sql import bpe_fertility_sql
-from .registry import SQL_TOKENS, register
-
-_TOKS = SQL_TOKENS.format(col="text")
+from .registry import _TOKS, register
 
 
 @register(

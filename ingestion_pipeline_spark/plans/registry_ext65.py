@@ -67,6 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import collapse_ws_sql
 from ..sources.parquet_tables import table
 from .registry import _SHINGLES_SQL, _mh_sql, register
 from .registry_ext6 import components_ctes
@@ -611,7 +612,7 @@ _CASCADE_SQL_CTES = f"""
     s1 AS (
         SELECT MIN(doc_id) AS doc_id
         FROM documents
-        GROUP BY md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))
+        GROUP BY md5({collapse_ws_sql("trim(lower(text))")})
     ),
     d1 AS (SELECT d.* FROM documents d JOIN s1 USING (doc_id)),
     sig AS (

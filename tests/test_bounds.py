@@ -57,8 +57,9 @@ def test_registry_is_complete():
 
 def test_spark_free_copies_match_the_operators():
     """bounds.py imports no Spark, so it keeps its own copies of the
-    MinHash layout, the shingle hash seed and the zlib level; each must
-    equal the constant the Spark side computes with."""
+    MinHash layout, the shingle hash seed, the zlib level and the
+    whitespace class; each must equal the constant the Spark side
+    computes with."""
     from ingestion_pipeline_spark.functions import text
     from ingestion_pipeline_spark.operators import dedup
     from ingestion_pipeline_spark.plans import bounds
@@ -69,6 +70,7 @@ def test_spark_free_copies_match_the_operators():
         dedup.HASH_SEED,
     )
     assert bounds._ZLIB_LEVEL == text.ZLIB_LEVEL
+    assert bounds._WS.pattern == text.WS
 
 
 def test_differential_fails_a_query_without_oracle(capsys):

@@ -14,7 +14,7 @@ import pytest
 
 from ingestion_pipeline_spark.plans import query_map
 
-_WORD = re.compile(r"\s+", re.ASCII)  # Java/RE2 \s parity (ADVICE r8)
+_WORD = re.compile(r"\s+", re.ASCII)  # functions.text.WS, spelled as re.ASCII \s
 
 
 def _tokens(text: str) -> list[str]:

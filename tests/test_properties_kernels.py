@@ -6,10 +6,12 @@ forms (``operators/dedup.py:126,216``): ``minhash_md5_slots`` to the
 expression variant, and ``jaccard3_bp`` to distinct-3-gram set Jaccard
 in basis points. The fixture recomputes in test_ext65.py pin those
 claims on corpus-shaped text; here hypothesis attacks the tokenization
-parity directly — mixed whitespace classes (space, \t, \n, \r, \f and
-the documented \x0b Java/Python-vs-RE2 residual), repeated texts (the
-per-batch caches), empty and sub-``n``-token docs — and the kernel must
-agree with the independently-evaluated reference on every row.
+parity directly — every whitespace character of ``functions.text.WS``
+(space, \t, \n, \r, \f and \x0b, which RE2's own \s leaves out and
+which the oracles now split on too, since they spell the class out),
+repeated texts (the per-batch caches), empty and sub-``n``-token docs —
+and the kernel must agree with the independently-evaluated reference
+on every row.
 """
 
 from __future__ import annotations
@@ -33,10 +35,10 @@ SLOW = settings(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 
-# ASCII words + every Java-\s whitespace class, including \x0b — the
-# kernel's re.ASCII \s matches Java's [ \t\n\x0B\f\r] exactly, so
-# kernel-vs-JVM parity must hold even on vertical tab (the documented
-# residual is kernel-vs-RE2/DuckDB, which never sees these tests).
+# ASCII words + every character of the whitespace class, \x0b included;
+# the reference below tokenizes with Python's re.ASCII \s, an
+# independent spelling of the same class (tests/test_text_rules.py
+# checks the class itself on the JVM, Python and DuckDB).
 text_st = st.text(alphabet="ab cd\t\n\r\f\x0b.", max_size=60)
 
 

@@ -101,7 +101,7 @@ def test_arrow_kernels_unpickle_without_the_package():
     kernels = [
         dedup.minhash_md5_slots(4),
         dedup.jaccard3_bp(),
-        tx.word_shingles_np(3, split=r"\s+"),
+        tx.word_shingles_np(3, tx.split_words),
         similarity.probe_cosine_np([1.0, 0.0]),
         similarity.cosine_pairs_np(),
     ]
