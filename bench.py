@@ -351,7 +351,8 @@ def main() -> None:
     # nothing unpins, and over a 200-query best-of-5 session the memory
     # pressure showed up as 3x late-session spikes on unrelated queries
     # (tx_textrank_keywords 2.9 -> 9.5 s in the r5 203-query run).
-    # Between queries only, so best-of-N runs share their own caches.
+    # Between queries only; each best-of-N rep rebuilds its query and
+    # recomputes that query's checkpoints, so no rep replays another's.
     compiles: dict[str, "int | None"] = {}
 
     def timed(name, fn):

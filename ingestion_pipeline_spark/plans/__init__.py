@@ -74,15 +74,17 @@ from . import registry_ext66  # noqa: F401  — capped production graph diagnost
 def release_caches(spark) -> int:
     """Registry-boundary cache contract (r13, VERDICT r12 #9).
 
-    Several registry plans persist bounded intermediate frames INSIDE
-    the query builder (``cascade_frames``'s survivor/edge frames,
-    ``d_minhash_band_tuning``'s grouped buckets) and the iterative
-    operators pin ``localCheckpoint`` blocks — materialization always
-    executes within the caller's action, never across runs, but the
-    blocks outlive the action by design (Spark cannot unpersist a frame
-    the returned plan still reads before that plan has run). Registry
-    loops get this between queries from :func:`run_each`; a one-shot
-    caller that materializes such a frame calls it after its action.
+    The one materialization rule: a query builder that reads an
+    intermediate more than once cuts it with
+    ``localCheckpoint(eager=False)``, so every best-of-N rep recomputes
+    it. ``eager=True`` stays only where code reads the frame before the
+    action (the ``operators/graph.py`` loop driver, ``kmeans``' initial
+    collect) or a write overwrites its own source (``sinks``,
+    ``sketch``); ``persist`` only in streaming ``write_batch``, which
+    unpersists it itself. The blocks outlive the action (Spark cannot
+    drop a frame the returned plan still reads before that plan has
+    run): :func:`run_each` releases them between queries; a one-shot
+    caller calls this after its action.
 
     Call it only once the query's results are materialized: it drops
     EVERY persistent RDD of the session, and a dropped
@@ -97,11 +99,12 @@ def release_caches(spark) -> int:
     SparkContext handle (Spark Connect, a stopped context), where only
     the catalog cache can be cleared.
     """
-    # clearCache first: unpersisting blocks while the CacheManager entry
-    # survives leaves a stale entry that a LATER query with a matching
-    # plan fragment recomputes into (slower than no cache at all — r7
-    # scale-sweep finding, 20.9 -> 36.7 s on a .persist()-using query);
-    # then drop any persist()ed RDDs the cache manager does not track.
+    # clearCache first, as safety for any DataFrame.persist a caller
+    # made: unpersisting blocks while the CacheManager entry survives
+    # leaves a stale entry that a LATER query with a matching plan
+    # fragment recomputes into (slower than no cache at all — r7
+    # scale-sweep finding, 20.9 -> 36.7 s on a persist()-using query);
+    # then drop the RDDs the cache manager does not track.
     spark.catalog.clearCache()
     try:
         jrdds = spark.sparkContext._jsc.sc().getPersistentRDDs()

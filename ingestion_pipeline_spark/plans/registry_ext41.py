@@ -83,10 +83,7 @@ def v_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     # r12 (guide §2.4): the ≤5-row probe frame feeds BOTH the exact and
     # the LSH arm — unmaterialized, each compiled arm re-ran the
-    # filtered parquet scan. Checkpointed: one probe scan. Both
-    # consumers broadcast it via explicit hints, so the stats
-    # truncation cannot demote a join (the §10 persist-vs-checkpoint
-    # lesson does not bite here).
+    # filtered parquet scan. Checkpointed: one probe scan.
     probes = (
         emb.filter(F.col("vec_id") < 5)
         .select(F.col("vec_id").alias("probe_id"), F.col("embedding"))

@@ -98,7 +98,7 @@ def g_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    ).localCheckpoint(eager=True)  # vocab-sized; reused by sketch + probes
+    ).localCheckpoint(eager=False)  # vocab-sized; reused by sketch + probes
     total = words.agg(F.sum("cnt").alias("n_tokens"))
     return (
         cms_estimates(words, _CMS_D, _CMS_W)

@@ -33,19 +33,19 @@ from .registry_ext50 import (
 
 
 def clean_corpus_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """The clean-corpus plan with its persisted handle EXPOSED
+    """The clean-corpus plan with its checkpointed handle EXPOSED
     (ADVICE r10): ``result`` is the query's return frame, ``cleaned``
-    the persisted rebuild it fans out from. Library callers running
-    this in a long-lived session call ``cleaned.unpersist()`` or
-    ``plans.release_caches`` after their action; the registry path
-    leaves release to ``plans.run_each`` because its DataFrame is
-    returned lazy."""
+    the checkpointed rebuild it fans out from. ``cleaned.unpersist()``
+    does not drop a checkpoint: a long-lived session calls
+    ``plans.release_caches`` after its action; the registry path
+    leaves that to ``plans.run_each`` (its DataFrame is returned
+    lazy)."""
     docs = spread(table(spark, sf_dir, "documents"))
     # cleaned feeds THREE consumers (accounting, classifier, word
-    # recount) — unpersisted, the whole chunk-dedup rebuild (token
+    # recount) — unmaterialized, the whole chunk-dedup rebuild (token
     # split + chunk explode + md5 window) recomputed per consumer
     # (r10; the g_vocab_overlap multi-consumer lesson).
-    cleaned = chunk_dedup_rebuild(docs).persist()
+    cleaned = chunk_dedup_rebuild(docs).localCheckpoint(eager=False)
     scored = classifier_scores(
         cleaned.select("doc_id", "text_dedup"), text_col="text_dedup"
     )

@@ -79,9 +79,7 @@ def tx_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # toks feeds the vocab top-K AND the final OOV join — without
     # materialization each consumer re-ran the full scan+tokenize+
     # explode (r12 scan census: 2 documents scans). One tokenize pass
-    # over the skinny (source, w) rows (guide §2.4); the vocab join
-    # below is explicitly broadcast-hinted, so the lost statistics
-    # cannot demote it.
+    # over the skinny (source, w) rows (guide §2.4).
     toks = docs.select(
         "source", F.explode(word_tokens(F.lower(F.col("text")))).alias("w")
     ).localCheckpoint(eager=False)

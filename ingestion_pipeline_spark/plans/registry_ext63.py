@@ -142,7 +142,7 @@ def pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.size(word_tokens(F.lower(F.col("text")))))
         .cast("long")
         .alias("n_tokens"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     tot = src.agg(
         F.count("*").cast("long").alias("n_src"),
         (F.lit(_EPOCH_CAP) * F.sum("n_tokens")).cast("long").alias("budget"),
@@ -234,16 +234,15 @@ def g_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOUR consumers below (join left/right, two size frames) whose
     # differing shapes defeat ReuseExchange — left as lineage the
     # corpus subtree executes 4x (verified: ReusedExchange count 0 in
-    # the executed plan). persist() makes all four consumers share ONE
-    # InMemoryRelation materialization — no eager barrier job (vs
-    # localCheckpoint) and no driver roundtrip (vs collect, which the
-    # 100x smoke showed ballooning once the source domain scales);
-    # bench/check harnesses release persisted blocks between queries.
+    # the executed plan). A lazy checkpoint makes all four consumers
+    # share ONE materialization with no driver roundtrip (vs collect,
+    # which the 100x smoke showed ballooning once the source domain
+    # scales).
     vocab = (
         tok.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _VOCAB_V)
         .select("source", "tok")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     sizes = vocab.groupBy("source").agg(F.count("*").alias("n_vocab"))
     # shared-lineage self-join: rename BOTH key columns on the right

@@ -261,13 +261,10 @@ def d_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 4x slower here, so not the default. If mega-buckets
     # ever appear, cap the collected list post-sort — slice(ids, 1,
     # _HOT_CAP + 1) keeps k from count(*) intact — per ADVICE r10.)
-    # grouped.persist() follows the caller-must-clearCache contract
-    # (cascade_frames precedent): bench/driver hygiene releases it;
-    # long-lived sessions unpersist after their action (ADVICE r10).
     grouped = bands.groupBy("cfg", "band", "bucket").agg(
         F.count("*").alias("k"),
         F.array_sort(F.collect_list("doc_id")).alias("ids"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     stats = grouped.groupBy("cfg").agg(
         F.sum(F.expr("k * (k - 1) div 2")).cast("long").alias(
             "n_bucket_slots"
@@ -376,9 +373,7 @@ def dq_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the ≤9-row digit histogram feeds the total AND the grid join;
     # unmaterialized, each consumer re-ran the orders scan (r12 scan
-    # census: 2 scans). Checkpointed (guide §2.4) — the downstream
-    # joins are explicitly broadcast-hinted, so the lost statistics
-    # cannot demote a join strategy.
+    # census: 2 scans). Checkpointed (guide §2.4).
     obs = (
         digits.groupBy("digit")
         .agg(F.count("*").alias("n_orders"))

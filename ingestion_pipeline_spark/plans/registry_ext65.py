@@ -126,7 +126,7 @@ _PCTS = (50, 99)
     "top-10 o_custkeys with exact basis-point load shares, key-count "
     "p50/p99, and the max/avg skew factor (x100) — the numbers that "
     "decide whether the join gets salted (operators/skew.py) before "
-    "it runs at 100 TB. ONE corpus shuffle (groupBy key), persist()ed "
+    "it runs at 100 TB. ONE corpus shuffle (groupBy key), checkpointed "
     "so both consumers (TakeOrdered heavy-hitter heap, count "
     "histogram) read it once; percentiles and totals all ride one "
     "cumulative window over |distinct count values| rows (never a "
@@ -136,14 +136,14 @@ _PCTS = (50, 99)
 def dq_join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE corpus scan + ONE key shuffle: the per-key count table feeds
     # both consumers (heavy-hitter heap, count histogram) through a
-    # persist() — the g_vocab_overlap discipline; as plain lineage the
+    # checkpoint — the g_vocab_overlap discipline; as plain lineage the
     # scan+shuffle re-executed per consumer (ReuseExchange misses the
     # renamed branches — verified on the first cut's plan).
     cnts = (
         table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count("*").alias("cnt"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     hist = cnts.groupBy("cnt").agg(F.count("*").alias("freq"))
     # totals ride the same bounded-histogram sort as the cumulative
@@ -295,13 +295,13 @@ def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = spread(table(spark, sf_dir, "documents"), min_partitions=8)
 
     # signatures are the stored artifact a 100 TB dedup pipeline
-    # materializes anyway; text rides the same persist so the verify
-    # stage reads it column-pruned from the cache instead of re-joining
+    # materializes anyway; text rides the same checkpoint so the verify
+    # stage reads it column-pruned from the blocks instead of re-joining
     # the parquet (shingle ARRAYS are never materialized — the exact
     # Jaccard runs as a text kernel). All 8 md5 slots come from ONE
     # Arrow kernel pass straight off the text column (VERDICT r7 #3).
-    sig = md5_signatures(docs, _N_HASHES, carry=("text",)).persist()
-    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).persist()
+    sig = md5_signatures(docs, _N_HASHES, carry=("text",)).localCheckpoint(eager=False)
+    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).localCheckpoint(eager=False)
     census = bk.filter(F.col("drk") == 1).agg(
         F.coalesce(F.sum(F.expr("k * (k - 1) div 2")), F.lit(0))
         .cast("long")
@@ -327,7 +327,7 @@ def d_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
         )
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     sc = samp.agg(F.count("*").cast("long").alias("n_pairs_sampled"))
     a = sig.select(
@@ -406,8 +406,8 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     (``pipeline_dedup_survivors``) and the post-dedup replica builder
     (``tools/build_post_dedup.py``) so the three can never drift.
 
-    Keys returned (all lazy DataFrames; ``sig``/``bk``/``ranked`` are
-    persisted because they feed multiple consumers):
+    Keys returned (all lazy DataFrames; ``s1``/``sig``/``bk``/``ranked``/
+    ``edges`` are checkpointed because they feed multiple consumers):
 
     - ``docs``      full documents rows
     - ``s1``        exact-stage survivor doc_ids as a 1-column frame
@@ -436,14 +436,13 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                     hide in the untested tail; ADVICE r8)
     - ``survivors`` full documents rows surviving both stages
 
-    Persist contract (ADVICE r9): ``sig``/``bk``/``ranked`` (and,
-    since r12, the skinny ``s1`` and ``edges`` id frames) stay cached
-    until the session drops them — registry loops release them through
+    Release (ADVICE r9): the checkpoint blocks stay until the session
+    drops them — registry loops release them through
     ``plans.run_each``, and any other caller running several cascade
-    consumers in ONE session (each call re-persists its own copies,
+    consumers in ONE session (each call checkpoints its own copies,
     including the text-bearing ``sig``) must call
-    ``plans.release_caches`` between calls or the duplicate cached
-    blocks accumulate.
+    ``plans.release_caches`` between calls or the duplicate blocks
+    accumulate.
     """
     from ..functions.text import content_md5
     from ..operators.dedup import bucket_ranked, jaccard3_bp, md5_band_rows, md5_signatures
@@ -466,13 +465,8 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # r12: s1 is the skinny survivor-id frame (consumers use only the
     # ids / their count — the __h group key never leaves this function)
     # and it feeds sig, survivors AND the returned s1 key;
-    # unpersisted, every consumer re-ran the full-text norm-md5
+    # unmaterialized, every consumer re-ran the full-text norm-md5
     # aggregate (scan census: 5+ documents scans per capped query).
-    # persist(), NOT localCheckpoint: a checkpoint truncates lineage
-    # and loses Catalyst statistics, which demoted the docs⋈s1 join
-    # from broadcast to a sort-merge shuffle of the FULL text corpus —
-    # A/B-measured 2x slower across the whole family; persist dedupes
-    # runtime execution identically while keeping stats (guide §5).
     # the node set of the capped cluster queries IS s1: min(doc_id)
     # per group is an existing doc_id and docs is unique by doc_id, so
     # docs⋈s1 selects exactly s1's ids — a former docs join was a full
@@ -481,25 +475,22 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         docs.groupBy(norm.alias("__h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     d1 = docs.join(s1, "doc_id")
 
     # signatures via ONE Arrow kernel pass off the text column
-    # (VERDICT r7 #3); text rides the same persist so the verify stage
-    # reads it column-pruned from the cache — no shingle arrays
-    sig = (
-        md5_signatures(
-            spread(d1.select("doc_id", "text"), min_partitions=8),
-            _N_HASHES,
-            carry=("text",),
-        )
-        .persist()
-    )
-    # per-bucket doc rank + bucket size, persisted because the guarded
-    # left side, the unguarded right side and the guard census all
-    # read it
-    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).persist()
+    # (VERDICT r7 #3); text rides the same checkpoint so the verify
+    # stage reads it column-pruned from the blocks — no shingle arrays
+    sig = md5_signatures(
+        spread(d1.select("doc_id", "text"), min_partitions=8),
+        _N_HASHES,
+        carry=("text",),
+    ).localCheckpoint(eager=False)
+    # per-bucket doc rank + bucket size, checkpointed because the
+    # guarded left side, the unguarded right side and the guard census
+    # all read it
+    bk = bucket_ranked(md5_band_rows(sig, _N_BANDS)).localCheckpoint(eager=False)
     guarded = bk.filter(F.col("drk") == 1).agg(
         F.coalesce(
             F.sum(F.when(F.col("k") > _ENUM_CAP, 1).otherwise(0)), F.lit(0)
@@ -537,7 +528,7 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         F.row_number().over(
             Window.partitionBy("id_b").orderBy(F.desc("nb"), "id_a")
         ),
-    ).persist()
+    ).localCheckpoint(eager=False)
     ob = ranked.filter(F.col("rk") == _VERIFY_K + 1).agg(
         F.count("*").cast("long").alias("n_over")
     )
@@ -551,13 +542,12 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # verified near-dup EDGES: in-budget candidates whose exact Jaccard
     # qualifies — the drop rule AND the capped cluster graph both read
     # this one definition
-    # r12: persisted — edges feeds drops, obu, survivors and the
-    # cluster/leakage/graph consumers; uncached each one re-ran BOTH
-    # text joins and the Arrow 3-gram-Jaccard kernel over every
+    # r12: checkpointed — edges feeds drops, obu, survivors and the
+    # cluster/leakage/graph consumers; unmaterialized each one re-ran
+    # BOTH text joins and the Arrow 3-gram-Jaccard kernel over every
     # in-budget candidate pair (the most expensive stage of the
-    # cascade, guide §4/§2.4). The cached rows are the skinny verified
-    # (id_a, id_b) pairs; persist over localCheckpoint for the same
-    # stats-preservation reason as s1 above.
+    # cascade, guide §4/§2.4). The kept rows are the skinny verified
+    # (id_a, id_b) pairs.
     edges = (
         ranked.filter(F.col("rk") <= _VERIFY_K)
         .join(
@@ -570,7 +560,7 @@ def cascade_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         )
         .filter(jac(F.col("ta"), F.col("tb")) >= _NEAR_BP)
         .select("id_a", "id_b")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     drops = edges.select(F.col("id_b").alias("doc_id")).distinct()
     # under-drop exposure census: over-budget docs that were NOT

@@ -119,8 +119,8 @@ from .registry_ext65 import (
     "and leakage gate ride — zero drift), so two equi-joins count "
     "each triangle exactly once (a<b<c): the Suri-Vassilvitskii 2011 "
     "node-iterator. Wedges are join-free — sum C(deg,2) off the "
-    "degree histogram. The edge list is localCheckpoint-ed ONCE "
-    "before fanning out to the three triangle legs + the degree leg "
+    "degree histogram. The cascade's edge list is checkpointed ONCE "
+    "and fans out to the three triangle legs + the degree leg "
     "(the connected_components discipline: the budgeted Arrow-Jaccard "
     "verify stage would otherwise re-execute per leg; measured at "
     "sf0.1 the checkpoint wins — see docketed A/B in ROUND12.md — "
@@ -138,10 +138,9 @@ from .registry_ext65 import (
 )
 def g_triangle_census_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     fr = cascade_frames(spark, sf_dir)
-    # one materialization cut: the verified-edge derivation (budgeted
-    # Arrow-kernel Jaccard over ranked candidates) feeds FOUR legs
-    # below — without the cut each leg re-runs the verify stage
-    edges = fr["edges"].localCheckpoint(eager=True)
+    # cascade_frames checkpoints the edges, so the verify stage runs
+    # once for the FOUR legs below
+    edges = fr["edges"]
     tri = triangle_count(edges)
     deg = (
         edges.select(F.col("id_a").alias("id"))

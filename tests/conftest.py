@@ -17,5 +17,12 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def n_persisted(spark):
+    """How many RDDs the session holds persistent, checkpoint blocks
+    included: ``n_persisted()``."""
+    return lambda: spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

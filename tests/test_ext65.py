@@ -671,26 +671,20 @@ def test_split_leakage_capped_recompute(spark, tmp_path):
     assert got == oracle
 
 
-def test_release_caches_releases_clean_corpus_blocks(spark, sf_dir):
-    """clean_corpus_frames exposes its persisted handle; the one release
-    path drops its cached blocks, and a second call finds nothing.
-
-    The release is checked on the frame and on the context's persistent
-    RDDs, not on ``release_caches``' count: ``clearCache`` already drops
-    ``cleaned``, so the count covers only RDDs the cache manager does not
-    track and depends on what earlier tests left behind."""
+def test_release_caches_releases_clean_corpus_blocks(spark, sf_dir, n_persisted):
+    """clean_corpus_frames exposes its checkpointed handle; its blocks
+    are persistent RDDs the cache manager does not track, so the one
+    release path counts and drops them, and a second call finds
+    nothing."""
     from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.plans.registry_ext53 import (
         clean_corpus_frames,
     )
 
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    start = n_persisted()
     fr = clean_corpus_frames(spark, sf_dir)
-    n = fr["result"].count()
-    assert n > 0
-    assert fr["cleaned"].storageLevel.useMemory
-    assert not persistent().isEmpty()
-    release_caches(spark)
-    assert not fr["cleaned"].storageLevel.useMemory
-    assert persistent().isEmpty()
+    assert fr["result"].count() > 0
+    assert n_persisted() > start
+    assert release_caches(spark) > 0
+    assert n_persisted() == 0
     assert release_caches(spark) == 0

@@ -1,9 +1,9 @@
 """r13 plan pins (VERDICT r12 #7/#10): the optimizer-contract hacks the
 r12 optimizations rely on — asNondeterministic anti-duplication on the
-Arrow cosine kernel, persist-for-stats broadcast preservation in the
-ext65 cascade, checkpoint-deduped LSH kernels, column-pruned Arrow
-transfers on the multimodal surface — each gets a test that fails if a
-Spark upgrade (or a refactor) silently regresses the plan shape.
+Arrow cosine kernel, the broadcast docs⋈s1 join in the ext65 cascade,
+checkpoint-deduped LSH kernels, column-pruned Arrow transfers on the
+multimodal surface — each gets a test that fails if a Spark upgrade (or
+a refactor) silently regresses the plan shape.
 """
 
 from __future__ import annotations
@@ -45,18 +45,13 @@ def test_md5_signature_kernel_runs_once_per_frame(spark, monkeypatch):
     the signature frames' ``mh_0 IS NOT NULL`` filter is not pushed
     below the projection into a second ArrowEvalPython (the cascade's
     used to run the kernel on the 1-task documents scan as well as
-    after ``spread``). The two builders' frames are caught where
-    ``md5_signatures`` returns them: ``d_minhash_lsh_md5_pairs``
-    checkpoints its frame, which hides the lineage from the query plan
-    and from ``tools/audit_plans.py``."""
+    after ``spread``). Each builder's frame is caught where
+    ``md5_signatures`` returns it: the builders checkpoint it, which
+    hides the lineage from the query plan and from
+    ``tools/audit_plans.py``."""
     from ingestion_pipeline_spark.operators import dedup
     from ingestion_pipeline_spark.plans import query_map, release_caches
     from ingestion_pipeline_spark.plans.registry_ext65 import cascade_frames
-
-    try:
-        assert _eval_nodes_per_kernel(cascade_frames(spark, SF)["sig"]) == {"sig": 1}
-    finally:
-        release_caches(spark)
 
     built, real = [], dedup.md5_signatures
 
@@ -65,10 +60,14 @@ def test_md5_signature_kernel_runs_once_per_frame(spark, monkeypatch):
         return built[-1]
 
     monkeypatch.setattr(dedup, "md5_signatures", caught)
-    for name in ("d_minhash_lsh_md5_pairs", "d_minhash_band_tuning"):
+    for name, build in (
+        ("cascade_frames", cascade_frames),
+        ("d_minhash_lsh_md5_pairs", query_map()["d_minhash_lsh_md5_pairs"]),
+        ("d_minhash_band_tuning", query_map()["d_minhash_band_tuning"]),
+    ):
         built.clear()
         try:
-            query_map()[name](spark, SF)
+            build(spark, SF)
             assert len(built) == 1, name
             assert _eval_nodes_per_kernel(built[0]) == {"sig": 1}, name
         finally:
@@ -87,11 +86,11 @@ def test_ivf_assignment_runs_once_with_probe_filter_at_scan(spark):
 
 
 def test_cascade_docs_join_stays_broadcast(spark):
-    """ext65 persist-for-stats: s1/edges are persist()ed precisely so
-    the docs⋈s1 (and downstream) joins keep their size estimates — the
-    r12 localCheckpoint detour demoted them to a sort-merge of the full
-    text corpus (2x whole-family regression). Pin: no SortMergeJoin
-    anywhere in the survivor plan at fixture scale."""
+    """ext65: the docs⋈s1 join must keep s1's size estimate through
+    its checkpoint — a sort-merge here shuffles the full text corpus
+    (the r12 demotion measured a 2x whole-family regression). Pin: the
+    join is a BroadcastHashJoin, never a SortMergeJoin, at fixture
+    scale."""
     from ingestion_pipeline_spark.plans import release_caches
     from ingestion_pipeline_spark.plans.registry_ext65 import cascade_frames
 
@@ -168,7 +167,7 @@ def test_multimodal_arrow_transfer_ships_only_needed_columns(media):
         assert proj and all("extra" not in ln for ln in proj), (name, proj)
 
 
-def test_release_caches_clears_registry_persists(spark):
+def test_release_caches_clears_registry_persists(spark, n_persisted):
     """VERDICT r12 #9: the registry-boundary contract — after a
     cascade-consumer query runs, release_caches() leaves no persistent
     RDDs behind."""
@@ -176,5 +175,6 @@ def test_release_caches_clears_registry_persists(spark):
 
     df = query_map()["pipeline_dedup_survivors"](spark, SF)
     df.write.format("noop").mode("overwrite").save()
+    assert n_persisted() > 0
     release_caches(spark)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert n_persisted() == 0

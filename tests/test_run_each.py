@@ -11,10 +11,6 @@ import pytest
 from ingestion_pipeline_spark.plans import plan_text, registry, release_caches, run_each
 
 
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def _register_first(monkeypatch, name, builder):
     """Register ``builder`` as the first query in contract order."""
     monkeypatch.setitem(
@@ -23,19 +19,21 @@ def _register_first(monkeypatch, name, builder):
     monkeypatch.setattr(registry, "GRADED_WINDOW", [name, *registry.GRADED_WINDOW])
 
 
-def test_builder_raising_mid_loop_is_recorded_and_released(spark, sf_dir, monkeypatch):
-    start = _n_persisted(spark)
+def test_builder_raising_mid_loop_is_recorded_and_released(
+    spark, sf_dir, monkeypatch, n_persisted
+):
+    start = n_persisted()
     pinned = []
 
     def raises_mid_loop(spark, sf_dir):
         spark.range(1000).localCheckpoint(eager=True)
-        pinned.append(_n_persisted(spark))
+        pinned.append(n_persisted())
         raise RuntimeError("builder failed mid-loop")
 
     at_entry = {}
 
     def count_rows(name, fn):
-        at_entry[name] = _n_persisted(spark)
+        at_entry[name] = n_persisted()
         return fn(spark, sf_dir).count()
 
     _register_first(monkeypatch, "zz_raises_mid_loop", raises_mid_loop)
@@ -46,7 +44,7 @@ def test_builder_raising_mid_loop_is_recorded_and_released(spark, sf_dir, monkey
     # released right after the raise, before the next query started
     assert at_entry["q1_pricing_summary"] <= start
     assert results["q1_pricing_summary"] > 0
-    assert _n_persisted(spark) <= start
+    assert n_persisted() <= start
 
 
 def test_unknown_names_raise_before_any_builder_runs(spark, monkeypatch):

@@ -167,7 +167,7 @@ def main() -> int:
         "miss_first_rank_max": rank_stats["mx"] if rank_stats else None,
         "wall_sec": wall,
     }
-    # one-shot consumer: drop the cascade's persisted frames and the
+    # one-shot consumer: drop the cascade's checkpoint blocks and the
     # audit's own persists now that the figures are collected
     release_caches(spark)
     line = json.dumps(out)

@@ -104,8 +104,8 @@ def main() -> int:
         os.path.join(out, "documents.parquet")
     ).count()
     doc_s = round(time.perf_counter() - t0, 1)
-    # one-shot consumer: release the cascade's persisted blocks
-    # (sig carries the full text column — ADVICE r9 persist contract)
+    # one-shot consumer: release the cascade's checkpoint blocks
+    # (sig carries the full text column — ADVICE r9 release contract)
     release_caches(spark)
 
     for t in TABLES:

@@ -56,11 +56,11 @@ SHOWCASE = [
     # md5 minhash slots (no HOF CodegenFallback), the skinny banded
     # self-join, the doc-rank/per-doc-budget window riding band rows
     # (never the pair stream), and the Arrow text-kernel verify
-    # reading text column-pruned from the signature persist
+    # reading text column-pruned from the signature checkpoint
     "d_minhash_jaccard_calibration",
     "pipeline_dedup_cascade",
     "pipeline_dedup_survivors",
-    # round-7/8: the shuffle-diagnostics model citizen — one persisted
+    # round-7/8: the shuffle-diagnostics model citizen — one checkpointed
     # key shuffle feeding both consumers, histogram-window percentiles
     "dq_join_skew_profile",
     # round-10/11 (VERDICT r10 #3): the capped production cluster
